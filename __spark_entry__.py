@@ -38,6 +38,16 @@ def entry(spark: SparkSession) -> DataFrame:
 # registry rides in staleness order so any extra driver sampling
 # refreshes the stalest signal first.
 _PRIORITY = [
+    # Block 0: the queries whose internals changed most recently lead
+    # the window, so the driver attests them first — the stream queries
+    # r12 rewrote (built-in streaming aggregations, truncated static
+    # legs) and the two iterative pipelines behind r12's lazy CC
+    # checkpoints.
+    "stream_ab_test",
+    "stream_conversion_survival",
+    "stream_training_manifest",
+    "dedup_clusters_incremental",
+    "corpus_pipeline",
     # ---- driver window (first 50), round 12 -----------------------
     # Block 1: the label_noise trio — driver-red r9+r10, root-caused in
     # r11 (the trio was the ONLY oracle set emitting a HUGEINT column,
@@ -264,7 +274,6 @@ _PRIORITY = [
     "conversion_model_calibration",
     "conversion_survival",
     "dataset_card",
-    "dedup_clusters_incremental",
     "dp_quantile_release",
     "event_attribution_credit",
     "event_bot_score",
@@ -294,8 +303,6 @@ _PRIORITY = [
     "rfm_segments",
     "span_corruption_masks",
     "split_perplexity_gap",
-    "stream_ab_test",
-    "stream_conversion_survival",
     "stream_dp_histogram",
     "stream_group_dro",
     "stream_ks_drift",
@@ -309,7 +316,6 @@ _PRIORITY = [
     "bootstrap_ci",
     "conformal_coverage",
     "coreset_coverage_audit",
-    "corpus_pipeline",
     "decontamination",
     "dedup_exact",
     "doc_chunks",
@@ -345,7 +351,6 @@ _PRIORITY = [
     "stream_pareto_frontier",
     "stream_rfm_segments",
     "stream_semantic_dedup_hier",
-    "stream_training_manifest",
     "text_quality",
     "ann_hivf_pq_topk",
     "ann_lsh_topk",

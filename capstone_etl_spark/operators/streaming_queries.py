@@ -1,19 +1,22 @@
 """Driver-facing queries that run the REAL Structured Streaming engine
-end-to-end (readStream → watermark → windowed agg → availableNow →
-memory sink) and return the final table — so even the streaming layer
-is DuckDB-oracle-checked, not just rows-counted.
+end-to-end (file stream → stateful operator → availableNow → memory
+sink) and return the final table — so even the streaming layer is
+DuckDB-oracle-checked, not just rows-counted.
 
-Each query stages the events table to a temp directory through the S4
-parquet sink, attaches a multi-batch file stream (maxFilesPerTrigger
-keeps several micro-batches in play — incremental state is genuinely
-exercised), runs to completion, and returns the sink table.
+Every query runs through ONE harness, `streaming.runner.drain_staged`:
+the input table (events, documents or embeddings) is staged as 4
+parquet files in a temp dir, a file stream drains them 2 files per
+trigger (two micro-batches, so incremental state is genuinely merged
+across batches), and the temp dir is removed in `finally`. A query
+supplies only `transform(stream, staged)`, its static legs (built from
+sf_dir before the drain) and its batch tail over the returned memory
+sink table. The replay watermark is measured from `staged` only by
+the six queries whose operators use one (`_horizon_watermark`).
 """
 
 from __future__ import annotations
 
 import math
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -29,9 +32,7 @@ from capstone_etl_spark.operators.events import (
     TUMBLING_WINDOWS_SQL,
 )
 from capstone_etl_spark.streaming import (
-    events_stream,
-    run_to_memory,
-    stage_events,
+    drain_staged,
     stream_click_purchase_join,
     stream_dedup_counts,
     stream_session_windows,
@@ -68,8 +69,9 @@ def _horizon_watermark(staged: DataFrame) -> str:
     disorder — the staged data's FULL time span, measured, not guessed
     (a fixed constant silently under-covers a longer corpus and drops
     rows; ADVICE r3). One min/max over the ts column of the staging
-    copy we just wrote — parquet column stats make this metadata-cheap
-    at any scale. See streaming/windows.py watermark note."""
+    copy — parquet column stats make this metadata-cheap at any scale.
+    Called only from the transforms whose operators take a watermark.
+    See streaming/windows.py watermark note."""
     lo, hi = staged.agg(
         F.min(F.col("ts").cast("long")), F.max(F.col("ts").cast("long"))
     ).first()
@@ -77,52 +79,38 @@ def _horizon_watermark(staged: DataFrame) -> str:
     return f"{days} days"
 
 
-def _run(spark: SparkSession, sf_dir: str, transform, output_mode: str) -> DataFrame:
-    work = tempfile.mkdtemp(prefix="spark_stream_")
-    try:
-        staged = stage_events(spark, sf_dir, f"{work}/staging", n_files=4)
-        watermark = _horizon_watermark(staged)
-        stream = events_stream(spark, f"{work}/staging", max_files_per_trigger=2)
-        return run_to_memory(
-            transform(stream, watermark), f"{work}/checkpoint", output_mode=output_mode
-        )
-    finally:
-        # The memory sink holds results in the driver; staged files and
-        # checkpoints are no longer needed once the query terminates.
-        shutil.rmtree(work, ignore_errors=True)
+def _replay(spark: SparkSession, sf_dir: str, operator) -> DataFrame:
+    """Drain one of streaming/windows.py's watermarked event operators
+    (complete mode) with the replay-horizon watermark."""
+    return drain_staged(
+        spark,
+        sf_dir,
+        "events",
+        lambda s, staged: operator(s, watermark=_horizon_watermark(staged)),
+        "complete",
+    )
 
 
 def stream_tumbling_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming tumbling windows, oracle-identical to the batch form."""
-    return _run(
-        spark, sf_dir, lambda s, wm: stream_tumbling(s, watermark=wm), "complete"
-    )
+    return _replay(spark, sf_dir, stream_tumbling)
 
 
 def stream_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming sliding windows (10 min / slide 5): every event enters
     two overlapping state-store windows — overlapping-window state is
     the piece tumbling doesn't exercise."""
-    return _run(
-        spark, sf_dir, lambda s, wm: stream_sliding(s, watermark=wm), "complete"
-    )
+    return _replay(spark, sf_dir, stream_sliding)
 
 
 def stream_event_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming dropDuplicatesWithinWatermark → per-type counts."""
-    return _run(
-        spark, sf_dir, lambda s, wm: stream_dedup_counts(s, watermark=wm), "complete"
-    )
+    return _replay(spark, sf_dir, stream_dedup_counts)
 
 
 def stream_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native session windows (F.session_window) on the stream."""
-    return _run(
-        spark,
-        sf_dir,
-        lambda s, wm: stream_session_windows(s, watermark=wm),
-        "complete",
-    )
+    return _replay(spark, sf_dir, stream_session_windows)
 
 
 # Session-window semantics (pinned against Spark at sf0.1, where an
@@ -163,7 +151,9 @@ def stream_user_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     highest running count (strictly increasing per touch) — extracted
     with a lexicographic struct-max, no ordering assumptions on the
     value column."""
-    got = _run(spark, sf_dir, lambda s, wm: running_user_activity(s), "update")
+    got = drain_staged(
+        spark, sf_dir, "events", lambda s, staged: running_user_activity(s), "update"
+    )
     final = F.max(F.struct("n_events", "total_value", "last_seen_sec")).alias("s")
     return (
         got.groupBy("user_id")
@@ -190,10 +180,13 @@ def stream_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     restricted territory; the join itself is the streaming operator
     under test. Inner join ⇒ only purchases with ≥1 prior click
     appear (documented, mirrored by the oracle)."""
-    got = _run(
+    got = drain_staged(
         spark,
         sf_dir,
-        lambda s, wm: stream_click_purchase_join(s, watermark=wm),
+        "events",
+        lambda s, staged: stream_click_purchase_join(
+            s, watermark=_horizon_watermark(staged)
+        ),
         "append",
     )
     return (
@@ -252,10 +245,11 @@ def stream_tier_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     third streaming join class after windowed aggs and stream-stream —
     dimension enrichment at ingest."""
     tiers = _user_tiers(spark, sf_dir)
-    return _run(
+    return drain_staged(
         spark,
         sf_dir,
-        lambda s, wm: stream_enrich_user_tier(s, tiers),
+        "events",
+        lambda s, staged: stream_enrich_user_tier(s, tiers),
         "complete",
     )
 
@@ -288,28 +282,12 @@ def stream_quality_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch. Same oracle as the batch funnel — the streaming engine must
     reproduce it exactly. This is the ingest-gate deployment shape: new
     corpus shards stream in, the funnel audit updates per micro-batch."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.operators.quality import _rule_flags, funnel_agg, funnel_unpack
-    from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_docs_")
-    try:
-        staging = f"{work}/staging"
-        load_table(spark, sf_dir, "documents").repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
-        one = run_to_memory(
-            funnel_agg(_rule_flags(stream)), f"{work}/checkpoint", output_mode="complete"
-        )
-        return funnel_unpack(one)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    one = drain_staged(
+        spark, sf_dir, "documents", lambda s, staged: funnel_agg(_rule_flags(s)), "complete"
+    )
+    return funnel_unpack(one)
 
 
 def _stream_quality_funnel_sql() -> str:
@@ -331,42 +309,27 @@ def stream_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     Update-mode emissions carry a per-key update counter; the final row
     per source is selected by struct-max on it (stream_user_activity's
     device)."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.functions.hashing import md5_hash60
     from capstone_etl_spark.functions.text import token_ngrams, tokenize
     from capstone_etl_spark.operators.sketches import NGRAM_N
-    from capstone_etl_spark.sources.tables import load_table
     from capstone_etl_spark.streaming.stateful import kmv_bottom_k
 
-    work = tempfile.mkdtemp(prefix="spark_stream_kmv_")
-    try:
-        staging = f"{work}/staging"
-        load_table(spark, sf_dir, "documents").repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
+    def transform(stream, staged):
         toks = stream.select("source", tokenize("text").alias("toks"))
         hashes = toks.select(
             "source",
             F.explode(token_ngrams("toks", NGRAM_N)).alias("g"),
         ).select("source", md5_hash60(F.col("g")).alias("h"))
-        got = run_to_memory(
-            kmv_bottom_k(hashes), f"{work}/checkpoint", output_mode="update"
-        )
-        final = F.max(F.struct("upd", "kp", "hk", "kmv_estimate")).alias("s")
-        return (
-            got.groupBy("source")
-            .agg(final)
-            .select("source", F.col("s.kp").alias("kp"), F.col("s.hk").alias("hk"),
-                    F.round(F.col("s.kmv_estimate"), 6).alias("kmv_estimate"))
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return kmv_bottom_k(hashes)
+
+    got = drain_staged(spark, sf_dir, "documents", transform, "update")
+    final = F.max(F.struct("upd", "kp", "hk", "kmv_estimate")).alias("s")
+    return (
+        got.groupBy("source")
+        .agg(final)
+        .select("source", F.col("s.kp").alias("kp"), F.col("s.hk").alias("hk"),
+                F.round(F.col("s.kmv_estimate"), 6).alias("kmv_estimate"))
+    )
 
 
 def _stream_kmv_sketch_sql() -> str:
@@ -411,45 +374,31 @@ def stream_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     under reruns' becomes 'the sample is independent of
     micro-batching'. Final snapshot per source selected by the
     update-counter max (stream_user_activity's device)."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.functions.hashing import md5_hash60
     from capstone_etl_spark.operators.sampling import RESERVOIR_SALT
-    from capstone_etl_spark.sources.tables import load_table
     from capstone_etl_spark.streaming.stateful import reservoir_bottom_k
 
-    work = tempfile.mkdtemp(prefix="spark_stream_reservoir_")
-    try:
-        staging = f"{work}/staging"
-        load_table(spark, sf_dir, "documents").repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
-        rows = stream.select(
-            "source",
-            "doc_id",
-            "lang",
-            md5_hash60(
-                F.concat(F.lit(RESERVOIR_SALT), F.col("doc_id").cast("string"))
-            ).alias("h"),
-        )
-        got = run_to_memory(
-            reservoir_bottom_k(rows), f"{work}/checkpoint", output_mode="update"
-        )
-        mx = got.groupBy(F.col("source").alias("msrc")).agg(F.max("upd").alias("mupd"))
-        return (
-            got.join(
-                F.broadcast(mx),
-                (got["source"] == F.col("msrc")) & (got["upd"] == F.col("mupd")),
+    def transform(stream, staged):
+        return reservoir_bottom_k(
+            stream.select(
+                "source",
+                "doc_id",
+                "lang",
+                md5_hash60(
+                    F.concat(F.lit(RESERVOIR_SALT), F.col("doc_id").cast("string"))
+                ).alias("h"),
             )
-            .select("source", "doc_id", "lang", "rnk")
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    got = drain_staged(spark, sf_dir, "documents", transform, "update")
+    mx = got.groupBy(F.col("source").alias("msrc")).agg(F.max("upd").alias("mupd"))
+    return (
+        got.join(
+            F.broadcast(mx),
+            (got["source"] == F.col("msrc")) & (got["upd"] == F.col("mupd")),
+        )
+        .select("source", "doc_id", "lang", "rnk")
+    )
 
 
 def _stream_reservoir_sample_sql() -> str:
@@ -471,42 +420,29 @@ def stream_mixing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     source_mixing_weights (same √ snap to DECIMAL(28,10), same one
     double division), and the oracle is the batch SQL minus the
     dup-rate column — the streaming engine must reproduce it exactly."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import Window
-
     from capstone_etl_spark.functions.text import tokenize
-    from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_mix_")
-    try:
-        staging = f"{work}/staging"
-        load_table(spark, sf_dir, "documents").repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
-        ws = F.size(tokenize("text")).cast("long")
-        agg = stream.groupBy("source").agg(
+    ws = F.size(tokenize("text")).cast("long")
+    snap = drain_staged(
+        spark,
+        sf_dir,
+        "documents",
+        lambda s, staged: s.groupBy("source").agg(
             F.count("*").alias("n_docs"),
             F.sum(ws).alias("n_tokens"),
             F.sum(F.length("text").cast("long")).alias("n_chars_sum"),
-        )
-        snap = run_to_memory(agg, f"{work}/checkpoint", output_mode="complete")
-        sq = F.sqrt(F.col("n_tokens").cast("double")).cast("decimal(28,10)")
-        w_all = Window.partitionBy()
-        return snap.select(
-            "source",
-            "n_docs",
-            "n_tokens",
-            (F.col("n_chars_sum").cast("double") / F.col("n_docs")).alias("mean_chars"),
-            (sq.cast("double") / F.sum(sq).over(w_all).cast("double")).alias("mix_weight"),
-        ).orderBy("source")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        ),
+        "complete",
+    )
+    sq = F.sqrt(F.col("n_tokens").cast("double")).cast("decimal(28,10)")
+    w_all = Window.partitionBy()
+    return snap.select(
+        "source",
+        "n_docs",
+        "n_tokens",
+        (F.col("n_chars_sum").cast("double") / F.col("n_docs")).alias("mean_chars"),
+        (sq.cast("double") / F.sum(sq).over(w_all).cast("double")).alias("mix_weight"),
+    ).orderBy("source")
 
 
 STREAM_MIXING_WEIGHTS_SQL = """
@@ -536,41 +472,28 @@ def stream_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch sketch EXACTLY and shares its oracle arithmetic. Complete-
     mode aggregation on (d, bucket): |state| = CM_D·CM_W keys no
     matter how many shards stream in."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.functions.hashing import md5_hash60
     from capstone_etl_spark.functions.text import tokenize
     from capstone_etl_spark.operators.sketches import CM_D, CM_W
-    from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_cm_")
-    try:
-        staging = f"{work}/staging"
-        load_table(spark, sf_dir, "documents").repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
+    buckets = F.array(
+        *[
+            F.struct(
+                F.lit(d).alias("d"),
+                (md5_hash60(F.concat(F.lit(f"cm{d}:"), F.col("token"))) % CM_W).alias(
+                    "bucket"
+                ),
+            )
+            for d in range(CM_D)
+        ]
+    )
+
+    def transform(stream, staged):
         tok = stream.select(F.explode(tokenize("text")).alias("token"))
-        buckets = F.array(
-            *[
-                F.struct(
-                    F.lit(d).alias("d"),
-                    (md5_hash60(F.concat(F.lit(f"cm{d}:"), F.col("token"))) % CM_W).alias(
-                        "bucket"
-                    ),
-                )
-                for d in range(CM_D)
-            ]
-        )
         cells = tok.select(F.explode(buckets).alias("b")).select("b.d", "b.bucket")
-        agg = cells.groupBy("d", "bucket").agg(F.count("*").cast("long").alias("c"))
-        return run_to_memory(agg, f"{work}/checkpoint", output_mode="complete")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return cells.groupBy("d", "bucket").agg(F.count("*").cast("long").alias("c"))
+
+    return drain_staged(spark, sf_dir, "documents", transform, "complete")
 
 
 def _stream_count_min_sql() -> str:
@@ -611,11 +534,6 @@ def stream_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     train doc's groups = its matched allowed-shingle count. One
     streaming aggregation, state bounded by cross-cut candidate pairs
     (+ one NULL-bench row per train doc)."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import Window
-
     from capstone_etl_spark.functions.hashing import md5_hash60
     from capstone_etl_spark.functions.text import token_ngrams, tokenize
     from capstone_etl_spark.operators.dedup import (
@@ -625,34 +543,23 @@ def stream_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         NGRAM_N,
         shingles,
     )
-    from capstone_etl_spark.session import cached
     from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_decon_")
-    try:
-        docs = load_table(spark, sf_dir, "documents")
-        sh = shingles(docs)
-        bench = sh.filter(F.col("doc_id") % BENCH_MOD == 0).select(
-            "sh", F.col("doc_id").alias("bench_doc")
-        )
-        sz_b = bench.groupBy("bench_doc").agg(F.count("*").alias("sz_b"))
-        pw = Window.partitionBy("sh").orderBy("bench_doc")
-        posts = bench.withColumn("pos", F.row_number().over(pw))
-        static = _stream_static(
-            sh.select("sh")
-            .distinct()
-            .join(posts, "sh", "left")
-            .select("sh", "bench_doc", F.coalesce("pos", F.lit(1)).alias("pos"))
-        )
+    sh = shingles(load_table(spark, sf_dir, "documents"))
+    bench = sh.filter(F.col("doc_id") % BENCH_MOD == 0).select(
+        "sh", F.col("doc_id").alias("bench_doc")
+    )
+    sz_b = bench.groupBy("bench_doc").agg(F.count("*").alias("sz_b"))
+    pw = Window.partitionBy("sh").orderBy("bench_doc")
+    posts = bench.withColumn("pos", F.row_number().over(pw))
+    static = _stream_static(
+        sh.select("sh")
+        .distinct()
+        .join(posts, "sh", "left")
+        .select("sh", "bench_doc", F.coalesce("pos", F.lit(1)).alias("pos"))
+    )
 
-        staging = f"{work}/staging"
-        docs.repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
+    def transform(stream, staged):
         toks = stream.filter(F.col("doc_id") % BENCH_MOD != 0).select(
             F.col("doc_id").alias("train_doc"), tokenize("text").alias("toks")
         )
@@ -664,7 +571,7 @@ def stream_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("sh"),
         )
-        agg = (
+        return (
             stream_sh.join(static, "sh")
             .groupBy("train_doc", "bench_doc")
             .agg(
@@ -672,28 +579,27 @@ def stream_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum((F.col("pos") == 1).cast("long")).alias("n_first"),
             )
         )
-        got = run_to_memory(agg, f"{work}/checkpoint", output_mode="complete")
-        # sz_c via a per-train window over the drained pair table (its
-        # input is bounded by a doc's candidate-pair count) — a sink
-        # self-join would carry conflicting references
-        with_sz = got.withColumn(
-            "sz_c", F.sum("n_first").over(Window.partitionBy("train_doc"))
+
+    got = drain_staged(spark, sf_dir, "documents", transform, "complete")
+    # sz_c via a per-train window over the drained pair table (its
+    # input is bounded by a doc's candidate-pair count) — a sink
+    # self-join would carry conflicting references
+    with_sz = got.withColumn(
+        "sz_c", F.sum("n_first").over(Window.partitionBy("train_doc"))
+    )
+    jac = F.col("n_inter") / (F.col("sz_c") + F.col("sz_b") - F.col("n_inter"))
+    cont = F.col("n_inter") / F.col("sz_b")
+    return (
+        with_sz.filter(F.col("bench_doc").isNotNull())
+        .join(sz_b, "bench_doc")
+        .filter((jac >= JACCARD_THRESHOLD) | (cont >= CONTAINMENT_THRESHOLD))
+        .select(
+            "train_doc",
+            "bench_doc",
+            F.round(jac, 6).alias("jaccard"),
+            F.round(cont, 6).alias("containment"),
         )
-        jac = F.col("n_inter") / (F.col("sz_c") + F.col("sz_b") - F.col("n_inter"))
-        cont = F.col("n_inter") / F.col("sz_b")
-        return (
-            with_sz.filter(F.col("bench_doc").isNotNull())
-            .join(sz_b, "bench_doc")
-            .filter((jac >= JACCARD_THRESHOLD) | (cont >= CONTAINMENT_THRESHOLD))
-            .select(
-                "train_doc",
-                "bench_doc",
-                F.round(jac, 6).alias("jaccard"),
-                F.round(cont, 6).alias("containment"),
-            )
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    )
 
 
 def _stream_decontamination_sql() -> str:
@@ -711,9 +617,6 @@ def stream_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     (shared oracle). Complete-mode agg, no event time → no watermark;
     this is the scrub-audit a 100 TB ingest runs while shards land,
     before anything downstream touches the text."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.operators.privacy import (
         PII_EMAIL,
         PII_ID,
@@ -721,18 +624,8 @@ def stream_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         PII_PHONE,
         _count,
     )
-    from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_pii_")
-    try:
-        staging = f"{work}/staging"
-        load_table(spark, sf_dir, "documents").repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
+    def transform(stream, staged):
         t = F.col("text")
         per_doc = stream.select(
             "source",
@@ -741,7 +634,7 @@ def stream_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             _count(t, PII_PHONE).alias("p"),
             _count(t, PII_ID).alias("d"),
         )
-        agg = per_doc.groupBy("source").agg(
+        return per_doc.groupBy("source").agg(
             F.count("*").cast("long").alias("n_docs"),
             F.sum(
                 ((F.col("e") + F.col("i") + F.col("p") + F.col("d")) > 0).cast("long")
@@ -751,9 +644,8 @@ def stream_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("p").cast("long").alias("phones"),
             F.sum("d").cast("long").alias("idnums"),
         )
-        return run_to_memory(agg, f"{work}/checkpoint", output_mode="complete")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    return drain_staged(spark, sf_dir, "documents", transform, "complete")
 
 
 def stream_template_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -766,26 +658,13 @@ def stream_template_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bounded by |sources|) and collapses to n_sources in the final
     batch projection — the drained result must equal the batch miner
     row-for-row (same oracle)."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.operators.dedup import (
         TEMPLATE_MIN_DOCS,
         template_shape,
     )
-    from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_docs_")
-    try:
-        staging = f"{work}/staging"
-        load_table(spark, sf_dir, "documents").repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
-        agg = (
+    def transform(stream, staged):
+        return (
             stream.select(
                 "doc_id", "source", template_shape("text").alias("template_shape")
             )
@@ -796,19 +675,18 @@ def stream_template_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.min("doc_id").alias("example_doc_id"),
             )
         )
-        snap = run_to_memory(agg, f"{work}/checkpoint", output_mode="complete")
-        return (
-            snap.filter(F.col("n_docs") >= TEMPLATE_MIN_DOCS)
-            .select(
-                F.md5("template_shape").alias("template_hash"),
-                "n_docs",
-                F.size("srcs").cast("long").alias("n_sources"),
-                "example_doc_id",
-                "template_shape",
-            )
+
+    snap = drain_staged(spark, sf_dir, "documents", transform, "complete")
+    return (
+        snap.filter(F.col("n_docs") >= TEMPLATE_MIN_DOCS)
+        .select(
+            F.md5("template_shape").alias("template_hash"),
+            "n_docs",
+            F.size("srcs").cast("long").alias("n_sources"),
+            "example_doc_id",
+            "template_shape",
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    )
 
 
 def _stream_template_extraction_sql() -> str:
@@ -836,9 +714,6 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch n_inter; both partner sizes come from the static size table
     at verdict time. State is bounded by cross-delta candidate pairs
     (df-capped), never |base|²."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.functions.hashing import md5_hash60
     from capstone_etl_spark.functions.text import token_ngrams, tokenize
     from capstone_etl_spark.operators.dedup import (
@@ -847,24 +722,14 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         _is_delta,
         shingles,
     )
-    from capstone_etl_spark.session import cached
     from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_docs_")
-    try:
-        docs = load_table(spark, sf_dir, "documents")
-        sh = _stream_static(shingles(docs))
-        sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-        index = sh.select("sh", F.col("doc_id").alias("doc_b"))
+    docs = load_table(spark, sf_dir, "documents")
+    sh = _stream_static(shingles(docs))
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
+    index = sh.select("sh", F.col("doc_id").alias("doc_b"))
 
-        staging = f"{work}/staging"
-        docs.repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
+    def transform(stream, staged):
         arriving = stream.filter(_is_delta(F.col("doc_id"))).select(
             F.col("doc_id").alias("doc_a"), tokenize("text").alias("toks")
         )
@@ -877,41 +742,40 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("sh"),
         )
         partner_ok = (~_is_delta(F.col("doc_b"))) | (F.col("doc_b") < F.col("doc_a"))
-        agg = (
+        return (
             stream_sh.join(index, "sh")
             .filter((F.col("doc_b") != F.col("doc_a")) & partner_ok)
             .groupBy("doc_a", "doc_b")
             .agg(F.count("*").alias("n_inter"))
         )
-        pairs_raw = run_to_memory(agg, f"{work}/checkpoint", output_mode="complete")
 
-        # batch verdict assembly over the drained pair table
-        sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
-        sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
-        jac = F.col("n_inter") / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter"))
-        pairs = (
-            pairs_raw.join(sa, "doc_a")
-            .join(sb, "doc_b")
-            .filter(jac >= JACCARD_THRESHOLD)
-            .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
+    pairs_raw = drain_staged(spark, sf_dir, "documents", transform, "complete")
+
+    # batch verdict assembly over the drained pair table
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
+    jac = F.col("n_inter") / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter"))
+    pairs = (
+        pairs_raw.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .filter(jac >= JACCARD_THRESHOLD)
+        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
+    )
+    best = pairs.groupBy("doc_a").agg(
+        F.min(F.struct("doc_b", "jaccard")).alias("m"),
+        F.count("*").cast("long").alias("n_dups"),
+    )
+    delta_docs = docs.select("doc_id").filter(_is_delta(F.col("doc_id")))
+    return (
+        delta_docs.join(best.withColumnRenamed("doc_a", "doc_id"), "doc_id", "left")
+        .select(
+            "doc_id",
+            F.col("m").isNotNull().alias("is_dup"),
+            F.coalesce(F.col("m.doc_b"), F.col("doc_id")).alias("dup_of"),
+            F.coalesce(F.col("n_dups"), F.lit(0).cast("long")).alias("n_dups"),
+            F.coalesce(F.col("m.jaccard"), F.lit(0.0)).alias("best_jaccard"),
         )
-        best = pairs.groupBy("doc_a").agg(
-            F.min(F.struct("doc_b", "jaccard")).alias("m"),
-            F.count("*").cast("long").alias("n_dups"),
-        )
-        delta_docs = docs.select("doc_id").filter(_is_delta(F.col("doc_id")))
-        return (
-            delta_docs.join(best.withColumnRenamed("doc_a", "doc_id"), "doc_id", "left")
-            .select(
-                "doc_id",
-                F.col("m").isNotNull().alias("is_dup"),
-                F.coalesce(F.col("m.doc_b"), F.col("doc_id")).alias("dup_of"),
-                F.coalesce(F.col("n_dups"), F.lit(0).cast("long")).alias("n_dups"),
-                F.coalesce(F.col("m.jaccard"), F.lit(0.0)).alias("best_jaccard"),
-            )
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    )
 
 
 def _stream_dedup_incremental_sql() -> str:
@@ -940,11 +804,6 @@ def stream_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the TOP_K ranking runs on the drained candidate table (bounded by
     queries × probed cells' population). Oracle: the batch
     ANN_IVF_TOPK_SQL verbatim."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import Window
-
     from capstone_etl_spark.operators.similarity import qcosine
     from capstone_etl_spark.operators.similarity import (
         IVF_PROBES_MIN,
@@ -953,45 +812,35 @@ def stream_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         quantize_fp,
         quantizer_seeds,
     )
-    from capstone_etl_spark.session import cached
     from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_emb_")
-    try:
-        emb = load_table(spark, sf_dir, "embeddings")
-        quant = quantize_fp()
-        emb_q = emb.select("vec_id", quant.alias("vq"))
-        seeds = quantizer_seeds(emb_q)
-        d2_col = F.aggregate(
-            F.zip_with("vq", "sq", lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
+    emb = load_table(spark, sf_dir, "embeddings")
+    quant = quantize_fp()
+    emb_q = emb.select("vec_id", quant.alias("vq"))
+    seeds = quantizer_seeds(emb_q)
+    d2_col = F.aggregate(
+        F.zip_with("vq", "sq", lambda x, y: (x - y) * (x - y)),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+    assign = _stream_static(
+        emb_q.join(F.broadcast(seeds), F.lit(True))
+        .select("vec_id", "cell", d2_col.alias("d2"))
+        .groupBy("vec_id")
+        .agg(F.min(F.struct("d2", "cell")).alias("m"))
+        .select(F.col("vec_id").alias("neighbor_id"), F.col("m.cell").alias("cell"))
+    )
+    neigh = emb.select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ne")
+    )
+    seed_row = _stream_static(
+        seeds.agg(
+            F.collect_list(F.struct("cell", "sq")).alias("seeds"),
+            F.count("*").alias("n_cells"),
         )
-        assign = _stream_static(
-            emb_q.join(F.broadcast(seeds), F.lit(True))
-            .select("vec_id", "cell", d2_col.alias("d2"))
-            .groupBy("vec_id")
-            .agg(F.min(F.struct("d2", "cell")).alias("m"))
-            .select(F.col("vec_id").alias("neighbor_id"), F.col("m.cell").alias("cell"))
-        )
-        neigh = emb.select(
-            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ne")
-        )
-        seed_row = _stream_static(
-            seeds.agg(
-                F.collect_list(F.struct("cell", "sq")).alias("seeds"),
-                F.count("*").alias("n_cells"),
-            )
-        )
+    )
 
-        staging = f"{work}/staging"
-        emb.repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
+    def transform(stream, staged):
         arriving = stream.filter(F.col("vec_id") < N_QUERIES).select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("qe"),
@@ -1027,7 +876,7 @@ def stream_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("query_id", "qe", F.col("p.cell").alias("cell"))
         )
-        scored = (
+        return (
             probes.join(assign, "cell")
             .filter(F.col("query_id") != F.col("neighbor_id"))
             .join(neigh, "neighbor_id")
@@ -1037,15 +886,14 @@ def stream_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(qcosine("qe", "ne"), 6).alias("sim"),
             )
         )
-        got = run_to_memory(scored, f"{work}/checkpoint", output_mode="append")
-        w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-        return (
-            got.withColumn("rnk", F.row_number().over(w).cast("long"))
-            .filter(F.col("rnk") <= TOP_K)
-            .select("query_id", "neighbor_id", "sim", "rnk")
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    got = drain_staged(spark, sf_dir, "embeddings", transform, "append")
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
+    return (
+        got.withColumn("rnk", F.row_number().over(w).cast("long"))
+        .filter(F.col("rnk") <= TOP_K)
+        .select("query_id", "neighbor_id", "sim", "rnk")
+    )
 
 
 def _stream_ann_topk_sql() -> str:
@@ -1069,9 +917,6 @@ def stream_ann_hivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     seed folds to ≈N^(1/4) + B·N^(1/4) — the same asymptotic win the
     batch index measured (SCALE.md). Oracle: ANN_HIVF_TOPK_SQL
     verbatim."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.operators.similarity import qcosine
     from capstone_etl_spark.operators.similarity import (
         IVF_PROBES_MIN,
@@ -1084,36 +929,26 @@ def stream_ann_hivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         quantize_fp,
         quantizer_seeds,
     )
-    from capstone_etl_spark.session import cached
     from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_hivf_")
-    try:
-        emb = load_table(spark, sf_dir, "embeddings")
-        quant = quantize_fp()
-        emb_q = emb.select("vec_id", quant.alias("vq"))
-        assign = _stream_static(
-            hier_assign(emb_q).select(
-                F.col("vec_id").alias("neighbor_id"), "cell"
-            )
+    emb = load_table(spark, sf_dir, "embeddings")
+    quant = quantize_fp()
+    emb_q = emb.select("vec_id", quant.alias("vq"))
+    assign = _stream_static(
+        hier_assign(emb_q).select(
+            F.col("vec_id").alias("neighbor_id"), "cell"
         )
-        neigh = emb.select(
-            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ne")
-        )
-        # branch → second-level seed list, one nested 1-row broadcast
-        n_cells_row = quantizer_seeds(emb_q).agg(F.count("*").alias("n_cells"))
-        brow = _stream_static(
-            hier_branch_cells_row(emb_q).join(F.broadcast(n_cells_row), F.lit(True))
-        )
+    )
+    neigh = emb.select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ne")
+    )
+    # branch → second-level seed list, one nested 1-row broadcast
+    n_cells_row = quantizer_seeds(emb_q).agg(F.count("*").alias("n_cells"))
+    brow = _stream_static(
+        hier_branch_cells_row(emb_q).join(F.broadcast(n_cells_row), F.lit(True))
+    )
 
-        staging = f"{work}/staging"
-        emb.repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
+    def transform(stream, staged):
         arriving = stream.filter(F.col("vec_id") < N_QUERIES).select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("qe"),
@@ -1148,7 +983,7 @@ def stream_ann_hivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("query_id", "qe", F.col("p.cell").alias("cell"))
         )
-        scored = (
+        return (
             probes.join(assign, "cell")
             .filter(F.col("query_id") != F.col("neighbor_id"))
             .join(neigh, "neighbor_id")
@@ -1158,15 +993,14 @@ def stream_ann_hivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(qcosine("qe", "ne"), 6).alias("sim"),
             )
         )
-        got = run_to_memory(scored, f"{work}/checkpoint", output_mode="append")
-        w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-        return (
-            got.withColumn("rnk", F.row_number().over(w).cast("long"))
-            .filter(F.col("rnk") <= TOP_K)
-            .select("query_id", "neighbor_id", "sim", "rnk")
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    got = drain_staged(spark, sf_dir, "embeddings", transform, "append")
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
+    return (
+        got.withColumn("rnk", F.row_number().over(w).cast("long"))
+        .filter(F.col("rnk") <= TOP_K)
+        .select("query_id", "neighbor_id", "sim", "rnk")
+    )
 
 
 def _stream_ann_hivf_topk_sql() -> str:
@@ -1195,9 +1029,6 @@ def stream_ann_hivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured (decade-2 exponent 0.95 vs the flat 1.24, SCALE.md); the
     sink holds candidate×M bounded rows, and re-delivery cannot
     corrupt anything because nothing aggregates in-stream."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.operators.similarity import (
         CENTROID_SCALE,
         IVF_PROBES_MIN,
@@ -1213,47 +1044,37 @@ def stream_ann_hivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         quantize_fp,
         quantizer_seeds,
     )
-    from capstone_etl_spark.session import cached
     from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_hivfpq_")
-    try:
-        emb = load_table(spark, sf_dir, "embeddings")
-        quant = quantize_fp()
-        emb_q = emb.select("vec_id", quant.alias("vq"))
-        seeds = quantizer_seeds(emb_q)
-        assign = _stream_static(
-            hier_assign(emb_q).select(F.col("vec_id").alias("neighbor_id"), "cell")
-        )
-        # static code relation joined to its codeword subvectors ONCE:
-        # (neighbor_id, m, ssub) is the compressed corpus the serving
-        # tier actually stores
-        seed_sub = seeds.select(
-            F.col("cell").alias("cw"),
-            F.posexplode(
-                F.array(
-                    *[F.slice("sq", m * PQ_SUBDIM + 1, PQ_SUBDIM) for m in range(PQ_M)]
-                )
-            ).alias("m", "ssub"),
-        )
-        code_sub = _stream_static(
-            _pq_hier_codes(emb_q)
-            .select(F.col("vec_id").alias("neighbor_id"), "m", F.col("cell").alias("cw"))
-            .join(seed_sub, ["m", "cw"])
-        )
-        n_cells_row = seeds.agg(F.count("*").alias("n_cells"))
-        brow = _stream_static(
-            hier_branch_cells_row(emb_q).join(F.broadcast(n_cells_row), F.lit(True))
-        )
+    emb = load_table(spark, sf_dir, "embeddings")
+    quant = quantize_fp()
+    emb_q = emb.select("vec_id", quant.alias("vq"))
+    seeds = quantizer_seeds(emb_q)
+    assign = _stream_static(
+        hier_assign(emb_q).select(F.col("vec_id").alias("neighbor_id"), "cell")
+    )
+    # static code relation joined to its codeword subvectors ONCE:
+    # (neighbor_id, m, ssub) is the compressed corpus the serving
+    # tier actually stores
+    seed_sub = seeds.select(
+        F.col("cell").alias("cw"),
+        F.posexplode(
+            F.array(
+                *[F.slice("sq", m * PQ_SUBDIM + 1, PQ_SUBDIM) for m in range(PQ_M)]
+            )
+        ).alias("m", "ssub"),
+    )
+    code_sub = _stream_static(
+        _pq_hier_codes(emb_q)
+        .select(F.col("vec_id").alias("neighbor_id"), "m", F.col("cell").alias("cw"))
+        .join(seed_sub, ["m", "cw"])
+    )
+    n_cells_row = seeds.agg(F.count("*").alias("n_cells"))
+    brow = _stream_static(
+        hier_branch_cells_row(emb_q).join(F.broadcast(n_cells_row), F.lit(True))
+    )
 
-        staging = f"{work}/staging"
-        emb.repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
+    def transform(stream, staged):
         arriving = stream.filter(F.col("vec_id") < N_QUERIES).select(
             F.col("vec_id").alias("query_id"), quant.alias("vq")
         )
@@ -1287,7 +1108,7 @@ def stream_ann_hivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("query_id", "vq", F.col("p.cell").alias("cell"))
         )
         qsub = F.slice("vq", F.col("m") * PQ_SUBDIM + 1, PQ_SUBDIM)
-        terms = (
+        return (
             probes.join(assign, "cell")
             .filter(F.col("query_id") != F.col("neighbor_id"))
             .join(code_sub, "neighbor_id")
@@ -1302,24 +1123,23 @@ def stream_ann_hivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("qd2"),
             )
         )
-        got = run_to_memory(terms, f"{work}/checkpoint", output_mode="append")
-        adc = got.groupBy("query_id", "neighbor_id").agg(F.sum("qd2").alias("adc"))
-        w = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
-        return (
-            adc.withColumn("rnk", F.row_number().over(w).cast("long"))
-            .filter(F.col("rnk") <= TOP_K)
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.round(
-                    F.sqrt(F.col("adc").cast("double")) / F.lit(float(CENTROID_SCALE)),
-                    6,
-                ).alias("adc_dist"),
-                "rnk",
-            )
+
+    got = drain_staged(spark, sf_dir, "embeddings", transform, "append")
+    adc = got.groupBy("query_id", "neighbor_id").agg(F.sum("qd2").alias("adc"))
+    w = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
+    return (
+        adc.withColumn("rnk", F.row_number().over(w).cast("long"))
+        .filter(F.col("rnk") <= TOP_K)
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.round(
+                F.sqrt(F.col("adc").cast("double")) / F.lit(float(CENTROID_SCALE)),
+                6,
+            ).alias("adc_dist"),
+            "rnk",
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    )
 
 
 def _stream_ann_hivf_pq_topk_sql() -> str:
@@ -1342,10 +1162,6 @@ def stream_bitext_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     mutual-argmax verdict assembly runs the batch code on it and the
     mined set equals the batch miner row-for-row. Oracle:
     BITEXT_MINING_SQL verbatim."""
-    import shutil
-    import tempfile
-
-    from capstone_etl_spark.operators.similarity import qcosine
     from capstone_etl_spark.operators.similarity import (
         BITEXT_K,
         BITEXT_MARGIN,
@@ -1356,30 +1172,21 @@ def stream_bitext_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         hier_route_expr,
         quantize_fp,
     )
-    from capstone_etl_spark.session import cached
+    from capstone_etl_spark.session import checkpoint_truncate
     from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_bitext_")
-    try:
-        emb = load_table(spark, sf_dir, "embeddings")
-        quant = quantize_fp()
-        emb_q = emb.select("vec_id", quant.alias("vq"))
-        assign = _stream_static(hier_assign(emb_q).select("vec_id", "cell"))
-        tgt = assign.filter(F.col("vec_id") % 2 == 1).join(
-            emb.select("vec_id", "embedding"), "vec_id"
-        ).select(
-            F.col("vec_id").alias("tgt_id"), "cell", F.col("embedding").alias("ne")
-        )
-        brow = _stream_static(hier_branch_cells_row(emb_q))
+    emb = load_table(spark, sf_dir, "embeddings")
+    quant = quantize_fp()
+    emb_q = emb.select("vec_id", quant.alias("vq"))
+    assign = _stream_static(hier_assign(emb_q).select("vec_id", "cell"))
+    tgt = assign.filter(F.col("vec_id") % 2 == 1).join(
+        emb.select("vec_id", "embedding"), "vec_id"
+    ).select(
+        F.col("vec_id").alias("tgt_id"), "cell", F.col("embedding").alias("ne")
+    )
+    brow = _stream_static(hier_branch_cells_row(emb_q))
 
-        staging = f"{work}/staging"
-        emb.repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
+    def transform(stream, staged):
         arriving = stream.filter(F.col("vec_id") % 2 == 0).select(
             F.col("vec_id").alias("src_id"),
             F.col("embedding").alias("qe"),
@@ -1401,54 +1208,51 @@ def stream_bitext_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("cand", cand_cells)
             .select("src_id", "qe", best_cell.alias("cell"))
         )
-        spairs = _bitext_capped_pairs(routed, tgt)
-        from capstone_etl_spark.session import checkpoint_truncate
+        return _bitext_capped_pairs(routed, tgt)
 
-        # truncate the sink lineage: the assembly joins the pair table
-        # with its own per-endpoint aggregates (the sink-self-join
-        # conflicting-reference class)
-        pairs = checkpoint_truncate(
-            run_to_memory(spairs, f"{work}/checkpoint", output_mode="append")
-        )
+    # truncate the sink lineage: the assembly joins the pair table
+    # with its own per-endpoint aggregates (the sink-self-join
+    # conflicting-reference class)
+    pairs = checkpoint_truncate(
+        drain_staged(spark, sf_dir, "embeddings", transform, "append")
+    )
 
-        # batch margin / mutual-argmax verdict assembly on the drained
-        # candidate relation
-        dec = lambda c: F.col(c).cast("decimal(18,6)")  # noqa: E731
-        wx = Window.partitionBy("src_id").orderBy(F.desc("sim"), F.asc("tgt_id"))
-        wy = Window.partitionBy("tgt_id").orderBy(F.desc("sim"), F.asc("src_id"))
-        avg_x = (
-            pairs.withColumn("rk", F.row_number().over(wx))
-            .filter(F.col("rk") <= BITEXT_K)
-            .groupBy("src_id")
-            .agg((F.sum(dec("sim")).cast("double") / F.count("*")).alias("ax"))
-        )
-        avg_y = (
-            pairs.withColumn("rk", F.row_number().over(wy))
-            .filter(F.col("rk") <= BITEXT_K)
-            .groupBy("tgt_id")
-            .agg((F.sum(dec("sim")).cast("double") / F.count("*")).alias("ay"))
-        )
-        den = F.lit(0.5) * (F.col("ax") + F.col("ay"))
-        scored = (
-            pairs.join(avg_x, "src_id")
-            .join(avg_y, "tgt_id")
-            .withColumn("margin", F.when(den > 0, F.col("sim") / den))
-            .filter(F.col("margin") >= BITEXT_MARGIN)
-        )
-        mx = Window.partitionBy("src_id").orderBy(
-            F.desc("margin"), F.desc("sim"), F.asc("tgt_id")
-        )
-        my = Window.partitionBy("tgt_id").orderBy(
-            F.desc("margin"), F.desc("sim"), F.asc("src_id")
-        )
-        return (
-            scored.withColumn("rx", F.row_number().over(mx))
-            .withColumn("ry", F.row_number().over(my))
-            .filter((F.col("rx") == 1) & (F.col("ry") == 1))
-            .select("src_id", "tgt_id", "sim", F.round("margin", 6).alias("margin"))
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    # batch margin / mutual-argmax verdict assembly on the drained
+    # candidate relation
+    dec = lambda c: F.col(c).cast("decimal(18,6)")  # noqa: E731
+    wx = Window.partitionBy("src_id").orderBy(F.desc("sim"), F.asc("tgt_id"))
+    wy = Window.partitionBy("tgt_id").orderBy(F.desc("sim"), F.asc("src_id"))
+    avg_x = (
+        pairs.withColumn("rk", F.row_number().over(wx))
+        .filter(F.col("rk") <= BITEXT_K)
+        .groupBy("src_id")
+        .agg((F.sum(dec("sim")).cast("double") / F.count("*")).alias("ax"))
+    )
+    avg_y = (
+        pairs.withColumn("rk", F.row_number().over(wy))
+        .filter(F.col("rk") <= BITEXT_K)
+        .groupBy("tgt_id")
+        .agg((F.sum(dec("sim")).cast("double") / F.count("*")).alias("ay"))
+    )
+    den = F.lit(0.5) * (F.col("ax") + F.col("ay"))
+    scored = (
+        pairs.join(avg_x, "src_id")
+        .join(avg_y, "tgt_id")
+        .withColumn("margin", F.when(den > 0, F.col("sim") / den))
+        .filter(F.col("margin") >= BITEXT_MARGIN)
+    )
+    mx = Window.partitionBy("src_id").orderBy(
+        F.desc("margin"), F.desc("sim"), F.asc("tgt_id")
+    )
+    my = Window.partitionBy("tgt_id").orderBy(
+        F.desc("margin"), F.desc("sim"), F.asc("src_id")
+    )
+    return (
+        scored.withColumn("rx", F.row_number().over(mx))
+        .withColumn("ry", F.row_number().over(my))
+        .filter((F.col("rx") == 1) & (F.col("ry") == 1))
+        .select("src_id", "tgt_id", "sim", F.round("margin", 6).alias("margin"))
+    )
 
 
 def _stream_bitext_mining_sql() -> str:
@@ -1468,9 +1272,6 @@ def stream_semantic_dedup_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantic_dedup_hier row-for-row (same oracle). This is
     stream_dedup_incremental's embedding-space sibling — the admission
     gate an embedding-deduped 100 TB corpus runs at its front door."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.operators.similarity import qcosine
     from capstone_etl_spark.operators.similarity import (
         SEMDEDUP_THRESHOLD,
@@ -1480,28 +1281,18 @@ def stream_semantic_dedup_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
         hier_route_expr,
         quantize_fp,
     )
-    from capstone_etl_spark.session import cached
     from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_semded_")
-    try:
-        emb = load_table(spark, sf_dir, "embeddings")
-        quant = quantize_fp()
-        emb_q = emb.select("vec_id", quant.alias("vq"))
-        assign = _stream_static(hier_assign(emb_q).select("vec_id", "cell"))
-        members = assign.join(emb.select("vec_id", "embedding"), "vec_id").select(
-            F.col("vec_id").alias("vec_a"), "cell", F.col("embedding").alias("ne")
-        )
-        brow = _stream_static(hier_branch_cells_row(emb_q))
+    emb = load_table(spark, sf_dir, "embeddings")
+    quant = quantize_fp()
+    emb_q = emb.select("vec_id", quant.alias("vq"))
+    assign = _stream_static(hier_assign(emb_q).select("vec_id", "cell"))
+    members = assign.join(emb.select("vec_id", "embedding"), "vec_id").select(
+        F.col("vec_id").alias("vec_a"), "cell", F.col("embedding").alias("ne")
+    )
+    brow = _stream_static(hier_branch_cells_row(emb_q))
 
-        staging = f"{work}/staging"
-        emb.repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
+    def transform(stream, staged):
         arriving = stream.select(
             F.col("vec_id").alias("vec_b"),
             F.col("embedding").alias("qe"),
@@ -1510,7 +1301,7 @@ def stream_semantic_dedup_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
         route = hier_route_expr()
         cand_cells = F.flatten(F.transform(F.col("route"), lambda r: r["cells"]))
         best_cell = hier_best_cell_expr()
-        spairs = (
+        return (
             arriving.join(F.broadcast(brow), F.lit(True))
             .withColumn("route", route)
             .withColumn("cand", cand_cells)
@@ -1520,13 +1311,12 @@ def stream_semantic_dedup_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(qcosine("qe", "ne") >= SEMDEDUP_THRESHOLD)
             .select("vec_b", "vec_a")
         )
-        got = run_to_memory(spairs, f"{work}/checkpoint", output_mode="append")
-        dup = got.groupBy("vec_b").agg(F.min("vec_a").alias("dup_of"))
-        return assign.join(dup, assign.vec_id == dup.vec_b, "left").select(
-            "vec_id", "cell", F.col("dup_of").isNull().alias("keep"), "dup_of"
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    got = drain_staged(spark, sf_dir, "embeddings", transform, "append")
+    dup = got.groupBy("vec_b").agg(F.min("vec_a").alias("dup_of"))
+    return assign.join(dup, assign.vec_id == dup.vec_b, "left").select(
+        "vec_id", "cell", F.col("dup_of").isNull().alias("keep"), "dup_of"
+    )
 
 
 def stream_hivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1539,9 +1329,6 @@ def stream_hivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     hivf_cell_balance exactly (shared _cell_balance_tail + shared
     oracle) — the share/cap audit a 100 TB deployment watches while
     shards of vectors land."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.operators.scaleaudit import _cell_balance_tail
     from capstone_etl_spark.operators.similarity import (
         hier_best_cell_expr,
@@ -1549,23 +1336,14 @@ def stream_hivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         hier_route_expr,
         quantize_fp,
     )
-    from capstone_etl_spark.session import cached
     from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_hivf_bal_")
-    try:
-        emb = load_table(spark, sf_dir, "embeddings")
-        quant = quantize_fp()
-        emb_q = emb.select("vec_id", quant.alias("vq"))
-        brow = _stream_static(hier_branch_cells_row(emb_q))
-        staging = f"{work}/staging"
-        emb.repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
+    emb = load_table(spark, sf_dir, "embeddings")
+    quant = quantize_fp()
+    emb_q = emb.select("vec_id", quant.alias("vq"))
+    brow = _stream_static(hier_branch_cells_row(emb_q))
+
+    def transform(stream, staged):
         route = hier_route_expr()
         cand_cells = F.flatten(F.transform(F.col("route"), lambda r: r["cells"]))
         best_cell = hier_best_cell_expr()
@@ -1576,11 +1354,10 @@ def stream_hivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("cand", cand_cells)
             .select(best_cell.alias("cell"))
         )
-        agg = assigned.groupBy("cell").agg(F.count("*").cast("long").alias("pop"))
-        snap = run_to_memory(agg, f"{work}/checkpoint", output_mode="complete")
-        return _cell_balance_tail(snap)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return assigned.groupBy("cell").agg(F.count("*").cast("long").alias("pop"))
+
+    snap = drain_staged(spark, sf_dir, "embeddings", transform, "complete")
+    return _cell_balance_tail(snap)
 
 
 def _stream_hivf_cell_balance_sql() -> str:
@@ -1609,10 +1386,13 @@ def stream_changelog_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark-vs-Spark in tests)."""
     from capstone_etl_spark.operators.events import changelog_snapshot, changelog_state
 
-    snap = _run(
+    snap = drain_staged(
         spark,
         sf_dir,
-        lambda s, wm: changelog_state(s.withWatermark("ts", wm)),
+        "events",
+        lambda s, staged: changelog_state(
+            s.withWatermark("ts", _horizon_watermark(staged))
+        ),
         "complete",
     )
     return changelog_snapshot(snap)
@@ -1635,34 +1415,22 @@ def stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     (collect_list order is nondeterministic — array_min doesn't
     care). The share/cap columns attach in the final batch projection
     over the drained ≈√N-row table."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.operators.scaleaudit import _cell_balance_tail
     from capstone_etl_spark.operators.similarity import quantize_fp, quantizer_seeds
-    from capstone_etl_spark.session import cached
     from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_emb_")
-    try:
-        emb = load_table(spark, sf_dir, "embeddings")
-        quant = quantize_fp()
-        seeds = quantizer_seeds(emb.select("vec_id", quant.alias("vq")))
-        # cached: the stream-static join re-evaluates the static side
-        # EVERY micro-batch — without this the full embeddings scan +
-        # hash + collect_list subtree runs once per trigger
-        # (stream_ann_topk's discipline)
-        seed_row = _stream_static(
-            seeds.agg(F.collect_list(F.struct("cell", "sq")).alias("seedlist"))
-        )
-        staging = f"{work}/staging"
-        emb.repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
+    emb = load_table(spark, sf_dir, "embeddings")
+    quant = quantize_fp()
+    seeds = quantizer_seeds(emb.select("vec_id", quant.alias("vq")))
+    # cached: the stream-static join re-evaluates the static side
+    # EVERY micro-batch — without this the full embeddings scan +
+    # hash + collect_list subtree runs once per trigger
+    # (stream_ann_topk's discipline)
+    seed_row = _stream_static(
+        seeds.agg(F.collect_list(F.struct("cell", "sq")).alias("seedlist"))
+    )
+
+    def transform(stream, staged):
         d2_structs = F.transform(
             F.col("seedlist"),
             lambda s: F.struct(
@@ -1679,11 +1447,10 @@ def stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(F.broadcast(seed_row), F.lit(True))
             .select(F.array_min(d2_structs)["cell"].alias("cell"))
         )
-        agg = assigned.groupBy("cell").agg(F.count("*").cast("long").alias("pop"))
-        snap = run_to_memory(agg, f"{work}/checkpoint", output_mode="complete")
-        return _cell_balance_tail(snap)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return assigned.groupBy("cell").agg(F.count("*").cast("long").alias("pop"))
+
+    snap = drain_staged(spark, sf_dir, "embeddings", transform, "complete")
+    return _cell_balance_tail(snap)
 
 
 def stream_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1696,38 +1463,26 @@ def stream_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     register file equals the batch sketch's exactly; the shared
     hll_finalize tail (estimator arithmetic) and the static exact
     counts produce the identical audit row — batch oracle verbatim."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.functions.text import tokenize
     from capstone_etl_spark.operators.sketches import hll_finalize, hll_rho_rows
     from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_hll_")
-    try:
-        staging = f"{work}/staging"
-        docs = load_table(spark, sf_dir, "documents")
-        docs.repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
+    docs = load_table(spark, sf_dir, "documents")
+
+    def transform(stream, staged):
         toks = stream.select("source", F.explode(tokenize("text")).alias("token"))
-        agg = hll_rho_rows(toks).groupBy("source", "bucket").agg(
+        return hll_rho_rows(toks).groupBy("source", "bucket").agg(
             F.max("rho").alias("reg")
         )
-        snap = run_to_memory(agg, f"{work}/checkpoint", output_mode="complete")
-        exact = (
-            docs.select("source", F.explode(tokenize("text")).alias("token"))
-            .distinct()
-            .groupBy("source")
-            .agg(F.count("*").cast("long").alias("n_exact"))
-        )
-        return hll_finalize(snap, exact)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    snap = drain_staged(spark, sf_dir, "documents", transform, "complete")
+    exact = (
+        docs.select("source", F.explode(tokenize("text")).alias("token"))
+        .distinct()
+        .groupBy("source")
+        .agg(F.count("*").cast("long").alias("n_exact"))
+    )
+    return hll_finalize(snap, exact)
 
 
 def _stream_ivf_assign_sql() -> str:
@@ -1769,7 +1524,7 @@ def stream_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         ab_variant_col,
     )
 
-    def transform(stream, wm):
+    def transform(stream, staged):
         prepared = stream.filter(
             F.col("event_type").isin(AB_EXPOSE_TYPE, AB_CONVERT_TYPE)
         ).select(
@@ -1782,7 +1537,7 @@ def stream_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max(F.when(F.col("is_purchase"), F.col("ts_us"))).alias("mx"),
         )
 
-    got = _run(spark, sf_dir, transform, "update")
+    got = drain_staged(spark, sf_dir, "events", transform, "update")
     final = got.groupBy("user_id").agg(
         F.min("mn").alias("mn"), F.max("mx").alias("mx")
     )
@@ -1823,12 +1578,12 @@ def stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.greatest(F.lit(0), F.floor(F.col("value") / SQH_W)),
     ).cast("long")
 
-    def transform(stream, wm):
+    def transform(stream, staged):
         return stream.groupBy(
             "event_type", bin_col.alias("bin")
         ).agg(F.count("*").alias("nb"))
 
-    snap = _run(spark, sf_dir, transform, "complete")
+    snap = drain_staged(spark, sf_dir, "events", transform, "complete")
     # cumulative + per-type total in ONE window pass over the bounded
     # snapshot (no self-join back to the drained table), then every
     # cell row expands into the 3-quantile grid and the one bracketing
@@ -1952,30 +1707,16 @@ def stream_group_dro(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs on the drained snapshot: every micro-batch could re-weight
     the mixer without rescanning landed text. Oracle: the batch DRO
     SQL verbatim."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.functions.text import tokenize
     from capstone_etl_spark.operators.quality import dro_release
-    from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_dro_")
-    try:
-        staging = f"{work}/staging"
-        load_table(spark, sf_dir, "documents").repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
-        tf = stream.select(
+    def transform(stream, staged):
+        return stream.select(
             "source", F.explode(tokenize("text")).alias("token")
         ).groupBy("source", "token").agg(F.count("*").alias("cnt"))
-        snap = run_to_memory(tf, f"{work}/checkpoint", output_mode="complete")
-        return dro_release(snap)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    snap = drain_staged(spark, sf_dir, "documents", transform, "complete")
+    return dro_release(snap)
 
 
 def stream_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1987,34 +1728,20 @@ def stream_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     drained snapshot, so every micro-batch could re-publish the drift
     table without rescanning landed shards. Oracle: the batch KS SQL
     verbatim."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.operators.textstats import ks_release
     from capstone_etl_spark.session import checkpoint_truncate
-    from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_ks_")
-    try:
-        staging = f"{work}/staging"
-        load_table(spark, sf_dir, "documents").repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
-        sl = stream.groupBy(
+    def transform(stream, staged):
+        return stream.groupBy(
             "source", F.col("n_chars").alias("len")
         ).agg(F.count("*").alias("cs"))
-        snap = run_to_memory(sl, f"{work}/checkpoint", output_mode="complete")
-        # the KS tail references the count relation three times (grid
-        # spine, per-length totals, per-source totals); a memory-sink
-        # table self-joined that way carries conflicting references —
-        # truncate to a plain (bounded, release-tracked) scan first
-        return ks_release(checkpoint_truncate(snap))
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    snap = drain_staged(spark, sf_dir, "documents", transform, "complete")
+    # the KS tail references the count relation three times (grid
+    # spine, per-length totals, per-source totals); a memory-sink
+    # table self-joined that way carries conflicting references —
+    # truncate to a plain (bounded, release-tracked) scan first
+    return ks_release(checkpoint_truncate(snap))
 
 
 def stream_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2032,13 +1759,9 @@ def stream_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries conflicting references."""
     from capstone_etl_spark.operators.events import rfm_release
     from capstone_etl_spark.session import checkpoint_truncate
-    from capstone_etl_spark.streaming import stage_events, events_stream
 
-    work = tempfile.mkdtemp(prefix="spark_stream_rfm_")
-    try:
-        stage_events(spark, sf_dir, f"{work}/staging", n_files=4)
-        stream = events_stream(spark, f"{work}/staging", max_files_per_trigger=2)
-        users = stream.groupBy("user_id").agg(
+    def transform(stream, staged):
+        return stream.groupBy("user_id").agg(
             F.max(F.col("ts").cast("long")).alias("last_sec"),
             F.count("*").cast("long").alias("n_events"),
             # matches the batch _dsum shape exactly: exact decimal sum
@@ -2047,10 +1770,9 @@ def stream_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "monetary"
             ),
         )
-        snap = run_to_memory(users, f"{work}/checkpoint", output_mode="complete")
-        return rfm_release(checkpoint_truncate(snap))
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    snap = drain_staged(spark, sf_dir, "events", transform, "complete")
+    return rfm_release(checkpoint_truncate(snap))
 
 
 def stream_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2073,29 +1795,19 @@ def stream_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from capstone_etl_spark.session import checkpoint_truncate
     from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_nb_")
-    try:
-        staging = f"{work}/staging"
-        load_table(spark, sf_dir, "documents").repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
-        cells = (
+    def transform(stream, staged):
+        return (
             stream.filter(split_column(F.col("doc_id")) == "train")
             .select("source", F.explode(tokenize("text")).alias("token"))
             .groupBy("token", "source")
             .agg(F.count("*").alias("c"))
         )
-        snap = run_to_memory(cells, f"{work}/checkpoint", output_mode="complete")
-        docs = load_table(spark, sf_dir, "documents").withColumn(
-            "_is_train", split_column(F.col("doc_id")) == "train"
-        )
-        return nb_release(docs, checkpoint_truncate(snap))
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    snap = drain_staged(spark, sf_dir, "documents", transform, "complete")
+    docs = load_table(spark, sf_dir, "documents").withColumn(
+        "_is_train", split_column(F.col("doc_id")) == "train"
+    )
+    return nb_release(docs, checkpoint_truncate(snap))
 
 
 def stream_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2113,15 +1825,12 @@ def stream_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     from capstone_etl_spark.operators.events import ab_variant_col, cuped_release
     from capstone_etl_spark.session import checkpoint_truncate
 
-    work = tempfile.mkdtemp(prefix="spark_stream_cuped_")
-    try:
-        staged = stage_events(spark, sf_dir, f"{work}/staging", n_files=4)
+    def transform(stream, staged):
         t_mid = staged.agg(
             ((F.min(F.unix_micros("ts")) + F.max(F.unix_micros("ts"))) / 2).alias("m")
         ).first()[0]
-        stream = events_stream(spark, f"{work}/staging", max_files_per_trigger=2)
         dec = F.col("value").cast("decimal(18,2)")
-        per_user = (
+        return (
             stream.groupBy("user_id")
             .agg(
                 F.coalesce(
@@ -2135,10 +1844,9 @@ def stream_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("user_id", ab_variant_col().alias("variant"), "x", "y")
         )
-        snap = run_to_memory(per_user, f"{work}/checkpoint", output_mode="complete")
-        return cuped_release(checkpoint_truncate(snap))
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    snap = drain_staged(spark, sf_dir, "events", transform, "complete")
+    return cuped_release(checkpoint_truncate(snap))
 
 
 def stream_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2155,28 +1863,17 @@ def stream_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from capstone_etl_spark.functions.text import tokenize
     from capstone_etl_spark.operators.quality import _pareto_toks, pareto_release
     from capstone_etl_spark.session import checkpoint_truncate
-    from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_pareto_")
-    try:
-        staging = f"{work}/staging"
-        load_table(spark, sf_dir, "documents").repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
-        per_x = stream.select(
+    def transform(stream, staged):
+        return stream.select(
             "n_chars",
             F.size(F.array_distinct(tokenize("text"))).cast("long").alias("ndt"),
         ).groupBy("n_chars").agg(F.max("ndt").alias("mx"))
-        snap = run_to_memory(per_x, f"{work}/checkpoint", output_mode="complete")
-        return pareto_release(
-            _pareto_toks(spark, sf_dir), checkpoint_truncate(snap)
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    snap = drain_staged(spark, sf_dir, "documents", transform, "complete")
+    return pareto_release(
+        _pareto_toks(spark, sf_dir), checkpoint_truncate(snap)
+    )
 
 
 def stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2191,14 +1888,9 @@ def stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     landed events. Oracle: the batch PSI SQL verbatim (the grid
     literals are computed by the same expressions the batch plan
     evaluates, so the releases agree exactly)."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.operators.events import PSI_BINS, psi_release
 
-    work = tempfile.mkdtemp(prefix="spark_stream_psi_")
-    try:
-        staged = stage_events(spark, sf_dir, f"{work}/staging", n_files=4)
+    def transform(stream, staged):
         t_mid = staged.agg(
             ((F.min(F.unix_micros("ts")) + F.max(F.unix_micros("ts"))) / 2).alias("m")
         ).first()[0]
@@ -2211,16 +1903,13 @@ def stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             width > 0,
             F.greatest(F.lit(0), F.least(F.lit(PSI_BINS - 1), bin_raw)),
         ).otherwise(F.lit(0))
-        stream = events_stream(spark, f"{work}/staging", max_files_per_trigger=2)
-        agg = stream.groupBy(
+        return stream.groupBy(
             "event_type",
             (F.unix_micros("ts") <= F.lit(t_mid)).alias("is_ref"),
             bin_id.cast("long").alias("bin"),
         ).agg(F.count("*").alias("n"))
-        snap = run_to_memory(agg, f"{work}/checkpoint", output_mode="complete")
-        return psi_release(snap)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    return psi_release(drain_staged(spark, sf_dir, "events", transform, "complete"))
 
 
 def stream_conversion_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2256,7 +1945,7 @@ def stream_conversion_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from capstone_etl_spark.session import checkpoint_truncate
 
-    def transform(stream, wm):
+    def transform(stream, staged):
         ev = stream.select(
             "user_id",
             F.col("event_type"),
@@ -2286,7 +1975,7 @@ def stream_conversion_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     # drained sink, and a memory-sink self-join carries conflicting
     # references (stream_kll_sketch's lesson) — the LogicalRDD form
     # joins cleanly and the drained table is tiny
-    got = checkpoint_truncate(_run(spark, sf_dir, transform, "update"))
+    got = checkpoint_truncate(drain_staged(spark, sf_dir, "events", transform, "update"))
     # per-user finals from the 'm' rows: update-mode emissions are
     # cumulative (fv never rises, last never falls), so min/max over
     # emissions IS the drained state
@@ -2325,27 +2014,13 @@ def stream_dp_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch release SQL verbatim (the noise is a deterministic
     function of (salt, source), so stream and batch releases agree
     exactly)."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.operators.privacy import dp_release
-    from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_dp_")
-    try:
-        staging = f"{work}/staging"
-        load_table(spark, sf_dir, "documents").repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
-        agg = stream.groupBy("source").agg(F.count("*").alias("n_docs"))
-        snap = run_to_memory(agg, f"{work}/checkpoint", output_mode="complete")
-        return dp_release(snap)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    def transform(stream, staged):
+        return stream.groupBy("source").agg(F.count("*").alias("n_docs"))
+
+    snap = drain_staged(spark, sf_dir, "documents", transform, "complete")
+    return dp_release(snap)
 
 
 def stream_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2396,9 +2071,6 @@ def stream_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebuild); the production deployment reads them as published
     artifacts and pays only the streaming legs + the drained
     assembly."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.functions.hashing import md5_hash60
     from capstone_etl_spark.functions.text import token_ngrams, tokenize
     from capstone_etl_spark.operators.corpus import MIN_CHARS, N_SHARDS
@@ -2414,51 +2086,42 @@ def stream_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from capstone_etl_spark.session import cached
     from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_manifest_")
-    try:
-        # static index legs go through checkpoint_truncate, not cached()
-        # (r12, guide §1.2/§5): a cache is matched BY PLAN, and the
-        # per-micro-batch IncrementalExecution re-derives the stream
-        # plan each trigger, so parts of the deep static lineage were
-        # re-executed per batch (measured: 1211 -> 808 tasks, 43 -> 37
-        # MB shuffle write, wall roughly halved on quiet pairs, hash
-        # identical). A LogicalRDD is position-matched — every batch
-        # reads the materialized blocks, full stop. Same trade the
-        # production deployment makes by reading published artifacts.
-        _static = _stream_static
-        docs = load_table(spark, sf_dir, "documents")
-        # static index artifacts — ONE tokenize pass, two cap domains
-        # (the batch operator's exact sharing shape, corpus.py)
-        toks_b = docs.select(
-            "doc_id", (F.col("n_chars") >= MIN_CHARS).alias("kept"), tokenize("text").alias("toks")
+    # static index legs go through checkpoint_truncate, not cached()
+    # (r12, guide §1.2/§5): a cache is matched BY PLAN, and the
+    # per-micro-batch IncrementalExecution re-derives the stream
+    # plan each trigger, so parts of the deep static lineage were
+    # re-executed per batch (measured: 1211 -> 808 tasks, 43 -> 37
+    # MB shuffle write, wall roughly halved on quiet pairs, hash
+    # identical). A LogicalRDD is position-matched — every batch
+    # reads the materialized blocks, full stop. Same trade the
+    # production deployment makes by reading published artifacts.
+    _static = _stream_static
+    docs = load_table(spark, sf_dir, "documents")
+    # static index artifacts — ONE tokenize pass, two cap domains
+    # (the batch operator's exact sharing shape, corpus.py)
+    toks_b = docs.select(
+        "doc_id", (F.col("n_chars") >= MIN_CHARS).alias("kept"), tokenize("text").alias("toks")
+    )
+    uncapped = _static(
+        toks_b.select(
+            "doc_id", "kept", F.explode(token_ngrams("toks", NGRAM_N)).alias("shingle")
         )
-        uncapped = _static(
-            toks_b.select(
-                "doc_id", "kept", F.explode(token_ngrams("toks", NGRAM_N)).alias("shingle")
-            )
-            .select("doc_id", "kept", md5_hash60(F.col("shingle")).alias("sh"))
-            .distinct()
-        )
-        kept_sh = _static(
-            shingle_df_cap(uncapped.filter(F.col("kept")).select("doc_id", "sh"))
-        )
-        full_sh = _static(shingle_df_cap(uncapped.select("doc_id", "sh")))
-        kept_sizes = kept_sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-        dd_index = kept_sh.select("sh", F.col("doc_id").alias("partner"))
-        bench = full_sh.filter(F.col("doc_id") % BENCH_MOD == 0).select(
-            "sh", F.col("doc_id").alias("bench_doc")
-        )
-        full_sizes = full_sh.groupBy("doc_id").agg(F.count("*").alias("szf"))
-        sz_b = bench.groupBy("bench_doc").agg(F.count("*").alias("sz_b"))
+        .select("doc_id", "kept", md5_hash60(F.col("shingle")).alias("sh"))
+        .distinct()
+    )
+    kept_sh = _static(
+        shingle_df_cap(uncapped.filter(F.col("kept")).select("doc_id", "sh"))
+    )
+    full_sh = _static(shingle_df_cap(uncapped.select("doc_id", "sh")))
+    kept_sizes = kept_sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
+    dd_index = kept_sh.select("sh", F.col("doc_id").alias("partner"))
+    bench = full_sh.filter(F.col("doc_id") % BENCH_MOD == 0).select(
+        "sh", F.col("doc_id").alias("bench_doc")
+    )
+    full_sizes = full_sh.groupBy("doc_id").agg(F.count("*").alias("szf"))
+    sz_b = bench.groupBy("bench_doc").agg(F.count("*").alias("sz_b"))
 
-        staging = f"{work}/staging"
-        docs.repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
+    def transform(stream, staged):
         stoks = stream.select(
             "doc_id",
             (F.col("n_chars") >= MIN_CHARS).alias("kept"),
@@ -2538,7 +2201,7 @@ def stream_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         jac_s = F.col("cnt") / (F.col("za") + F.col("zb") - F.col("cnt"))
         cont_s = F.col("cnt") / F.col("zb")
-        agg = (
+        return (
             doc_rows2.unionByName(dd_rows)
             .unionByName(dc_rows)
             .groupBy("kind", "a", "b", "za", "zb", "split")
@@ -2552,47 +2215,46 @@ def stream_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
         )
-        # corpus-scale shingle joins run per trigger here — throughput
-        # work, not bounded-state overhead — so keep the session's full
-        # shuffle parallelism (state_partitions=None)
-        got = cached(
-            run_to_memory(
-                agg, f"{work}/checkpoint", output_mode="complete", state_partitions=None
-            )
-        )
 
-        # batch verdict assembly over the drained (already-thresholded)
-        # state table
-        pairs = got.filter(F.col("kind") == "dd").select("a", "b")
-        edges = pairs.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
-            pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"))
+    # corpus-scale shingle joins run per trigger here — throughput
+    # work, not bounded-state overhead — so keep the session's full
+    # shuffle parallelism (state_partitions=None)
+    got = cached(
+        drain_staged(
+            spark, sf_dir, "documents", transform, "complete", state_partitions=None
         )
-        labels = connected_components(edges)
-        contaminated = (
-            got.filter(F.col("kind") == "dc")
-            .select(F.col("a").alias("doc_id"))
-            .distinct()
+    )
+
+    # batch verdict assembly over the drained (already-thresholded)
+    # state table
+    pairs = got.filter(F.col("kind") == "dd").select("a", "b")
+    edges = pairs.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
+        pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"))
+    )
+    labels = connected_components(edges)
+    contaminated = (
+        got.filter(F.col("kind") == "dc")
+        .select(F.col("a").alias("doc_id"))
+        .distinct()
+    )
+    admitted = (
+        got.filter(F.col("kind") == "doc")
+        .select(
+            F.col("a").alias("doc_id"),
+            F.col("b").alias("shard_id"),
+            F.col("s1").alias("n_tokens"),
+            "split",
         )
-        admitted = (
-            got.filter(F.col("kind") == "doc")
-            .select(
-                F.col("a").alias("doc_id"),
-                F.col("b").alias("shard_id"),
-                F.col("s1").alias("n_tokens"),
-                "split",
-            )
-            .join(labels, "doc_id", "left")
-            .filter(F.col("doc_id") == F.coalesce("label", "doc_id"))
-            .join(contaminated, "doc_id", "left_anti")
-        )
-        return admitted.groupBy("split", "shard_id").agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.sum("n_tokens").cast("long").alias("n_tokens"),
-            F.min("doc_id").cast("long").alias("min_doc_id"),
-            F.max("doc_id").cast("long").alias("max_doc_id"),
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        .join(labels, "doc_id", "left")
+        .filter(F.col("doc_id") == F.coalesce("label", "doc_id"))
+        .join(contaminated, "doc_id", "left_anti")
+    )
+    return admitted.groupBy("split", "shard_id").agg(
+        F.count("*").cast("long").alias("n_docs"),
+        F.sum("n_tokens").cast("long").alias("n_tokens"),
+        F.min("doc_id").cast("long").alias("min_doc_id"),
+        F.max("doc_id").cast("long").alias("max_doc_id"),
+    )
 
 
 def _stream_training_manifest_sql() -> str:
@@ -2618,29 +2280,17 @@ def stream_kll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     verbatim. The nested-sample property (level L+1 ⊆ level L) is what
     makes this THE 100 TB shape: shards sketched at different corpus
     epochs merge by re-filter + union, never by resampling."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.functions.hashing import md5_hash60
     from capstone_etl_spark.operators.sketches import KLL_QS, _kll_stats
     from capstone_etl_spark.session import cached
     from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_kll_")
-    try:
-        docs = load_table(spark, sf_dir, "documents")
-        h = md5_hash60(F.concat(F.lit("kll:"), F.col("doc_id").cast("string")))
-        vals_b = docs.select("source", F.col("n_chars").alias("v"), h.alias("h"))
-        stats = _stream_static(_kll_stats(vals_b))
+    docs = load_table(spark, sf_dir, "documents")
+    h = md5_hash60(F.concat(F.lit("kll:"), F.col("doc_id").cast("string")))
+    vals_b = docs.select("source", F.col("n_chars").alias("v"), h.alias("h"))
+    stats = _stream_static(_kll_stats(vals_b))
 
-        staging = f"{work}/staging"
-        docs.repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
+    def transform(stream, staged):
         svals = stream.select("source", F.col("n_chars").alias("v"), h.alias("h"))
         surv = (
             svals.join(stats, "source")
@@ -2650,93 +2300,92 @@ def stream_kll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         ticks = svals.select(
             F.lit("n").alias("kind"), "source", F.lit(None).cast("long").alias("v")
         )
-        agg = (
+        return (
             surv.unionByName(ticks)
             .groupBy("kind", "source", "v")
             .agg(F.count("*").alias("c"))
         )
-        got = cached(run_to_memory(agg, f"{work}/checkpoint", output_mode="complete"))
 
-        # batch assembly over the drained state (the n ticks reproduce
-        # the batch per-source counts, so L/w/r recompute identically)
-        samp = got.filter(F.col("kind") == "s").select("source", "v", "c")
-        wv = Window.partitionBy("source").orderBy("v").rowsBetween(
-            Window.unboundedPreceding, 0
-        )
-        samp_cum = samp.join(F.broadcast(stats), "source").select(
-            "source", "v", (F.sum(F.col("c")).over(wv) * F.col("w")).alias("cumw")
-        )
-        szs = samp.groupBy("source").agg(
-            F.sum("c").cast("long").alias("sample_size"), F.max("v").alias("vmax")
-        )
-        # qcfg and samp_cum both descend from the drained sink — truncate
-        # one side's lineage so the join carries no conflicting
-        # references (the sink-self-join lesson, checkpoint_truncate)
-        from capstone_etl_spark.session import checkpoint_truncate
+    got = cached(drain_staged(spark, sf_dir, "documents", transform, "complete"))
 
-        qcfg = checkpoint_truncate(
-            got.filter(F.col("kind") == "n")
-            .groupBy("source")
-            .agg(F.sum("c").cast("long").alias("n"))
-            .join(F.broadcast(stats.select("source", "L")), "source")
-            .select(
-                F.col("source").alias("qsrc"), "n", "L",
-                F.explode(F.array(*[F.lit(q) for q in KLL_QS])).alias("q"),
-            )
-            .select(
-                "qsrc", "n", "L", "q",
-                F.ceil(F.col("q") * F.col("n").cast("double")).cast("long").alias("r"),
-            )
+    # batch assembly over the drained state (the n ticks reproduce
+    # the batch per-source counts, so L/w/r recompute identically)
+    samp = got.filter(F.col("kind") == "s").select("source", "v", "c")
+    wv = Window.partitionBy("source").orderBy("v").rowsBetween(
+        Window.unboundedPreceding, 0
+    )
+    samp_cum = samp.join(F.broadcast(stats), "source").select(
+        "source", "v", (F.sum(F.col("c")).over(wv) * F.col("w")).alias("cumw")
+    )
+    szs = samp.groupBy("source").agg(
+        F.sum("c").cast("long").alias("sample_size"), F.max("v").alias("vmax")
+    )
+    # qcfg and samp_cum both descend from the drained sink — truncate
+    # one side's lineage so the join carries no conflicting
+    # references (the sink-self-join lesson, checkpoint_truncate)
+    from capstone_etl_spark.session import checkpoint_truncate
+
+    qcfg = checkpoint_truncate(
+        got.filter(F.col("kind") == "n")
+        .groupBy("source")
+        .agg(F.sum("c").cast("long").alias("n"))
+        .join(F.broadcast(stats.select("source", "L")), "source")
+        .select(
+            F.col("source").alias("qsrc"), "n", "L",
+            F.explode(F.array(*[F.lit(q) for q in KLL_QS])).alias("q"),
         )
-        est = (
-            qcfg.join(
-                samp_cum,
-                (F.col("qsrc") == F.col("source")) & (F.col("cumw") >= F.col("r")),
-                "left",
-            )
-            .groupBy(F.col("qsrc").alias("source"), "q", "n", "L", "r")
-            .agg(F.min("v").alias("est_v"))
+        .select(
+            "qsrc", "n", "L", "q",
+            F.ceil(F.col("q") * F.col("n").cast("double")).cast("long").alias("r"),
         )
-        wvx = Window.partitionBy("source").orderBy("v").rowsBetween(
-            Window.unboundedPreceding, 0
+    )
+    est = (
+        qcfg.join(
+            samp_cum,
+            (F.col("qsrc") == F.col("source")) & (F.col("cumw") >= F.col("r")),
+            "left",
         )
-        val_cum = (
-            vals_b.groupBy("source", "v")
-            .agg(F.count("*").alias("cnt"))
-            .select("source", "v", F.sum("cnt").over(wvx).alias("cum"))
+        .groupBy(F.col("qsrc").alias("source"), "q", "n", "L", "r")
+        .agg(F.min("v").alias("est_v"))
+    )
+    wvx = Window.partitionBy("source").orderBy("v").rowsBetween(
+        Window.unboundedPreceding, 0
+    )
+    val_cum = (
+        vals_b.groupBy("source", "v")
+        .agg(F.count("*").alias("cnt"))
+        .select("source", "v", F.sum("cnt").over(wvx).alias("cum"))
+    )
+    exact = (
+        qcfg.select("qsrc", "q", "r")
+        .join(
+            val_cum,
+            (F.col("qsrc") == F.col("source")) & (F.col("cum") >= F.col("r")),
         )
-        exact = (
-            qcfg.select("qsrc", "q", "r")
-            .join(
-                val_cum,
-                (F.col("qsrc") == F.col("source")) & (F.col("cum") >= F.col("r")),
-            )
-            .groupBy(F.col("qsrc").alias("source"), "q")
-            .agg(F.min("v").cast("double").alias("exact_quantile"))
+        .groupBy(F.col("qsrc").alias("source"), "q")
+        .agg(F.min("v").cast("double").alias("exact_quantile"))
+    )
+    return (
+        est.join(szs, "source")
+        .join(exact, ["source", "q"])
+        .select(
+            "source",
+            "q",
+            F.col("n").cast("long").alias("n"),
+            F.col("L").cast("long").alias("level"),
+            "sample_size",
+            F.col("r").alias("target_rank"),
+            F.coalesce(F.col("est_v"), F.col("vmax")).cast("double").alias("est_quantile"),
+            "exact_quantile",
+            F.round(
+                F.abs(
+                    F.coalesce(F.col("est_v"), F.col("vmax")).cast("double")
+                    - F.col("exact_quantile")
+                ),
+                6,
+            ).alias("abs_error"),
         )
-        return (
-            est.join(szs, "source")
-            .join(exact, ["source", "q"])
-            .select(
-                "source",
-                "q",
-                F.col("n").cast("long").alias("n"),
-                F.col("L").cast("long").alias("level"),
-                "sample_size",
-                F.col("r").alias("target_rank"),
-                F.coalesce(F.col("est_v"), F.col("vmax")).cast("double").alias("est_quantile"),
-                "exact_quantile",
-                F.round(
-                    F.abs(
-                        F.coalesce(F.col("est_v"), F.col("vmax")).cast("double")
-                        - F.col("exact_quantile")
-                    ),
-                    6,
-                ).alias("abs_error"),
-            )
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    )
 
 
 def _stream_kll_sketch_sql() -> str:
@@ -2768,9 +2417,6 @@ def stream_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
     one cell's members (quantizer law ≈√N_base); nothing aggregates
     in-stream, so re-delivery cannot corrupt state (there is none) and
     the sink is verdict-relevant rows only."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.operators.dedup import _is_delta
     from capstone_etl_spark.operators.similarity import (
         BRANCH_PROBES,
@@ -2787,38 +2433,28 @@ def stream_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
         NOISE_MIN_VOTES,
         _noise_verdict_cols,
     )
-    from capstone_etl_spark.session import cached
     from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_emb_")
-    try:
-        emb = load_table(spark, sf_dir, "embeddings")
-        quant = quantize_fp()
-        emb_q = emb.select("vec_id", quant.alias("vq"))
-        base_q = emb_q.filter(~_is_delta(F.col("vec_id")))
-        # truncated, not cached: the stream-static join re-plans the
-        # static side EVERY micro-batch and a deep cached lineage was
-        # partially re-executed per trigger (_stream_static docstring)
-        index_row = _stream_static(hier_branch_cells_row(base_q))
-        members = _stream_static(
-            hier_assign(base_q)
-            .join(emb.select("vec_id", "label"), "vec_id")
-            .select(
-                F.col("vec_id").alias("vec_b"),
-                "cell",
-                F.col("vq").alias("qb"),
-                F.col("label").alias("lb"),
-            )
+    emb = load_table(spark, sf_dir, "embeddings")
+    quant = quantize_fp()
+    emb_q = emb.select("vec_id", quant.alias("vq"))
+    base_q = emb_q.filter(~_is_delta(F.col("vec_id")))
+    # truncated, not cached: the stream-static join re-plans the
+    # static side EVERY micro-batch and a deep cached lineage was
+    # partially re-executed per trigger (_stream_static docstring)
+    index_row = _stream_static(hier_branch_cells_row(base_q))
+    members = _stream_static(
+        hier_assign(base_q)
+        .join(emb.select("vec_id", "label"), "vec_id")
+        .select(
+            F.col("vec_id").alias("vec_b"),
+            "cell",
+            F.col("vq").alias("qb"),
+            F.col("label").alias("lb"),
         )
+    )
 
-        staging = f"{work}/staging"
-        emb.repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
+    def transform(stream, staged):
         routed = (
             stream.filter(_is_delta(F.col("vec_id")))
             .select(
@@ -2836,47 +2472,44 @@ def stream_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
                 hier_best_cell_expr().alias("cell"),
             )
         )
-        cands = routed.join(members, "cell").select(
+        return routed.join(members, "cell").select(
             "vec_a",
             "vec_b",
             _d2_fold("qa", F.col("qb")).alias("d2p"),
             (F.col("la") == F.col("lb")).cast("int").alias("match"),
         )
-        drained = run_to_memory(cands, f"{work}/checkpoint", output_mode="append")
 
-        # batch verdict tail over the drained candidate table
-        from pyspark.sql import Window
+    drained = drain_staged(spark, sf_dir, "embeddings", transform, "append")
 
-        wv = Window.partitionBy("vec_a").orderBy(F.asc("d2p"), F.asc("vec_b"))
-        votes = (
-            drained.withColumn("rnk", F.row_number().over(wv))
-            .filter(F.col("rnk") <= NOISE_K)
-            .groupBy("vec_a")
-            .agg(
-                F.count("*").alias("n_votes"),
-                F.sum("match").alias("n_agree"),
-            )
-            .withColumnRenamed("vec_a", "vec_id")
+    # batch verdict tail over the drained candidate table
+    wv = Window.partitionBy("vec_a").orderBy(F.asc("d2p"), F.asc("vec_b"))
+    votes = (
+        drained.withColumn("rnk", F.row_number().over(wv))
+        .filter(F.col("rnk") <= NOISE_K)
+        .groupBy("vec_a")
+        .agg(
+            F.count("*").alias("n_votes"),
+            F.sum("match").alias("n_agree"),
         )
-        # delta rows with their routed cells, recomputed batch-side for
-        # the left join (cheap: |delta| rows against the hier index)
-        delta_rows = (
-            _hier_cand_seed(emb_q.filter(_is_delta(F.col("vec_id"))), index_q=base_q)
-            .groupBy("vec_id")
-            .agg(F.min(F.struct("d2", "cell")).alias("m"))
-            .select("vec_id", F.col("m.cell").alias("cell"))
-            .join(emb.select("vec_id", "label"), "vec_id")
-        )
-        out = delta_rows.join(votes, "vec_id", "left").select(
-            "vec_id", "label", "cell", *_noise_verdict_cols()
-        )
-        return out.withColumn(
-            "suspect",
-            (F.col("n_votes") >= NOISE_MIN_VOTES)
-            & (F.col("n_agree") * 2 < F.col("n_votes")),
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        .withColumnRenamed("vec_a", "vec_id")
+    )
+    # delta rows with their routed cells, recomputed batch-side for
+    # the left join (cheap: |delta| rows against the hier index)
+    delta_rows = (
+        _hier_cand_seed(emb_q.filter(_is_delta(F.col("vec_id"))), index_q=base_q)
+        .groupBy("vec_id")
+        .agg(F.min(F.struct("d2", "cell")).alias("m"))
+        .select("vec_id", F.col("m.cell").alias("cell"))
+        .join(emb.select("vec_id", "label"), "vec_id")
+    )
+    out = delta_rows.join(votes, "vec_id", "left").select(
+        "vec_id", "label", "cell", *_noise_verdict_cols()
+    )
+    return out.withColumn(
+        "suspect",
+        (F.col("n_votes") >= NOISE_MIN_VOTES)
+        & (F.col("n_agree") * 2 < F.col("n_votes")),
+    )
 
 
 def _stream_label_noise_sql() -> str:
@@ -2897,37 +2530,25 @@ def stream_embedding_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     shift, base sd, standardized shift, all ROUND(·,6)), so the
     oracle is EMBEDDING_SHIFT_AUDIT_SQL verbatim. Decimal sums are
     order-free, so micro-batch arrival order cannot change a digit."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.operators.dedup import _is_delta
-    from capstone_etl_spark.session import cached
     from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_emb_")
-    try:
-        emb = load_table(spark, sf_dir, "embeddings")
-        dec = lambda c: c.cast("decimal(20,12)")  # noqa: E731
-        base = _stream_static(
-            emb.filter(~_is_delta(F.col("vec_id")))
-            .select(F.posexplode("embedding").alias("d", "xf"))
-            .select("d", F.col("xf").cast("double").alias("x"))
-            .groupBy("d")
-            .agg(
-                F.count("*").cast("long").alias("n_base"),
-                F.sum(dec(F.col("x"))).alias("sum_b"),
-                F.sum(dec(F.col("x") * F.col("x"))).alias("ssq_b"),
-            )
+    emb = load_table(spark, sf_dir, "embeddings")
+    dec = lambda c: c.cast("decimal(20,12)")  # noqa: E731
+    base = _stream_static(
+        emb.filter(~_is_delta(F.col("vec_id")))
+        .select(F.posexplode("embedding").alias("d", "xf"))
+        .select("d", F.col("xf").cast("double").alias("x"))
+        .groupBy("d")
+        .agg(
+            F.count("*").cast("long").alias("n_base"),
+            F.sum(dec(F.col("x"))).alias("sum_b"),
+            F.sum(dec(F.col("x") * F.col("x"))).alias("ssq_b"),
         )
-        staging = f"{work}/staging"
-        emb.repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
-        delta_agg = (
+    )
+
+    def transform(stream, staged):
+        return (
             stream.filter(_is_delta(F.col("vec_id")))
             .select(F.posexplode("embedding").alias("d", "xf"))
             .select("d", F.col("xf").cast("double").alias("x"))
@@ -2937,37 +2558,34 @@ def stream_embedding_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(dec(F.col("x"))).alias("sum_d"),
             )
         )
-        drained = run_to_memory(
-            delta_agg, f"{work}/checkpoint", output_mode="complete"
-        )
-        joined = base.join(drained, "d", "left").select(
-            "d",
-            "n_base",
-            F.coalesce(F.col("n_delta"), F.lit(0).cast("long")).alias("n_delta"),
-            "sum_b",
-            "sum_d",
-            "ssq_b",
-        )
-        # the batch operator's derived tail, expression for expression
-        base_mean = F.round(F.col("sum_b").cast("double") / F.col("n_base"), 6)
-        delta_mean = F.round(F.col("sum_d").cast("double") / F.col("n_delta"), 6)
-        base_var = (
-            F.col("ssq_b").cast("double") / F.col("n_base") - base_mean * base_mean
-        )
-        base_sd = F.round(F.sqrt(F.greatest(base_var, F.lit(0.0))), 6)
-        shift = F.round(delta_mean - base_mean, 6)
-        return joined.select(
-            "d",
-            "n_base",
-            "n_delta",
-            base_mean.alias("base_mean"),
-            delta_mean.alias("delta_mean"),
-            shift.alias("shift"),
-            base_sd.alias("base_sd"),
-            F.when(base_sd > 0, F.round(shift / base_sd, 6)).alias("std_shift"),
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    drained = drain_staged(spark, sf_dir, "embeddings", transform, "complete")
+    joined = base.join(drained, "d", "left").select(
+        "d",
+        "n_base",
+        F.coalesce(F.col("n_delta"), F.lit(0).cast("long")).alias("n_delta"),
+        "sum_b",
+        "sum_d",
+        "ssq_b",
+    )
+    # the batch operator's derived tail, expression for expression
+    base_mean = F.round(F.col("sum_b").cast("double") / F.col("n_base"), 6)
+    delta_mean = F.round(F.col("sum_d").cast("double") / F.col("n_delta"), 6)
+    base_var = (
+        F.col("ssq_b").cast("double") / F.col("n_base") - base_mean * base_mean
+    )
+    base_sd = F.round(F.sqrt(F.greatest(base_var, F.lit(0.0))), 6)
+    shift = F.round(delta_mean - base_mean, 6)
+    return joined.select(
+        "d",
+        "n_base",
+        "n_delta",
+        base_mean.alias("base_mean"),
+        delta_mean.alias("delta_mean"),
+        shift.alias("shift"),
+        base_sd.alias("base_sd"),
+        F.when(base_sd > 0, F.round(shift / base_sd, 6)).alias("std_shift"),
+    )
 
 
 def _stream_embedding_shift_sql() -> str:
@@ -2989,42 +2607,30 @@ def stream_coreset_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     share/mean projection (total = sum of drained pops — the stream
     saw the whole corpus), so the oracle is CORESET_COVERAGE_AUDIT_SQL
     verbatim."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.functions.vectors import dot_long
     from capstone_etl_spark.operators.similarity import quantize_fp
     from capstone_etl_spark.operators.valuation import _kcenter_select
-    from capstone_etl_spark.session import cached
     from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_emb_")
-    try:
-        emb_full = load_table(spark, sf_dir, "embeddings")
-        _, acc = _kcenter_select(spark, sf_dir)
-        # centers ride as fixed-point lists + exact squared norms —
-        # the quantized-cosine rank-key discipline (valuation.py module
-        # docstring): distance per arriving row is an exact BIGINT
-        # fold, then sqrt/mul/div on bit-identical doubles
-        center_row = _stream_static(
-            acc.agg(
-                F.collect_list(
-                    F.struct(
-                        F.col("vec_id").alias("center_id"),
-                        F.col("vq").alias("sq"),
-                        F.col("qn2").alias("sn2"),
-                    )
-                ).alias("centers")
-            )
+    emb_full = load_table(spark, sf_dir, "embeddings")
+    _, acc = _kcenter_select(spark, sf_dir)
+    # centers ride as fixed-point lists + exact squared norms —
+    # the quantized-cosine rank-key discipline (valuation.py module
+    # docstring): distance per arriving row is an exact BIGINT
+    # fold, then sqrt/mul/div on bit-identical doubles
+    center_row = _stream_static(
+        acc.agg(
+            F.collect_list(
+                F.struct(
+                    F.col("vec_id").alias("center_id"),
+                    F.col("vq").alias("sq"),
+                    F.col("qn2").alias("sn2"),
+                )
+            ).alias("centers")
         )
-        staging = f"{work}/staging"
-        emb_full.repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
+    )
+
+    def transform(stream, staged):
         d_structs = F.transform(
             F.col("centers"),
             lambda s: F.struct(
@@ -3053,25 +2659,24 @@ def stream_coreset_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.array_min(d_structs).alias("m"))
             .select(F.col("m.center_id").alias("center_id"), F.col("m.d").alias("d"))
         )
-        agg = assigned.groupBy("center_id").agg(
+        return assigned.groupBy("center_id").agg(
             F.count("*").cast("long").alias("pop"),
             F.sum(F.col("d").cast("decimal(20,12)")).alias("sum_d"),
             F.max("d").alias("max_d"),
         )
-        drained = run_to_memory(agg, f"{work}/checkpoint", output_mode="complete")
-        total = drained.agg(F.sum("pop").alias("total"))
-        return (
-            drained.join(F.broadcast(total), F.lit(True))
-            .select(
-                "center_id",
-                "pop",
-                (F.col("pop") / F.col("total")).alias("share"),
-                (F.col("sum_d").cast("double") / F.col("pop")).alias("mean_d"),
-                "max_d",
-            )
+
+    drained = drain_staged(spark, sf_dir, "embeddings", transform, "complete")
+    total = drained.agg(F.sum("pop").alias("total"))
+    return (
+        drained.join(F.broadcast(total), F.lit(True))
+        .select(
+            "center_id",
+            "pop",
+            (F.col("pop") / F.col("total")).alias("share"),
+            (F.col("sum_d").cast("double") / F.col("pop")).alias("mean_d"),
+            "max_d",
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    )
 
 
 def _stream_coreset_coverage_sql() -> str:

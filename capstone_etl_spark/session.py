@@ -130,6 +130,17 @@ def release_caches() -> int:
     return n
 
 
+def env_int(name: str, default: int, minimum: int) -> int:
+    """Integer env knob `name`. Unset, not an integer, or below
+    `minimum` all give `default`: a typo in a knob must never make
+    every query raise."""
+    try:
+        value = int(os.environ.get(name, ""))
+    except ValueError:
+        return default
+    return value if value >= minimum else default
+
+
 def get_spark(
     app_name: str = "capstone-etl-spark",
     cpus: int | str | None = None,

@@ -29,6 +29,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from capstone_etl_spark.session import env_int
+
 # The driver-generated star schema + text/embedding/event tables (TESTDATA.md).
 TABLES = (
     "region",
@@ -173,13 +175,12 @@ def _fan_out_small_scan(spark: SparkSession, df: DataFrame, path: str) -> DataFr
     moves them through Repartition into the parquet reader. Results are
     partitioning-independent across this repo by design (sort-first
     dense ids, key-based aggregations; tests pin it)."""
-    import os as _os
-
-    target = int(
-        _os.environ.get(
-            "SPARK_GRAFT_FANOUT",
-            str(min(int(spark.conf.get("spark.sql.shuffle.partitions")), 16)),
-        )
+    # 0 and 1 switch the fan-out off; malformed or negative values
+    # fall back to the default target
+    target = env_int(
+        "SPARK_GRAFT_FANOUT",
+        min(int(spark.conf.get("spark.sql.shuffle.partitions")), 16),
+        0,
     )
     if target <= 1:
         return df

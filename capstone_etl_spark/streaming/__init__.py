@@ -11,12 +11,13 @@ enforced two ways:
   over a file-staged copy of `events` and must equal its batch form
   (tests/test_streaming.py);
 - driver oracle: stream_* queries (operators/streaming_queries.py) run
-  the full readStream → watermark → agg → availableNow pipeline and
-  hash-compare against DuckDB SQL.
+  the full stage → file stream → stateful agg → availableNow pipeline
+  through `drain_staged` (runner.py) and hash-compare against DuckDB
+  SQL.
 """
 
 from capstone_etl_spark.streaming.source import events_stream, stage_events  # noqa: F401
-from capstone_etl_spark.streaming.runner import run_to_memory  # noqa: F401
+from capstone_etl_spark.streaming.runner import drain_staged, run_to_memory  # noqa: F401
 from capstone_etl_spark.streaming.windows import (  # noqa: F401
     stream_click_purchase_join,
     stream_dedup_counts,

@@ -6,19 +6,44 @@ analogue of a batch run, with real incremental state underneath. The
 memory sink holds the sink table in the driver; fine for test/driver
 scales, swapped for a parquet/Kafka sink in production (the writers in
 sinks/writers.py are the batch halves of that story).
+
+`drain_staged` is the one harness every driver-facing stream query
+(operators/streaming_queries.py) runs through:
+
+- stage the table as STAGED_FILES parquet files in a fresh temp dir;
+- attach a file stream reading FILES_PER_TRIGGER files per micro-batch,
+  with the staged frame's schema (no second schema inference);
+- drain `transform(stream, staged)` through `run_to_memory`;
+- remove the temp dir in `finally`, whether the drain succeeded or not.
+
+The staged batch frame is handed to `transform` for queries that fix a
+deploy-time literal from the landed data — the replay watermark
+(`_horizon_watermark`), the CUPED/PSI grids — so the min/max scan runs
+only for the queries that ask for it. `staged` is valid only inside
+`transform`: anything derived from it must be forced to literals there.
 """
 
 from __future__ import annotations
 
 import itertools
-import os
+import shutil
+import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from capstone_etl_spark.session import env_int
+from capstone_etl_spark.streaming.source import stage_events
 
 _COUNTER = itertools.count()
 
 
 STATE_PARTITIONS = 8
+STREAM_TIMEOUT_SEC = 300
+# 4 staged files drained 2 per trigger: two micro-batches, so every
+# stateful query merges state across batches, not within one
+STAGED_FILES = 4
+FILES_PER_TRIGGER = 2
 
 
 def run_to_memory(
@@ -51,11 +76,11 @@ def run_to_memory(
     batch plans keep their configured parallelism."""
     spark: SparkSession = sdf.sparkSession
     if timeout_sec is None:
-        # 300 s is a per-query hang guard sized for the sf<=0.1 test
-        # tables, not a semantic limit — scale-point runs (sf1/sf10,
-        # tools/run_scale_point.py) override it via the environment so
-        # a legitimately-bigger drain isn't misread as a hang
-        timeout_sec = int(os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT_SEC", "300"))
+        # a per-query hang guard sized for the sf<=0.1 test tables, not
+        # a semantic limit — scale-point runs (sf1/sf10,
+        # tools/run_scale_point.py) raise it via the environment so a
+        # legitimately-bigger drain isn't misread as a hang
+        timeout_sec = env_int("SPARK_GRAFT_STREAM_TIMEOUT_SEC", STREAM_TIMEOUT_SEC, 1)
     qname = name or f"mem_sink_{next(_COUNTER)}"
     writer = (
         sdf.writeStream.format("memory")
@@ -81,3 +106,35 @@ def run_to_memory(
         if state_partitions:
             spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.table(qname)
+
+
+def drain_staged(
+    spark: SparkSession,
+    sf_dir: str,
+    table: str,
+    transform: Callable[[DataFrame, DataFrame], DataFrame],
+    output_mode: str,
+    state_partitions: int | None | str = "default",
+) -> DataFrame:
+    """Replay `table` as a multi-batch file stream, drain
+    `transform(stream, staged)` into the memory sink and return the
+    sink table (see the module docstring). `stage_events` and
+    `run_to_memory` are called through their module-level names so a
+    tracer can swap them for recording wrappers."""
+    work = tempfile.mkdtemp(prefix="spark_stream_")
+    try:
+        staging = f"{work}/staging"
+        staged = stage_events(spark, sf_dir, staging, n_files=STAGED_FILES, table=table)
+        stream = (
+            spark.readStream.schema(staged.schema)
+            .option("maxFilesPerTrigger", str(FILES_PER_TRIGGER))
+            .parquet(staging)
+        )
+        return run_to_memory(
+            transform(stream, staged),
+            f"{work}/checkpoint",
+            output_mode=output_mode,
+            state_partitions=state_partitions,
+        )
+    finally:
+        shutil.rmtree(work, ignore_errors=True)

@@ -3,8 +3,10 @@
 Structured Streaming's file source monitors a directory and processes
 newly-listed files per micro-batch — the open-source stand-in for a
 Kafka topic. `stage_events` materializes the (ts-normalized) events
-table into a staging directory through the S4 parquet sink;
-`events_stream` attaches a readStream to it. `max_files_per_trigger=1`
+table — or any other table, e.g. documents/embeddings — into a staging
+directory through the S4 parquet sink; `events_stream` attaches a
+readStream to it (runner.drain_staged does both for every driver-facing
+stream query). `max_files_per_trigger=1`
 forces one staged file per micro-batch, so tests exercise genuine
 multi-batch incremental state, not a single-batch degenerate run.
 
@@ -44,12 +46,17 @@ EVENTS_DDL = (
 
 
 def stage_events(
-    spark: SparkSession, sf_dir: str, staging_dir: str, n_files: int = 4
+    spark: SparkSession,
+    sf_dir: str,
+    staging_dir: str,
+    n_files: int = 4,
+    table: str = "events",
 ) -> DataFrame:
-    """Write events as n_files parquet files into staging_dir; returns
-    the staged batch frame (schema donor for the stream)."""
-    ev = load_table(spark, sf_dir, "events").repartition(n_files)
-    write_parquet(ev, staging_dir)
+    """Write `table` (events by default; documents and embeddings
+    replay the same way) as n_files parquet files into staging_dir;
+    returns the staged batch frame (schema donor for the stream)."""
+    staged = load_table(spark, sf_dir, table).repartition(n_files)
+    write_parquet(staged, staging_dir)
     return spark.read.parquet(staging_dir)
 
 

@@ -4,6 +4,7 @@ watermark late-drop semantics, custom stateful operator."""
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as _t
 
@@ -216,6 +217,57 @@ def test_source_factory_seam_rate_source(spark, tmp_path):
     rows = out.collect()
     assert sum(r["n_events"] for r in rows) == 200
     assert set(r["event_type"] for r in rows) == {"view", "click", "purchase"}
+
+
+@pytest.mark.parametrize("raw", ["soon", "0", "1.5"])
+def test_stream_timeout_knob_fails_safe(spark, tmp_path, monkeypatch, raw):
+    """A malformed SPARK_GRAFT_STREAM_TIMEOUT_SEC (not an integer, or
+    below 1 s) falls back to the default hang guard: the drain runs
+    instead of raising ValueError or timing out at once."""
+    from capstone_etl_spark.streaming.source import rate_events_source
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_TIMEOUT_SEC", raw)
+    stream = events_stream(spark, source=rate_events_source(rows_per_batch=50))
+    out = run_to_memory(
+        stream.groupBy("event_type").count(), str(tmp_path / "ckpt"), once=True
+    )
+    assert sum(r["count"] for r in out.collect()) == 50
+
+
+def test_drain_staged_cleans_up_and_equals_batch(spark, tmp_path, monkeypatch):
+    """The one stream harness: the per-query work dir (staged files +
+    checkpoint) exists during the drain and is gone afterwards, on the
+    success path AND when the transform raises; a trivial per-type
+    count drained through it equals its batch form."""
+    import tempfile
+
+    from capstone_etl_spark.sources.tables import load_table
+    from capstone_etl_spark.streaming import drain_staged
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    seen = []
+
+    def per_type(df):
+        return df.groupBy("event_type").agg(F.count("*").alias("n"))
+
+    def transform(stream, staged):
+        seen.extend(tmp_path.glob("spark_stream_*"))
+        return per_type(stream)
+
+    got = drain_staged(spark, SF_DIR, "events", transform, "complete")
+    assert len(seen) == 1  # the work dir really was under tmp_path
+    assert list(tmp_path.iterdir()) == []
+    want = per_type(load_table(spark, SF_DIR, "events"))
+    pd.testing.assert_frame_equal(_pdf(got), _pdf(want))
+
+    def failing(stream, staged):
+        seen.extend(tmp_path.glob("spark_stream_*"))
+        raise RuntimeError("transform failed")
+
+    with pytest.raises(RuntimeError, match="transform failed"):
+        drain_staged(spark, SF_DIR, "events", failing, "complete")
+    assert len(seen) == 2
+    assert list(tmp_path.iterdir()) == []
 
 
 def test_events_stream_requires_dir_or_factory(spark):
