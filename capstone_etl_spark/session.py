@@ -141,6 +141,14 @@ def env_int(name: str, default: int, minimum: int) -> int:
     return value if value >= minimum else default
 
 
+def _core_knobs(cpus: int | str | None, shuffle_partitions: int | None) -> tuple[int, int]:
+    """local[N] cores and shuffle partitions: explicit arguments win,
+    then SPARK_GRAFT_CPUS (default 32) and SPARK_GRAFT_SHUFFLE (default
+    min(cores, 32)), both read through env_int with minimum 1."""
+    cores = int(cpus or env_int("SPARK_GRAFT_CPUS", 32, 1))
+    return cores, shuffle_partitions or env_int("SPARK_GRAFT_SHUFFLE", min(cores, 32), 1)
+
+
 def get_spark(
     app_name: str = "capstone-etl-spark",
     cpus: int | str | None = None,
@@ -159,8 +167,7 @@ def get_spark(
       streaming via applyInPandasWithState, multimodal decode stubs
       via mapInPandas) — everything else is JVM-side.
     """
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
-    shuffle = shuffle_partitions or int(os.environ.get("SPARK_GRAFT_SHUFFLE", str(min(int(cpus), 32))))
+    cpus, shuffle = _core_knobs(cpus, shuffle_partitions)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

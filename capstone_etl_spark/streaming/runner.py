@@ -78,7 +78,7 @@ def run_to_memory(
     if timeout_sec is None:
         # a per-query hang guard sized for the sf<=0.1 test tables, not
         # a semantic limit — scale-point runs (sf1/sf10,
-        # tools/run_scale_point.py) raise it via the environment so a
+        # tools/profile_queries.py) raise it via the environment so a
         # legitimately-bigger drain isn't misread as a hang
         timeout_sec = env_int("SPARK_GRAFT_STREAM_TIMEOUT_SEC", STREAM_TIMEOUT_SEC, 1)
     qname = name or f"mem_sink_{next(_COUNTER)}"

@@ -5,7 +5,8 @@ The r6 driver run failed rc 2 on a single mid-sequence host stall
 The gate now re-times any FAIL candidate once and keeps the min, so a
 one-off transient cannot fail a round while a reproducing regression
 still does. These tests drive the pure gate functions with injected
-prior/probe data — no Spark session involved.
+prior/probe data — no Spark session involved — except the last, which
+runs bench's forcing action and counters on one small query.
 """
 
 from __future__ import annotations
@@ -91,26 +92,50 @@ def test_noted_regression_excluded(monkeypatch):
     assert bench._regression_gate(now, probe_sec=1.0) == 0
 
 
-def test_host_snapshot_pinned_across_screen_and_gate(monkeypatch):
-    """No-probe median fallback: retiming a transient shifts the
-    median, so a gate recomputing the host factor post-retime could
-    FAIL a query the screen never offered a re-measure. main() pins
-    ONE pre-retime host snapshot for both stages — with it, the
-    unscreened 2.0x query passes (it was inside the pre-retime host)
-    and only the reproducing regression fails."""
-    monkeypatch.setattr(bench, "_prior_probe_sec", lambda: None)
+def test_config_change_skips_retime_and_gate(monkeypatch):
+    """Like-for-like: a prior round taken on 32 cores is no baseline
+    for an 8-core run, so nothing is offered a retime and nothing fails
+    (VERDICT r12: the 8-core run exited rc 2 on spurious REGRESSION
+    lines). A key the prior lacks is not compared: an sf-only prior
+    still gates the same run."""
+    now = _steady(q_big=25.0)
+    run = {"sf": 0.1, "cpus": 8, "shuffle_partitions": 8}
     monkeypatch.setattr(
-        bench, "_prior_round_timings",
-        lambda: {"q1": 5.0, "q2": 5.0, "q3": 5.0, "q4": 5.0, "q5": 5.0},
+        bench, "_prior_round_doc", lambda: {"sf": 0.1, "cpus": 32, "shuffle_partitions": 32}
     )
-    now = {"q1": 25.0, "q2": 16.0, "q3": 10.0, "q4": 5.0, "q5": 5.0}
-    host = bench._host_factor(now, probe_sec=1.0, emit=False)
-    assert host == 2.0  # median of [5, 3.2, 2, 1, 1]
-    flagged = bench._fail_candidates(now, probe_sec=1.0, host=host)
-    assert flagged == ["q1", "q2"]  # q3 is inside the pinned host
-    now["q1"] = 5.0   # transient: clean on re-measure
-    now["q2"] = 16.0  # genuine: reproduces
-    # pinned host -> only q2 fails; the buggy recompute (host drops to
-    # 1.0 post-retime) would also fail the never-screened q3
-    assert bench._regression_gate(now, probe_sec=1.0, host=host) == 1
-    assert bench._regression_gate(now, probe_sec=1.0) == 2  # the hazard, pinned
+    assert bench._fail_candidates(now, probe_sec=1.0, config=run) == []
+    assert bench._regression_gate(now, probe_sec=1.0, config=run) == 0
+    monkeypatch.setattr(bench, "_prior_round_doc", lambda: {"sf": 0.1})
+    assert bench._fail_candidates(now, probe_sec=1.0, config=run) == ["q_big"]
+    assert bench._regression_gate(now, probe_sec=1.0, config=run) == 1
+
+
+def test_force_and_exec_totals_are_the_one_path(spark, sf_dir):
+    """bench's forcing action and counters on a real query: the counter
+    keys are fixed, stages come from stageList (an AQE plan has more
+    stages than jobs; per-job completed-stage sums gave stages == jobs),
+    and the profiler reuses bench's measurement instead of its own."""
+    import ast
+    import os
+
+    df = bench.entrymod.queries()["tf_per_doc"](spark, sf_dir)
+    before = bench.exec_totals(spark)
+    rows, digest = bench.force(df)
+    after = bench.exec_totals(spark)
+    assert rows == df.count() > 0 and isinstance(digest, int)
+    assert list(after) == ["jobs", "stages", "tasks", "shuffle_read", "shuffle_write"]
+    delta = {k: after[k] - before[k] for k in after}
+    assert delta["jobs"] >= 1 and delta["stages"] >= delta["jobs"]
+
+    path = os.path.join(os.path.dirname(os.path.abspath(bench.__file__)), "tools", "profile_queries.py")
+    with open(path) as f:
+        src = f.read()
+    tree = ast.parse(src)
+    from_bench = {
+        a.name for n in ast.walk(tree)
+        if isinstance(n, ast.ImportFrom) and n.module == "bench" for a in n.names
+    }
+    defined = {n.name for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)}
+    assert {"measure", "warm_up"} <= from_bench
+    assert not defined & {"force", "exec_totals", "_exec_totals", "_time_one"}
+    assert "xxhash64" not in src

@@ -158,3 +158,18 @@ def test_fan_out_guard_noop_when_scan_parallel(spark, monkeypatch, raw):
         assert target == default > 1
     assert (out is not narrow) == (target > 1)
     assert sorted(r.doc_id for r in out.collect()) == list(range(1000))
+
+
+@pytest.mark.parametrize("raw", ["abc", "0", "2.5"])
+def test_core_knobs_fail_safe(monkeypatch, raw):
+    """SPARK_GRAFT_CPUS / SPARK_GRAFT_SHUFFLE that are not an integer,
+    or below 1, fall back to the defaults (32 cores, min(cores, 32)
+    partitions) instead of making get_spark raise."""
+    from capstone_etl_spark.session import _core_knobs
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", raw)
+    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE", raw)
+    assert _core_knobs(None, None) == (32, 32)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
+    assert _core_knobs(None, None) == (4, 4)
+    assert _core_knobs(8, 16) == (8, 16)

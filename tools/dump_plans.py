@@ -26,9 +26,9 @@ from capstone_etl_spark.plans import (
 )
 from capstone_etl_spark.session import get_spark
 
-# Hand-written sections below this marker survive regeneration (bench.py
-# parses `regression-ok:` lines from the notes section — losing them
-# would re-fail accepted regressions).
+# Hand-written sections below this marker survive regeneration (the
+# bench regression notes are history; the allowlist bench.py gates on
+# is its REGRESSION_OK constant).
 PRESERVE_MARKER = "## Bench regression notes"
 
 

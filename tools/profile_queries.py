@@ -1,15 +1,16 @@
-"""Per-query isolation profiler (optimization rounds).
+"""Per-query profiler: bench.py's measurement path on named queries.
 
-Times each named query in a FRESH SparkSession (one process per query
-when --fork, else one shared session), using the exact bench forcing
-(count + xxhash64 decimal sum over every column), and optionally dumps
-the formatted plan. Separates "cold fresh-session time" from the
-bench's long-session time so session-accumulation effects (JIT/code
-cache, GC pressure) can be told apart from genuine plan cost.
-
-    python tools/profile_queries.py q1 q2 ...          # shared session
+    SPARK_GRAFT_SF_DIR=<dir> python tools/profile_queries.py q1 q2 ...
     python tools/profile_queries.py --fork q1 q2 ...   # fresh JVM each
-    python tools/profile_queries.py --plan q1          # also dump plan
+    python tools/profile_queries.py --warm q1 ...      # also a warm re-run
+
+Warm-up, forcing, timing and counters are bench.py's own (`warm_up`,
+`measure`, `force`, `exec_totals`), so seconds and jobs/stages/tasks/
+shuffle counters compare with BENCH_full_r*.json. --fork separates
+cold fresh-session time from the bench's long-session time, so
+session-accumulation effects (JIT/code cache, GC pressure) can be told
+apart from plan cost. Prints one JSON line {q: sec, q__warm: sec,
+q__metrics: counters}. Formatted plans: tools/dump_query_plan.py.
 """
 
 from __future__ import annotations
@@ -18,94 +19,23 @@ import json
 import os
 import subprocess
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def _exec_totals(spark) -> dict:
-    """Deterministic execution counters from the AppStatusStore: jobs,
-    stages, tasks, shuffle bytes. Host-noise-free evidence for plan /
-    job-structure changes (wall-clock on a noisy host is not).
-
-    Shuffle bytes come from stageList (py4j quirk: it takes a
-    java.util.List of StageStatus values to filter on; an empty list
-    means no filter). Summed over completed stages — deterministic for
-    a deterministic plan, unlike wall-clock."""
-    store = spark._jsc.sc().statusStore()
-    jobs = store.jobsList(None)
-    n_jobs = jobs.size()
-    n_stages = n_tasks = 0
-    it = jobs.iterator()
-    while it.hasNext():
-        j = it.next()
-        n_stages += j.numCompletedStages()
-        n_tasks += j.numCompletedTasks()
-    shuf_r = shuf_w = 0
-    try:
-        # executor totals are cumulative and cheap (one object per
-        # executor — the lone 'driver' in local mode), unlike a
-        # per-stage iteration which costs a py4j round trip per stage
-        eit = store.executorList(False).iterator()
-        while eit.hasNext():
-            e = eit.next()
-            shuf_r += e.totalShuffleRead()
-            shuf_w += e.totalShuffleWrite()
-    except Exception:
-        pass  # counters stay partial if the py4j surface drifts
-    return {
-        "jobs": n_jobs,
-        "stages": n_stages,
-        "tasks": n_tasks,
-        "shuffle_read": shuf_r,
-        "shuffle_write": shuf_w,
-    }
-
-
-def _time_one(spark, qs, name: str, sf_dir: str, plan: bool, metrics: dict | None = None):
-    from capstone_etl_spark.session import release_caches
-    from pyspark.sql import functions as F
-
-    before = _exec_totals(spark) if metrics is not None else None
-    t0 = time.perf_counter()
-    df = qs[name](spark, sf_dir)
-    df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(
-            F.xxhash64(*[F.col(c).cast("string") for c in df.columns]).cast("decimal(38,0)")
-        ).alias("h"),
-    ).collect()
-    sec = round(time.perf_counter() - t0, 3)
-    if metrics is not None:
-        after = _exec_totals(spark)
-        metrics[name] = {k: after[k] - before[k] for k in after}
-    if plan:
-        # plans go to STDERR (ADVICE r11): stdout is reserved for the
-        # single JSON result line the fork-mode parent parses
-        df2 = qs[name](spark, sf_dir)
-        print(df2._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")),
-            file=sys.stderr)
-        release_caches()
-    release_caches()
-    return sec
+from bench import measure, warm_up
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:]]
-    fork = "--fork" in args
-    plan = "--plan" in args
+    args = sys.argv[1:]
     warm = "--warm" in args  # run each query twice, report both
     names = [a for a in args if not a.startswith("--")]
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    out: dict = {}
 
-    if fork:
-        out = {}
+    if "--fork" in args:
         for n in names:
-            env = dict(os.environ)
             r = subprocess.run(
-                [sys.executable, os.path.abspath(__file__)] + ([ "--warm" ] if warm else []) + [n],
-                capture_output=True, text=True, env=env,
+                [sys.executable, os.path.abspath(__file__)] + (["--warm"] if warm else []) + [n],
+                capture_output=True, text=True,
             )
             line = [l for l in r.stdout.splitlines() if l.startswith("{")]
             if line:
@@ -117,30 +47,17 @@ def main() -> None:
         print(json.dumps(out))
         return
 
-    import __spark_entry__ as entrymod
     from capstone_etl_spark.session import get_spark
 
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("profile")
-    qs = entrymod.queries()
-    # same warmup as bench.py so first-query codegen is not charged
-    from pyspark.sql import functions as F
-
-    spark.read.parquet(f"{sf_dir}/region.parquet").count()
-    w = spark.range(100_000).select(
-        (F.col("id") % 97).alias("k"), F.md5(F.col("id").cast("string")).alias("s")
-    )
-    w.groupBy("k").agg(F.count("*"), F.sum(F.xxhash64("s").cast("decimal(38,0)"))).collect()
-
-    out = {}
-    mx: dict = {}
+    warm_up(spark, sf_dir, names[0] if names else None)
     for n in names:
-        sec = _time_one(spark, qs, n, sf_dir, plan, metrics=mx)
-        out[n] = sec
+        out[n], rows, out[n + "__metrics"] = measure(spark, n, sf_dir)
         if warm:
-            out[n + "__warm"] = _time_one(spark, qs, n, sf_dir, False)
-        print(f"# {n}: {out[n]}s" + (f" warm {out[n + '__warm']}s" if warm else ""), file=sys.stderr)
-    for n, m in mx.items():
-        out[n + "__metrics"] = m
+            out[n + "__warm"] = measure(spark, n, sf_dir)[0]
+        print(f"# {n}: {out[n]}s ({rows} rows)" + (f" warm {out[n + '__warm']}s" if warm else ""),
+              file=sys.stderr)
     print(json.dumps(out))
 
 
