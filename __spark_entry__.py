@@ -451,6 +451,7 @@ def _registry() -> tuple[dict[str, Callable[[SparkSession, str], DataFrame]], di
     ):
         queries.update(mod.QUERIES)
         oracles.update(mod.ORACLE_SQL)
+    oracles.update({s: oracles[b] for s, b in streaming_queries.BATCH_TWIN.items()})
 
     ordered_q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for name in _PRIORITY:

@@ -32,11 +32,14 @@ import __spark_entry__ as entrymod
 from capstone_etl_spark.session import get_spark, release_caches
 from pyspark.sql import functions as F
 
-# Headline set: the reference-parity text pipeline end-to-end plus the
-# heavy relational queries (fact-fact join, multi-join, window rank).
-# wikibooks_docs is the reference's ENTIRE job in one query (hierarchy +
-# counts + tokens + norms composed per page) — the throughput number to
-# hold against BASELINE.md's ≤1,000 rows/s structural ceiling.
+# Headline set: the queries bench times, each compared per query with
+# the prior round's BENCH_full. It spans the reference-parity text
+# pipeline (wikibooks_docs is the reference's whole job in one query),
+# the heavy relational shapes and the heavy queries of each operator
+# family. The stream_* entries run a real Structured Streaming job end
+# to end; PLANS.md has no plan dump for them because a streaming sink
+# has no stable batch plan to record. Keep the order: the first name is
+# the warm-up query.
 HEADLINE = [
     "tf_per_doc",
     "doc_stats",
@@ -49,154 +52,67 @@ HEADLINE = [
     "revenue_by_nation",
     "orders_per_customer_rank",
     "order_date_rollup",
-    # r3+: the LLM-layer flagships, so dedup-family perf is tracked
-    # round-over-round, not just the reference-parity core. The first
-    # 11 queries are unchanged — compare per-query across rounds.
     "dedup_minhash_lsh",
     "corpus_pipeline",
-    # r4+: packing and semantic dedup join the tracked set (first
-    # tracked round — no prior to compare; the gate skips them).
     "sequence_packing_greedy",
     "semantic_dedup",
-    # r4 continuation: quality gating, the unigram-LM score, and the
-    # KMV sketch — the new families' perf tracked from day one.
     "quality_filter_funnel",
     "unigram_logprob",
     "kmv_distinct_shingles",
-    # r5: the bigram LM (heaviest new textstat) and the Q2 shape
-    # (heaviest new relational join) join the tracked set.
     "bigram_lm_perplexity",
     "min_cost_supplier",
-    # r5 training-pipeline batch: the iterative linear algebra, the
-    # vocabulary-free vectorizer, and the epoch shuffle (dense-id
-    # machinery under a second consumer) — tracked from day one.
     "pca_power_iteration",
     "feature_hashing_vectors",
     "training_shuffle",
-    # r5 session 2: the pointer-doubling rollup (heaviest new join
-    # chain), the DSIR scorer, and the wedge-closing triangle join —
-    # tracked from day one.
     "hierarchy_rollup",
     "dsir_importance",
     "cooccurrence_triangles",
-    # r5 session 4: the privacy scrub passes (scan-speed canaries —
-    # pii_redaction is the zero-exchange map-only specimen), the CCNet
-    # line-dedup audit, the IVF-PQ composition (heaviest new ANN), and
-    # the SCD gaps-and-islands chain — tracked from day one.
     "pii_redaction",
     "boilerplate_lines",
     "ann_ivf_pq_topk",
     "event_scd_intervals",
-    # r6: the BT preference fit (iterative MM over bucket-champion
-    # duels — the checkpoint-per-round loop's cost canary), the
-    # structural template miner (map + one groupBy specimen), and the
-    # double-brute Matryoshka eval — tracked from day one.
     "bt_source_ratings",
     "template_extraction",
     "matryoshka_recall",
-    # r7: the full BPE learn->encode arc (corpus-shuffle + iterative
-    # vocab loop + encode join) and the unigram-LM Viterbi DP —
-    # tracked from day one.
     "bpe_encode",
     "unigram_tokenizer",
-    # r7: the composed admission chain (corpus_pipeline + benchmark
-    # screen + shard manifest) — the heaviest new composition.
     "training_manifest",
-    # r7 session 2: the CDC argmax apply (one-shuffle MERGE canary),
-    # the unthresholded candidate sweep (the production pair join's
-    # cost, measured without its filter), and the shared-Lloyd
-    # silhouette (two assignment rounds + runner-up window) — tracked
-    # from day one.
     "event_changelog_apply",
     "dedup_threshold_sweep",
     "kmeans_silhouette",
-    # r7 session 3: the multi-grain CUBE inventory (grouping-sets
-    # shuffle specimen) and the perceptual-hash image dedup (per-byte
-    # explode + pigeonhole block join) — tracked from day one.
     "corpus_cube",
     "multimodal_phash_dedup",
-    # r7 session 3: sorted-neighborhood blocking (global range sort +
-    # rank-window expansion + candidate-bounded verify — the linear-
-    # candidate dedup specimen) — tracked from day one.
     "dedup_sorted_neighborhood",
-    # r7 session 4: bipartite LSH decontamination (bucket join across
-    # the train/bench cut + cosine verify + argmax rollup) and the
-    # curriculum order (difficulty deciles → dense-id global sort +
-    # 10-row offset recovery) — tracked from day one.
     "semantic_decontamination",
     "curriculum_schedule",
-    # r7 session 5: the LOSO data-valuation pass (two token-keyed
-    # shuffles + leave-one-out column math on the source×token spine),
-    # the cell-medoid coreset (quantizer assignment + Σpop² bounded
-    # within-cell pairwise), and the Heaps'-law growth fit (first-seen
-    # trick: cumulative distinct counts from ONE groupBy + a 10-row
-    # checkpoint join, never a rescan per prefix) — tracked from day
-    # one.
     "source_loso_influence",
     "ivf_cell_medoids",
-    # r9: the two-level coarse quantizer — the production mitigation
-    # for the measured flat-IVF N^1.5 assignment frontier (SCALE.md);
-    # benched beside the flat-assignment family (ann_ivf_pq_topk,
-    # ivf_cell_medoids) so the crossover is tracked per round.
     "ann_hivf_topk",
-    # r9: the medoid release with BOTH measured N^1.5 terms paid down
-    # (two-level assignment + sampled-candidate medoid, O(N*M) pairwise)
     "hivf_cell_medoids",
-    # r9: the rank-adaptive mergeable quantile sketch (level-subsample,
-    # ~K survivors per source) + its ingest twin, and the flagship
-    # admission chain composed as one streaming query.
     "kll_quantile_sketch",
     "kll_sketch_merge",
     "stream_kll_sketch",
     "stream_training_manifest",
-    # r9 (cont.): SemDeDup on the two-level router, the serving twin,
-    # the index health audit, and the margin bitext miner — tracked
-    # from day one.
     "semantic_dedup_hier",
     "stream_ann_hivf_topk",
     "hivf_cell_balance",
     "bitext_mining",
-    # r9 (cont.): the per-subspace two-level PQ encode — the last
-    # measured flat-quantizer N^1.5 term paid down.
     "pq_hier_distortion_audit",
-    # r10: the production serving shape with NO flat O(N*sqrt(N)) term —
-    # the two-level coarse router composed with per-subspace hier codes
-    # and ADC ranking; benched beside ann_ivf_pq_topk for the crossover.
     "ann_hivf_pq_topk",
     "stream_ann_hivf_pq_topk",
     "heaps_law_fit",
-    # r7 session 5 (cont.): the train-LM split scoring (token-shuffle
-    # bound), the bounded-pair basket miner, and the fixed-round LP
-    # community loop (the iterative-graph specimen alongside
-    # hierarchy_rollup) — tracked from day one.
     "split_perplexity_gap",
     "association_rules",
     "label_propagation",
-    # r8: the remaining session-5 operators join the tracked set so the
-    # per-query regression gate covers every round-7 family (VERDICT r7
-    # item 4): corpus concentration (token_gini), the KM curve
-    # (conversion_survival), the chi-square load shape
-    # (event_seasonality), the contrastive sampling table, the
-    # rendezvous shard assignment, and the l-diversity audit.
     "token_gini",
     "conversion_survival",
     "event_seasonality",
     "negative_sampling_table",
     "rendezvous_sharding",
     "l_diversity_audit",
-    # r8: first streaming queries in the tracked set — each runs a real
-    # Structured Streaming job (stage → replay → drain), so their
-    # seconds measure the ingest-time path end-to-end, not a batch
-    # plan; PLANS.md carries no plan dump for them (streaming sinks
-    # have no stable batch plan to record).
     "stream_ab_test",
-    # r8 additions — tracked from day one.
     "dedup_clusters_incremental",
     "stream_conversion_survival",
-    # r8 session 2 — tracked from day one: the sequential-pattern
-    # census, the sessionized next-event examples, the T5 span masks,
-    # the KN-smoothed LM, the per-source datasheet, the DP median, and
-    # the streaming quantile sketch.
     "event_frequent_sequences",
     "next_event_examples",
     "span_corruption_masks",
@@ -204,117 +120,46 @@ HEADLINE = [
     "dataset_card",
     "dp_quantile_release",
     "stream_quantile_sketch",
-    # r8 session 3 — tracked from day one: the IVF probe sweep, the
-    # sketch set-difference, the streaming PSI monitor, the Group-DRO
-    # mixer, and chunk-level BM25 retrieval.
     "ivf_probe_recall_curve",
     "kmv_set_difference",
     "stream_psi_drift",
     "group_dro_weights",
     "rag_chunk_retrieval",
-    # r8 session 4 — tracked from day one: the CLIP-style pair
-    # admission filter and the ingest-time Group-DRO mixer.
     "multimodal_caption_pairs",
     "stream_group_dro",
-    # r8 session 5 — tracked from day one: the U-shaped attribution
-    # rollup (two user-window passes), the bot-regularity screen (one
-    # LAG window + user agg), and the in-engine logistic GD trainer
-    # (LOGIT_ROUNDS scalar aggregates over one cached feature pass —
-    # the per-round-driver-work cost canary for supervised loops).
     "event_attribution_credit",
     "event_bot_score",
     "logistic_conversion_model",
-    # r8 session 5 (cont.): the in-engine Naive Bayes source
-    # classifier — two token-keyed shuffles + an argmax window, the
-    # learned-classifier cost canary next to the heuristic language_id.
     "naive_bayes_source_model",
-    # r8 session 5 (cont.): the two-sample KS drift audit — the
-    # distinct-length-domain window specimen (one hash agg + a
-    # |sources|-row grid broadcast, never an N-row window).
     "ks_source_drift",
-    # r8 session 5 (cont.): the KS audit at ingest — bounded
-    # (source, length-domain) streaming state + the shared ECDF tail.
     "stream_ks_drift",
-    # r8 session 5 (cont.): the WoE/IV feature screen — shares the
-    # logistic trainer's cached feature pass; one 4*B-key hash agg.
     "woe_feature_bins",
-    # r8 session 5 (cont.): the reliability readout — _fit_logit's
-    # full 15-round trainer plus one CAL_BINS-key hash agg, so the
-    # trained-model arc's cost is tracked end-to-end.
     "conversion_model_calibration",
-    # r8 session 5 (cont.): cross-source quantile calibration — the
-    # dense-id global ranking under a third consumer plus a rank-keyed
-    # equi-join.
     "quantile_normalization",
-    # r8 session 5 (cont.): the Markov next-event baseline eval — one
-    # lag+rank window pass + a |types|-row broadcast eval join.
     "markov_next_accuracy",
-    # r8 session 5 (cont.): greedy LM inference in-engine — one shared
-    # tokenize pass + DECODE_STEPS 1-row probe joins.
     "lm_greedy_decode",
-    # r8 session 5 (cont.): the PQ codebook health audit — reuses the
-    # subspace-distance fold; one PQ_M-key hash agg on top.
     "pq_distortion_audit",
-    # r8 session 5 (cont.): RFM cohorting — three with_dense_ids
-    # global rankings over the user relation + three user-keyed joins.
     "rfm_segments",
-    # r8 session 5 (cont.): RFM at ingest — order-free per-user state
-    # + the shared ranking tail on the drained snapshot.
     "stream_rfm_segments",
-    # r8 session 5 (cont.): the classifier trained at ingest —
-    # Heaps-bounded (token, source) streaming state + the shared
-    # nb_release scoring tail against the static held-out docs.
     "stream_naive_bayes",
-    # r8 session 5 (cont.): the Poisson bootstrap — xBOOT_B map-side
-    # explode + one B-key agg; the scale-out resampling shape.
     "bootstrap_ci",
-    # r8 session 5 (cont.): split-conformal prediction — the train-only
-    # chain + one dense-id order statistic + one broadcast comparison.
     "conformal_coverage",
-    # r8 session 5 (cont.): CUPED — one user-keyed pre/post agg + a
-    # 1-row pooled-theta broadcast over the 2-row variant rollup.
     "event_cuped_adjustment",
-    # r8 session 5 (cont.): CUPED at ingest — order-free per-user
-    # pre/post decimal state + the shared theta/variance tail.
     "stream_cuped",
-    # r8 session 5 (cont.): the skyline operator — per-length maxima +
-    # a distinct-length-domain cumulative-max window, never O(N^2).
     "pareto_frontier_docs",
-    # r8 session 5 (cont.): the skyline at ingest — length-domain MAX
-    # state + the shared cumulative-max tail on the drained maxima.
     "stream_pareto_frontier",
-    # r8 session 5 (cont.): the Poisson-assumption audit — two hash
-    # aggs, exact integer moments.
     "event_overdispersion",
-    # r9 valuation: closed-form KNN-Shapley (eval-bounded brute scan +
-    # one suffix-window pass) and the within-cell K-NN label screen
-    # (semantic_dedup's blocking law).
     "knn_shapley_values",
     "label_noise_audit",
-    # r9 valuation (cont.): greedy k-center coreset (K fixed linear
-    # passes) and MMR diversification (retrieve once, then rounds over
-    # the C-candidate lists only).
     "kcenter_coreset",
     "mmr_diversified_topk",
-    # r9 valuation (cont.): the delta-vs-base label screen and its
-    # stateless ingest twin (per-row routing against the static index).
     "label_noise_incremental",
     "stream_label_noise",
-    # r9 valuation (cont.): the coreset's assignment-health audit and
-    # the per-dimension encoder-drift screen (one DIM-group aggregate).
     "coreset_coverage_audit",
     "embedding_shift_audit",
-    # r9 valuation (cont.): the drift screen and coverage dashboard at
-    # ingest — DIM-row and KCENTER_K-row state stores respectively.
     "stream_embedding_shift",
     "stream_coreset_coverage",
-    # r9 valuation flagship: the composed keep/drop manifest — one
-    # shared quantizer assignment feeds the SemDeDup and label-vote
-    # gates, the Shapley gate joins in.
     "embedding_curation_manifest",
-    # r9: Brown's double exponential smoothing — trend + one-step
-    # forecast over the calendar-bounded daily relation, exact integer
-    # kernels in both passes.
     "event_double_ewma",
 ]
 

@@ -56,6 +56,18 @@ def tokenize(col: Column | str) -> Column:
     ).otherwise(F.split(trimmed, " +"))
 
 
+def split_sql(col: str = "text") -> str:
+    """DuckDB fragment: clean, lowercase, trim, split on space runs. An
+    input that cleans to empty yields [''], not []; `tokenize_sql` drops
+    that lone empty token."""
+    return f"string_split_regex(trim(lower(regexp_replace({col}, '[^a-zA-Z0-9 ]', '', 'g'))), ' +')"
+
+
+def tokenize_sql(col: str = "text") -> str:
+    """Same tokens as `tokenize`, DuckDB SQL fragment."""
+    return f"list_filter({split_sql(col)}, t -> t <> '')"
+
+
 def token_ngrams(toks: Column | str, n: int) -> Column:
     """array<string> of space-joined token n-grams, in position order;
     fewer than n tokens → empty array.

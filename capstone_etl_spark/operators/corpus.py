@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from capstone_etl_spark.functions.text import split_sql, tokenize_sql
 from capstone_etl_spark.operators.dedup import (
     _JACCARD_PAIRS_CTE,
     _SHINGLES_CTE,
@@ -123,7 +124,7 @@ def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 DOC_CHUNKS_SQL = f"""
 WITH toks AS (
   SELECT doc_id,
-         string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +') AS t
+         {split_sql()} AS t
   FROM documents
 ), pos AS (
   SELECT doc_id, t[i] AS token, i - 1 AS pos
@@ -179,7 +180,7 @@ def doc_chunks_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 DOC_CHUNKS_OVERLAP_SQL = f"""
 WITH toks AS (
   SELECT doc_id,
-         string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +') AS t
+         {split_sql()} AS t
   FROM documents
 ), pos AS (
   SELECT doc_id, t[i] AS token, i - 1 AS pos
@@ -272,12 +273,10 @@ def source_mixing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SOURCE_MIXING_WEIGHTS_SQL = """
+SOURCE_MIXING_WEIGHTS_SQL = f"""
 WITH per_src AS (
   SELECT source, COUNT(*) AS n_docs,
-         CAST(SUM(len(list_filter(
-           string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-           t -> t <> ''))) AS BIGINT) AS n_tokens,
+         CAST(SUM(len({tokenize_sql()})) AS BIGINT) AS n_tokens,
          COUNT(DISTINCT md5(text)) AS n_unique,
          CAST(SUM(length(text)) AS BIGINT) AS n_chars_sum
   FROM documents GROUP BY source
@@ -333,9 +332,7 @@ SELECT * FROM (
   SELECT COUNT(*) AS n_docs,
          COUNT(DISTINCT lang) AS n_langs,
          COUNT(DISTINCT source) AS n_sources,
-         CAST(SUM(len(list_filter(
-           string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-           t -> t <> ''))) AS BIGINT) AS total_tokens
+         CAST(SUM(len({tokenize_sql()})) AS BIGINT) AS total_tokens
   FROM documents
 ) base
 CROSS JOIN (
@@ -496,9 +493,7 @@ WITH surv AS MATERIALIZED (
   )
 ), ntok AS MATERIALIZED (
   SELECT doc_id,
-         CAST(len(list_filter(
-           string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-           x -> x <> '')) AS BIGINT) AS n_tokens
+         CAST(len({tokenize_sql()}) AS BIGINT) AS n_tokens
   FROM documents
 ), tagged AS (
   SELECT s.doc_id, s.split, n.n_tokens, CAST({shard} AS BIGINT) AS shard_id
@@ -545,12 +540,10 @@ def corpus_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CORPUS_CUBE_SQL = """
+CORPUS_CUBE_SQL = f"""
 WITH toks AS (
   SELECT source, lang,
-         CAST(len(list_filter(
-           string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-           x -> x <> '')) AS BIGINT) AS n_tok
+         CAST(len({tokenize_sql()}) AS BIGINT) AS n_tok
   FROM documents
 )
 SELECT source, lang,
@@ -634,14 +627,9 @@ def source_loso_influence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LOSO_TOKS = """
-  list_filter(string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-              t -> t <> '')
-"""
-
 SOURCE_LOSO_INFLUENCE_SQL = f"""
 WITH tok AS (
-  SELECT source, UNNEST({_LOSO_TOKS}) AS token FROM documents
+  SELECT source, UNNEST({tokenize_sql()}) AS token FROM documents
 ), cst AS (
   SELECT source, token, COUNT(*) AS c_st FROM tok GROUP BY 1, 2
 ), ct AS (
@@ -729,7 +717,7 @@ def _span_corruption_sql() -> str:
     return f"""
 WITH toks AS (
   SELECT doc_id,
-         string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +') AS t
+         {split_sql()} AS t
   FROM documents
 ), pos AS (
   SELECT doc_id, i - 1 AS pos, t[i] AS token
@@ -829,9 +817,7 @@ def _dataset_card_sql() -> str:
     return f"""
 WITH base AS (
   SELECT source, lang, n_chars,
-         CAST(len(list_filter(
-           string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-           x -> x <> '')) AS BIGINT) AS n_tok,
+         CAST(len({tokenize_sql()}) AS BIGINT) AS n_tok,
          {th} AS th,
          CASE WHEN n_chars >= {MIN_CHARS} THEN 1 ELSE 0 END AS q_ok
   FROM documents

@@ -30,7 +30,7 @@ from capstone_etl_spark.functions.hashing import (
     minhash_expr_sql,
     minhash_params,
 )
-from capstone_etl_spark.functions.text import token_ngrams, tokenize
+from capstone_etl_spark.functions.text import split_sql, token_ngrams, tokenize, tokenize_sql
 from capstone_etl_spark.sources.tables import load_table
 from capstone_etl_spark.session import cached, checkpoint_truncate, release_checkpoint
 
@@ -117,7 +117,7 @@ def shingles(docs: DataFrame, n: int = NGRAM_N, max_df: int | None = MAX_SHINGLE
 _SHINGLES_CTE = f"""
 WITH toks AS (
   SELECT doc_id,
-         string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +') AS t
+         {split_sql()} AS t
   FROM documents
 ), grams AS (
   SELECT doc_id, array_to_string(t[i : i + {NGRAM_N} - 1], ' ') AS shingle
@@ -521,7 +521,7 @@ def decontamination_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 DECONTAMINATION_SPANS_SQL = f"""
 WITH toks AS (
   SELECT doc_id,
-         string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +') AS t
+         {split_sql()} AS t
   FROM documents
 ), grams AS (
   SELECT doc_id, CAST(i AS BIGINT) AS pos,
@@ -575,7 +575,7 @@ def gram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 GRAM_NOVELTY_SQL = f"""
 WITH toks AS (
   SELECT doc_id,
-         string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +') AS t
+         {split_sql()} AS t
   FROM documents
 ), grams AS (
   SELECT doc_id, array_to_string(t[i : i + {NGRAM_N} - 1], ' ') AS shingle
@@ -659,8 +659,7 @@ def repeated_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 REPEATED_NGRAM_SPANS_SQL = f"""
 WITH toks AS (
   SELECT doc_id,
-         list_filter(string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-                     t -> t <> '') AS t
+         {tokenize_sql()} AS t
   FROM documents
 ), grams AS (
   SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tokens, i AS pos,
@@ -690,9 +689,7 @@ WITH toks AS (
          CAST(SUM(span_tokens) AS BIGINT) AS n_flagged
   FROM per_island GROUP BY 1, 2
 ), base AS (
-  SELECT doc_id, CAST(len(list_filter(
-    string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-    t -> t <> '')) AS BIGINT) AS n_tokens
+  SELECT doc_id, CAST(len({tokenize_sql()}) AS BIGINT) AS n_tokens
   FROM documents
 )
 SELECT b.doc_id, b.n_tokens,
@@ -913,7 +910,7 @@ _BLOCK_W = SIMHASH_BITS // SIMHASH_BLOCKS
 _SIMHASH_SQL_CORE = f"""
 WITH toks AS (
   SELECT doc_id,
-         unnest(string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +')) AS token
+         unnest({split_sql()}) AS token
   FROM documents
 ), tf AS (
   SELECT doc_id, token, COUNT(*) AS qty FROM toks WHERE token <> '' GROUP BY doc_id, token
@@ -1479,8 +1476,7 @@ WITH masked AS (
   SELECT doc_id, source,
          COALESCE(array_to_string(
            list_transform(
-             list_filter(string_split_regex(trim(lower(regexp_replace(m, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-                         t -> t <> '')[1:{TEMPLATE_SHAPE_TOKENS}],
+             {tokenize_sql('m')}[1:{TEMPLATE_SHAPE_TOKENS}],
              x -> CAST(length(x) AS VARCHAR)),
            '-'), '') AS template_shape
   FROM masked
@@ -1623,8 +1619,7 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
 DEDUP_SORTED_NEIGHBORHOOD_SQL = f"""
 WITH toks AS (
   SELECT doc_id,
-         list_filter(string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-                     t -> t <> '') AS t
+         {tokenize_sql()} AS t
   FROM documents
 ), ranked AS (
   SELECT doc_id,
@@ -1714,7 +1709,7 @@ from capstone_etl_spark.operators.sampling import split_sql_case as _split_sql_c
 SPLIT_LEAKAGE_AUDIT_SQL = f"""
 WITH toks AS (
   SELECT doc_id,
-         string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +') AS t
+         {split_sql()} AS t
   FROM documents
 ), grams AS (
   SELECT doc_id, array_to_string(t[i : i + {LEAK_N} - 1], ' ') AS shingle

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from capstone_etl_spark.functions.text import split_sql
 from capstone_etl_spark.operators.tokenize import term_frequencies
 from capstone_etl_spark.operators.text_pipeline import _TF_CTE
 from capstone_etl_spark.sources.tables import load_table
@@ -581,7 +582,7 @@ def _rag_chunk_retrieval_sql() -> str:
     return f"""
 WITH ctoks AS (
   SELECT doc_id,
-         string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +') AS t
+         {split_sql()} AS t
   FROM documents
 ), pos AS (
   SELECT doc_id, t[i] AS token, i - 1 AS pos

@@ -37,6 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from capstone_etl_spark.functions.text import tokenize_sql
 from capstone_etl_spark.session import cached
 from capstone_etl_spark.sources.tables import load_table
 
@@ -884,9 +885,7 @@ meta AS (
   FROM p WHERE media_type = 'image'
 ), caps AS (
   SELECT doc_id, lang,
-         CAST(len(list_filter(
-           string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-           x -> x <> '')) AS BIGINT) AS n_caption_tokens
+         CAST(len({tokenize_sql()}) AS BIGINT) AS n_caption_tokens
   FROM documents
 )
 SELECT m.doc_id, m.width, m.height, c.n_caption_tokens, c.lang,

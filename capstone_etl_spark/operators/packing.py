@@ -44,18 +44,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from capstone_etl_spark.functions.hashing import md5_hash60, md5_hash60_sql
-from capstone_etl_spark.functions.text import tokenize
+from capstone_etl_spark.functions.text import tokenize, tokenize_sql
 from capstone_etl_spark.sources.tables import load_table
 
 SEQ_LEN = 256          # token budget per training sequence
 PACK_SHARDS = 8        # deterministic sub-source parallelism
 PACK_SALT = "pack:v1:"
-
-# DuckDB mirror of functions.text.tokenize (same fragment as textstats).
-_TOKS_SQL = (
-    "list_filter(string_split_regex(trim(lower("
-    "regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'), t -> t <> '')"
-)
 
 
 def _counted(spark: SparkSession, sf_dir: str, shards: int = PACK_SHARDS) -> DataFrame:
@@ -80,9 +74,9 @@ _COUNTED_SQL = f"""
   SELECT source,
          ({md5_hash60_sql("'" + PACK_SALT + "' || CAST(doc_id AS VARCHAR)")} % {PACK_SHARDS}) AS shard,
          doc_id,
-         len({_TOKS_SQL}) AS n_tokens
+         len({tokenize_sql()}) AS n_tokens
   FROM documents
-  WHERE len({_TOKS_SQL}) > 0
+  WHERE len({tokenize_sql()}) > 0
 """
 
 
@@ -366,7 +360,7 @@ def packed_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 PACKED_SEQUENCES_SQL = f"""
 WITH packed AS ({SEQUENCE_PACKING_GREEDY_SQL}),
 texts AS (
-  SELECT doc_id, array_to_string({_TOKS_SQL}, ' ') AS doc_text FROM documents
+  SELECT doc_id, array_to_string({tokenize_sql()}, ' ') AS doc_text FROM documents
 )
 SELECT p.source, p.shard, p.pack_id,
        COUNT(*) AS n_docs,

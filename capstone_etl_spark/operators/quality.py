@@ -31,7 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from capstone_etl_spark.functions.hashing import md5_hash60, md5_hash60_sql
-from capstone_etl_spark.functions.text import tokenize
+from capstone_etl_spark.functions.text import tokenize, tokenize_sql
 from capstone_etl_spark.session import cached
 from capstone_etl_spark.sources.tables import load_table
 
@@ -200,11 +200,6 @@ def difficulty_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TOKS = """
-  list_filter(string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-              t -> t <> '')
-"""
-
 _CORE_STOP_SQL = ", ".join(f"'{s}'" for s in CORE_STOPWORDS)
 
 _FLAGS_SQL = f"""
@@ -219,7 +214,7 @@ SELECT doc_id,
              THEN CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) / length(text)
              ELSE 0.0 END) <= {MAX_DIGIT_RATIO} AS pass_digit_ratio,
        len(list_intersect(list_distinct(toks), [{_CORE_STOP_SQL}])) >= {MIN_STOPWORD_HITS} AS pass_stopwords
-FROM (SELECT doc_id, text, {_TOKS} AS toks FROM documents) b
+FROM (SELECT doc_id, text, {tokenize_sql()} AS toks FROM documents) b
 """
 
 QUALITY_FILTER_FLAGS_SQL = f"""
@@ -265,7 +260,7 @@ FROM agg, LATERAL (
 
 UNIGRAM_LOGPROB_SQL = f"""
 WITH tok AS (
-  SELECT doc_id, UNNEST({_TOKS}) AS token FROM documents
+  SELECT doc_id, UNNEST({tokenize_sql()}) AS token FROM documents
 ), tf AS (
   SELECT doc_id, token, COUNT(*) AS cnt FROM tok GROUP BY 1, 2
 ), freq AS (
@@ -459,9 +454,7 @@ def _split_gap_sql() -> str:
     return f"""
 WITH tok AS (
   SELECT {split_sql_case("doc_id")} AS split,
-         UNNEST(list_filter(
-           string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-           t -> t <> '')) AS token
+         UNNEST({tokenize_sql()}) AS token
   FROM documents
 ), cst AS (
   SELECT split, token, COUNT(*) AS cnt FROM tok GROUP BY 1, 2
@@ -537,7 +530,7 @@ def mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 MAD_OUTLIERS_SQL = f"""
 WITH counts AS (
-  SELECT doc_id, CAST(len({_TOKS}) AS BIGINT) AS n_tok FROM documents
+  SELECT doc_id, CAST(len({tokenize_sql()}) AS BIGINT) AS n_tok FROM documents
 ), med AS (
   SELECT quantile_cont(n_tok, 0.5) AS m FROM counts
 ), devs AS (
@@ -735,7 +728,7 @@ _KEEP_PRED = " AND ".join(f"pass_{r}" for r in RULES)
 DSIR_IMPORTANCE_SQL = f"""
 WITH flags AS ({_FLAGS_SQL}),
 keep AS (SELECT doc_id, ({_KEEP_PRED}) AS is_target FROM flags),
-toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+toks AS (SELECT doc_id, {tokenize_sql()} AS t FROM documents),
 grams AS (
   SELECT doc_id, t[i] || ' ' || t[i+1] AS gram
   FROM toks, LATERAL (SELECT unnest(range(1, len(t))) AS i) r
@@ -970,7 +963,7 @@ def _signal_correlations_sql() -> str:
     return f"""
 WITH per_doc AS (
   SELECT {per_doc}
-  FROM (SELECT doc_id, text, {_TOKS} AS toks FROM documents) b
+  FROM (SELECT doc_id, text, {tokenize_sql()} AS toks FROM documents) b
 ), stats AS (
   SELECT {', '.join(aggs)} FROM per_doc
 )
@@ -1184,8 +1177,7 @@ _CODE_SCORE_SQL = (
 CODE_DETECTION_SQL = f"""
 WITH toks AS (
   SELECT doc_id, source,
-         list_filter(string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-                     t -> t <> '') AS t
+         {tokenize_sql()} AS t
   FROM documents
 ), f AS (
   SELECT doc_id, source,
@@ -1272,9 +1264,7 @@ def dro_release(tf: DataFrame) -> DataFrame:
 
 GROUP_DRO_WEIGHTS_SQL = f"""
 WITH tok AS (
-  SELECT source, unnest(list_filter(
-    string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-    x -> x <> '')) AS token
+  SELECT source, unnest({tokenize_sql()}) AS token
   FROM documents
 ), tf AS (
   SELECT source, token, COUNT(*) AS cnt FROM tok GROUP BY 1, 2
@@ -1356,12 +1346,10 @@ def pareto_release(toks: DataFrame, per_x: DataFrame) -> DataFrame:
     )
 
 
-PARETO_FRONTIER_DOCS_SQL = """
+PARETO_FRONTIER_DOCS_SQL = f"""
 WITH toks AS (
   SELECT doc_id, n_chars,
-         CAST(len(list_distinct(list_filter(
-           string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-           t -> t <> ''))) AS BIGINT) AS ndt
+         CAST(len(list_distinct({tokenize_sql()})) AS BIGINT) AS ndt
   FROM documents
 ), per_x AS (
   SELECT n_chars, MAX(ndt) AS mx FROM toks GROUP BY 1

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from capstone_etl_spark.functions.hashing import md5_hash60, md5_hash60_sql
-from capstone_etl_spark.functions.text import token_ngrams, tokenize
+from capstone_etl_spark.functions.text import token_ngrams, tokenize, tokenize_sql
 from capstone_etl_spark.session import cached
 from capstone_etl_spark.sources.tables import load_table
 
@@ -72,8 +72,7 @@ def kmv_distinct_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
 KMV_DISTINCT_SHINGLES_SQL = f"""
 WITH toks AS (
   SELECT source,
-         list_filter(string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-                     t -> t <> '') AS t
+         {tokenize_sql()} AS t
   FROM documents
 ), grams AS (
   SELECT source, array_to_string(t[i : i + {NGRAM_N} - 1], ' ') AS shingle
@@ -165,8 +164,7 @@ def kmv_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 KMV_SOURCE_OVERLAP_SQL = f"""
 WITH toks AS (
   SELECT source,
-         list_filter(string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-                     t -> t <> '') AS t
+         {tokenize_sql()} AS t
   FROM documents
 ), grams AS (
   SELECT source, array_to_string(t[i : i + {NGRAM_N} - 1], ' ') AS shingle
@@ -307,8 +305,7 @@ _KMV_DIFF_UEST_SQL = (
 KMV_SET_DIFFERENCE_SQL = f"""
 WITH toks AS (
   SELECT source,
-         list_filter(string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-                     t -> t <> '') AS t
+         {tokenize_sql()} AS t
   FROM documents
 ), grams AS (
   SELECT source, array_to_string(t[i : i + {NGRAM_N} - 1], ' ') AS shingle
@@ -428,9 +425,7 @@ def _cm_bucket_sql(d: int) -> str:
 
 COUNT_MIN_ERROR_SQL = f"""
 WITH tok AS (
-  SELECT UNNEST(list_filter(
-           string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-           x -> x <> '')) AS token
+  SELECT UNNEST({tokenize_sql()}) AS token
   FROM documents
 ), tf AS (
   SELECT token, COUNT(*) AS cnt FROM tok GROUP BY 1
@@ -558,8 +553,7 @@ def _bloom_sql() -> str:
     )
     return f"""
 WITH toks AS (
-  SELECT list_filter(string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-                     t -> t <> '') AS t
+  SELECT {tokenize_sql()} AS t
   FROM documents
 ), vocab AS (
   SELECT DISTINCT tok AS w FROM toks, UNNEST(t) AS u(tok)
@@ -685,9 +679,7 @@ HLL_DISTINCT_SKETCH_SQL = f"""
 WITH toks AS (
   SELECT DISTINCT source, tok AS token FROM (
     SELECT source,
-           UNNEST(list_filter(
-             string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-             x -> x <> '')) AS tok
+           UNNEST({tokenize_sql()}) AS tok
     FROM documents) t
 ), exact AS (
   SELECT source, CAST(COUNT(*) AS BIGINT) AS n_exact FROM toks GROUP BY 1

@@ -12,6 +12,11 @@ supplies only `transform(stream, staged)`, its static legs (built from
 sf_dir before the drain) and its batch tail over the returned memory
 sink table. The replay watermark is measured from `staged` only by
 the six queries whose operators use one (`_horizon_watermark`).
+
+A stream query whose drained output must equal a batch query's is
+checked against that batch oracle: `BATCH_TWIN` maps it to the batch
+query by name. `ORACLE_SQL` holds only the stream queries with an
+oracle of their own.
 """
 
 from __future__ import annotations
@@ -21,16 +26,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from capstone_etl_spark.operators.privacy import DP_SOURCE_HISTOGRAM_SQL, PII_SCAN_SQL
-from capstone_etl_spark.operators.events import (
-    AB_TEST_ANALYSIS_SQL,
-    CHANGELOG_APPLY_SQL,
-    CONVERSION_SURVIVAL_SQL,
-    EVENT_DEDUP_SQL,
-    EVENT_PSI_DRIFT_SQL,
-    SLIDING_WINDOWS_SQL,
-    TUMBLING_WINDOWS_SQL,
-)
+from capstone_etl_spark.functions.text import tokenize_sql
 from capstone_etl_spark.streaming import (
     drain_staged,
     stream_click_purchase_join,
@@ -290,12 +286,6 @@ def stream_quality_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return funnel_unpack(one)
 
 
-def _stream_quality_funnel_sql() -> str:
-    from capstone_etl_spark.operators.quality import QUALITY_FILTER_FUNNEL_SQL
-
-    return QUALITY_FILTER_FUNNEL_SQL
-
-
 def stream_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The KMV sketch as a STREAMING stateful operator — sketches are
     the streaming-native cardinality tool precisely because their merge
@@ -339,8 +329,7 @@ def _stream_kmv_sketch_sql() -> str:
     return f"""
 WITH toks AS (
   SELECT source,
-         list_filter(string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-                     t -> t <> '') AS t
+         {tokenize_sql()} AS t
   FROM documents
 ), grams AS (
   SELECT source, array_to_string(t[i : i + {NGRAM_N} - 1], ' ') AS shingle
@@ -401,12 +390,6 @@ def stream_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stream_reservoir_sample_sql() -> str:
-    from capstone_etl_spark.operators.sampling import RESERVOIR_SAMPLE_SQL
-
-    return RESERVOIR_SAMPLE_SQL
-
-
 def stream_mixing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The mixing-weight accounting as a STREAMING job: per-source doc
     count, token mass and char mass accumulate incrementally over the
@@ -445,12 +428,10 @@ def stream_mixing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("source")
 
 
-STREAM_MIXING_WEIGHTS_SQL = """
+STREAM_MIXING_WEIGHTS_SQL = f"""
 WITH per_src AS (
   SELECT source, COUNT(*) AS n_docs,
-         CAST(SUM(len(list_filter(
-           string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-           t -> t <> ''))) AS BIGINT) AS n_tokens,
+         CAST(SUM(len({tokenize_sql()})) AS BIGINT) AS n_tokens,
          CAST(SUM(length(text)) AS BIGINT) AS n_chars_sum
   FROM documents GROUP BY source
 )
@@ -504,9 +485,7 @@ def _stream_count_min_sql() -> str:
     )
     return f"""
 WITH tok AS (
-  SELECT UNNEST(list_filter(
-           string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-           x -> x <> '')) AS token
+  SELECT UNNEST({tokenize_sql()}) AS token
   FROM documents
 ), cells AS ({per_d})
 SELECT d, bucket, CAST(COUNT(*) AS BIGINT) AS c
@@ -602,12 +581,6 @@ def stream_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stream_decontamination_sql() -> str:
-    from capstone_etl_spark.operators.dedup import DECONTAMINATION_SQL
-
-    return DECONTAMINATION_SQL
-
-
 def stream_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PII compliance dashboard kept current over a live document
     stream: the per-class regexp counts are per-row map work on each
@@ -687,12 +660,6 @@ def stream_template_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
             "template_shape",
         )
     )
-
-
-def _stream_template_extraction_sql() -> str:
-    from capstone_etl_spark.operators.dedup import TEMPLATE_EXTRACTION_SQL
-
-    return TEMPLATE_EXTRACTION_SQL
 
 
 def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -776,12 +743,6 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col("m.jaccard"), F.lit(0.0)).alias("best_jaccard"),
         )
     )
-
-
-def _stream_dedup_incremental_sql() -> str:
-    from capstone_etl_spark.operators.dedup import DEDUP_INCREMENTAL_SQL
-
-    return DEDUP_INCREMENTAL_SQL
 
 
 def stream_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -896,12 +857,6 @@ def stream_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stream_ann_topk_sql() -> str:
-    from capstone_etl_spark.operators.similarity import ANN_IVF_TOPK_SQL
-
-    return ANN_IVF_TOPK_SQL
-
-
 def stream_ann_hivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SERVING on the two-level index — stream_ann_topk's shape over
     the round-9 hierarchical quantizer: the corpus assignment
@@ -916,7 +871,8 @@ def stream_ann_hivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     The per-query routing work drops from the flat serving twin's ≈√N
     seed folds to ≈N^(1/4) + B·N^(1/4) — the same asymptotic win the
     batch index measured (SCALE.md). Oracle: ANN_HIVF_TOPK_SQL
-    verbatim."""
+    verbatim (the drained serving results equal the batch index
+    lookups)."""
     from capstone_etl_spark.operators.similarity import qcosine
     from capstone_etl_spark.operators.similarity import (
         IVF_PROBES_MIN,
@@ -1001,12 +957,6 @@ def stream_ann_hivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rnk") <= TOP_K)
         .select("query_id", "neighbor_id", "sim", "rnk")
     )
-
-
-def _stream_ann_hivf_topk_sql() -> str:
-    from capstone_etl_spark.operators.similarity import ANN_HIVF_TOPK_SQL
-
-    return ANN_HIVF_TOPK_SQL
 
 
 def stream_ann_hivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1142,12 +1092,6 @@ def stream_ann_hivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stream_ann_hivf_pq_topk_sql() -> str:
-    from capstone_etl_spark.operators.similarity import ANN_HIVF_PQ_TOPK_SQL
-
-    return ANN_HIVF_PQ_TOPK_SQL
-
-
 def stream_bitext_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Margin-based pair MINING at ingest — bitext_mining's shape as
     source-side vectors arrive: the committed target-side index
@@ -1255,12 +1199,6 @@ def stream_bitext_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stream_bitext_mining_sql() -> str:
-    from capstone_etl_spark.operators.similarity import BITEXT_MINING_SQL
-
-    return BITEXT_MINING_SQL
-
-
 def stream_semantic_dedup_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic near-dup ADMISSION at ingest on the two-level index:
     each arriving vector routes to its cell in-row (zero streaming
@@ -1325,10 +1263,11 @@ def stream_hivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-row (branch array → routed seeds → argmin; ≈N^(1/4)+B·N^(1/4)
     folds per vector instead of the flat twin's ≈√N), and the
     complete-mode per-cell population table is the live balance
-    dashboard for the hierarchical index. Drained, it equals the batch
-    hivf_cell_balance exactly (shared _cell_balance_tail + shared
-    oracle) — the share/cap audit a 100 TB deployment watches while
-    shards of vectors land."""
+    dashboard for the hierarchical index. Per-cell populations merge
+    by addition, so drained it equals the batch hivf_cell_balance
+    exactly (shared _cell_balance_tail + shared oracle) — the
+    share/cap audit a 100 TB deployment watches while shards of
+    vectors land."""
     from capstone_etl_spark.operators.scaleaudit import _cell_balance_tail
     from capstone_etl_spark.operators.similarity import (
         hier_best_cell_expr,
@@ -1358,18 +1297,6 @@ def stream_hivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     snap = drain_staged(spark, sf_dir, "embeddings", transform, "complete")
     return _cell_balance_tail(snap)
-
-
-def _stream_hivf_cell_balance_sql() -> str:
-    from capstone_etl_spark.operators.scaleaudit import _hivf_cell_balance_sql
-
-    return _hivf_cell_balance_sql()
-
-
-def _stream_semantic_dedup_hier_sql() -> str:
-    from capstone_etl_spark.operators.similarity import SEMANTIC_DEDUP_HIER_SQL
-
-    return SEMANTIC_DEDUP_HIER_SQL
 
 
 def stream_changelog_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1483,18 +1410,6 @@ def stream_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("long").alias("n_exact"))
     )
     return hll_finalize(snap, exact)
-
-
-def _stream_ivf_assign_sql() -> str:
-    from capstone_etl_spark.operators.scaleaudit import _ivf_cell_balance_sql
-
-    return _ivf_cell_balance_sql()
-
-
-def _stream_hll_sketch_sql() -> str:
-    from capstone_etl_spark.operators.sketches import HLL_DISTINCT_SKETCH_SQL
-
-    return HLL_DISTINCT_SKETCH_SQL
 
 
 def stream_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1662,42 +1577,6 @@ WHERE c.cum_prev < g.target AND g.target <= c.cum
 """
 
 
-def _stream_pareto_sql() -> str:
-    from capstone_etl_spark.operators.quality import PARETO_FRONTIER_DOCS_SQL
-
-    return PARETO_FRONTIER_DOCS_SQL
-
-
-def _stream_cuped_sql() -> str:
-    from capstone_etl_spark.operators.events import _cuped_sql
-
-    return _cuped_sql()
-
-
-def _stream_nb_sql() -> str:
-    from capstone_etl_spark.operators.textstats import NAIVE_BAYES_SOURCE_MODEL_SQL
-
-    return NAIVE_BAYES_SOURCE_MODEL_SQL
-
-
-def _stream_rfm_sql() -> str:
-    from capstone_etl_spark.operators.events import RFM_SEGMENTS_SQL
-
-    return RFM_SEGMENTS_SQL
-
-
-def _stream_ks_drift_sql() -> str:
-    from capstone_etl_spark.operators.textstats import KS_SOURCE_DRIFT_SQL
-
-    return KS_SOURCE_DRIFT_SQL
-
-
-def _stream_group_dro_sql() -> str:
-    from capstone_etl_spark.operators.quality import GROUP_DRO_WEIGHTS_SQL
-
-    return GROUP_DRO_WEIGHTS_SQL
-
-
 def stream_group_dro(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Group-DRO mixing weights kept current DURING ingest: the
     (source, token) term-frequency cells accumulate in a complete-mode
@@ -1706,7 +1585,8 @@ def stream_group_dro(spark: SparkSession, sf_dir: str) -> DataFrame:
     own cells — and the shared loss/softmax tail (quality.dro_release)
     runs on the drained snapshot: every micro-batch could re-weight
     the mixer without rescanning landed text. Oracle: the batch DRO
-    SQL verbatim."""
+    SQL verbatim (the drained snapshot equals the batch TF relation
+    exactly)."""
     from capstone_etl_spark.functions.text import tokenize
     from capstone_etl_spark.operators.quality import dro_release
 
@@ -1727,7 +1607,8 @@ def stream_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     — and the shared ECDF/max tail (textstats.ks_release) runs on the
     drained snapshot, so every micro-batch could re-publish the drift
     table without rescanning landed shards. Oracle: the batch KS SQL
-    verbatim."""
+    verbatim (the drained snapshot equals the batch count relation
+    exactly)."""
     from capstone_etl_spark.operators.textstats import ks_release
     from capstone_etl_spark.session import checkpoint_truncate
 
@@ -1751,7 +1632,8 @@ def stream_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged order-free (max / count / exact decimal sum, so replay
     order can't move a score) — and the shared ranking tail
     (events.rfm_release: three with_dense_ids global rankings) runs on
-    the drained snapshot. Oracle: the batch RFM SQL verbatim.
+    the drained snapshot. Oracle: the batch RFM SQL verbatim (the
+    drained snapshot equals the batch user relation exactly).
 
     The snapshot passes through checkpoint_truncate: the tail
     references the user relation five times (three rankings + the
@@ -1784,7 +1666,8 @@ def stream_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
     is irrelevant — then the shared scoring tail
     (textstats.nb_release) evaluates the drained model on the static
     held-out docs. Every micro-batch could re-ship a fresh classifier
-    without rescanning landed text. Oracle: the batch NB SQL verbatim.
+    without rescanning landed text. Oracle: the batch NB SQL verbatim
+    (the drained model equals the batch one exactly).
 
     The snapshot passes through checkpoint_truncate (the tail
     references the cell relation three times: vocab, per-source
@@ -2257,12 +2140,6 @@ def stream_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stream_training_manifest_sql() -> str:
-    from capstone_etl_spark.operators.corpus import _training_manifest_sql
-
-    return _training_manifest_sql()
-
-
 def stream_kll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The mergeable quantile sketch AT INGEST — sketches.
     kll_quantile_sketch's level-subsample maintained over a live
@@ -2388,12 +2265,6 @@ def stream_kll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stream_kll_sketch_sql() -> str:
-    from capstone_etl_spark.operators.sketches import KLL_QUANTILE_SKETCH_SQL
-
-    return KLL_QUANTILE_SKETCH_SQL
-
-
 def stream_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LABEL-QUALITY screening at INGEST — valuation.
     label_noise_incremental's delta-vs-base verdicts as a stream: the
@@ -2512,12 +2383,6 @@ def stream_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stream_label_noise_sql() -> str:
-    from capstone_etl_spark.operators.valuation import LABEL_NOISE_INCREMENTAL_SQL
-
-    return LABEL_NOISE_INCREMENTAL_SQL
-
-
 def stream_embedding_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ENCODER-DRIFT screening at INGEST — valuation.
     embedding_shift_audit's delta side as a stream: the base corpus's
@@ -2586,12 +2451,6 @@ def stream_embedding_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
         base_sd.alias("base_sd"),
         F.when(base_sd > 0, F.round(shift / base_sd, 6)).alias("std_shift"),
     )
-
-
-def _stream_embedding_shift_sql() -> str:
-    from capstone_etl_spark.operators.valuation import EMBEDDING_SHIFT_AUDIT_SQL
-
-    return EMBEDDING_SHIFT_AUDIT_SQL
 
 
 def stream_coreset_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2679,12 +2538,6 @@ def stream_coreset_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stream_coreset_coverage_sql() -> str:
-    from capstone_etl_spark.operators.valuation import CORESET_COVERAGE_AUDIT_SQL
-
-    return CORESET_COVERAGE_AUDIT_SQL
-
-
 QUERIES = {
     "stream_tumbling_windows": stream_tumbling_windows,
     "stream_sliding_windows": stream_sliding_windows,
@@ -2730,89 +2583,49 @@ QUERIES = {
 }
 
 ORACLE_SQL = {
-    "stream_tumbling_windows": TUMBLING_WINDOWS_SQL,
-    "stream_sliding_windows": SLIDING_WINDOWS_SQL,
-    "stream_event_dedup": EVENT_DEDUP_SQL,
     "stream_user_sessions": STREAM_USER_SESSIONS_SQL,
     "stream_user_activity": STREAM_USER_ACTIVITY_SQL,
     "stream_click_attribution": STREAM_CLICK_ATTRIBUTION_SQL,
     "stream_tier_rollup": STREAM_TIER_ROLLUP_SQL,
-    "stream_quality_funnel": _stream_quality_funnel_sql(),
     "stream_kmv_sketch": _stream_kmv_sketch_sql(),
-    "stream_reservoir_sample": _stream_reservoir_sample_sql(),
     "stream_mixing_weights": STREAM_MIXING_WEIGHTS_SQL,
     "stream_count_min": _stream_count_min_sql(),
-    "stream_decontamination": _stream_decontamination_sql(),
-    "stream_pii_scan": PII_SCAN_SQL,
-    "stream_template_extraction": _stream_template_extraction_sql(),
-    "stream_dedup_incremental": _stream_dedup_incremental_sql(),
-    "stream_ann_topk": _stream_ann_topk_sql(),
-    "stream_changelog_apply": CHANGELOG_APPLY_SQL,
-    "stream_ivf_assign": _stream_ivf_assign_sql(),
-    "stream_hll_sketch": _stream_hll_sketch_sql(),
-    # the batch readout SQL verbatim: the streaming form must reproduce
-    # the batch experiment statistics exactly
-    "stream_ab_test": AB_TEST_ANALYSIS_SQL,
-    # the batch release SQL verbatim: deterministic noise per (salt,
-    # source) makes the streaming release reproduce the batch one
-    "stream_dp_histogram": DP_SOURCE_HISTOGRAM_SQL,
-    # the batch KM SQL verbatim: the streaming survival curve must
-    # reproduce the batch one row-for-row
-    "stream_conversion_survival": CONVERSION_SURVIVAL_SQL,
     "stream_quantile_sketch": _stream_quantile_sketch_sql(),
-    # the batch PSI SQL verbatim: the deploy-time grid literals are
-    # computed by the same expressions the batch plan evaluates
-    "stream_psi_drift": EVENT_PSI_DRIFT_SQL,
-    # the batch DRO SQL verbatim: TF cells merge by addition, so the
-    # drained snapshot equals the batch TF relation exactly
-    "stream_group_dro": _stream_group_dro_sql(),
-    # the batch KS SQL verbatim: (source, len) cells merge by addition,
-    # so the drained snapshot equals the batch count relation exactly
-    "stream_ks_drift": _stream_ks_drift_sql(),
-    # the batch RFM SQL verbatim: per-user state merges order-free
-    # (max / count / exact decimal sum), so the drained snapshot
-    # equals the batch user relation exactly
-    "stream_rfm_segments": _stream_rfm_sql(),
-    # the batch NB SQL verbatim: train cells merge by addition and the
-    # split is a per-row salted hash, so the drained model equals the
-    # batch one exactly
-    "stream_naive_bayes": _stream_nb_sql(),
-    # the batch CUPED SQL verbatim: per-user pre/post decimal sums
-    # merge by addition once the midpoint literal is fixed
-    "stream_cuped": _stream_cuped_sql(),
-    # the batch skyline SQL verbatim: per-length maxima merge as MAX
-    "stream_pareto_frontier": _stream_pareto_sql(),
-    # the batch manifest SQL verbatim: the drained admission state runs
-    # the identical verdict assembly, so the streamed manifest equals
-    # the batch one row-for-row
-    "stream_training_manifest": _stream_training_manifest_sql(),
-    # the batch sketch SQL verbatim: the deploy-time level literals are
-    # the batch expressions, survivor cells merge by addition, and the
-    # drained assembly is the batch tail
-    "stream_kll_sketch": _stream_kll_sketch_sql(),
-    # the batch two-level-index SQL verbatim: the in-row route/probe
-    # reproduces the batch tiebreaks exactly, so the drained serving
-    # results equal the batch index lookups
-    "stream_ann_hivf_topk": _stream_ann_hivf_topk_sql(),
-    "stream_ann_hivf_pq_topk": _stream_ann_hivf_pq_topk_sql(),
-    # the batch miner SQL verbatim: the drained append-mode pair table
-    # is the batch candidate relation, and the margin/mutual assembly
-    # is the batch code
-    "stream_bitext_mining": _stream_bitext_mining_sql(),
-    # the batch hier-SemDeDup SQL verbatim: the drained dup relation
-    # joins the static assignment into the identical output shape
-    "stream_semantic_dedup_hier": _stream_semantic_dedup_hier_sql(),
-    # the batch hier balance SQL verbatim: per-cell pops merge by
-    # addition, so the drained dashboard equals the batch audit
-    "stream_hivf_cell_balance": _stream_hivf_cell_balance_sql(),
-    # the batch delta-vs-base label screen SQL verbatim: the stream is
-    # stateless (append-mode vote candidates) and the verdict tail is
-    # shared, so the drained output equals the batch screen exactly
-    "stream_label_noise": _stream_label_noise_sql(),
-    # the batch drift screen SQL verbatim: per-dim decimal sums merge
-    # by addition (DIM rows of state), the derived tail is shared
-    "stream_embedding_shift": _stream_embedding_shift_sql(),
-    # the batch coverage audit SQL verbatim: per-center (pop, decimal
-    # sum, max) merge by addition/max (KCENTER_K rows of state)
-    "stream_coreset_coverage": _stream_coreset_coverage_sql(),
+}
+
+# stream query -> the batch query whose oracle it shares verbatim
+BATCH_TWIN: dict[str, str] = {
+    "stream_tumbling_windows": "event_tumbling_windows",
+    "stream_sliding_windows": "event_sliding_windows",
+    "stream_event_dedup": "event_dedup",
+    "stream_quality_funnel": "quality_filter_funnel",
+    "stream_reservoir_sample": "reservoir_sample",
+    "stream_decontamination": "decontamination",
+    "stream_pii_scan": "pii_scan",
+    "stream_template_extraction": "template_extraction",
+    "stream_dedup_incremental": "dedup_incremental",
+    "stream_ann_topk": "ann_ivf_topk",
+    "stream_changelog_apply": "event_changelog_apply",
+    "stream_ivf_assign": "ivf_cell_balance",
+    "stream_hll_sketch": "hll_distinct_sketch",
+    "stream_ab_test": "ab_test_analysis",
+    "stream_dp_histogram": "dp_source_histogram",
+    "stream_conversion_survival": "conversion_survival",
+    "stream_psi_drift": "event_psi_drift",
+    "stream_group_dro": "group_dro_weights",
+    "stream_ks_drift": "ks_source_drift",
+    "stream_rfm_segments": "rfm_segments",
+    "stream_naive_bayes": "naive_bayes_source_model",
+    "stream_cuped": "event_cuped_adjustment",
+    "stream_pareto_frontier": "pareto_frontier_docs",
+    "stream_training_manifest": "training_manifest",
+    "stream_kll_sketch": "kll_quantile_sketch",
+    "stream_ann_hivf_topk": "ann_hivf_topk",
+    "stream_ann_hivf_pq_topk": "ann_hivf_pq_topk",
+    "stream_bitext_mining": "bitext_mining",
+    "stream_semantic_dedup_hier": "semantic_dedup_hier",
+    "stream_hivf_cell_balance": "hivf_cell_balance",
+    "stream_label_noise": "label_noise_incremental",
+    "stream_embedding_shift": "embedding_shift_audit",
+    "stream_coreset_coverage": "coreset_coverage_audit",
 }

@@ -19,7 +19,7 @@ from capstone_etl_spark.functions.stopwords import (
     full_stopwords,
     stopwords_sql_in_list,
 )
-from capstone_etl_spark.functions.text import tokenize
+from capstone_etl_spark.functions.text import split_sql, tokenize
 from capstone_etl_spark.operators import index as index_ops
 from capstone_etl_spark.operators import hierarchy as hier_ops
 from capstone_etl_spark.operators.tokenize import doc_stats as _doc_stats
@@ -47,7 +47,7 @@ _DICT_SQL = ", ".join(f"'{w}'" for w in DICTIONARY)
 _TF_CTE = f"""
 WITH toks AS (
   SELECT doc_id,
-         unnest(string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +')) AS token
+         unnest({split_sql()}) AS token
   FROM documents
 ), kept AS (
   SELECT doc_id, token FROM toks WHERE token NOT IN ({_STOPLIST_SQL})
@@ -114,7 +114,7 @@ _FULL_STOPLIST_SQL = stopwords_sql_in_list(full_stopwords())
 STOPWORD_FULL_GATE_SQL = f"""
 WITH toks AS (
   SELECT doc_id,
-         unnest(string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +')) AS token
+         unnest({split_sql()}) AS token
   FROM documents
 ), kept AS (
   SELECT doc_id, token FROM toks WHERE token NOT IN ({_FULL_STOPLIST_SQL})
@@ -240,10 +240,10 @@ def positional_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-POSITIONAL_INDEX_SQL = """
+POSITIONAL_INDEX_SQL = f"""
 WITH toks AS (
   SELECT doc_id,
-         string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +') AS t
+         {split_sql()} AS t
   FROM documents
 ), pos AS (
   SELECT doc_id, t[i] AS token, i - 1 AS pos

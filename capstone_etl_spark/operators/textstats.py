@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from capstone_etl_spark.functions.hashing import MERSENNE_P, md5_hash60, md5_hash60_sql
 from capstone_etl_spark.functions.stopwords import STOPWORDS, stopwords_sql_in_list
-from capstone_etl_spark.functions.text import token_ngrams, tokenize
+from capstone_etl_spark.functions.text import split_sql, token_ngrams, tokenize, tokenize_sql
 from capstone_etl_spark.functions.windows import bounded_window_key
 from capstone_etl_spark.operators.vocab import with_dense_ids
 from capstone_etl_spark.sources.tables import load_table
@@ -67,8 +67,7 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 TEXT_QUALITY_SQL = f"""
 WITH base AS (
   SELECT doc_id, text,
-         list_filter(string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-                     t -> t <> '') AS toks
+         {tokenize_sql()} AS toks
   FROM documents
 )
 SELECT doc_id,
@@ -99,11 +98,10 @@ def token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TOKEN_COUNTS_SQL = """
+TOKEN_COUNTS_SQL = f"""
 WITH base AS (
   SELECT doc_id, text,
-         len(list_filter(string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-                         t -> t <> '')) AS ws,
+         len({tokenize_sql()}) AS ws,
          len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS bpe
   FROM documents
 )
@@ -138,8 +136,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 DOC_FINGERPRINT_SQL = f"""
 WITH base AS (
   SELECT doc_id,
-         list_filter(string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-                     t -> t <> '') AS toks
+         {tokenize_sql()} AS toks
   FROM documents
 )
 SELECT doc_id,
@@ -191,8 +188,7 @@ _LANG_CASE = " ".join(
 LANGUAGE_ID_SQL = f"""
 WITH base AS (
   SELECT doc_id, lang,
-         list_filter(string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-                     t -> t <> '') AS toks
+         {tokenize_sql()} AS toks
   FROM documents
 ), scored AS (
   SELECT doc_id, lang, toks,
@@ -274,7 +270,7 @@ def repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 REPETITION_RATIO_SQL = f"""
 WITH toks AS (
   SELECT doc_id,
-         string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +') AS t
+         {split_sql()} AS t
   FROM documents
 ), grams AS (
   SELECT doc_id, array_to_string(t[i : i + {REP_N} - 1], ' ') AS g
@@ -290,10 +286,10 @@ FROM documents d LEFT JOIN per_doc p USING (doc_id)
 """
 
 # Shared DuckDB token-array CTE (tokenize() mirror).
-_TOKS_CTE = """
+_TOKS_CTE = f"""
 WITH toks AS (
   SELECT doc_id,
-         string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +') AS t
+         {split_sql()} AS t
   FROM documents
 )
 """
@@ -465,12 +461,10 @@ def token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TOKEN_ENTROPY_SQL = """
+TOKEN_ENTROPY_SQL = f"""
 WITH toks AS (
   SELECT doc_id,
-         UNNEST(list_filter(
-           string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-           t -> t <> '')) AS token
+         UNNEST({tokenize_sql()}) AS token
   FROM documents
 ), tf AS (
   SELECT doc_id, token, COUNT(*) AS cnt FROM toks GROUP BY 1, 2
@@ -549,8 +543,7 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 _WINNOW_WINS_CTE = f"""
 WITH toks AS (
   SELECT doc_id,
-         list_filter(string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-                     t -> t <> '') AS t
+         {tokenize_sql()} AS t
   FROM documents
 ), grams AS (
   SELECT doc_id, i - 1 AS pos,
@@ -684,11 +677,9 @@ def zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ZIPF_FIT_SQL = """
+ZIPF_FIT_SQL = f"""
 WITH tok AS (
-  SELECT UNNEST(list_filter(
-    string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-    t -> t <> '')) AS token
+  SELECT UNNEST({tokenize_sql()}) AS token
   FROM documents
 ), freq AS (
   SELECT token, COUNT(*) AS tf FROM tok GROUP BY token
@@ -813,9 +804,7 @@ def heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 HEAPS_LAW_FIT_SQL = f"""
 WITH tok AS (
-  SELECT doc_id, UNNEST(list_filter(
-    string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-    t -> t <> '')) AS token
+  SELECT doc_id, UNNEST({tokenize_sql()}) AS token
   FROM documents
 ), tf AS (
   SELECT doc_id, token, COUNT(*) AS cnt FROM tok GROUP BY 1, 2
@@ -924,12 +913,10 @@ def token_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TOKEN_GINI_SQL = """
+TOKEN_GINI_SQL = f"""
 WITH per_doc AS (
   SELECT doc_id,
-         CAST(len(list_filter(
-           string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-           t -> t <> '')) AS BIGINT) AS n_tok
+         CAST(len({tokenize_sql()}) AS BIGINT) AS n_tok
   FROM documents
 ), ranked AS (
   SELECT n_tok, ROW_NUMBER() OVER (ORDER BY n_tok, doc_id) AS rid FROM per_doc
@@ -1034,9 +1021,7 @@ def association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ASSOCIATION_RULES_SQL = f"""
 WITH exploded AS (
-  SELECT doc_id, UNNEST(list_filter(
-    string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-    t -> t <> '')) AS token
+  SELECT doc_id, UNNEST({tokenize_sql()}) AS token
   FROM documents
 ), baskets AS (
   SELECT DISTINCT doc_id, token FROM exploded
@@ -1143,9 +1128,7 @@ def negative_sampling_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 NEGATIVE_SAMPLING_TABLE_SQL = f"""
 WITH tok AS (
-  SELECT UNNEST(list_filter(
-    string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-    t -> t <> '')) AS token
+  SELECT UNNEST({tokenize_sql()}) AS token
   FROM documents
 ), freq AS (
   SELECT token, COUNT(*) AS tf FROM tok GROUP BY 1
@@ -1200,9 +1183,7 @@ def bpe_merge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 BPE_MERGE_PAIRS_SQL = f"""
 WITH toks AS (
-  SELECT UNNEST(list_filter(
-           string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-           t -> t <> '')) AS token
+  SELECT UNNEST({tokenize_sql()}) AS token
   FROM documents
 ), tf AS (
   SELECT token, COUNT(*) AS tf FROM toks GROUP BY 1
@@ -1256,12 +1237,10 @@ def corpus_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CORPUS_DRIFT_SQL = """
+CORPUS_DRIFT_SQL = f"""
 WITH toks AS (
   SELECT source,
-         UNNEST(list_filter(
-           string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-           t -> t <> '')) AS token
+         UNNEST({tokenize_sql()}) AS token
   FROM documents
 ), freq AS (
   SELECT source, token, COUNT(*) AS cnt FROM toks GROUP BY 1, 2
@@ -1419,9 +1398,7 @@ def stopword_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
 STOPWORD_DISCOVERY_SQL = f"""
 WITH toks AS (
   SELECT doc_id, source,
-         UNNEST(list_filter(
-           string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-           t -> t <> '')) AS token
+         UNNEST({tokenize_sql()}) AS token
   FROM documents
 ), per_src AS (
   SELECT token, source, COUNT(DISTINCT doc_id) AS src_df
@@ -1471,9 +1448,7 @@ def top_tokens_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 TOP_TOKENS_PER_SOURCE_SQL = f"""
 WITH toks AS (
   SELECT source,
-         UNNEST(list_filter(
-           string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-           t -> t <> '')) AS token
+         UNNEST({tokenize_sql()}) AS token
   FROM documents
 ), freq AS (
   SELECT source, token, COUNT(*) AS cnt FROM toks GROUP BY 1, 2
@@ -1490,11 +1465,10 @@ ORDER BY source, rnk
 
 # Shared filtered-tokens CTE for the round-5 additions (mirrors
 # functions.text.tokenize exactly — empty tokens dropped).
-_FTOKS_CTE = """
+_FTOKS_CTE = f"""
 WITH toks AS (
   SELECT doc_id, source,
-         list_filter(string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-                     x -> x <> '') AS t
+         {tokenize_sql()} AS t
   FROM documents
 )
 """
@@ -1808,11 +1782,9 @@ def bpe_apply_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-BPE_APPLY_MERGE_SQL = """
+BPE_APPLY_MERGE_SQL = f"""
 WITH tokstream AS (
-  SELECT UNNEST(list_filter(
-           string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-           x -> x <> '')) AS token
+  SELECT UNNEST({tokenize_sql()}) AS token
   FROM documents
 ), tf AS (
   SELECT token, COUNT(*) AS tf FROM tokstream GROUP BY 1
@@ -1937,9 +1909,7 @@ def feature_hashing_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 FEATURE_HASHING_SQL = f"""
 WITH tok AS (
-  SELECT doc_id, UNNEST(list_filter(
-    string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-    t -> t <> '')) AS token
+  SELECT doc_id, UNNEST({tokenize_sql()}) AS token
   FROM documents
 ), tf AS (
   SELECT doc_id, token, COUNT(*) AS cnt FROM tok GROUP BY 1, 2
@@ -2142,9 +2112,7 @@ def _bpe_learn_merges_sql() -> str:
     ]
     return f"""
 WITH tokstream AS (
-  SELECT UNNEST(list_filter(
-           string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-           x -> x <> '')) AS token
+  SELECT UNNEST({tokenize_sql()}) AS token
   FROM documents
 ), tf AS MATERIALIZED (
   SELECT token, COUNT(*) AS tf FROM tokstream GROUP BY 1
@@ -2221,9 +2189,7 @@ def _bpe_encode_sql() -> str:
     return f"""
 WITH tokstream AS (
   SELECT source,
-         UNNEST(list_filter(
-           string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-           x -> x <> '')) AS token
+         UNNEST({tokenize_sql()}) AS token
   FROM documents
 ), stf AS MATERIALIZED (
   SELECT source, token, CAST(COUNT(*) AS BIGINT) AS tf_s FROM tokstream GROUP BY 1, 2
@@ -2389,9 +2355,7 @@ d{k} AS MATERIALIZED (
         )
     return f"""
 WITH tokstream AS (
-  SELECT UNNEST(list_filter(
-           string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-           x -> x <> '')) AS token
+  SELECT UNNEST({tokenize_sql()}) AS token
   FROM documents
 ), words AS MATERIALIZED (
   SELECT token, CAST(COUNT(*) AS BIGINT) AS tf FROM tokstream
@@ -2681,9 +2645,7 @@ def _naive_bayes_sql() -> str:
     return f"""
 WITH tok AS (
   SELECT doc_id, source, {is_train} AS is_train,
-         UNNEST(list_filter(
-           string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'))), ' +'),
-           t -> t <> '')) AS token
+         UNNEST({tokenize_sql()}) AS token
   FROM documents
 ), cst AS (
   SELECT token, source, COUNT(*) AS c

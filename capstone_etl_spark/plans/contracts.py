@@ -536,7 +536,6 @@ HEADLINE: list[str] = [
     "repeated_ngram_spans",
     "difficulty_deciles",
     "mixing_allocation",
-    # round-5 additions
     "min_cost_supplier",
     "local_supplier_volume",
     "important_parts",
@@ -563,7 +562,6 @@ HEADLINE: list[str] = [
     "length_quartiles_per_source",
     "curation_verdict",
     "source_quality_summary",
-    # round-5 session-2 additions
     "hierarchy_rollup",
     "dsir_importance",
     "token_budget_selection",
@@ -572,7 +570,6 @@ HEADLINE: list[str] = [
     "ann_pq_topk",
     "cooccurrence_triangles",
     "hybrid_retrieval_rrf",
-    # round-5 session-3 additions
     "key_skew_audit",
     "output_file_plan",
     "ivf_cell_balance",
@@ -592,7 +589,6 @@ HEADLINE: list[str] = [
     "bloom_membership",
     "multimodal_resize",
     "zorder_pruning_gain",
-    # round-6 additions
     "bt_source_ratings",
     "template_extraction",
     "embedding_coverage_audit",
@@ -604,18 +600,14 @@ HEADLINE: list[str] = [
     "dedup_keep_best",
     "stopword_discovery",
     "unicode_audit",
-    # round-7 additions
     "bpe_encode",
     "unigram_tokenizer",
     "training_manifest",
     "lsh_tuning_curve",
     "multimodal_audio_resample",
-    # round-7 session-2 additions
     "cms_join_size",
     "histogram_quantiles",
-    # round-9 additions
     "kll_quantile_sketch",
-    # round-10: HIVF-PQ — both index-build stages on the two-level router
     "ann_hivf_pq_topk",
     "stream_ann_hivf_pq_topk",
     "hivf_cell_medoids",
@@ -635,15 +627,12 @@ HEADLINE: list[str] = [
     "hll_distinct_sketch",
     "corpus_cube",
     "multimodal_phash_dedup",
-    # round-7 session-3 additions
     "dedup_sorted_neighborhood",
     "split_leakage_audit",
     "code_detection",
-    # round-7 session-4 additions
     "semantic_decontamination",
     "curriculum_schedule",
     "dp_source_histogram",
-    # round-7 session-5 additions
     "source_loso_influence",
     "ivf_cell_medoids",
     "rendezvous_sharding",
@@ -660,21 +649,17 @@ HEADLINE: list[str] = [
     "token_gini",
     "conversion_survival",
     "event_seasonality",
-    # round-8 additions
     "dedup_clusters_incremental",
-    # round-8 session-2 additions
     "event_frequent_sequences",
     "next_event_examples",
     "span_corruption_masks",
     "kneser_ney_bigram",
     "dataset_card",
     "dp_quantile_release",
-    # round-8 session-3 additions
     "ivf_probe_recall_curve",
     "kmv_set_difference",
     "group_dro_weights",
     "rag_chunk_retrieval",
-    # round-8 session-4 additions
     "multimodal_caption_pairs",
     "naive_bayes_source_model",
     "ks_source_drift",
@@ -684,17 +669,16 @@ HEADLINE: list[str] = [
     "lm_greedy_decode",
     "pq_distortion_audit",
     "rfm_segments",
-    # round-8 session-5 additions (logistic_conversion_model is
-    # excluded: its plan embeds the 15 learned-weight literals, so the
-    # dump would churn on every data change; its per-round discipline
-    # is pinned by tests/test_round8_session5.py instead)
+    # logistic_conversion_model is excluded: its plan embeds the 15
+    # learned-weight literals, so the dump would churn on every data
+    # change; its per-round discipline is pinned by
+    # tests/test_round8_session5.py instead.
     "event_attribution_credit",
     "event_bot_score",
     "bootstrap_ci",
     "event_cuped_adjustment",
     "pareto_frontier_docs",
     "event_overdispersion",
-    # round-9 valuation additions
     "knn_shapley_values",
     "label_noise_audit",
     "kcenter_coreset",

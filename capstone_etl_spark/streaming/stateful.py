@@ -1,14 +1,22 @@
-"""Custom stateful streaming operator via applyInPandasWithState.
+"""Custom stateful streaming operators via applyInPandasWithState.
 
 The escape hatch for operators Spark's built-in streaming aggregations
 can't express (SURVEY.md §2.8): arbitrary per-key state evolved across
-micro-batches in Arrow-batched pandas. Demonstrated with a per-user
-running activity accumulator (event count + value sum + last-seen
-epoch) — the skeleton generalizes to CEP-style patterns, decaying
-counters, per-entity models.
+micro-batches in Arrow-batched pandas. Three trackers use it:
+
+- running_user_activity: per-user running activity (event count +
+  value sum + last-seen epoch);
+- kmv_bottom_k / reservoir_bottom_k: per-source bottom-k of a hash
+  stream (the KMV sketch and the reservoir sample). Spark has no
+  bottom-k aggregate — its hll/kll/theta sketches give different
+  outputs than the exact oracle — so these stay in Python.
+
+A tracker whose state is only min/max/sum cells belongs in a built-in
+streaming aggregation instead (stream_ab_test and
+stream_conversion_survival run that way).
 
 Scale notes: state lives in the executor state store partitioned by
-the grouping key (user_id — high-cardinality, unskewed); each
+the grouping key (user_id or source); each
 micro-batch touches only keys present in that batch. Arrow transfer
 batches rows per key-group — never row-at-a-time Python.
 """
@@ -198,155 +206,6 @@ def reservoir_bottom_k(rows: DataFrame) -> DataFrame:
         _reservoir_accumulate,
         outputStructType=RESERVOIR_OUTPUT_SCHEMA,
         stateStructType=RESERVOIR_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-AB_OUTPUT_SCHEMA = "user_id long, upd long, min_view_us long, max_purchase_us long"
-AB_STATE_SCHEMA = "upd long, min_view_us long, max_purchase_us long"
-# sentinels (state structs reject NULLs cleanly): "no view yet" sorts
-# above any real timestamp, "no purchase yet" below EVERY representable
-# one — including pre-1970 negatives, so a pre-epoch purchase can never
-# be conflated with the absent-purchase state; min/max merges need no
-# branches and the final predicate max_purchase > min_view is False
-# until both sides exist.
-_AB_NO_VIEW = 1 << 62
-_AB_NO_PURCHASE = -(1 << 62)
-
-
-def _ab_accumulate(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    # State = (min view ts, max purchase ts) in EXACT microseconds —
-    # min/max are order-free merges, so the drained state is identical
-    # however the replay batches the files (a purchase can arrive
-    # micro-batches BEFORE the view that precedes it in event time; the
-    # min/max pair still decides post-exposure conversion correctly:
-    # ∃ purchase after first view ⟺ max(purchase) > min(view)).
-    upd, mn, mx = state.get if state.exists else (0, _AB_NO_VIEW, _AB_NO_PURCHASE)
-    for pdf in pdfs:
-        if not len(pdf):
-            continue
-        views = pdf.loc[~pdf["is_purchase"], "ts_us"]
-        purchases = pdf.loc[pdf["is_purchase"], "ts_us"]
-        if len(views):
-            mn = min(mn, int(views.min()))
-        if len(purchases):
-            mx = max(mx, int(purchases.max()))
-    upd += 1
-    state.update((upd, mn, mx))
-    yield pd.DataFrame(
-        {
-            "user_id": [key[0]],
-            "upd": [upd],
-            "min_view_us": [mn],
-            "max_purchase_us": [mx],
-        }
-    )
-
-
-KM_OUTPUT_SCHEMA = "user_id long, upd long, fv long, last_us long, cand long"
-KM_STATE_SCHEMA = "upd long, fv long, last_us long, cand long, pend array<long>"
-# sentinels, same discipline as the A/B tracker: "no exposure yet"
-# sorts above any real timestamp so min-merges need no branches; "no
-# qualifying conversion yet" likewise.
-_KM_NO_EXPOSE = 1 << 62
-_KM_NO_CONV = 1 << 62
-_KM_NO_EVENT = -(1 << 62)
-
-
-def _km_accumulate(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    # State = (first-exposure min, last-event max, min qualifying
-    # conversion, pending conversions). The subtle piece is `cand` =
-    # min{conversion ts STRICTLY AFTER first exposure}: fv only
-    # DECREASES as replayed batches land, so the qualifying set only
-    # GROWS — a conversion currently <= fv may qualify later. The
-    # exact order-free merge keeps those (and only those) in `pend`:
-    # conversions > fv collapse to their min immediately (anything
-    # larger can never become the answer — the smaller one qualifies
-    # forever). State is O(1 + conversions-before-first-exposure) per
-    # user: in a funnel stream exposure precedes conversion for almost
-    # every subject, and `pend` is bounded by the user's conversion
-    # count regardless of replay order.
-    upd, fv, last, cand, pend = (
-        state.get if state.exists else (0, _KM_NO_EXPOSE, _KM_NO_EVENT, _KM_NO_CONV, [])
-    )
-    convs = [int(p) for p in pend]
-    if cand < _KM_NO_CONV:
-        convs.append(cand)
-    for pdf in pdfs:
-        if not len(pdf):
-            continue
-        last = max(last, int(pdf["ts_us"].max()))
-        exposes = pdf.loc[pdf["kind"] == 0, "ts_us"]
-        if len(exposes):
-            fv = min(fv, int(exposes.min()))
-        convs.extend(int(c) for c in pdf.loc[pdf["kind"] == 1, "ts_us"])
-    qual = [c for c in convs if c > fv]
-    cand = min(qual) if qual and fv < _KM_NO_EXPOSE else _KM_NO_CONV
-    pend = sorted(c for c in convs if c <= fv)
-    upd += 1
-    state.update((upd, fv, last, cand, pend))
-    yield pd.DataFrame(
-        {
-            "user_id": [key[0]],
-            "upd": [upd],
-            "fv": [fv],
-            "last_us": [last],
-            "cand": [cand],
-        }
-    )
-
-
-def running_km_exposure(events: DataFrame) -> DataFrame:
-    """Per-user streaming time-to-conversion tracker for the
-    Kaplan-Meier curve: state is (first-exposure, last-event,
-    first-qualifying-conversion, pending pre-exposure conversions) in
-    exact microseconds; all merges are order-free, so the drained
-    table equals the batch per-user relation however the replay
-    batches the files. The drained table feeds the shared batch KM
-    tail (events.km_curve)."""
-    from capstone_etl_spark.operators.events import AB_CONVERT_TYPE, AB_EXPOSE_TYPE
-
-    prepared = events.select(
-        "user_id",
-        F.when(F.col("event_type") == AB_EXPOSE_TYPE, F.lit(0))
-        .when(F.col("event_type") == AB_CONVERT_TYPE, F.lit(1))
-        .otherwise(F.lit(2))
-        .alias("kind"),
-        F.unix_micros("ts").alias("ts_us"),
-    )
-    return prepared.groupBy("user_id").applyInPandasWithState(
-        _km_accumulate,
-        outputStructType=KM_OUTPUT_SCHEMA,
-        stateStructType=KM_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def running_ab_exposure(events: DataFrame) -> DataFrame:
-    """Per-user streaming exposure/conversion tracker: O(1) state per
-    user (first-view min, last-purchase max in exact microseconds);
-    the drained table feeds the shared batch readout
-    (events.ab_readout) so streaming and batch experiments can never
-    disagree on the statistics."""
-    from capstone_etl_spark.operators.events import AB_CONVERT_TYPE, AB_EXPOSE_TYPE
-
-    prepared = events.filter(
-        F.col("event_type").isin(AB_EXPOSE_TYPE, AB_CONVERT_TYPE)
-    ).select(
-        "user_id",
-        (F.col("event_type") == AB_CONVERT_TYPE).alias("is_purchase"),
-        F.unix_micros("ts").alias("ts_us"),
-    )
-    return prepared.groupBy("user_id").applyInPandasWithState(
-        _ab_accumulate,
-        outputStructType=AB_OUTPUT_SCHEMA,
-        stateStructType=AB_STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as _t
 
+import __spark_entry__ as entrymod
 from capstone_etl_spark.operators import events as batch_events
 from capstone_etl_spark.streaming import (
     events_stream,
@@ -306,160 +307,35 @@ def test_kafka_value_parser_roundtrip(spark):
     assert sorted(map(tuple, parsed.collect())) == sorted(map(tuple, events.collect()))
 
 
-def test_stream_reservoir_equals_batch(spark):
-    """The streaming reservoir's drained state must equal the batch
-    reservoir_sample row-for-row (bottom-K of a union is order-free),
-    and the K constants must stay in lockstep."""
-    from capstone_etl_spark.operators.sampling import RESERVOIR_K, reservoir_sample
-    from capstone_etl_spark.operators.streaming_queries import stream_reservoir_sample
+@pytest.mark.parametrize(
+    "stream_name",
+    [
+        "stream_reservoir_sample",
+        "stream_decontamination",
+        "stream_pii_scan",
+        "stream_template_extraction",
+        "stream_ab_test",
+        "stream_dp_histogram",
+        "stream_conversion_survival",
+    ],
+)
+def test_stream_equals_batch(spark, stream_name):
+    """Under multi-batch replay a stream query's drained output must
+    equal its batch twin's (BATCH_TWIN) as a multiset of full rows:
+    bottom-K of a union, additive counts, min/max state merges and the
+    deterministic DP draw are all replay-order free."""
+    from collections import Counter
+
+    from capstone_etl_spark.operators.sampling import RESERVOIR_K
+    from capstone_etl_spark.operators.streaming_queries import BATCH_TWIN
+    from capstone_etl_spark.session import release_caches
     from capstone_etl_spark.streaming.stateful import _RESERVOIR_K
 
     assert _RESERVOIR_K == RESERVOIR_K
-    sf = "/root/testdata/sf0.001"
-    got = sorted(
-        (r.source, r.doc_id, r.lang, r.rnk)
-        for r in stream_reservoir_sample(spark, sf).collect()
-    )
-    want = sorted(
-        (r.source, r.doc_id, r.lang, r.rnk)
-        for r in reservoir_sample(spark, sf).collect()
-    )
-    assert got == want and len(got) > 0
-
-
-def test_stream_decontamination_equals_batch(spark):
-    """The streamed ingest-decontamination must reproduce the batch
-    pass row-for-row — same thresholds, same df-cap, same scores."""
-    from capstone_etl_spark.operators.dedup import benchmark_decontamination
-    from capstone_etl_spark.operators.streaming_queries import stream_decontamination
-    from capstone_etl_spark.session import release_caches
-
-    sf = "/root/testdata/sf0.001"
+    qs = entrymod.queries()
     try:
-        got = sorted(
-            (r.train_doc, r.bench_doc, r.jaccard, r.containment)
-            for r in stream_decontamination(spark, sf).collect()
-        )
-        want = sorted(
-            (r.train_doc, r.bench_doc, r.jaccard, r.containment)
-            for r in benchmark_decontamination(spark, sf).collect()
-        )
+        got = Counter(map(tuple, qs[stream_name](spark, SF_DIR).collect()))
+        want = Counter(map(tuple, qs[BATCH_TWIN[stream_name]](spark, SF_DIR).collect()))
     finally:
         release_caches()
     assert got == want and len(got) > 0
-
-
-def test_stream_pii_scan_equals_batch(spark):
-    """The drained streaming snapshot must equal the batch pii_scan
-    row-for-row — additive counts make the stream exact."""
-    from capstone_etl_spark.operators.privacy import pii_scan
-    from capstone_etl_spark.operators.streaming_queries import stream_pii_scan
-
-    sf = "/root/testdata/sf0.001"
-    got = {r.source: r.asDict() for r in stream_pii_scan(spark, sf).collect()}
-    want = {r.source: r.asDict() for r in pii_scan(spark, sf).collect()}
-    assert got == want
-
-
-def test_stream_template_extraction_equals_batch(spark):
-    """The drained streaming template census must equal the batch
-    miner row-for-row — count/min are additive and the collect_set
-    source set collapses to the same n_sources."""
-    from capstone_etl_spark.operators.dedup import template_extraction
-    from capstone_etl_spark.operators.streaming_queries import (
-        stream_template_extraction,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    got = {r.template_hash: r.asDict() for r in stream_template_extraction(spark, sf).collect()}
-    want = {r.template_hash: r.asDict() for r in template_extraction(spark, sf).collect()}
-    assert got == want
-
-
-def test_stream_ab_test_equals_batch(spark):
-    """The streaming experiment readout must equal the batch one
-    row-for-row: the per-user (min view, max purchase) state pair is
-    replay-order free, and both forms share events.ab_readout."""
-    from capstone_etl_spark.operators.events import ab_test_analysis
-    from capstone_etl_spark.operators.streaming_queries import stream_ab_test
-
-    sf = "/root/testdata/sf0.001"
-    got = {r.variant: r.asDict() for r in stream_ab_test(spark, sf).collect()}
-    want = {r.variant: r.asDict() for r in ab_test_analysis(spark, sf).collect()}
-    assert got == want
-
-
-def test_stream_dp_histogram_equals_batch(spark):
-    """The streaming DP release must equal the batch release
-    row-for-row: counts are additive and the Laplace draw is a
-    deterministic function of (salt, source)."""
-    from capstone_etl_spark.operators.privacy import dp_source_histogram
-    from capstone_etl_spark.operators.streaming_queries import stream_dp_histogram
-
-    sf = "/root/testdata/sf0.001"
-    got = {r.source: r.asDict() for r in stream_dp_histogram(spark, sf).collect()}
-    want = {r.source: r.asDict() for r in dp_source_histogram(spark, sf).collect()}
-    assert got == want
-
-
-def test_stream_conversion_survival_equals_batch(spark):
-    """The streaming KM curve must equal the batch one row-for-row:
-    the per-user (first-exposure, last-event, first-qualifying-
-    conversion) state merges are replay-order free (including the
-    pre-exposure pending-conversion set), and both forms share
-    events.km_curve."""
-    from capstone_etl_spark.operators.events import conversion_survival
-    from capstone_etl_spark.operators.streaming_queries import (
-        stream_conversion_survival,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    got = {r.dur_min: r.asDict() for r in stream_conversion_survival(spark, sf).collect()}
-    want = {r.dur_min: r.asDict() for r in conversion_survival(spark, sf).collect()}
-    assert got == want
-
-
-def test_km_state_pending_preexposure_conversion():
-    """Unit-level replay-order proof for the subtle KM state case: a
-    conversion that arrives BEFORE the exposure that precedes it in
-    event time must be held in the pending set and promoted once a
-    smaller exposure lands — never dropped, never wrongly counted."""
-    import pandas as pd
-
-    from capstone_etl_spark.streaming.stateful import (
-        _KM_NO_CONV,
-        _KM_NO_EXPOSE,
-        _km_accumulate,
-    )
-
-    class FakeState:
-        def __init__(self):
-            self.exists = False
-            self._v = None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = tuple(v)
-            self.exists = True
-
-    st = FakeState()
-    # batch 1: conversion at t=50 arrives first — no exposure yet
-    list(_km_accumulate((1,), iter([pd.DataFrame({"kind": [1], "ts_us": [50]})]), st))
-    upd, fv, last, cand, pend = st._v
-    assert fv == _KM_NO_EXPOSE and cand == _KM_NO_CONV and list(pend) == [50]
-    # batch 2: exposure at t=100 — the t=50 conversion is PRE-exposure,
-    # stays pending (batch semantics: conversion must be > exposure)
-    list(_km_accumulate((1,), iter([pd.DataFrame({"kind": [0], "ts_us": [100]})]), st))
-    upd, fv, last, cand, pend = st._v
-    assert fv == 100 and cand == _KM_NO_CONV and list(pend) == [50]
-    # batch 3: an EARLIER exposure at t=10 lands — t=50 now qualifies
-    list(_km_accumulate((1,), iter([pd.DataFrame({"kind": [0], "ts_us": [10]})]), st))
-    upd, fv, last, cand, pend = st._v
-    assert fv == 10 and cand == 50 and list(pend) == []
-    # batch 4: a larger conversion never displaces the min qualifier
-    list(_km_accumulate((1,), iter([pd.DataFrame({"kind": [1], "ts_us": [70]})]), st))
-    upd, fv, last, cand, pend = st._v
-    assert cand == 50 and list(pend) == [] and last == 100

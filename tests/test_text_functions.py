@@ -11,7 +11,9 @@ from capstone_etl_spark.functions.text import (
     count_substring,
     page_loc,
     parent_path,
+    split_sql,
     tokenize,
+    tokenize_sql,
 )
 
 
@@ -38,6 +40,28 @@ def test_tokenize_drops_empties_and_lowercases(spark):
     assert got[0] == ["foo", "bar", "baz"]
     assert got[1] == []
     assert got[2] == []
+
+
+def test_tokenize_sql_matches_spark_tokenize(spark):
+    """The DuckDB fragment every oracle tokenizes with must give the
+    Spark tokenizer's tokens; split_sql differs only where the text
+    cleans to empty, giving ['']."""
+    import duckdb
+
+    edge = ["", "   ", "  A  b ", "line1\nline2", "tab\there", "!!!", "Café 42x"]
+    rows = list(enumerate(edge))
+    con = duckdb.connect()
+    con.execute("CREATE TABLE docs (i INTEGER, text VARCHAR)")
+    con.executemany("INSERT INTO docs VALUES (?, ?)", rows)
+    duck = con.execute(
+        f"SELECT {tokenize_sql()}, {split_sql()} FROM docs ORDER BY i"
+    ).fetchall()
+    df = spark.createDataFrame(rows, "i int, text string")
+    want = [r["v"] for r in df.orderBy("i").select(tokenize("text").alias("v")).collect()]
+    assert want == [[], [], ["a", "b"], ["line1line2"], ["tabhere"], [], ["caf", "42x"]]
+    assert [toks for toks, _ in duck] == want
+    for text, (toks, split) in zip(edge, duck):
+        assert split == ([""] if text in ("", "   ", "!!!") else toks)
 
 
 def test_count_substring_external_links(spark):
