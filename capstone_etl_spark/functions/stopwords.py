@@ -10,6 +10,8 @@ list; callers can pass any collection to the tokenizer instead.
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
 # Standard English stopwords (classic IR list), lowercase. Includes the
 # reference's quirky entries "t" and "" (main.go:302-303) so the empty
 # token produced by splitting is dropped by the same gate.
@@ -36,10 +38,25 @@ STOPWORDS: tuple[str, ...] = (
 )
 
 
+# Two IN-list renderers, one per SQL dialect: the words are the same,
+# the string-literal escaping is not. DuckDB reads a backslash as itself
+# and only a quote needs escaping; Spark's parser reads a backslash as
+# an escape ('a\b' is "a" + backspace there), so both need escaping.
+
+
 def stopwords_sql_in_list(words: tuple[str, ...] = STOPWORDS) -> str:
-    """Render the set as a SQL IN-list literal (shared by the Spark SQL
-    form and the DuckDB oracle so both engines filter identically)."""
+    """Render the set as a DuckDB IN-list literal (the oracles' gate)."""
     return ", ".join("'" + w.replace("'", "''") + "'" for w in words)
+
+
+def stopwords_spark_sql_in_list(words: Iterable[str]) -> str:
+    """Render the set as a Spark SQL IN-list literal: backslash and quote
+    are both backslash-escaped (backslash first), so any word survives
+    the parser unchanged. The engine's gate compiles from this in one
+    parse instead of one literal per word."""
+    return ", ".join(
+        "'" + w.replace("\\", "\\\\").replace("'", "\\'") + "'" for w in words
+    )
 
 
 # Reference-cardinality fixture (S3 at full size). The reference

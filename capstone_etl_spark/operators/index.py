@@ -19,7 +19,7 @@ emitted trimmed (no trailing-zero slots, §7.6.2).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -91,12 +91,16 @@ def sparse_vectors(tf: DataFrame, vocab: DataFrame, strategy: str = "broadcast")
     )
 
 
-def doc_token_arrays(tf: DataFrame) -> DataFrame:
-    """Per-doc array<struct<token,qty>> sorted by token (A7,
+def doc_token_array_column() -> Column:
+    """The per-doc `tokens` aggregate over a TF relation grouped by
+    doc_id: array<struct<token,qty>> sorted by token (A7,
     main.go:273-278; sort_array replaces Go map-order nondeterminism)."""
-    return tf.groupBy("doc_id").agg(
-        F.sort_array(F.collect_list(F.struct("token", "qty"))).alias("tokens")
-    )
+    return F.sort_array(F.collect_list(F.struct("token", "qty"))).alias("tokens")
+
+
+def doc_token_arrays(tf: DataFrame) -> DataFrame:
+    """Per-doc sorted token array (doc_token_array_column)."""
+    return tf.groupBy("doc_id").agg(doc_token_array_column())
 
 
 def tf_idf(tf: DataFrame) -> DataFrame:

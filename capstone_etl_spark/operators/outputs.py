@@ -9,7 +9,8 @@ The reference emits three collections (SURVEY.md §1.4):
 3. `token_vector` (main.go:232-238): per-doc sparse TF vector keyed by
    stringified vocabulary index, plus the sorted index array.
 
-Each relation exists in two forms:
+Each relation is composed once, by a private builder (`_wikibooks`,
+`_tokens`, `_token_vector`), and exists in two forms:
 - `*_output`: the typed DataFrame (arrays/maps/structs) that the S4
   sinks write (sinks/writers.py `write_outputs`);
 - a canonicalized queries() projection (arrays/maps flattened to sorted
@@ -17,8 +18,19 @@ Each relation exists in two forms:
   (SURVEY.md §7.7 — nested types serialize differently across engines).
 
 Plan shape / scale notes:
-- one cached TF relation feeds stats, token arrays, vocabulary and the
-  sparse-vector join — the corpus tokenizes once per composed relation.
+- `*_output` is cached (registered with session.release_caches):
+  write_outputs writes each relation twice, as parquet and then as JSON
+  lines, so the first write fills the cache and the second reads it
+  back in one job instead of recomposing the relation. The projections
+  are consumed once, so they build from the uncached builder and pay no
+  cache fill. Callers of `*_output` release it after writing.
+- wikibooks groups TF by doc_id ONCE: the stats columns
+  (tokenize.doc_stats_columns) and the sorted token array
+  (index.doc_token_array_column) come out of one aggregate, so one
+  shuffle and one join instead of two of each.
+- tokens and token_vector each read TF twice (postings or sparse
+  vectors, plus the vocabulary), so their TF relation is cached — the
+  corpus tokenizes once per composed relation.
 - every join is doc_id- or token-keyed (uniform, high-cardinality);
   the child-aggregate and vocabulary sides are small → broadcast.
 - F1 (substring-occurrence count) runs here as `count_external_links`:
@@ -39,7 +51,7 @@ from capstone_etl_spark.functions.text import count_substring
 from capstone_etl_spark.operators import hierarchy as hier_ops
 from capstone_etl_spark.operators import index as index_ops
 from capstone_etl_spark.operators.text_pipeline import _TF_CTE
-from capstone_etl_spark.operators.tokenize import doc_stats, term_frequencies
+from capstone_etl_spark.operators.tokenize import doc_stats_columns, term_frequencies
 from capstone_etl_spark.operators.vocab import vocabulary, with_dense_ids
 from capstone_etl_spark.sources.tables import load_table
 from capstone_etl_spark.session import cached
@@ -73,11 +85,11 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------------------ wikibooks
 
-def wikibooks_output(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _wikibooks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed per-page document (typed): hierarchy + counts +
     tokens array + norm in ONE relation (struct main.go:46-64)."""
     docs = _docs(spark, sf_dir)
-    tf = term_frequencies(docs).transform(cached)
+    tf = term_frequencies(docs)
 
     pages = hier_ops.synthetic_doc_paths(docs)
     linked = hier_ops.link_hierarchy(pages, id_col="doc_id").select(
@@ -86,8 +98,7 @@ def wikibooks_output(spark: SparkSession, sf_dir: str) -> DataFrame:
     children = hier_ops.child_aggregates(linked, id_col="doc_id").select(
         F.col("parent_page").alias("doc_id"), "count_children", "child_pages"
     )
-    stats = doc_stats(tf)
-    tokarr = index_ops.doc_token_arrays(tf)
+    per_doc = tf.groupBy("doc_id").agg(*doc_stats_columns(), index_ops.doc_token_array_column())
 
     return (
         docs.select(
@@ -98,8 +109,7 @@ def wikibooks_output(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .join(linked, "doc_id")
         .join(F.broadcast(children), "doc_id", "left")
-        .join(stats, "doc_id", "left")
-        .join(tokarr, "doc_id", "left")
+        .join(per_doc, "doc_id", "left")
         .select(
             "doc_id",
             "page_loc",
@@ -117,10 +127,16 @@ def wikibooks_output(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def wikibooks_output(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The wikibooks collection as the sinks write it: _wikibooks,
+    cached (write_outputs writes it twice)."""
+    return _wikibooks(spark, sf_dir).transform(cached)
+
+
 def wikibooks_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Oracle projection of wikibooks_output: arrays canonicalized to
     sorted comma-joined strings."""
-    out = wikibooks_output(spark, sf_dir)
+    out = _wikibooks(spark, sf_dir)
     return out.select(
         "doc_id",
         "page_loc",
@@ -176,7 +192,7 @@ LEFT JOIN tokarr t ON t.doc_id = d.doc_id
 
 # --------------------------------------------------------------- tokens
 
-def tokens_output(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The inverted-index collection (typed): dense `_id` (O4), token,
     posting list array<struct<doc_id,qty>> (A6/J5, main.go:151-163)."""
     tf = term_frequencies(_docs(spark, sf_dir)).transform(cached)
@@ -188,10 +204,15 @@ def tokens_output(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def tokens_output(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The tokens collection as the sinks write it: _tokens, cached."""
+    return _tokens(spark, sf_dir).transform(cached)
+
+
 def tokens_collection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Oracle projection of tokens_output (posting list → 'doc:qty,...'
     sorted by doc id)."""
-    out = tokens_output(spark, sf_dir)
+    out = _tokens(spark, sf_dir)
     return out.select(
         "_id",
         "token",
@@ -216,7 +237,7 @@ GROUP BY v._id, tf.token
 
 # --------------------------------------------------------- token_vector
 
-def token_vector_output(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _token_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The sparse-vector collection (typed): `_id` = dense doc id in
     page_loc order (O2, main.go:137-141), the BSON-style
     map<string,long> `compressed_token_vector` (A8/F8, main.go:222-235)
@@ -235,10 +256,16 @@ def token_vector_output(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def token_vector_output(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The token_vector collection as the sinks write it: _token_vector,
+    cached."""
+    return _token_vector(spark, sf_dir).transform(cached)
+
+
 def token_vector_collection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Oracle projection of token_vector_output (map/arrays → sorted
     'idx:qty,...' / 'i,j,k' strings)."""
-    out = token_vector_output(spark, sf_dir)
+    out = _token_vector(spark, sf_dir)
     return out.select(
         "_id",
         "doc_id",

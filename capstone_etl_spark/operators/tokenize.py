@@ -5,7 +5,7 @@ dictionary semi-gate → stopword anti-gate → per-(doc,token) counts →
 unique count → L2 norm — re-expressed as one lazy DataFrame DAG:
 
     read → tokenize (F.split/explode) → gates (broadcast semi/anti
-    joins or literal isin) → groupBy(doc,token).count → groupBy(doc).agg
+    joins or a literal NOT IN) → groupBy(doc,token).count → groupBy(doc).agg
 
 Scale notes (100 TB):
 - explode multiplies rows ~100× (tokens per doc); the groupBy(doc_id,
@@ -23,10 +23,10 @@ from __future__ import annotations
 
 from collections.abc import Iterable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from capstone_etl_spark.functions.stopwords import STOPWORDS
+from capstone_etl_spark.functions.stopwords import STOPWORDS, stopwords_spark_sql_in_list
 from capstone_etl_spark.functions.text import tokenize
 
 
@@ -39,14 +39,17 @@ def doc_tokens(
 ) -> DataFrame:
     """(doc_id, token) — one row per kept token occurrence.
 
-    stopwords: literal set → `NOT isin` filter (small, compiled into the
-    plan — the broadcast anti-join equivalent of main.go:252).
+    stopwords: literal set → one `token NOT IN (…)` expression (small,
+    compiled into the plan — the broadcast anti-join equivalent of
+    main.go:252). It parses in one call; `~isin(list)` builds the same
+    plan with one py4j literal call per word.
     dictionary: optional one-column ('word') DataFrame → broadcast
     left_semi join (main.go:251).
     """
     toks = docs.select(F.col(id_col).alias("doc_id"), F.explode(tokenize(text_col)).alias("token"))
-    if stopwords is not None:
-        toks = toks.filter(~F.col("token").isin(list(stopwords)))
+    words = tuple(stopwords or ())
+    if words:
+        toks = toks.filter(F.expr(f"token NOT IN ({stopwords_spark_sql_in_list(words)})"))
     if dictionary is not None:
         dict_df = dictionary.select(F.col(dictionary.columns[0]).alias("token")).distinct()
         toks = toks.join(F.broadcast(dict_df), "token", "left_semi")
@@ -70,12 +73,18 @@ def term_frequencies(
     )
 
 
-def doc_stats(tf: DataFrame) -> DataFrame:
-    """Per-doc rollup of the TF relation: token totals, distinct count
-    (A2, main.go:254-257) and the L2 norm over TF values (A4,
-    main.go:272-281). One shuffle on doc_id."""
-    return tf.groupBy("doc_id").agg(
+def doc_stats_columns() -> list[Column]:
+    """The per-doc stats aggregates over a TF relation grouped by
+    doc_id: token totals, distinct count (A2, main.go:254-257) and the
+    L2 norm over TF values (A4, main.go:272-281)."""
+    return [
         F.sum("qty").alias("n_tokens"),
         F.count("*").alias("n_unique"),
         F.sqrt(F.sum(F.col("qty") * F.col("qty")).cast("double")).alias("euclidian_norm"),
-    )
+    ]
+
+
+def doc_stats(tf: DataFrame) -> DataFrame:
+    """Per-doc rollup of the TF relation (doc_stats_columns). One
+    shuffle on doc_id."""
+    return tf.groupBy("doc_id").agg(*doc_stats_columns())

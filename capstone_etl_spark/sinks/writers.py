@@ -199,7 +199,10 @@ def merge_upsert(
 
 def write_outputs(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, str]:
     """The reference's three-collection output pass (S4 ×3): compose the
-    §1.4 relations and write each as parquet + JSON lines. Returns
+    §1.4 relations and write each as parquet + JSON lines. Each
+    `*_output` is cached, so the parquet write composes it once and the
+    JSON write reads the cache back; the caches stay registered until
+    the caller's session.release_caches(). Returns
     {relation: parquet_path}."""
     from capstone_etl_spark.operators import outputs as out_ops
 

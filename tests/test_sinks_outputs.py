@@ -1,19 +1,58 @@
 """S4 sinks + composed §1.4 output relations: write → read-back
-round-trips and composition invariants on sf0.001."""
+round-trips and composition invariants on sf0.001. Every `*_output`
+is a cached relation, so each test that builds one releases it."""
 
 from __future__ import annotations
+
+from collections import Counter
 
 from pyspark.sql import functions as F
 
 from capstone_etl_spark.operators import outputs as out_ops
+from capstone_etl_spark.session import release_caches
 from capstone_etl_spark.sinks import read_back, write_json, write_outputs, write_parquet
+from capstone_etl_spark.sinks.writers import write_collection
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
+def _jobs(spark, tag: str, write) -> int:
+    """Run `write()` under job tag `tag`; return how many jobs it ran."""
+    sc = spark.sparkContext
+    sc.addJobTag(tag)
+    try:
+        write()
+    finally:
+        sc.removeJobTag(tag)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    return len(jsc.statusTracker().getJobIdsForTag(tag))
+
+
+def test_sink_pass_composes_once(spark, tmp_path):
+    """write_outputs writes each relation twice (parquet, then JSON).
+    The first write fills the *_output cache; the second reads it back
+    in one job instead of recomposing it, and writes the same rows."""
+    try:
+        wb = out_ops.wikibooks_output(spark, SF_DIR)
+        pq, js = str(tmp_path / "wb.parquet"), str(tmp_path / "wb.json")
+        assert _jobs(spark, "sink-budget-parquet", lambda: write_parquet(wb, pq)) >= 1
+        assert _jobs(spark, "sink-budget-json", lambda: write_collection(wb, js)) == 1
+        back_pq = read_back(spark, pq)
+        back_js = spark.read.schema(back_pq.schema).json(js)
+        # full-row multisets; repr makes the nested arrays hashable
+        rows_pq = Counter(map(repr, back_pq.collect()))
+        assert rows_pq and Counter(map(repr, back_js.collect())) == rows_pq
+    finally:
+        release_caches()
+
+
 def test_wikibooks_output_composition(spark):
-    wb = out_ops.wikibooks_output(spark, SF_DIR)
-    rows = {r.doc_id: r for r in wb.collect()}
+    try:
+        wb = out_ops.wikibooks_output(spark, SF_DIR)
+        rows = {r.doc_id: r for r in wb.collect()}
+    finally:
+        release_caches()
     docs_n = spark.read.parquet(f"{SF_DIR}/documents.parquet").count()
     assert len(rows) == docs_n                       # one document per page
     roots = [r for r in rows.values() if r.parent_page is None]
@@ -29,30 +68,36 @@ def test_wikibooks_output_composition(spark):
 
 
 def test_parquet_roundtrip_all_outputs(spark, tmp_path):
-    paths = write_outputs(spark, SF_DIR, str(tmp_path))
-    assert set(paths) == {"wikibooks", "tokens", "token_vector"}
-    for name, pq in paths.items():
-        src = {
-            "wikibooks": out_ops.wikibooks_output,
-            "tokens": out_ops.tokens_output,
-            "token_vector": out_ops.token_vector_output,
-        }[name](spark, SF_DIR)
-        back = read_back(spark, pq)
-        # parquet read-back relaxes nullability (incl. nested) — compare
-        # names + types via simpleString, which omits nullability
-        assert back.schema.simpleString() == src.schema.simpleString(), name
-        assert back.count() == src.count(), name
+    try:
+        paths = write_outputs(spark, SF_DIR, str(tmp_path))
+        assert set(paths) == {"wikibooks", "tokens", "token_vector"}
+        for name, pq in paths.items():
+            src = {
+                "wikibooks": out_ops.wikibooks_output,
+                "tokens": out_ops.tokens_output,
+                "token_vector": out_ops.token_vector_output,
+            }[name](spark, SF_DIR)
+            back = read_back(spark, pq)
+            # parquet read-back relaxes nullability (incl. nested) — compare
+            # names + types via simpleString, which omits nullability
+            assert back.schema.simpleString() == src.schema.simpleString(), name
+            assert back.count() == src.count(), name
+    finally:
+        release_caches()
 
 
 def test_json_roundtrip_tokens(spark, tmp_path):
-    src = out_ops.tokens_output(spark, SF_DIR)
-    path = str(tmp_path / "tokens_json")
-    write_json(src, path)
-    back = spark.read.json(path)
-    assert back.count() == src.count()
-    # spot-check one posting list survives the JSON round trip intact
-    tok = src.orderBy("_id").first()
-    got = back.filter(F.col("token") == tok.token).first()
+    try:
+        src = out_ops.tokens_output(spark, SF_DIR)
+        path = str(tmp_path / "tokens_json")
+        write_json(src, path)
+        back = spark.read.json(path)
+        assert back.count() == src.count()
+        # spot-check one posting list survives the JSON round trip intact
+        tok = src.orderBy("_id").first()
+        got = back.filter(F.col("token") == tok.token).first()
+    finally:
+        release_caches()
     assert got._id == tok._id
     assert sorted((r.doc_id, r.qty) for r in got.references) == sorted(
         (r.doc_id, r.qty) for r in tok.references
@@ -61,11 +106,14 @@ def test_json_roundtrip_tokens(spark, tmp_path):
 
 def test_partitioned_parquet_sink(spark, tmp_path):
     """partition_by lays out hive dirs → partition pruning on read-back."""
-    wb = out_ops.wikibooks_output(spark, SF_DIR).withColumn(
-        "is_root", F.col("parent_page").isNull()
-    )
-    path = str(tmp_path / "wb_part")
-    write_parquet(wb, path, partition_by=["is_root"])
+    try:
+        wb = out_ops.wikibooks_output(spark, SF_DIR).withColumn(
+            "is_root", F.col("parent_page").isNull()
+        )
+        path = str(tmp_path / "wb_part")
+        write_parquet(wb, path, partition_by=["is_root"])
+    finally:
+        release_caches()
     pruned = read_back(spark, path).filter(F.col("is_root") == True)  # noqa: E712
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert pruned.count() > 0
@@ -73,8 +121,11 @@ def test_partitioned_parquet_sink(spark, tmp_path):
 
 
 def test_token_vector_dense_ids_are_permutation(spark):
-    tv = out_ops.token_vector_output(spark, SF_DIR)
-    ids = [r._id for r in tv.select("_id").collect()]
+    try:
+        tv = out_ops.token_vector_output(spark, SF_DIR)
+        ids = [r._id for r in tv.select("_id").collect()]
+    finally:
+        release_caches()
     assert sorted(ids) == list(range(len(ids)))
 
 
@@ -118,45 +169,42 @@ def test_document_store_seam_roundtrip_per_collection(spark, tmp_path):
     overwrite-style initial load, then a keyed delta that updates one
     document and inserts one, read back with the collection's fixed
     schema. Nested arrays/structs/maps survive the round trip."""
-    from capstone_etl_spark.operators import outputs as out_ops
-    from capstone_etl_spark.sinks.writers import (
-        COLLECTION_KEYS,
-        upsert_collection,
-        write_collection,
-    )
+    from capstone_etl_spark.sinks.writers import COLLECTION_KEYS, upsert_collection
 
-    sf = "/root/testdata/sf0.001"
-    rels = {
-        "wikibooks": out_ops.wikibooks_output(spark, sf),
-        "tokens": out_ops.tokens_output(spark, sf),
-        "token_vector": out_ops.token_vector_output(spark, sf),
-    }
-    for name, df in rels.items():
-        (key,) = COLLECTION_KEYS[name]
-        base = str(tmp_path / name)
-        full = df.limit(20).cache()
-        write_collection(full, base, fmt="json")
+    try:
+        rels = {
+            "wikibooks": out_ops.wikibooks_output(spark, SF_DIR),
+            "tokens": out_ops.tokens_output(spark, SF_DIR),
+            "token_vector": out_ops.token_vector_output(spark, SF_DIR),
+        }
+        for name, df in rels.items():
+            (key,) = COLLECTION_KEYS[name]
+            base = str(tmp_path / name)
+            full = df.limit(20).cache()
+            write_collection(full, base, fmt="json")
 
-        rows = full.collect()
-        assert len(rows) > 1, name
-        schema = full.schema
-        update = spark.createDataFrame([rows[0]], schema)
-        insert = spark.createDataFrame([rows[1]], schema).withColumn(
-            key, F.col(key) + 1_000_000
-        )
-        delta = update.unionByName(insert)
-        snap = upsert_collection(spark, base, delta, [key], fmt="json")
+            rows = full.collect()
+            assert len(rows) > 1, name
+            schema = full.schema
+            update = spark.createDataFrame([rows[0]], schema)
+            insert = spark.createDataFrame([rows[1]], schema).withColumn(
+                key, F.col(key) + 1_000_000
+            )
+            delta = update.unionByName(insert)
+            snap = upsert_collection(spark, base, delta, [key], fmt="json")
 
-        got = spark.read.format("json").schema(schema).load(snap)
-        assert got.count() == len(rows) + 1, name
-        # the updated key appears exactly once; the insert landed
-        assert got.filter(F.col(key) == rows[0][key]).count() == 1, name
-        assert got.filter(F.col(key) == rows[1][key] + 1_000_000).count() == 1, name
-        # base untouched (write-audit-swap)
-        assert (
-            spark.read.format("json").schema(schema).load(base).count() == len(rows)
-        ), name
-        full.unpersist()
+            got = spark.read.format("json").schema(schema).load(snap)
+            assert got.count() == len(rows) + 1, name
+            # the updated key appears exactly once; the insert landed
+            assert got.filter(F.col(key) == rows[0][key]).count() == 1, name
+            assert got.filter(F.col(key) == rows[1][key] + 1_000_000).count() == 1, name
+            # base untouched (write-audit-swap)
+            assert (
+                spark.read.format("json").schema(schema).load(base).count() == len(rows)
+            ), name
+            full.unpersist()
+    finally:
+        release_caches()
 
 
 def test_merge_upsert_last_write_wins(spark, tmp_path):

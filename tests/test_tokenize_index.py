@@ -4,8 +4,12 @@ vocabulary ids, inverted index, sparse vectors, TF-IDF."""
 from __future__ import annotations
 
 import math
+import re
 
 from pyspark.sql import functions as F
+
+from capstone_etl_spark.functions.stopwords import STOPWORDS, stopwords_spark_sql_in_list
+from capstone_etl_spark.functions.text import tokenize
 
 from capstone_etl_spark.operators.index import (
     inverted_index,
@@ -13,7 +17,7 @@ from capstone_etl_spark.operators.index import (
     tf_idf,
     tf_with_token_ids,
 )
-from capstone_etl_spark.operators.tokenize import doc_stats, term_frequencies
+from capstone_etl_spark.operators.tokenize import doc_stats, doc_tokens, term_frequencies
 from capstone_etl_spark.operators.vocab import vocabulary, with_dense_ids
 
 DOCS = [
@@ -91,3 +95,27 @@ def test_broadcast_join_in_sparse_vector_plan(spark):
     tf = _tf(spark)
     plan = tf_with_token_ids(tf, vocabulary(tf))._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
+
+
+def _optimized(df) -> str:
+    """Optimized logical plan with attribute ids normalized."""
+    return re.sub(r"#\d+L?", "#", df._jdf.queryExecution().optimizedPlan().toString())
+
+
+def test_stopword_gate_matches_isin(spark):
+    """doc_tokens' one-expression NOT IN gate equals the `~isin` form:
+    same rows on a list with a quote, a backslash, the empty string and
+    a live token, and the same optimized plan on the default list. The
+    Spark SQL renderer round-trips every word through the parser."""
+    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
+    custom = ("it's", "a\\b", "", "the")
+    got = spark.sql(f"SELECT array({stopwords_spark_sql_in_list(custom)}) AS w").first().w
+    assert tuple(got) == custom
+    for words in (custom, STOPWORDS):
+        gated = doc_tokens(docs, stopwords=words)
+        isin = docs.select(
+            F.col("doc_id"), F.explode(tokenize("text")).alias("token")
+        ).filter(~F.col("token").isin(list(words)))
+        assert sorted(gated.collect()) == sorted(isin.collect())
+        assert _optimized(gated) == _optimized(isin)
+    assert "the" not in {r.token for r in doc_tokens(docs, stopwords=custom).collect()}
