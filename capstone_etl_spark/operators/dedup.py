@@ -1443,23 +1443,33 @@ def template_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     128-bit) plus the ≤ 4·TEMPLATE_SHAPE_TOKENS-char shape string —
     shuffle rows never carry document bodies. One shuffle total, no
     joins, no windows, no Python."""
-    docs = _docs(spark, sf_dir)
+    return template_release(template_census(_docs(spark, sf_dir)))
+
+
+def template_census(docs: DataFrame) -> DataFrame:
+    """Per-shape doc count, source set and min doc id. COUNT(DISTINCT)
+    is not a streaming aggregate, so the source set is a collect_set
+    (bounded by |sources|) — stream_template_extraction keeps this as
+    complete-mode state."""
     return (
         docs.select("doc_id", "source", template_shape("text").alias("template_shape"))
         .groupBy("template_shape")
         .agg(
             F.count("*").alias("n_docs"),
-            F.countDistinct("source").alias("n_sources"),
+            F.collect_set("source").alias("srcs"),
             F.min("doc_id").alias("example_doc_id"),
         )
-        .filter(F.col("n_docs") >= TEMPLATE_MIN_DOCS)
-        .select(
-            F.md5("template_shape").alias("template_hash"),
-            "n_docs",
-            "n_sources",
-            "example_doc_id",
-            "template_shape",
-        )
+    )
+
+
+def template_release(census: DataFrame) -> DataFrame:
+    """The templates shared by at least TEMPLATE_MIN_DOCS documents."""
+    return census.filter(F.col("n_docs") >= TEMPLATE_MIN_DOCS).select(
+        F.md5("template_shape").alias("template_hash"),
+        "n_docs",
+        F.size("srcs").cast("long").alias("n_sources"),
+        "example_doc_id",
+        "template_shape",
     )
 
 

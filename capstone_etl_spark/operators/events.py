@@ -28,7 +28,7 @@ from capstone_etl_spark.functions.hashing import md5_hash60, md5_hash60_sql
 from capstone_etl_spark.functions.windows import bounded_window_key
 from capstone_etl_spark.operators.vocab import with_dense_ids
 from capstone_etl_spark.sources.tables import load_table
-from capstone_etl_spark.session import cached
+from capstone_etl_spark.session import cached, cached_batch
 
 SESSION_GAP_SEC = 30 * 60
 
@@ -1306,9 +1306,11 @@ CDC_DELETE_TYPE = "error"
 
 def changelog_state(ev: DataFrame) -> DataFrame:
     """The shared CDC aggregation over a raw events relation (batch
-    table or watermarked stream): per-user max(struct) last-writer
-    state + change counters — every aggregate is associative, so
-    per-shard/per-micro-batch partials merge exactly."""
+    table or stream): per-user max(struct) last-writer state + change
+    counters — every aggregate is associative, so per-shard/per-
+    micro-batch partials merge exactly (stream_changelog_apply keeps
+    it as complete-mode state; complete mode never evicts, so it takes
+    no watermark)."""
     ev = ev.select(
         "user_id",
         F.col("ts").cast("long").alias("ts_sec"),
@@ -2690,23 +2692,25 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     (rank·B) div n with the count entering as a 1-row broadcast, and
     three user-keyed equi-joins reassemble the row. Exact int ranks;
     ties broken by user_id."""
-    ev = _events(spark, sf_dir)
-    sec = F.col("ts").cast("long")
-    users = cached(
+    return rfm_release(rfm_users(_events(spark, sf_dir)))
+
+
+def rfm_users(ev: DataFrame) -> DataFrame:
+    """(user_id, last_sec, n_events, monetary) — max / count / exact
+    decimal sum merge order-free, so stream_rfm_segments keeps one
+    bounded row per user as state. Cached on the batch side: the
+    release reads it five times (three rankings, base row, totals)."""
+    return cached_batch(
         ev.groupBy("user_id").agg(
-            F.max(sec).alias("last_sec"),
+            F.max(F.col("ts").cast("long")).alias("last_sec"),
             F.count("*").cast("long").alias("n_events"),
             _dsum(F.col("value")).alias("monetary"),
         )
     )
-    return rfm_release(users)
 
 
 def rfm_release(users: DataFrame) -> DataFrame:
-    """The RFM scoring tail over a (user_id, last_sec, n_events,
-    monetary) relation — shared by the batch query above and
-    stream_rfm_segments (whose per-user state merges order-free:
-    max / count / decimal-sum)."""
+    """The RFM scoring tail over the per-user relation."""
     mx = users.agg(F.max("last_sec").alias("mx"))
     base = users.crossJoin(F.broadcast(mx)).select(
         "user_id",

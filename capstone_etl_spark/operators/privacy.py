@@ -73,7 +73,13 @@ def pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     — each class counted independently on the RAW text (scan counts
     answer "how much is out there", not "what would the sequential
     redactor mask"; the stepwise numbers live in pii_redaction)."""
-    docs = load_table(spark, sf_dir, "documents")
+    return pii_counts(load_table(spark, sf_dir, "documents"))
+
+
+def pii_counts(docs: DataFrame) -> DataFrame:
+    """Per-row regexp counts summed per source — additive, so
+    stream_pii_scan keeps them as |sources| × 6 integers of
+    complete-mode state."""
     t = F.col("text")
     per_doc = docs.select(
         "source",
@@ -446,7 +452,8 @@ _DP_GRID = 1_000_000
 def dp_release(counts: DataFrame) -> DataFrame:
     """(source, n_docs) → the released table. The mechanism tail shared
     by the batch histogram and stream_dp_histogram so the two releases
-    cannot drift: same salted draw, same clamp."""
+    cannot drift: same salted draw, same clamp (the noise is a
+    deterministic function of (salt, source))."""
     u = (
         md5_hash60(F.concat(F.lit(DP_SALT), F.col("source"))) % _DP_GRID
     ).cast("double") / F.lit(float(_DP_GRID)) + F.lit(0.5 / _DP_GRID)
@@ -477,8 +484,12 @@ def dp_source_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     transform is per-row arithmetic on the aggregated relation — the
     whole release costs exactly one corpus-wide count shuffle at any
     scale."""
-    docs = load_table(spark, sf_dir, "documents")
-    return dp_release(docs.groupBy("source").agg(F.count("*").alias("n_docs")))
+    return dp_release(dp_counts(load_table(spark, sf_dir, "documents")))
+
+
+def dp_counts(docs: DataFrame) -> DataFrame:
+    """(source, n_docs) exact counts — |sources|-bounded stream state."""
+    return docs.groupBy("source").agg(F.count("*").alias("n_docs"))
 
 
 _DP_HASH_SQL = md5_hash60_sql(f"'{DP_SALT}' || source")

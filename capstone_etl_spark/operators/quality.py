@@ -97,10 +97,12 @@ def quality_filter_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def funnel_agg(flags: DataFrame) -> DataFrame:
-    """The funnel as ONE conditional aggregation (1-row result) —
-    stateless column math + a global agg, so the same expression runs
-    on a batch frame or a streaming frame (complete mode)."""
+def funnel_counts(docs: DataFrame) -> DataFrame:
+    """The funnel as ONE conditional aggregation (1-row result) over
+    raw documents — stateless column math + a global agg, so the same
+    expression runs on a batch frame or a streaming frame (complete
+    mode; stream_quality_funnel's state is this one row)."""
+    flags = _rule_flags(docs)
     aggs = [F.count("*").alias("n_total")]
     surv = F.lit(True)
     for rule in RULES:
@@ -133,7 +135,7 @@ def quality_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stage-by-stage audit of the rule stack: for each rule, documents
     entering that stage, rejected BY that stage (first-fail semantics),
     and surviving — one conditional aggregation + the inline unpack."""
-    return funnel_unpack(funnel_agg(_rule_flags(load_table(spark, sf_dir, "documents"))))
+    return funnel_unpack(funnel_counts(load_table(spark, sf_dir, "documents")))
 
 
 def unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1217,10 +1219,15 @@ def group_dro_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-source loss rounds to 6 dp BEFORE exp (both engines
     exponentiate identical doubles), each exp snaps to decimal before
     the softmax denominator sum, one final 6-dp round."""
-    docs = load_table(spark, sf_dir, "documents")
+    return dro_release(dro_tf(load_table(spark, sf_dir, "documents")))
+
+
+def dro_tf(docs: DataFrame) -> DataFrame:
+    """(source, token, cnt) term frequencies — additive cells, so
+    stream_group_dro keeps them as complete-mode state (the
+    Heaps-bounded vocabulary × |sources|)."""
     tok = docs.select("source", F.explode(tokenize("text")).alias("token"))
-    tf = cached(tok.groupBy("source", "token").agg(F.count("*").alias("cnt")))
-    return dro_release(tf)
+    return tok.groupBy("source", "token").agg(F.count("*").alias("cnt"))
 
 
 def dro_release(tf: DataFrame) -> DataFrame:
@@ -1307,26 +1314,28 @@ def pareto_frontier_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     DISTINCT length domain (bounded by max doc length, not N) under
     the explicit bounded_window_key. Exact ints end to end; ties on
     both dimensions all survive (neither strictly dominates)."""
-    from capstone_etl_spark.functions.windows import bounded_window_key
-
-    toks = _pareto_toks(spark, sf_dir)
-    per_x = toks.groupBy("n_chars").agg(F.max("ndt").alias("mx"))
-    return pareto_release(toks, per_x)
+    docs = load_table(spark, sf_dir, "documents")
+    return pareto_release(pareto_maxima(docs), docs)
 
 
-def _pareto_toks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents").select(
+def _pareto_toks(docs: DataFrame) -> DataFrame:
+    return docs.select(
         "doc_id",
         "n_chars",
         F.size(F.array_distinct(tokenize("text"))).cast("long").alias("ndt"),
     )
 
 
-def pareto_release(toks: DataFrame, per_x: DataFrame) -> DataFrame:
-    """The skyline tail over the doc relation and a (n_chars, mx)
-    per-length maxima relation — shared by the batch query above and
-    stream_pareto_frontier (whose per-length maxima merge order-free
-    as MAX state)."""
+def pareto_maxima(docs: DataFrame) -> DataFrame:
+    """(n_chars, mx) per-length best richness — MAX merges order-free,
+    so stream_pareto_frontier keeps it as state bounded by the length
+    domain."""
+    return _pareto_toks(docs).groupBy("n_chars").agg(F.max("ndt").alias("mx"))
+
+
+def pareto_release(per_x: DataFrame, docs: DataFrame) -> DataFrame:
+    """The skyline tail: the per-length maxima against the doc
+    relation."""
     from capstone_etl_spark.functions.windows import bounded_window_key
 
     wc = (
@@ -1340,7 +1349,7 @@ def pareto_release(toks: DataFrame, per_x: DataFrame) -> DataFrame:
         F.coalesce(F.max("mx").over(wc), F.lit(-1)).alias("cmx"),
     )
     return (
-        toks.join(grid, "n_chars")
+        _pareto_toks(docs).join(grid, "n_chars")
         .filter((F.col("ndt") == F.col("mx")) & (F.col("ndt") > F.col("cmx")))
         .select("doc_id", "n_chars", F.col("ndt").alias("n_distinct_tokens"))
     )

@@ -189,16 +189,12 @@ def ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     as ann_ivf_topk (the seeds travel as one broadcast array), then
     groupBy(cell).count() and a 1-row corpus total broadcast back for
     the share/cap columns. The output is ≈√N rows."""
-    from capstone_etl_spark.operators.similarity import quantize_fp, quantizer_seeds
+    from capstone_etl_spark.operators.similarity import _d2_fold, quantize_fp, quantizer_seeds
 
     emb = load_table(spark, sf_dir, "embeddings")
     emb_q = emb.select("vec_id", quantize_fp().alias("vq"))
     seeds = quantizer_seeds(emb_q)
-    d2_col = F.aggregate(
-        F.zip_with("vq", "sq", lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    d2_col = _d2_fold("vq", "sq")
     assign = (
         emb_q.join(F.broadcast(seeds), F.lit(True))
         .select("vec_id", "cell", d2_col.alias("d2"))

@@ -749,11 +749,7 @@ def _ivf_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     quant = quantize_fp()
     emb_q = emb.select("vec_id", quant.alias("vq"))
     seeds = quantizer_seeds(emb_q)
-    d2_col = F.aggregate(
-        F.zip_with("vq", "sq", lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    d2_col = _d2_fold("vq", "sq")
     # (vector, seed) exact integer distances — feeds BOTH the assignment
     # argmin and the query probe ranking below
     vec_seed_d2 = emb_q.join(F.broadcast(seeds), F.lit(True)).select(
@@ -885,7 +881,7 @@ SELECT query_id, neighbor_id, sim FROM scored WHERE sim >= {ANN_RADIUS_SIM}
 BRANCH_PROBES = 2
 
 
-def _d2_fold(a: str, b) -> F.Column:
+def _d2_fold(a, b) -> F.Column:
     """Exact integer squared distance between two quantized arrays."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
@@ -1261,11 +1257,7 @@ def hivf_cell_medoids(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vq").alias("vqb"),
         )
     )
-    d2_pair = F.aggregate(
-        F.zip_with("vq", "vqb", lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    d2_pair = _d2_fold("vq", "vqb")
     tot = (
         assign.join(cands, F.col("cell") == F.col("cellc"))
         .select("cell", "vb", d2_pair.alias("d2"))
@@ -1569,11 +1561,7 @@ def ivf_probe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     quant = quantize_fp()
     emb_q = emb.select("vec_id", quant.alias("vq"))
     seeds = quantizer_seeds(emb_q)
-    d2_col = F.aggregate(
-        F.zip_with("vq", "sq", lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    d2_col = _d2_fold("vq", "sq")
     vec_seed_d2 = emb_q.join(F.broadcast(seeds), F.lit(True)).select(
         "vec_id", "cell", d2_col.alias("d2")
     )
@@ -1773,11 +1761,7 @@ def _pq_subspace_dists(emb_q: DataFrame, seeds: DataFrame) -> DataFrame:
             F.array(*[F.slice("sq", m * PQ_SUBDIM + 1, PQ_SUBDIM) for m in range(PQ_M)])
         ).alias("m", "ssub"),
     )
-    d2 = F.aggregate(
-        F.zip_with("sub", "ssub", lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    d2 = _d2_fold("sub", "ssub")
     return vec_sub.join(F.broadcast(seed_sub), "m").select(
         "vec_id", "m", "cell", d2.alias("d2")
     )
@@ -1964,14 +1948,8 @@ def _pq_hier_codes(emb_q: DataFrame) -> DataFrame:
             F.transform(
                 "bs",
                 lambda b: F.struct(
-                    F.aggregate(
-                        F.zip_with(
-                            vec_col,
-                            F.slice(b["bq"], F.col("m") * PQ_SUBDIM + 1, PQ_SUBDIM),
-                            lambda x, y: (x - y) * (x - y),
-                        ),
-                        F.lit(0).cast("long"),
-                        lambda acc, x: acc + x,
+                    _d2_fold(
+                        vec_col, F.slice(b["bq"], F.col("m") * PQ_SUBDIM + 1, PQ_SUBDIM)
                     ).alias("bd2"),
                     b["branch"].alias("branch"),
                 ),
@@ -2011,11 +1989,7 @@ def _pq_hier_codes(emb_q: DataFrame) -> DataFrame:
             F.transform(
                 "cells",
                 lambda s: F.struct(
-                    F.aggregate(
-                        F.zip_with("sub", s["ssub"], lambda x, y: (x - y) * (x - y)),
-                        F.lit(0).cast("long"),
-                        lambda acc, x: acc + x,
-                    ).alias("d2"),
+                    _d2_fold("sub", s["ssub"]).alias("d2"),
                     s["cell"].alias("cell"),
                 ),
             )
@@ -2790,11 +2764,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     quant = quantize_fp()
     emb_q = emb.select("vec_id", quant.alias("vq"))
     seeds = quantizer_seeds(emb_q)
-    d2_col = F.aggregate(
-        F.zip_with("vq", "sq", lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    d2_col = _d2_fold("vq", "sq")
     assign = (
         emb_q.join(F.broadcast(seeds), F.lit(True))
         .select("vec_id", "cell", d2_col.alias("d2"))
@@ -3748,11 +3718,7 @@ def ivf_cell_medoids(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     emb_q = emb.select("vec_id", quantize_fp().alias("vq"))
     seeds = quantizer_seeds(emb_q)
-    d2_seed = F.aggregate(
-        F.zip_with("vq", "sq", lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    d2_seed = _d2_fold("vq", "sq")
     assign = cached(
         emb_q.join(F.broadcast(seeds), F.lit(True))
         .select("vec_id", "vq", "cell", d2_seed.alias("d2"))
@@ -3760,11 +3726,7 @@ def ivf_cell_medoids(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min(F.struct("d2", "cell", "vq")).alias("m"))
         .select("vec_id", F.col("m.cell").alias("cell"), F.col("m.vq").alias("vq"))
     )
-    d2_pair = F.aggregate(
-        F.zip_with("vqa", "vqb", lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    d2_pair = _d2_fold("vqa", "vqb")
     tot = (
         assign.select("cell", F.col("vec_id").alias("va"), F.col("vq").alias("vqa"))
         .join(

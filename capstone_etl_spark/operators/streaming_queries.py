@@ -11,22 +11,40 @@ across batches), and the temp dir is removed in `finally`. A query
 supplies only `transform(stream, staged)`, its static legs (built from
 sf_dir before the drain) and its batch tail over the returned memory
 sink table. The replay watermark is measured from `staged` only by
-the six queries whose operators use one (`_horizon_watermark`).
+the five queries whose operators use one (`_horizon_watermark`).
 
-A stream query whose drained output must equal a batch query's is
-checked against that batch oracle: `BATCH_TWIN` maps it to the batch
-query by name. `ORACLE_SQL` holds only the stream queries with an
-oracle of their own.
+A batch-equivalent stream query whose state is a mergeable aggregate
+is a `Twin` spec, not a hand-written function: (stream name, batch
+name, table, accumulate, release, output_mode). `accumulate` is written
+once and runs on the batch frame and on the file stream alike; the
+batch query in its own module is `release(accumulate(load_table(...)))`
+and the stream query is generated from the spec as
+`release(drain_staged(..., accumulate))`, its drained snapshot's plan
+cut (lazily) so the release may read it more than once. A twin stays
+hand-written when its stream form needs more than the drain: static
+index legs, a deploy-time literal from `staged`, a watermark, or state
+that is not the batch accumulation.
+
+Every stream twin is checked against its batch oracle: `BATCH_TWIN`
+(derived from the specs plus the hand-written twins) maps it to the
+batch query by name. `ORACLE_SQL` holds only the stream queries with
+an oracle of their own.
 """
 
 from __future__ import annotations
 
 import math
+from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from capstone_etl_spark.functions.text import tokenize_sql
+from capstone_etl_spark.operators import dedup, events, privacy, quality, textstats
+from capstone_etl_spark.operators.similarity import _d2_fold
+from capstone_etl_spark.session import cached, checkpoint_truncate
+from capstone_etl_spark.sources import tables
 from capstone_etl_spark.streaming import (
     drain_staged,
     stream_click_purchase_join,
@@ -54,8 +72,6 @@ def _stream_static(df: DataFrame) -> DataFrame:
     stream_training_manifest: 1211 -> 808 tasks and -6 MB shuffle write
     after switching to truncation, output hash identical). The blocks
     are tracked and freed by release_caches() like every cache."""
-    from capstone_etl_spark.session import checkpoint_truncate
-
     return checkpoint_truncate(df)
 
 
@@ -266,24 +282,6 @@ SELECT COALESCE(tier, 'unknown') AS tier, event_type,
 FROM events LEFT JOIN tiers USING (user_id)
 GROUP BY COALESCE(tier, 'unknown'), event_type
 """
-
-
-def stream_quality_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Gopher quality gate as a STREAMING job — batch/stream
-    unification for the document side: the identical rule stack
-    (quality.py `_rule_flags`, pure per-row expressions) and the
-    identical one-row conditional aggregation run over a documents
-    file stream in complete mode (no event time → no watermark), and
-    the funnel rows are unpacked from the memory sink's final row in
-    batch. Same oracle as the batch funnel — the streaming engine must
-    reproduce it exactly. This is the ingest-gate deployment shape: new
-    corpus shards stream in, the funnel audit updates per micro-batch."""
-    from capstone_etl_spark.operators.quality import _rule_flags, funnel_agg, funnel_unpack
-
-    one = drain_staged(
-        spark, sf_dir, "documents", lambda s, staged: funnel_agg(_rule_flags(s)), "complete"
-    )
-    return funnel_unpack(one)
 
 
 def stream_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -581,87 +579,6 @@ def stream_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def stream_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PII compliance dashboard kept current over a live document
-    stream: the per-class regexp counts are per-row map work on each
-    micro-batch and the per-source sums are additive, so the streaming
-    aggregation state is |sources| × 6 integers — bounded forever —
-    and the drained snapshot equals the batch `pii_scan` EXACTLY
-    (shared oracle). Complete-mode agg, no event time → no watermark;
-    this is the scrub-audit a 100 TB ingest runs while shards land,
-    before anything downstream touches the text."""
-    from capstone_etl_spark.operators.privacy import (
-        PII_EMAIL,
-        PII_ID,
-        PII_IPV4,
-        PII_PHONE,
-        _count,
-    )
-
-    def transform(stream, staged):
-        t = F.col("text")
-        per_doc = stream.select(
-            "source",
-            _count(t, PII_EMAIL).alias("e"),
-            _count(t, PII_IPV4).alias("i"),
-            _count(t, PII_PHONE).alias("p"),
-            _count(t, PII_ID).alias("d"),
-        )
-        return per_doc.groupBy("source").agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.sum(
-                ((F.col("e") + F.col("i") + F.col("p") + F.col("d")) > 0).cast("long")
-            ).cast("long").alias("docs_with_pii"),
-            F.sum("e").cast("long").alias("emails"),
-            F.sum("i").cast("long").alias("ipv4s"),
-            F.sum("p").cast("long").alias("phones"),
-            F.sum("d").cast("long").alias("idnums"),
-        )
-
-    return drain_staged(spark, sf_dir, "documents", transform, "complete")
-
-
-def stream_template_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Structural template mining AT INGEST — batch/stream unification
-    for dedup.template_extraction: the identical per-row skeleton
-    expression (dedup.template_shape) feeds a complete-mode streaming
-    aggregation, so the template census updates per micro-batch as new
-    corpus shards land. COUNT(DISTINCT) is not a supported streaming
-    aggregate, so the per-template source set streams as collect_set
-    (bounded by |sources|) and collapses to n_sources in the final
-    batch projection — the drained result must equal the batch miner
-    row-for-row (same oracle)."""
-    from capstone_etl_spark.operators.dedup import (
-        TEMPLATE_MIN_DOCS,
-        template_shape,
-    )
-
-    def transform(stream, staged):
-        return (
-            stream.select(
-                "doc_id", "source", template_shape("text").alias("template_shape")
-            )
-            .groupBy("template_shape")
-            .agg(
-                F.count("*").alias("n_docs"),
-                F.collect_set("source").alias("srcs"),
-                F.min("doc_id").alias("example_doc_id"),
-            )
-        )
-
-    snap = drain_staged(spark, sf_dir, "documents", transform, "complete")
-    return (
-        snap.filter(F.col("n_docs") >= TEMPLATE_MIN_DOCS)
-        .select(
-            F.md5("template_shape").alias("template_hash"),
-            "n_docs",
-            F.size("srcs").cast("long").alias("n_sources"),
-            "example_doc_id",
-            "template_shape",
-        )
-    )
-
-
 def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup ADMISSION at INGEST — dedup.dedup_incremental's
     delta-vs-base verdicts as a stream, the shape a 100 TB pipeline
@@ -779,11 +696,7 @@ def stream_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     quant = quantize_fp()
     emb_q = emb.select("vec_id", quant.alias("vq"))
     seeds = quantizer_seeds(emb_q)
-    d2_col = F.aggregate(
-        F.zip_with("vq", "sq", lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    d2_col = _d2_fold("vq", "sq")
     assign = _stream_static(
         emb_q.join(F.broadcast(seeds), F.lit(True))
         .select("vec_id", "cell", d2_col.alias("d2"))
@@ -811,11 +724,7 @@ def stream_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.transform(
                 "seeds",
                 lambda s: F.struct(
-                    F.aggregate(
-                        F.zip_with("vq", s["sq"], lambda x, y: (x - y) * (x - y)),
-                        F.lit(0).cast("long"),
-                        lambda acc, x: acc + x,
-                    ).alias("d2"),
+                    _d2_fold("vq", s["sq"]).alias("d2"),
                     s["cell"].alias("cell"),
                 ),
             )
@@ -878,7 +787,6 @@ def stream_ann_hivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         IVF_PROBES_MIN,
         N_QUERIES,
         TOP_K,
-        _d2_fold,
         hier_assign,
         hier_branch_cells_row,
         hier_route_expr,
@@ -986,7 +894,6 @@ def stream_ann_hivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         PQ_M,
         PQ_SUBDIM,
         TOP_K,
-        _d2_fold,
         _pq_hier_codes,
         hier_assign,
         hier_branch_cells_row,
@@ -1066,11 +973,7 @@ def stream_ann_hivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "query_id",
                 "neighbor_id",
                 "m",
-                F.aggregate(
-                    F.zip_with(qsub, F.col("ssub"), lambda x, y: (x - y) * (x - y)),
-                    F.lit(0).cast("long"),
-                    lambda acc, x: acc + x,
-                ).alias("qd2"),
+                _d2_fold(qsub, F.col("ssub")).alias("qd2"),
             )
         )
 
@@ -1116,7 +1019,6 @@ def stream_bitext_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         hier_route_expr,
         quantize_fp,
     )
-    from capstone_etl_spark.session import checkpoint_truncate
     from capstone_etl_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1299,32 +1201,6 @@ def stream_hivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _cell_balance_tail(snap)
 
 
-def stream_changelog_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CDC apply AT INGEST — the streaming form of
-    events.changelog_apply, built from the SAME changelog_state /
-    changelog_snapshot pair so the two forms cannot drift: change
-    records arrive as a stream, the per-key last-writer-wins state is
-    ONE max(struct) + two counters per user evolved across
-    micro-batches (every aggregate is associative, so the
-    complete-mode state merges per batch exactly like per-shard
-    partial argmaxes would at 100 TB), and the drained snapshot —
-    tombstones filtered in the shared final projection — must equal
-    the batch apply row-for-row (same oracle; also pinned
-    Spark-vs-Spark in tests)."""
-    from capstone_etl_spark.operators.events import changelog_snapshot, changelog_state
-
-    snap = drain_staged(
-        spark,
-        sf_dir,
-        "events",
-        lambda s, staged: changelog_state(
-            s.withWatermark("ts", _horizon_watermark(staged))
-        ),
-        "complete",
-    )
-    return changelog_snapshot(snap)
-
-
 def stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INDEX MAINTENANCE at ingest — the corpus-side twin of
     stream_ann_topk (which streams the QUERY side against a static
@@ -1361,11 +1237,7 @@ def stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         d2_structs = F.transform(
             F.col("seedlist"),
             lambda s: F.struct(
-                F.aggregate(
-                    F.zip_with(F.col("vq"), s["sq"], lambda x, y: (x - y) * (x - y)),
-                    F.lit(0).cast("long"),
-                    lambda acc, x: acc + x,
-                ).alias("d2"),
+                _d2_fold(F.col("vq"), s["sq"]).alias("d2"),
                 s["cell"].alias("cell"),
             ),
         )
@@ -1577,122 +1449,6 @@ WHERE c.cum_prev < g.target AND g.target <= c.cum
 """
 
 
-def stream_group_dro(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Group-DRO mixing weights kept current DURING ingest: the
-    (source, token) term-frequency cells accumulate in a complete-mode
-    streaming aggregation — state is the Heaps-bounded vocabulary ×
-    |sources|, merged by addition, so arriving shards only touch their
-    own cells — and the shared loss/softmax tail (quality.dro_release)
-    runs on the drained snapshot: every micro-batch could re-weight
-    the mixer without rescanning landed text. Oracle: the batch DRO
-    SQL verbatim (the drained snapshot equals the batch TF relation
-    exactly)."""
-    from capstone_etl_spark.functions.text import tokenize
-    from capstone_etl_spark.operators.quality import dro_release
-
-    def transform(stream, staged):
-        return stream.select(
-            "source", F.explode(tokenize("text")).alias("token")
-        ).groupBy("source", "token").agg(F.count("*").alias("cnt"))
-
-    snap = drain_staged(spark, sf_dir, "documents", transform, "complete")
-    return dro_release(snap)
-
-
-def stream_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The two-sample KS length-drift audit kept current DURING
-    ingest: (source, n_chars) cell counts accumulate in a complete-mode
-    streaming aggregation — state is bounded by |sources| × the
-    distinct length domain (max doc length, not N), merged by addition
-    — and the shared ECDF/max tail (textstats.ks_release) runs on the
-    drained snapshot, so every micro-batch could re-publish the drift
-    table without rescanning landed shards. Oracle: the batch KS SQL
-    verbatim (the drained snapshot equals the batch count relation
-    exactly)."""
-    from capstone_etl_spark.operators.textstats import ks_release
-    from capstone_etl_spark.session import checkpoint_truncate
-
-    def transform(stream, staged):
-        return stream.groupBy(
-            "source", F.col("n_chars").alias("len")
-        ).agg(F.count("*").alias("cs"))
-
-    snap = drain_staged(spark, sf_dir, "documents", transform, "complete")
-    # the KS tail references the count relation three times (grid
-    # spine, per-length totals, per-source totals); a memory-sink
-    # table self-joined that way carries conflicting references —
-    # truncate to a plain (bounded, release-tracked) scan first
-    return ks_release(checkpoint_truncate(snap))
-
-
-def stream_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The RFM segmentation kept current DURING ingest: per-user
-    (last-seen, event-count, decimal spend) state accumulates in a
-    complete-mode streaming aggregation — one bounded row per user,
-    merged order-free (max / count / exact decimal sum, so replay
-    order can't move a score) — and the shared ranking tail
-    (events.rfm_release: three with_dense_ids global rankings) runs on
-    the drained snapshot. Oracle: the batch RFM SQL verbatim (the
-    drained snapshot equals the batch user relation exactly).
-
-    The snapshot passes through checkpoint_truncate: the tail
-    references the user relation five times (three rankings + the
-    base row + totals), and a memory-sink table self-joined that way
-    carries conflicting references."""
-    from capstone_etl_spark.operators.events import rfm_release
-    from capstone_etl_spark.session import checkpoint_truncate
-
-    def transform(stream, staged):
-        return stream.groupBy("user_id").agg(
-            F.max(F.col("ts").cast("long")).alias("last_sec"),
-            F.count("*").cast("long").alias("n_events"),
-            # matches the batch _dsum shape exactly: exact decimal sum
-            # (order-free across micro-batches), ONE cast to double
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias(
-                "monetary"
-            ),
-        )
-
-    snap = drain_staged(spark, sf_dir, "events", transform, "complete")
-    return rfm_release(checkpoint_truncate(snap))
-
-
-def stream_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Naive Bayes provenance classifier TRAINED at ingest: the
-    train-split (token, source) likelihood cells accumulate in a
-    complete-mode streaming aggregation — state is the train
-    vocabulary × |sources|, Heaps-bounded, merged by addition, and the
-    salted-hash split is computed per row at ingest so arrival order
-    is irrelevant — then the shared scoring tail
-    (textstats.nb_release) evaluates the drained model on the static
-    held-out docs. Every micro-batch could re-ship a fresh classifier
-    without rescanning landed text. Oracle: the batch NB SQL verbatim
-    (the drained model equals the batch one exactly).
-
-    The snapshot passes through checkpoint_truncate (the tail
-    references the cell relation three times: vocab, per-source
-    totals, the score join)."""
-    from capstone_etl_spark.functions.text import tokenize
-    from capstone_etl_spark.operators.sampling import split_column
-    from capstone_etl_spark.operators.textstats import nb_release
-    from capstone_etl_spark.session import checkpoint_truncate
-    from capstone_etl_spark.sources.tables import load_table
-
-    def transform(stream, staged):
-        return (
-            stream.filter(split_column(F.col("doc_id")) == "train")
-            .select("source", F.explode(tokenize("text")).alias("token"))
-            .groupBy("token", "source")
-            .agg(F.count("*").alias("c"))
-        )
-
-    snap = drain_staged(spark, sf_dir, "documents", transform, "complete")
-    docs = load_table(spark, sf_dir, "documents").withColumn(
-        "_is_train", split_column(F.col("doc_id")) == "train"
-    )
-    return nb_release(docs, checkpoint_truncate(snap))
-
-
 def stream_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CUPED experiment readout kept current DURING ingest: the
     pre/post midpoint is fixed at deploy time from the landed staging
@@ -1706,7 +1462,6 @@ def stream_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint_truncate first: the tail references the per-user
     relation twice (pooled moments + per-variant rollup)."""
     from capstone_etl_spark.operators.events import ab_variant_col, cuped_release
-    from capstone_etl_spark.session import checkpoint_truncate
 
     def transform(stream, staged):
         t_mid = staged.agg(
@@ -1730,33 +1485,6 @@ def stream_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     snap = drain_staged(spark, sf_dir, "events", transform, "complete")
     return cuped_release(checkpoint_truncate(snap))
-
-
-def stream_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The skyline kept current DURING ingest: per-length best
-    vocabulary richness accumulates as complete-mode MAX state —
-    bounded by the distinct length domain, merged order-free — and
-    the shared cumulative-max tail (quality.pareto_release) evaluates
-    the drained maxima against the static doc relation. Every
-    micro-batch could re-publish the frontier shortlist without
-    rescanning landed text. Oracle: the batch skyline SQL verbatim.
-
-    checkpoint_truncate first: the tail windows over and joins the
-    maxima relation, and memory-sink self-references conflict."""
-    from capstone_etl_spark.functions.text import tokenize
-    from capstone_etl_spark.operators.quality import _pareto_toks, pareto_release
-    from capstone_etl_spark.session import checkpoint_truncate
-
-    def transform(stream, staged):
-        return stream.select(
-            "n_chars",
-            F.size(F.array_distinct(tokenize("text"))).cast("long").alias("ndt"),
-        ).groupBy("n_chars").agg(F.max("ndt").alias("mx"))
-
-    snap = drain_staged(spark, sf_dir, "documents", transform, "complete")
-    return pareto_release(
-        _pareto_toks(spark, sf_dir), checkpoint_truncate(snap)
-    )
 
 
 def stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1826,7 +1554,6 @@ def stream_conversion_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
         KM_BUCKET_US,
         km_curve,
     )
-    from capstone_etl_spark.session import checkpoint_truncate
 
     def transform(stream, staged):
         ev = stream.select(
@@ -1885,25 +1612,6 @@ def stream_conversion_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cand").isNotNull().cast("long").alias("is_conv"),
     )
     return km_curve(per_user)
-
-
-def stream_dp_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ε-DP per-source release kept current DURING ingest: exact
-    counts accumulate in a complete-mode streaming aggregation
-    (|sources|-bounded state), and the Laplace mechanism — the same
-    salted-hash inverse-CDF draw as the batch release — applies to the
-    drained snapshot, so every micro-batch could publish a fresh
-    noisy histogram without ever re-scanning landed shards. Oracle:
-    the batch release SQL verbatim (the noise is a deterministic
-    function of (salt, source), so stream and batch releases agree
-    exactly)."""
-    from capstone_etl_spark.operators.privacy import dp_release
-
-    def transform(stream, staged):
-        return stream.groupBy("source").agg(F.count("*").alias("n_docs"))
-
-    snap = drain_staged(spark, sf_dir, "documents", transform, "complete")
-    return dp_release(snap)
 
 
 def stream_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1966,7 +1674,6 @@ def stream_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         shingle_df_cap,
     )
     from capstone_etl_spark.operators.sampling import split_column
-    from capstone_etl_spark.session import cached
     from capstone_etl_spark.sources.tables import load_table
 
     # static index legs go through checkpoint_truncate, not cached()
@@ -2159,7 +1866,6 @@ def stream_kll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     epochs merge by re-filter + union, never by resampling."""
     from capstone_etl_spark.functions.hashing import md5_hash60
     from capstone_etl_spark.operators.sketches import KLL_QS, _kll_stats
-    from capstone_etl_spark.session import cached
     from capstone_etl_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2200,8 +1906,6 @@ def stream_kll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # qcfg and samp_cum both descend from the drained sink — truncate
     # one side's lineage so the join carries no conflicting
     # references (the sink-self-join lesson, checkpoint_truncate)
-    from capstone_etl_spark.session import checkpoint_truncate
-
     qcfg = checkpoint_truncate(
         got.filter(F.col("kind") == "n")
         .groupBy("source")
@@ -2291,7 +1995,6 @@ def stream_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
     from capstone_etl_spark.operators.dedup import _is_delta
     from capstone_etl_spark.operators.similarity import (
         BRANCH_PROBES,
-        _d2_fold,
         _hier_cand_seed,
         hier_assign,
         hier_best_cell_expr,
@@ -2538,6 +2241,90 @@ def stream_coreset_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+class Twin(NamedTuple):
+    """A batch query and its stream twin, written once. `accumulate`
+    maps the input `table` to mergeable aggregate state and runs
+    unchanged on a batch frame or a file stream; `release(acc,
+    source)` turns that state into the answer, where `source()`
+    returns the input table for the releases that read it. The batch
+    query (a named function in its own module) is `release(
+    accumulate(load_table(table)), ...)`; the stream query is
+    generated: `release(drain_staged(table, accumulate), ...)`."""
+
+    stream: str
+    batch: str
+    table: str
+    accumulate: Callable[[DataFrame], DataFrame]
+    release: Callable[[DataFrame, Callable[[], DataFrame]], DataFrame]
+    output_mode: str
+
+
+def _twin_stream(twin: Twin) -> Callable[[SparkSession, str], DataFrame]:
+    def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+        drained = drain_staged(
+            spark, sf_dir, twin.table, lambda s, staged: twin.accumulate(s), twin.output_mode
+        )
+        # a release that reads the drained memory-sink table more than
+        # once would self-join it (conflicting references); the lazy
+        # truncation cuts the plan without a job of its own
+        return twin.release(
+            checkpoint_truncate(drained, eager=False),
+            lambda: tables.load_table(spark, sf_dir, twin.table),
+        )
+
+    query.__name__ = query.__qualname__ = twin.stream
+    query.__doc__ = (
+        f"`{twin.batch}` kept current during ingest: its accumulation is "
+        f"{twin.output_mode}-mode state over a `{twin.table}` file stream, "
+        "released from the drained snapshot (`Twin`)."
+    )
+    return query
+
+
+TWINS = (
+    Twin(
+        "stream_quality_funnel", "quality_filter_funnel", "documents",
+        quality.funnel_counts, lambda acc, docs: quality.funnel_unpack(acc), "complete",
+    ),
+    Twin(
+        "stream_pii_scan", "pii_scan", "documents",
+        privacy.pii_counts, lambda acc, docs: acc, "complete",
+    ),
+    Twin(
+        "stream_template_extraction", "template_extraction", "documents",
+        dedup.template_census, lambda acc, docs: dedup.template_release(acc), "complete",
+    ),
+    Twin(
+        "stream_changelog_apply", "event_changelog_apply", "events",
+        events.changelog_state, lambda acc, ev: events.changelog_snapshot(acc), "complete",
+    ),
+    Twin(
+        "stream_dp_histogram", "dp_source_histogram", "documents",
+        privacy.dp_counts, lambda acc, docs: privacy.dp_release(acc), "complete",
+    ),
+    Twin(
+        "stream_group_dro", "group_dro_weights", "documents",
+        quality.dro_tf, lambda acc, docs: quality.dro_release(acc), "complete",
+    ),
+    Twin(
+        "stream_ks_drift", "ks_source_drift", "documents",
+        textstats.ks_counts, lambda acc, docs: textstats.ks_release(acc), "complete",
+    ),
+    Twin(
+        "stream_rfm_segments", "rfm_segments", "events",
+        events.rfm_users, lambda acc, ev: events.rfm_release(acc), "complete",
+    ),
+    Twin(
+        "stream_naive_bayes", "naive_bayes_source_model", "documents",
+        textstats.nb_cells, lambda acc, docs: textstats.nb_release(acc, docs()), "complete",
+    ),
+    Twin(
+        "stream_pareto_frontier", "pareto_frontier_docs", "documents",
+        quality.pareto_maxima, lambda acc, docs: quality.pareto_release(acc, docs()),
+        "complete",
+    ),
+)
+
 QUERIES = {
     "stream_tumbling_windows": stream_tumbling_windows,
     "stream_sliding_windows": stream_sliding_windows,
@@ -2546,30 +2333,20 @@ QUERIES = {
     "stream_user_activity": stream_user_activity,
     "stream_click_attribution": stream_click_attribution,
     "stream_tier_rollup": stream_tier_rollup,
-    "stream_quality_funnel": stream_quality_funnel,
     "stream_kmv_sketch": stream_kmv_sketch,
     "stream_reservoir_sample": stream_reservoir_sample,
     "stream_mixing_weights": stream_mixing_weights,
     "stream_count_min": stream_count_min,
     "stream_decontamination": stream_decontamination,
-    "stream_pii_scan": stream_pii_scan,
-    "stream_template_extraction": stream_template_extraction,
     "stream_dedup_incremental": stream_dedup_incremental,
     "stream_ann_topk": stream_ann_topk,
-    "stream_changelog_apply": stream_changelog_apply,
     "stream_ivf_assign": stream_ivf_assign,
     "stream_hll_sketch": stream_hll_sketch,
     "stream_ab_test": stream_ab_test,
-    "stream_dp_histogram": stream_dp_histogram,
     "stream_conversion_survival": stream_conversion_survival,
     "stream_quantile_sketch": stream_quantile_sketch,
     "stream_psi_drift": stream_psi_drift,
-    "stream_group_dro": stream_group_dro,
-    "stream_ks_drift": stream_ks_drift,
-    "stream_rfm_segments": stream_rfm_segments,
-    "stream_naive_bayes": stream_naive_bayes,
     "stream_cuped": stream_cuped,
-    "stream_pareto_frontier": stream_pareto_frontier,
     "stream_training_manifest": stream_training_manifest,
     "stream_kll_sketch": stream_kll_sketch,
     "stream_ann_hivf_topk": stream_ann_hivf_topk,
@@ -2580,7 +2357,7 @@ QUERIES = {
     "stream_label_noise": stream_label_noise,
     "stream_embedding_shift": stream_embedding_shift,
     "stream_coreset_coverage": stream_coreset_coverage,
-}
+} | {t.stream: _twin_stream(t) for t in TWINS}
 
 ORACLE_SQL = {
     "stream_user_sessions": STREAM_USER_SESSIONS_SQL,
@@ -2593,31 +2370,23 @@ ORACLE_SQL = {
     "stream_quantile_sketch": _stream_quantile_sketch_sql(),
 }
 
-# stream query -> the batch query whose oracle it shares verbatim
-BATCH_TWIN: dict[str, str] = {
+# stream query -> the batch query whose oracle it shares verbatim: the
+# specs, plus the hand-written twins whose stream and batch forms
+# differ in more than the drain
+BATCH_TWIN: dict[str, str] = {t.stream: t.batch for t in TWINS} | {
     "stream_tumbling_windows": "event_tumbling_windows",
     "stream_sliding_windows": "event_sliding_windows",
     "stream_event_dedup": "event_dedup",
-    "stream_quality_funnel": "quality_filter_funnel",
     "stream_reservoir_sample": "reservoir_sample",
     "stream_decontamination": "decontamination",
-    "stream_pii_scan": "pii_scan",
-    "stream_template_extraction": "template_extraction",
     "stream_dedup_incremental": "dedup_incremental",
     "stream_ann_topk": "ann_ivf_topk",
-    "stream_changelog_apply": "event_changelog_apply",
     "stream_ivf_assign": "ivf_cell_balance",
     "stream_hll_sketch": "hll_distinct_sketch",
     "stream_ab_test": "ab_test_analysis",
-    "stream_dp_histogram": "dp_source_histogram",
     "stream_conversion_survival": "conversion_survival",
     "stream_psi_drift": "event_psi_drift",
-    "stream_group_dro": "group_dro_weights",
-    "stream_ks_drift": "ks_source_drift",
-    "stream_rfm_segments": "rfm_segments",
-    "stream_naive_bayes": "naive_bayes_source_model",
     "stream_cuped": "event_cuped_adjustment",
-    "stream_pareto_frontier": "pareto_frontier_docs",
     "stream_training_manifest": "training_manifest",
     "stream_kll_sketch": "kll_quantile_sketch",
     "stream_ann_hivf_topk": "ann_hivf_topk",

@@ -17,7 +17,7 @@ from capstone_etl_spark.functions.text import split_sql, token_ngrams, tokenize,
 from capstone_etl_spark.functions.windows import bounded_window_key
 from capstone_etl_spark.operators.vocab import with_dense_ids
 from capstone_etl_spark.sources.tables import load_table
-from capstone_etl_spark.session import cached, checkpoint_truncate
+from capstone_etl_spark.session import cached, cached_batch, checkpoint_truncate
 
 FP_BASE = 1_000_003  # rolling-hash base; acc·B + h stays < 2^52 (exact)
 
@@ -2539,27 +2539,32 @@ def naive_bayes_source_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     n·ln term snaps to DECIMAL(28,12) (split_perplexity_gap's
     convention) so scores are exact decimals and the argmax — ties
     broken by source name — is identical cross-engine."""
+    docs = _docs(spark, sf_dir)
+    return nb_release(nb_cells(docs), docs)
+
+
+def nb_cells(docs: DataFrame) -> DataFrame:
+    """(token, source, c) train-split likelihood cells — the split is a
+    per-row salted hash and cells merge by addition, so
+    stream_naive_bayes keeps them as state (train vocabulary ×
+    |sources|). Cached on the batch side: the release reads them four
+    times."""
     from capstone_etl_spark.operators.sampling import split_column
 
-    docs = _docs(spark, sf_dir).withColumn(
-        "_is_train", split_column(F.col("doc_id")) == "train"
-    )
-    tok = docs.select(
-        "doc_id", "source", "_is_train", F.explode(tokenize("text")).alias("token")
-    )
-    cst = cached(
-        tok.filter(F.col("_is_train"))
+    return cached_batch(
+        docs.filter(split_column(F.col("doc_id")) == "train")
+        .select("source", F.explode(tokenize("text")).alias("token"))
         .groupBy("token", "source")
         .agg(F.count("*").alias("c"))
     )
-    return nb_release(docs, cst)
 
 
-def nb_release(docs: DataFrame, cst: DataFrame) -> DataFrame:
-    """The NB scoring tail over a labeled doc relation (with
-    `_is_train`) and a (token, source, c) train-cell relation — shared
-    by the batch query above and stream_naive_bayes (whose cells merge
-    by addition during ingest)."""
+def nb_release(cst: DataFrame, docs: DataFrame) -> DataFrame:
+    """The NB scoring tail: the train cells evaluated on the held-out
+    documents."""
+    from capstone_etl_spark.operators.sampling import split_column
+
+    docs = docs.withColumn("_is_train", split_column(F.col("doc_id")) == "train")
     tok = docs.select(
         "doc_id", "source", "_is_train", F.explode(tokenize("text")).alias("token")
     )
@@ -2827,17 +2832,21 @@ def ks_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (absent lengths contribute 0 — no fill-forward needed). Exactness:
     D is maximized as the INTEGER |cum_s·m − cum_rest·n| (products
     ≤ N², inside int64 up to ~3e9 docs), divided once at the end."""
-    docs = _docs(spark, sf_dir)
-    sl = docs.groupBy("source", F.col("n_chars").alias("len")).agg(
+    return ks_release(ks_counts(_docs(spark, sf_dir)))
+
+
+def ks_counts(docs: DataFrame) -> DataFrame:
+    """(source, len, cs) cell counts — merged by addition, so
+    stream_ks_drift keeps them as state bounded by |sources| × the
+    distinct length domain."""
+    return docs.groupBy("source", F.col("n_chars").alias("len")).agg(
         F.count("*").alias("cs")
     )
-    return ks_release(sl)
 
 
 def ks_release(sl: DataFrame) -> DataFrame:
-    """The KS tail over a (source, len, cs) count relation — shared by
-    the batch query above and stream_ks_drift (which accumulates the
-    same counts as bounded complete-mode streaming state)."""
+    """The KS tail over a (source, len, cs) count relation (referenced
+    three times: grid spine, per-length and per-source totals)."""
     g = sl.groupBy("len").agg(F.sum("cs").alias("cg"))
     wg = Window.partitionBy(bounded_window_key("len")).orderBy("len")
     gc = g.select("len", F.sum("cg").over(wg).alias("cum_g"))

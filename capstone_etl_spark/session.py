@@ -31,6 +31,13 @@ def cached(df: DataFrame) -> DataFrame:
     return df
 
 
+def cached_batch(df: DataFrame) -> DataFrame:
+    """`cached(df)` for a batch relation read more than once; a
+    streaming relation passes through (a stream cannot be cached — the
+    stream-twin harness cuts its drained snapshot's plan instead)."""
+    return df if df.isStreaming else cached(df)
+
+
 def _checkpoint_artifacts(out: DataFrame) -> tuple[list, str | None]:
     """The checkpoint's OWN persisted-RDD handle + reliable-checkpoint
     file, read off the result's plan (a LogicalRDD wrapping exactly the

@@ -51,9 +51,8 @@ def run_to_memory(
     checkpoint_dir: str,
     output_mode: str = "complete",
     name: str | None = None,
-    timeout_sec: int | None = None,
     once: bool = False,
-    state_partitions: int | None | str = "default",
+    state_partitions: int | None = STATE_PARTITIONS,
 ) -> DataFrame:
     """Start sdf → memory sink, await termination, return the sink
     table. output_mode: 'complete' for aggregations, 'append' for
@@ -73,14 +72,14 @@ def run_to_memory(
     deployment sizes this to its state volume the same way. Results are
     partition-independent — the full oracle gate runs over these
     queries unchanged. The session value is restored afterwards so
-    batch plans keep their configured parallelism."""
+    batch plans keep their configured parallelism; None keeps the
+    session's value."""
     spark: SparkSession = sdf.sparkSession
-    if timeout_sec is None:
-        # a per-query hang guard sized for the sf<=0.1 test tables, not
-        # a semantic limit — scale-point runs (sf1/sf10,
-        # tools/profile_queries.py) raise it via the environment so a
-        # legitimately-bigger drain isn't misread as a hang
-        timeout_sec = env_int("SPARK_GRAFT_STREAM_TIMEOUT_SEC", STREAM_TIMEOUT_SEC, 1)
+    # a per-query hang guard sized for the sf<=0.1 test tables, not a
+    # semantic limit — scale-point runs (sf1/sf10,
+    # tools/profile_queries.py) raise it via the environment so a
+    # legitimately-bigger drain isn't misread as a hang
+    timeout_sec = env_int("SPARK_GRAFT_STREAM_TIMEOUT_SEC", STREAM_TIMEOUT_SEC, 1)
     qname = name or f"mem_sink_{next(_COUNTER)}"
     writer = (
         sdf.writeStream.format("memory")
@@ -89,8 +88,6 @@ def run_to_memory(
         .option("checkpointLocation", checkpoint_dir)
     )
     writer = writer.trigger(once=True) if once else writer.trigger(availableNow=True)
-    if state_partitions == "default":
-        state_partitions = STATE_PARTITIONS
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     if state_partitions:
         spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
@@ -114,7 +111,7 @@ def drain_staged(
     table: str,
     transform: Callable[[DataFrame, DataFrame], DataFrame],
     output_mode: str,
-    state_partitions: int | None | str = "default",
+    state_partitions: int | None = STATE_PARTITIONS,
 ) -> DataFrame:
     """Replay `table` as a multi-batch file stream, drain
     `transform(stream, staged)` into the memory sink and return the

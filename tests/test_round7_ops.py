@@ -41,29 +41,6 @@ def test_bpe_encode_consistent_with_learned_merges(spark, sf_dir):
     assert 0 < n_bpe < n_chars
 
 
-def test_stream_dedup_incremental_equals_batch(spark, sf_dir):
-    """The ingest-time stream must verdict every delta doc exactly as
-    the batch pass does (same oracle, but pinned Spark-vs-Spark too:
-    the stream-static join + drained assembly is a different physical
-    path than the batch self-join)."""
-    from capstone_etl_spark.operators.dedup import dedup_incremental
-    from capstone_etl_spark.operators.streaming_queries import (
-        stream_dedup_incremental,
-    )
-
-    batch = {r.doc_id: r for r in dedup_incremental(spark, sf_dir).collect()}
-    streamed = {r.doc_id: r for r in stream_dedup_incremental(spark, sf_dir).collect()}
-    assert set(batch) == set(streamed)
-    for doc_id, b in batch.items():
-        s = streamed[doc_id]
-        assert (s.is_dup, s.dup_of, s.n_dups, s.best_jaccard) == (
-            b.is_dup,
-            b.dup_of,
-            b.n_dups,
-            b.best_jaccard,
-        ), f"stream/batch verdict mismatch for doc {doc_id}"
-
-
 def test_unigram_tokenizer_invariants(spark, sf_dir):
     from capstone_etl_spark.operators.textstats import (
         UNI_MAX_WORD_LEN,
@@ -193,18 +170,3 @@ def test_lsh_tuning_curve_invariants(spark, sf_dir):
         assert 0.0 <= r.precision <= 1.0 and 0.0 <= r.recall <= 1.0
     # near s=1 the configured banding must almost surely catch a dup
     assert rows[-1].p_candidate > 0.99
-
-
-def test_stream_ann_topk_equals_batch(spark, sf_dir):
-    """The serving stream must rank exactly as the batch index lookup:
-    same probe cells (array_sort reproduces the window's (d2, cell)
-    order), same candidates, same cosine, same top-k."""
-    from capstone_etl_spark.operators.similarity import ann_ivf_topk
-    from capstone_etl_spark.operators.streaming_queries import stream_ann_topk
-
-    batch = {(r.query_id, r.rnk): r for r in ann_ivf_topk(spark, sf_dir).collect()}
-    streamed = {(r.query_id, r.rnk): r for r in stream_ann_topk(spark, sf_dir).collect()}
-    assert set(batch) == set(streamed)
-    for key, b in batch.items():
-        s = streamed[key]
-        assert (s.neighbor_id, s.sim) == (b.neighbor_id, b.sim), key

@@ -228,22 +228,6 @@ def test_dedup_aware_weights_conserves_docs(spark, sf_dir):
     assert any(r.cluster_size == 1 and r.weight_each == 1.0 for r in rows)
 
 
-def test_stream_ivf_assign_equals_batch(spark, sf_dir):
-    """The drained streaming cell-population table must equal the
-    batch ivf_cell_balance row-for-row (same oracle, but pinned
-    Spark-vs-Spark too: per-row array_min assignment across
-    micro-batches vs the batch groupBy argmin)."""
-    from capstone_etl_spark.operators.scaleaudit import ivf_cell_balance
-    from capstone_etl_spark.operators.streaming_queries import stream_ivf_assign
-
-    batch = {r.cell: (r.pop, r.share, r.over_cap) for r in ivf_cell_balance(spark, sf_dir).collect()}
-    streamed = {
-        r.cell: (r.pop, r.share, r.over_cap)
-        for r in stream_ivf_assign(spark, sf_dir).collect()
-    }
-    assert streamed == batch
-
-
 def test_label_separability_perfect_separation_is_null(spark, tmp_path):
     """Each label collapsed to its own point away from the global
     centroid: within_ss = 0 with between_ss > 0 must yield NULL (the
@@ -323,28 +307,6 @@ def test_tokenizer_comparison_orders_sanely(spark, sf_dir):
     assert 1.0 <= rows["unigram"].fertility
     # BPE merges strictly compressed below the char baseline
     assert rows["bpe"].n_tokens < rows["char"].n_tokens
-
-
-def test_stream_changelog_apply_equals_batch(spark, sf_dir):
-    """The drained CDC snapshot must equal the batch apply row-for-row
-    (same oracle, but pinned Spark-vs-Spark too: the streaming
-    max(struct) state evolved across micro-batches is a different
-    physical path than the batch one-shot aggregation)."""
-    from capstone_etl_spark.operators.events import changelog_apply
-    from capstone_etl_spark.operators.streaming_queries import stream_changelog_apply
-
-    batch = {r.user_id: r.asDict() for r in changelog_apply(spark, sf_dir).collect()}
-    streamed = {
-        r.user_id: r.asDict() for r in stream_changelog_apply(spark, sf_dir).collect()
-    }
-    assert streamed == batch
-    # the delete semantics did something: at least one user is absent
-    from capstone_etl_spark.sources.tables import load_table
-
-    n_users = (
-        load_table(spark, sf_dir, "events").select("user_id").distinct().count()
-    )
-    assert len(batch) < n_users
 
 
 def test_kmeans_silhouette_runner_up_wiring(spark, tmp_path):

@@ -43,19 +43,6 @@ def test_kmv_set_difference_estimates_track_exact(spark, sf_dir):
         assert err < 0.35, (r.src_a, r.src_b, err)
 
 
-def test_stream_psi_drift_equals_batch(spark):
-    """The streaming PSI release must equal the batch one row-for-row:
-    the deploy-time grid literals are computed by the same expressions
-    the batch plan evaluates, and cell counts merge by addition."""
-    from capstone_etl_spark.operators.events import event_psi_drift
-    from capstone_etl_spark.operators.streaming_queries import stream_psi_drift
-
-    sf = "/root/testdata/sf0.001"
-    got = {r.event_type: r.asDict() for r in stream_psi_drift(spark, sf).collect()}
-    want = {r.event_type: r.asDict() for r in event_psi_drift(spark, sf).collect()}
-    assert got == want
-
-
 def test_group_dro_weights_softmax(spark, sf_dir):
     """Weights are a proper distribution and order by loss — the
     worst group gets the largest weight."""

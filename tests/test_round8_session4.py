@@ -33,16 +33,3 @@ def test_caption_pairs_cover_image_third(spark, sf_dir):
             min(r.width, r.height) >= CAP_MIN_DIM
             and max(r.width, r.height) / min(r.width, r.height) <= CAP_MAX_ASPECT
         )
-
-
-def test_stream_group_dro_equals_batch(spark):
-    """The ingest-time DRO weights must equal the batch ones
-    row-for-row: TF cells merge by addition, and both forms share
-    quality.dro_release."""
-    from capstone_etl_spark.operators.quality import group_dro_weights
-    from capstone_etl_spark.operators.streaming_queries import stream_group_dro
-
-    sf = "/root/testdata/sf0.001"
-    got = {r.source: r.asDict() for r in stream_group_dro(spark, sf).collect()}
-    want = {r.source: r.asDict() for r in group_dro_weights(spark, sf).collect()}
-    assert got == want

@@ -262,19 +262,6 @@ def test_ks_source_drift_matches_python(spark, sf_dir):
         assert r.drifted == (d > crit)
 
 
-def test_stream_ks_drift_equals_batch(spark):
-    """The ingest-time KS table must equal the batch one row-for-row:
-    (source, len) cells merge by addition and both forms share
-    textstats.ks_release."""
-    from capstone_etl_spark.operators.streaming_queries import stream_ks_drift
-    from capstone_etl_spark.operators.textstats import ks_source_drift
-
-    sf = "/root/testdata/sf0.001"
-    got = {r.source: r.asDict() for r in stream_ks_drift(spark, sf).collect()}
-    want = {r.source: r.asDict() for r in ks_source_drift(spark, sf).collect()}
-    assert got == want
-
-
 def test_woe_feature_bins_matches_python(spark, sf_dir):
     """Per-bin WoE and the feature-level IV equal a pure-python
     recompute over the same fast-conversion features, and bins
@@ -568,33 +555,6 @@ def test_rfm_segments_matches_python(spark, sf_dir):
         assert all(1 <= x <= RFM_BUCKETS for x in (r.r_score, r.f_score, r.m_score))
 
 
-def test_stream_rfm_equals_batch(spark):
-    """The ingest-time RFM table must equal the batch one row-for-row:
-    per-user state merges order-free and both forms share
-    events.rfm_release."""
-    from capstone_etl_spark.operators.events import rfm_segments
-    from capstone_etl_spark.operators.streaming_queries import stream_rfm_segments
-
-    sf = "/root/testdata/sf0.001"
-    got = {r.user_id: r.asDict() for r in stream_rfm_segments(spark, sf).collect()}
-    want = {r.user_id: r.asDict() for r in rfm_segments(spark, sf).collect()}
-    assert got == want
-
-
-def test_stream_naive_bayes_equals_batch(spark):
-    """The ingest-trained classifier must equal the batch one
-    row-for-row: train cells merge by addition and both forms share
-    textstats.nb_release."""
-    from capstone_etl_spark.operators.streaming_queries import stream_naive_bayes
-    from capstone_etl_spark.operators.textstats import naive_bayes_source_model
-
-    sf = "/root/testdata/sf0.001"
-    key = lambda r: (r.true_source, r.predicted_source)  # noqa: E731
-    got = {key(r): r.asDict() for r in stream_naive_bayes(spark, sf).collect()}
-    want = {key(r): r.asDict() for r in naive_bayes_source_model(spark, sf).collect()}
-    assert got == want
-
-
 def test_bootstrap_ci_matches_python(spark, sf_dir):
     """The CI bounds equal a pure-python Poisson bootstrap with the
     same salted draws, and the interval brackets the point estimate."""
@@ -788,19 +748,6 @@ def test_cuped_matches_python(spark, sf_dir):
     assert tot_adj == pytest.approx(tot, rel=1e-6)
 
 
-def test_stream_cuped_equals_batch(spark):
-    """The ingest-time CUPED table must equal the batch one
-    row-for-row: per-user pre/post decimal sums merge order-free once
-    the midpoint is fixed, and both forms share events.cuped_release."""
-    from capstone_etl_spark.operators.events import event_cuped_adjustment
-    from capstone_etl_spark.operators.streaming_queries import stream_cuped
-
-    sf = "/root/testdata/sf0.001"
-    got = {r.variant: r.asDict() for r in stream_cuped(spark, sf).collect()}
-    want = {r.variant: r.asDict() for r in event_cuped_adjustment(spark, sf).collect()}
-    assert got == want
-
-
 def test_pareto_frontier_matches_python(spark, sf_dir):
     """The frontier equals a brute-force O(N^2) dominance check in
     python — the naive definition the distributed cumulative-max plan
@@ -831,19 +778,6 @@ def test_pareto_frontier_matches_python(spark, sf_dir):
     by_id = {d: (x, y) for d, x, y in pts}
     for d, xy in got.items():
         assert xy == by_id[d]
-
-
-def test_stream_pareto_equals_batch(spark):
-    """The ingest-time skyline must equal the batch one row-for-row:
-    per-length maxima merge order-free as MAX and both forms share
-    quality.pareto_release."""
-    from capstone_etl_spark.operators.quality import pareto_frontier_docs
-    from capstone_etl_spark.operators.streaming_queries import stream_pareto_frontier
-
-    sf = "/root/testdata/sf0.001"
-    got = {r.doc_id: r.asDict() for r in stream_pareto_frontier(spark, sf).collect()}
-    want = {r.doc_id: r.asDict() for r in pareto_frontier_docs(spark, sf).collect()}
-    assert got == want
 
 
 def test_overdispersion_matches_python(spark, sf_dir):

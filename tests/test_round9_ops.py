@@ -133,29 +133,6 @@ def test_hivf_plan_shape(spark):
     assert len(tree_gens) <= 2, tree_gens
 
 
-def test_stream_training_manifest_equals_batch(spark, sf_dir):
-    """The flagship batch/stream proof: the ingest-time admission chain
-    drains to EXACTLY the batch training_manifest (same keep-one
-    minima, same contamination set, same shard arithmetic, same token
-    sums)."""
-    from capstone_etl_spark.operators.corpus import training_manifest
-    from capstone_etl_spark.operators.streaming_queries import stream_training_manifest
-    from capstone_etl_spark.session import release_caches
-
-    try:
-        batch = {
-            (r.split, r.shard_id): (r.n_docs, r.n_tokens, r.min_doc_id, r.max_doc_id)
-            for r in training_manifest(spark, sf_dir).collect()
-        }
-        stream = {
-            (r.split, r.shard_id): (r.n_docs, r.n_tokens, r.min_doc_id, r.max_doc_id)
-            for r in stream_training_manifest(spark, sf_dir).collect()
-        }
-    finally:
-        release_caches()
-    assert stream == batch
-
-
 def test_kll_merge_law_and_error_bound(spark, sf_dir):
     """The sketch's two load-bearing properties: (a) the MERGE LAW —
     survival is per-row deterministic and samples are nested (h mod
@@ -241,23 +218,6 @@ def test_hivf_medoids_partition_and_quality(spark, tmp_path):
         assert sampled_tot <= 2.0 * exact_best + 1e-6, (cell, sampled_tot, exact_best)
 
 
-def test_stream_hivf_serving_equals_batch(spark):
-    """The two-level index serves identically at ingest: the streaming
-    in-row route/probe (stream_ann_hivf_topk) must reproduce the batch
-    index lookups exactly — same probes, same candidates, same ranks."""
-    from capstone_etl_spark.operators.similarity import ann_hivf_topk
-    from capstone_etl_spark.operators.streaming_queries import stream_ann_hivf_topk
-    from capstone_etl_spark.session import release_caches
-
-    sf = "/root/testdata/sf0.001"
-    try:
-        batch = {(r.query_id, r.rnk): (r.neighbor_id, r.sim) for r in ann_hivf_topk(spark, sf).collect()}
-        stream = {(r.query_id, r.rnk): (r.neighbor_id, r.sim) for r in stream_ann_hivf_topk(spark, sf).collect()}
-    finally:
-        release_caches()
-    assert stream == batch
-
-
 def test_bitext_mining_recovers_alignment(spark, tmp_path):
     """On a constructed bilingual space — vec 2i (side A) and 2i+1
     (side B) are tiny perturbations of the same point, distinct points
@@ -284,23 +244,6 @@ def test_bitext_mining_recovers_alignment(spark, tmp_path):
     true_hits = sum(1 for r in mined if r.tgt_id == r.src_id + 1)
     assert true_hits >= 0.95 * len(mined), f"{true_hits}/{len(mined)}"
     assert all(r.margin >= 1.0 for r in mined)
-
-
-def test_stream_bitext_mining_equals_batch(spark):
-    """Mining at ingest drains to the batch miner exactly: the
-    append-mode pair table is the batch candidate relation, and the
-    margin/mutual assembly is the batch code."""
-    from capstone_etl_spark.operators.similarity import bitext_mining
-    from capstone_etl_spark.operators.streaming_queries import stream_bitext_mining
-    from capstone_etl_spark.session import release_caches
-
-    sf = "/root/testdata/sf0.001"
-    try:
-        batch = {(r.src_id, r.tgt_id): (r.sim, r.margin) for r in bitext_mining(spark, sf).collect()}
-        stream = {(r.src_id, r.tgt_id): (r.sim, r.margin) for r in stream_bitext_mining(spark, sf).collect()}
-    finally:
-        release_caches()
-    assert stream == batch
 
 
 def test_pq_hier_distortion_close_to_flat(spark, sf_dir):

@@ -10,6 +10,8 @@ from pyspark.sql import types as _t
 
 import __spark_entry__ as entrymod
 from capstone_etl_spark.operators import events as batch_events
+from capstone_etl_spark.operators.streaming_queries import BATCH_TWIN
+from capstone_etl_spark.sources.tables import load_table
 from capstone_etl_spark.streaming import (
     events_stream,
     run_to_memory,
@@ -242,7 +244,6 @@ def test_drain_staged_cleans_up_and_equals_batch(spark, tmp_path, monkeypatch):
     count drained through it equals its batch form."""
     import tempfile
 
-    from capstone_etl_spark.sources.tables import load_table
     from capstone_etl_spark.streaming import drain_staged
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
@@ -307,27 +308,15 @@ def test_kafka_value_parser_roundtrip(spark):
     assert sorted(map(tuple, parsed.collect())) == sorted(map(tuple, events.collect()))
 
 
-@pytest.mark.parametrize(
-    "stream_name",
-    [
-        "stream_reservoir_sample",
-        "stream_decontamination",
-        "stream_pii_scan",
-        "stream_template_extraction",
-        "stream_ab_test",
-        "stream_dp_histogram",
-        "stream_conversion_survival",
-    ],
-)
+@pytest.mark.parametrize("stream_name", sorted(BATCH_TWIN))
 def test_stream_equals_batch(spark, stream_name):
-    """Under multi-batch replay a stream query's drained output must
+    """Under multi-batch replay every stream query's drained output must
     equal its batch twin's (BATCH_TWIN) as a multiset of full rows:
-    bottom-K of a union, additive counts, min/max state merges and the
-    deterministic DP draw are all replay-order free."""
+    additive counts, min/max and bottom-K state merges, static index
+    legs and the deterministic draws are all replay-order free."""
     from collections import Counter
 
     from capstone_etl_spark.operators.sampling import RESERVOIR_K
-    from capstone_etl_spark.operators.streaming_queries import BATCH_TWIN
     from capstone_etl_spark.session import release_caches
     from capstone_etl_spark.streaming.stateful import _RESERVOIR_K
 
@@ -339,3 +328,27 @@ def test_stream_equals_batch(spark, stream_name):
     finally:
         release_caches()
     assert got == want and len(got) > 0
+    if stream_name == "stream_changelog_apply":
+        # the delete semantics did something: some user's latest change
+        # is a tombstone, so that user is absent from the snapshot
+        n_users = load_table(spark, SF_DIR, "events").select("user_id").distinct().count()
+        assert len(want) < n_users
+
+
+def test_twin_registry_invariants():
+    """BATCH_TWIN pairs registered queries; each batch side has an
+    oracle of its own, and no stream side does (the registry would
+    silently overwrite it with the batch oracle)."""
+    import importlib
+    import pkgutil
+
+    from capstone_etl_spark import operators
+
+    own: dict[str, str] = {}
+    for info in pkgutil.iter_modules(operators.__path__):
+        own.update(getattr(importlib.import_module(f"{operators.__name__}.{info.name}"), "ORACLE_SQL", {}))
+    names = entrymod.queries()
+    for stream, batch in BATCH_TWIN.items():
+        assert stream in names and batch in names, (stream, batch)
+        assert batch in own, batch
+        assert stream not in own, stream
