@@ -14,13 +14,15 @@ value to materialize while still collecting only one row.
 The measurement primitives live here and nowhere else: `force` (that
 forcing action), `exec_totals` (deterministic job/stage/task/shuffle
 counters), `warm_up` (the untimed JVM, first-query and stream warm-up)
-and `measure` (one cold, timed, counted query).
+and `measure` (one cold, timed, counted query; a stream query also
+records its micro-batch progress through perfbench's stream listener).
 tools/profile_queries.py is a CLI over them, so its numbers compare
 with BENCH_full_r*.json.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import sys
@@ -30,6 +32,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod
 from capstone_etl_spark.session import get_spark, release_caches
+from perfbench.spans import stream_listener, stream_totals
 from pyspark.sql import functions as F
 
 # Headline set: the queries bench times, each compared per query with
@@ -353,15 +356,22 @@ def measure(spark, name: str, sf_dir: str) -> tuple[float, int, dict | None]:
     Query-scoped caches/checkpoints are released after the timed
     section, so each query is measured cold and memory stays flat; the
     counters are the exec_totals delta around the whole call, captured
-    outside the timed window (None if the py4j surface drifts)."""
+    outside the timed window (None if the py4j surface drifts). A
+    `stream_*` query runs under perfbench's stream listener and its
+    counters gain a `stream` entry: `stream_totals` over its
+    micro-batches (trigger/addBatch/state-commit seconds, state rows)."""
     query = entrymod.queries()[name]
+    is_stream = name.startswith("stream_")
     before = exec_totals(spark)
-    t0 = time.perf_counter()
-    rows, _ = force(query(spark, sf_dir))
-    sec = round(time.perf_counter() - t0, 3)
+    with (stream_listener(spark) if is_stream else contextlib.nullcontext()) as lis:
+        t0 = time.perf_counter()
+        rows, _ = force(query(spark, sf_dir))
+        sec = round(time.perf_counter() - t0, 3)
     release_caches()
     after = exec_totals(spark)
     counters = {k: after[k] - before[k] for k in after} if before and after else None
+    if counters is not None and lis is not None:
+        counters["stream"] = stream_totals(lis.progress)
     return sec, rows, counters
 
 
@@ -523,7 +533,7 @@ def main() -> None:
     # bytes): host-noise-free evidence the next round's PERF compare
     # can attribute deltas to plan changes vs hardware (VERDICT r11
     # produced 4 phantom regressions from a probe that swung 2.6x).
-    counters: dict[str, dict[str, int]] = {}
+    counters: dict[str, dict] = {}
     for name in names:
         timings[name], n_rows, c = measure(spark, name, sf_dir)
         if c is not None:
@@ -590,8 +600,13 @@ def main() -> None:
         # compact counters for the top-10 only — the driver keeps a
         # bounded stdout tail, so the line must stay small; the full
         # per-query map lives in BENCH_full_r{N}.json. Array order:
-        # [jobs, stages, tasks, shuffle_read, shuffle_write].
-        line_doc["counters"] = {k: list(counters[k].values()) for k in slowest if k in counters}
+        # [jobs, stages, tasks, shuffle_read, shuffle_write] (a stream
+        # query's `stream` progress stays in BENCH_full only).
+        line_doc["counters"] = {
+            k: [v for c, v in counters[k].items() if c != "stream"]
+            for k in slowest
+            if k in counters
+        }
     print(json.dumps(line_doc))
     # after the JSON line (driver contract kept): nonzero exit on an
     # unexplained per-query regression vs the prior round

@@ -81,8 +81,10 @@ def _horizon_watermark(staged: DataFrame) -> str:
     disorder — the staged data's FULL time span, measured, not guessed
     (a fixed constant silently under-covers a longer corpus and drops
     rows; ADVICE r3). One min/max over the ts column of the staging
-    copy — parquet column stats make this metadata-cheap at any scale.
-    Called only from the transforms whose operators take a watermark.
+    copy: a full-scan job, not a footer lookup — Spark's v1 parquet
+    reader has no aggregate pushdown, and the `cast("long")` would
+    block it anyway. Called only from the transforms whose operators
+    take a watermark, so the scan is paid only there.
     See streaming/windows.py watermark note."""
     lo, hi = staged.agg(
         F.min(F.col("ts").cast("long")), F.max(F.col("ts").cast("long"))
@@ -977,7 +979,14 @@ def stream_ann_hivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    got = drain_staged(spark, sf_dir, "embeddings", transform, "append")
+    # stateless: the state-store sizing buys nothing here and would run
+    # the per-trigger stream-static joins and the drained tail on one
+    # partition — at sf1 (4-core VM, 8 interleaved pairs) the sized
+    # count read 16.2 -> 17.2 s median, trigger 1.46 -> 1.97 s — so
+    # keep the session's shuffle parallelism (state_partitions=None)
+    got = drain_staged(
+        spark, sf_dir, "embeddings", transform, "append", state_partitions=None
+    )
     adc = got.groupBy("query_id", "neighbor_id").agg(F.sum("qd2").alias("adc"))
     w = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
     return (
@@ -2053,7 +2062,12 @@ def stream_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("la") == F.col("lb")).cast("int").alias("match"),
         )
 
-    drained = drain_staged(spark, sf_dir, "embeddings", transform, "append")
+    # stateless, like stream_ann_hivf_pq_topk: the sized state store
+    # (1 partition) read 17.5 -> 18.7 s median at sf1 (4-core VM, 8
+    # interleaved pairs), so keep the session's shuffle parallelism
+    drained = drain_staged(
+        spark, sf_dir, "embeddings", transform, "append", state_partitions=None
+    )
 
     # batch verdict tail over the drained candidate table
     wv = Window.partitionBy("vec_a").orderBy(F.asc("d2p"), F.asc("vec_b"))

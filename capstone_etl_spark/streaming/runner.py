@@ -11,6 +11,8 @@ sinks/writers.py are the batch halves of that story).
 (operators/streaming_queries.py) runs through:
 
 - stage the table as STAGED_FILES parquet files in a fresh temp dir;
+- size the state store from the staged bytes (`sized_state_partitions`:
+  one instance per advisory partition size, STATE_PARTITIONS at most);
 - attach a file stream reading FILES_PER_TRIGGER files per micro-batch,
   with the staged frame's schema (no second schema inference);
 - drain `transform(stream, staged)` through `run_to_memory`;
@@ -26,6 +28,8 @@ only for the queries that ask for it. `staged` is valid only inside
 from __future__ import annotations
 
 import itertools
+import math
+import os
 import shutil
 import tempfile
 from collections.abc import Callable
@@ -38,6 +42,7 @@ from capstone_etl_spark.streaming.source import stage_events
 _COUNTER = itertools.count()
 
 
+# ceiling of the sized state-store instance count (drain_staged)
 STATE_PARTITIONS = 8
 STREAM_TIMEOUT_SEC = 300
 # 4 staged files drained 2 per trigger: two micro-batches, so every
@@ -63,17 +68,17 @@ def run_to_memory(
 
     state_partitions pins spark.sql.shuffle.partitions for THIS query's
     lifetime (the setting is frozen into the state store at the first
-    checkpoint): every streaming state in this repo is bounded by design
-    (≈K sketch rows, |sources|/|variants| cells, df-capped candidate
-    pairs — see each query's docstring), so the state-store instance
-    count should track STATE size, not corpus size. At 32 instances ×
-    per-trigger open/commit/snapshot cost, the fixed overhead dominated
-    every stream query (~6s → ~3s measured at sf0.1 with 8); a real
-    deployment sizes this to its state volume the same way. Results are
-    partition-independent — the full oracle gate runs over these
-    queries unchanged. The session value is restored afterwards so
-    batch plans keep their configured parallelism; None keeps the
-    session's value."""
+    checkpoint), so it is the query's state-store instance count. Every
+    streaming state in this repo is bounded by design (≈K sketch rows,
+    |sources|/|variants| cells, df-capped candidate pairs — see each
+    query's docstring), and each instance pays a fixed open/commit/
+    checksum cost per trigger, so the count should track state size,
+    not the session's batch parallelism. The default, STATE_PARTITIONS,
+    is the ceiling `drain_staged` sizes down from. Results are
+    partition-independent (tests/test_streaming.py runs stream queries
+    at both counts). The session value is restored afterwards so batch
+    plans keep their configured parallelism; None keeps the session's
+    value."""
     spark: SparkSession = sdf.sparkSession
     # a per-query hang guard sized for the sf<=0.1 test tables, not a
     # semantic limit — scale-point runs (sf1/sf10,
@@ -105,6 +110,28 @@ def run_to_memory(
     return spark.table(qname)
 
 
+def sized_state_partitions(staged_bytes: int, advisory: int, ceiling: int) -> int:
+    """State-store instances for a drain of `staged_bytes`: one per
+    `advisory` bytes (AQE's target partition size), between 1 and
+    `ceiling`. AQE coalesces batch shuffles to that size but cannot
+    touch a stateful shuffle, whose partition count is frozen into the
+    checkpoint, so the drain coalesces up front from the input size. A
+    drained state never holds more rows than it was fed, so the input
+    bytes bound it from above."""
+    return max(1, min(ceiling, math.ceil(staged_bytes / advisory)))
+
+
+def _staged_bytes(path: str) -> int:
+    """Bytes of the data files under a local staging dir (no checksums
+    or _SUCCESS markers): a driver-side listing, no Spark job."""
+    return sum(
+        os.path.getsize(os.path.join(d, n))
+        for d, _, names in os.walk(path)
+        for n in names
+        if not n.startswith((".", "_"))
+    )
+
+
 def drain_staged(
     spark: SparkSession,
     sf_dir: str,
@@ -115,13 +142,23 @@ def drain_staged(
 ) -> DataFrame:
     """Replay `table` as a multi-batch file stream, drain
     `transform(stream, staged)` into the memory sink and return the
-    sink table (see the module docstring). `stage_events` and
-    `run_to_memory` are called through their module-level names so a
-    tracer can swap them for recording wrappers."""
+    sink table (see the module docstring). `state_partitions` is the
+    ceiling of the state-store size, which follows the staged bytes
+    (`sized_state_partitions`); None keeps the session's shuffle
+    parallelism. `stage_events` and `run_to_memory` are called through
+    their module-level names so a tracer can swap them for recording
+    wrappers."""
     work = tempfile.mkdtemp(prefix="spark_stream_")
     try:
         staging = f"{work}/staging"
         staged = stage_events(spark, sf_dir, staging, n_files=STAGED_FILES, table=table)
+        if state_partitions:
+            advisory = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+                spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+            )
+            state_partitions = sized_state_partitions(
+                _staged_bytes(staging), advisory, state_partitions
+            )
         stream = (
             spark.readStream.schema(staged.schema)
             .option("maxFilesPerTrigger", str(FILES_PER_TRIGGER))

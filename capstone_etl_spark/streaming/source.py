@@ -54,10 +54,11 @@ def stage_events(
 ) -> DataFrame:
     """Write `table` (events by default; documents and embeddings
     replay the same way) as n_files parquet files into staging_dir;
-    returns the staged batch frame (schema donor for the stream)."""
+    returns the staged batch frame (schema donor for the stream), read
+    back with the written frame's schema, so no inference job runs."""
     staged = load_table(spark, sf_dir, table).repartition(n_files)
     write_parquet(staged, staging_dir)
-    return spark.read.parquet(staging_dir)
+    return spark.read.schema(staged.schema).parquet(staging_dir)
 
 
 def events_stream(

@@ -5,8 +5,9 @@ The r6 driver run failed rc 2 on a single mid-sequence host stall
 The gate now re-times any FAIL candidate once and keeps the min, so a
 one-off transient cannot fail a round while a reproducing regression
 still does. These tests drive the pure gate functions with injected
-prior/probe data — no Spark session involved — except the last, which
-runs bench's forcing action and counters on one small query.
+prior/probe data — no Spark session involved — except the last two,
+which run bench's forcing action, counters and stream progress on
+small queries.
 """
 
 from __future__ import annotations
@@ -139,3 +140,18 @@ def test_force_and_exec_totals_are_the_one_path(spark, sf_dir):
     assert {"measure", "warm_up"} <= from_bench
     assert not defined & {"force", "exec_totals", "_exec_totals", "_time_one"}
     assert "xxhash64" not in src
+
+
+def test_measure_records_stream_progress(spark, sf_dir):
+    """A stream query measured through bench's path carries its
+    micro-batch progress under `stream` (two triggers over every staged
+    event); a batch query's counters keep only the exec_totals keys."""
+    from capstone_etl_spark.sources.tables import load_table
+
+    _, rows, c = bench.measure(spark, "stream_ab_test", sf_dir)
+    st = c["stream"]
+    assert rows > 0 and c["jobs"] >= 1
+    assert st["batches"] == 2 and st["state_rows"] > 0
+    assert st["input_rows"] == load_table(spark, sf_dir, "events").count()
+    _, _, c = bench.measure(spark, "tf_per_doc", sf_dir)
+    assert list(c) == ["jobs", "stages", "tasks", "shuffle_read", "shuffle_write"]

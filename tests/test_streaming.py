@@ -272,6 +272,57 @@ def test_drain_staged_cleans_up_and_equals_batch(spark, tmp_path, monkeypatch):
     assert list(tmp_path.iterdir()) == []
 
 
+def test_sized_state_partitions():
+    """The drain's state-store size: one instance per advisory partition
+    size of staged input, at least 1, at most the ceiling."""
+    from capstone_etl_spark.streaming.runner import STATE_PARTITIONS, sized_state_partitions
+
+    adv = 64 << 20
+    assert sized_state_partitions(0, adv, STATE_PARTITIONS) == 1
+    assert sized_state_partitions(adv, adv, STATE_PARTITIONS) == 1
+    assert sized_state_partitions(adv + 1, adv, STATE_PARTITIONS) == 2
+    assert sized_state_partitions(10**15, adv, STATE_PARTITIONS) == STATE_PARTITIONS
+
+
+@pytest.mark.parametrize(
+    "stream_name",
+    [
+        "stream_ab_test",  # update mode, min/max state
+        "stream_tumbling_windows",  # watermarked
+        "stream_reservoir_sample",  # applyInPandasWithState
+        "stream_rfm_segments",  # a Twin spec
+    ],
+)
+def test_stream_result_is_state_partition_independent(spark, monkeypatch, stream_name):
+    """A stream query drained with the sized state store (1 instance at
+    this scale) returns the same full-row multiset as with the
+    STATE_PARTITIONS ceiling pinned."""
+    from collections import Counter
+
+    from capstone_etl_spark.session import release_caches
+    from capstone_etl_spark.streaming import runner
+
+    used = []
+    drain = runner.run_to_memory
+
+    def spy(*args, **kwargs):
+        used.append(kwargs["state_partitions"])
+        return drain(*args, **kwargs)
+
+    monkeypatch.setattr(runner, "run_to_memory", spy)
+    query = entrymod.queries()[stream_name]
+    try:
+        sized = Counter(map(tuple, query(spark, SF_DIR).collect()))
+        monkeypatch.setattr(
+            runner, "sized_state_partitions", lambda *a: runner.STATE_PARTITIONS
+        )
+        pinned = Counter(map(tuple, query(spark, SF_DIR).collect()))
+    finally:
+        release_caches()
+    assert used == [1, runner.STATE_PARTITIONS]
+    assert sized == pinned and len(sized) > 0
+
+
 def test_events_stream_requires_dir_or_factory(spark):
     import pytest as _pytest
 
