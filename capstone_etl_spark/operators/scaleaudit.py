@@ -189,19 +189,16 @@ def ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     as ann_ivf_topk (the seeds travel as one broadcast array), then
     groupBy(cell).count() and a 1-row corpus total broadcast back for
     the share/cap columns. The output is ≈√N rows."""
-    from capstone_etl_spark.operators.similarity import _d2_fold, quantize_fp, quantizer_seeds
+    from capstone_etl_spark.operators.similarity import (
+        ivf_seed_d2,
+        nearest_cell,
+        quantize_fp,
+        quantizer_seeds,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings")
     emb_q = emb.select("vec_id", quantize_fp().alias("vq"))
-    seeds = quantizer_seeds(emb_q)
-    d2_col = _d2_fold("vq", "sq")
-    assign = (
-        emb_q.join(F.broadcast(seeds), F.lit(True))
-        .select("vec_id", "cell", d2_col.alias("d2"))
-        .groupBy("vec_id")
-        .agg(F.min(F.struct("d2", "cell")).alias("m"))
-        .select("vec_id", F.col("m.cell").alias("cell"))
-    )
+    assign = nearest_cell(ivf_seed_d2(emb_q, quantizer_seeds(emb_q)))
     pops = assign.groupBy("cell").agg(F.count("*").cast("long").alias("pop"))
     return _cell_balance_tail(pops)
 

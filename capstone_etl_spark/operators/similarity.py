@@ -37,7 +37,7 @@ import hashlib
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from capstone_etl_spark.functions.hashing import md5_hash60, md5_hash60_sql
@@ -301,8 +301,6 @@ def ann_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan the corpus once, per-query heap via ranked window on the
     (tiny) scored relation. Ranking keys on the ROUNDED similarity so
     cross-engine last-ulp drift cannot reorder."""
-    from pyspark.sql import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
@@ -314,12 +312,7 @@ def ann_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", F.round(qcosine("qe", "ne"), 6).alias("sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id", "sim", "rnk")
-    )
+    return sim_topk(scored)
 
 
 ANN_BRUTE_TOPK_SQL = f"""
@@ -342,8 +335,6 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-stage ANN: LSH bucket equi-join prunes candidates, cosine
     reranks. Deterministic planes ⇒ the oracle reproduces the exact
     candidate set and ranking."""
-    from pyspark.sql import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
     buckets = lsh_buckets(emb).transform(cached)
     qb = buckets.filter(F.col("vec_id") < N_QUERIES).select(
@@ -359,21 +350,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # N_QUERIES upstream (join key restricts rows either way), but
     # broadcasting the unfiltered corpus-sized relation would OOM the
     # driver at scale (ADVICE r5 #1)
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    n = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ne"))
-    scored = (
-        cand.join(F.broadcast(q), "query_id")
-        .join(n, "neighbor_id")
-        .select("query_id", "neighbor_id", F.round(qcosine("qe", "ne"), 6).alias("sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id", "sim", "rnk")
-    )
+    return sim_topk(cosine_rerank(emb, cand))
 
 
 ANN_LSH_TOPK_SQL = f"""
@@ -701,6 +678,172 @@ _SEED_IDS_SQL = f"""hseed AS (
 )"""
 
 
+# ---------------------------------------------- shared IVF index steps
+#
+# Every IVF-family query, batch and stream, probes, looks up and ranks
+# through the helpers below, so a probe, rank or prune rule is written
+# once. A batch query probes with a row_number window over its
+# (vec_id, cell, d2) distance relation (ivf_probes). A stream cannot
+# window, so a stream twin probes IN-ROW instead (probe_cells_inrow):
+# the candidate (cell, sq) list rides in as a 1-row broadcast array
+# `cand`, each arriving row folds one integer distance per cell,
+# array_sort over (d2, cell) structs reproduces the window's exact
+# order, and slice(..., ivf_probe_k()) keeps the probe set — no state.
+# The steps: ivf_probe_k (probe count), ivf_seed_d2 / nearest_cell
+# (flat distances and assignment), ivf_probes / probe_cells_inrow
+# (probe), ivf_candidates (inverted-list lookup), cosine_rerank /
+# ivf_rerank (exact-cosine score), sim_topk / adc_topk (ranked tails).
+# The two-level index adds in-row routing below: hier_routed (a row's
+# routed candidate cells) and hier_cell_inrow (its cell).
+
+
+def ivf_probe_k() -> Column:
+    """max(IVF_PROBES_MIN, ⌈√n_cells⌉) over an `n_cells` column: the
+    probe count, derived in-plan from the seed count."""
+    return F.greatest(
+        F.lit(IVF_PROBES_MIN).cast("long"),
+        F.ceil(F.sqrt(F.col("n_cells").cast("double"))),
+    )
+
+
+def ivf_seed_d2(emb_q: DataFrame, seeds: DataFrame) -> DataFrame:
+    """(vec_id, cell, d2) — every vector's exact integer distance to
+    every flat quantizer seed (the ≈√N seed arrays broadcast): feeds
+    both the assignment argmin and the query probe ranking."""
+    return emb_q.join(F.broadcast(seeds), F.lit(True)).select(
+        "vec_id", "cell", _d2_fold("vq", "sq").alias("d2")
+    )
+
+
+def nearest_cell(dists: DataFrame) -> DataFrame:
+    """(vec_id, cell) — the quantizer assignment: argmin over a
+    (vec_id, cell, d2) distance relation, (d2, cell) tiebreak."""
+    return (
+        dists.groupBy("vec_id")
+        .agg(F.min(F.struct("d2", "cell")).alias("m"))
+        .select("vec_id", F.col("m.cell").alias("cell"))
+    )
+
+
+def ivf_probe_ranks(dists: DataFrame, d2: str = "d2") -> DataFrame:
+    """The query rows (vec_id < N_QUERIES) of a distance relation, with
+    `prnk`: each query's rank of the cell by (d2, cell)."""
+    pw = Window.partitionBy("vec_id").orderBy(F.asc(d2), F.asc("cell"))
+    return dists.filter(F.col("vec_id") < N_QUERIES).withColumn(
+        "prnk", F.row_number().over(pw)
+    )
+
+
+def ivf_probes(dists: DataFrame, seeds: DataFrame, d2: str = "d2") -> DataFrame:
+    """(query_id, cell) — each query's ivf_probe_k() nearest cells; the
+    probe count enters as a 1-row broadcast seed count."""
+    n_cells = seeds.agg(F.count("*").alias("n_cells"))
+    return (
+        ivf_probe_ranks(dists, d2)
+        .join(F.broadcast(n_cells), F.lit(True))
+        .filter(F.col("prnk") <= ivf_probe_k())
+        .select(F.col("vec_id").alias("query_id"), "cell")
+    )
+
+
+def _cells_by_d2(cells: str) -> Column:
+    """The row's `vq` against every (cell, sq) struct of the array
+    column `cells`: (d2, cell) structs in (d2, cell) order."""
+    return F.array_sort(
+        F.transform(
+            cells,
+            lambda s: F.struct(
+                _d2_fold("vq", s["sq"]).alias("d2"), s["cell"].alias("cell")
+            ),
+        )
+    )
+
+
+def probe_cells_inrow(df: DataFrame, *keep: str) -> DataFrame:
+    """(*keep, cell) — one row per probed cell of each row of `df`
+    (columns `vq`, `n_cells` and the candidate cell array `cand`): the
+    in-row form of ivf_probes (see the section comment above)."""
+    return df.select(
+        *keep, F.explode(F.slice(_cells_by_d2("cand"), 1, ivf_probe_k())).alias("p")
+    ).select(*keep, F.col("p.cell").alias("cell"))
+
+
+def ivf_candidates(probes: DataFrame, assign: DataFrame, *carry: str) -> DataFrame:
+    """(query_id, neighbor_id, *carry) — the inverted-list lookup: every
+    vector `assign` puts in a probed cell, except the query itself."""
+    return (
+        probes.join(assign.withColumnRenamed("vec_id", "neighbor_id"), "cell")
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id", *carry)
+    )
+
+
+def cosine_rerank(emb: DataFrame, cand: DataFrame, *carry: str) -> DataFrame:
+    """(query_id, neighbor_id, *carry, sim) — the exact quantized cosine
+    of every candidate pair, rounded to 6 dp (the family's rank key).
+    The query side is filtered to N_QUERIES BEFORE the broadcast hint:
+    broadcasting the corpus-sized relation would OOM the driver at
+    scale (ADVICE r5 #1)."""
+    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
+    )
+    n = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ne"))
+    return (
+        cand.join(F.broadcast(q), "query_id")
+        .join(n, "neighbor_id")
+        .select(
+            "query_id", "neighbor_id", *carry, F.round(qcosine("qe", "ne"), 6).alias("sim")
+        )
+    )
+
+
+def ivf_rerank(emb: DataFrame, dists: DataFrame, seeds: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, sim) — probe → inverted-list lookup →
+    exact-cosine rerank over an index's (vec_id, cell, d2) distance
+    relation: the shared IVF candidate pipeline of the flat and the
+    two-level index."""
+    return cosine_rerank(emb, ivf_candidates(ivf_probes(dists, seeds), nearest_cell(dists)))
+
+
+def sim_window(*keys: str) -> WindowSpec:
+    """Per-`keys` order by (sim desc, neighbor_id asc) — the family's
+    deterministic cosine rank order."""
+    return Window.partitionBy(*keys).orderBy(F.desc("sim"), F.asc("neighbor_id"))
+
+
+def sim_topk(
+    scored: DataFrame, cols: tuple[str, ...] = ("query_id", "neighbor_id", "sim", "rnk")
+) -> DataFrame:
+    """`cols` of each query's TOP_K rows of a scored relation, ranked by
+    sim_window with the rank as long `rnk`."""
+    return (
+        scored.withColumn("rnk", F.row_number().over(sim_window("query_id")).cast("long"))
+        .filter(F.col("rnk") <= TOP_K)
+        .select(*cols)
+    )
+
+
+def adc_topk(terms: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, adc_dist, rnk) — ADC ranking: the exact
+    int64 sum of a candidate's (query_id, neighbor_id, qd2) table
+    terms, each query's TOP_K by (adc, neighbor_id); the one sqrt only
+    formats the output distance."""
+    adc = terms.groupBy("query_id", "neighbor_id").agg(F.sum("qd2").alias("adc"))
+    w = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
+    return (
+        adc.withColumn("rnk", F.row_number().over(w).cast("long"))
+        .filter(F.col("rnk") <= TOP_K)
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.round(
+                F.sqrt(F.col("adc").cast("double")) / F.lit(float(CENTROID_SCALE)), 6
+            ).alias("adc_dist"),
+            "rnk",
+        )
+    )
+
+
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF two-stage ANN with a REAL geometric coarse quantizer:
     Voronoi cells seeded by ≈√N hash-sampled vectors (quantizer_seeds
@@ -727,72 +870,18 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vector, seed); the candidate join shuffles on cell; rerank cost =
     probed fraction of brute force. Recall vs brute force asserted in
     tests; per-cell population cap asserted in test_quantizer_scaling."""
-    from pyspark.sql import Window
-
-    scored = _ivf_scored(spark, sf_dir)
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id", "sim", "rnk")
-    )
+    return sim_topk(_ivf_scored(spark, sf_dir))
 
 
 def _ivf_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The shared IVF candidate pipeline (quantize → seed → assign →
+    """The flat IVF candidate pipeline (quantize → seed → assign →
     probe → exact-cosine score) up to the scored candidate relation —
     ann_ivf_topk takes its per-query top-k; ann_radius_search filters
     it by similarity threshold."""
-    from pyspark.sql import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
-    quant = quantize_fp()
-    emb_q = emb.select("vec_id", quant.alias("vq"))
+    emb_q = emb.select("vec_id", quantize_fp().alias("vq"))
     seeds = quantizer_seeds(emb_q)
-    d2_col = _d2_fold("vq", "sq")
-    # (vector, seed) exact integer distances — feeds BOTH the assignment
-    # argmin and the query probe ranking below
-    vec_seed_d2 = emb_q.join(F.broadcast(seeds), F.lit(True)).select(
-        "vec_id", "cell", d2_col.alias("d2")
-    )
-    assign = (
-        vec_seed_d2.groupBy("vec_id")
-        .agg(F.min(F.struct("d2", "cell")).alias("m"))
-        .select("vec_id", F.col("m.cell").alias("cell"))
-    )
-    # probe: each query's max(3, ⌈√cells⌉) nearest cells (same distance
-    # table); the probe count enters as a 1-row broadcast seed count
-    pw = Window.partitionBy("vec_id").orderBy(F.asc("d2"), F.asc("cell"))
-    n_cells = seeds.agg(F.count("*").alias("n_cells"))
-    probe_k = F.greatest(
-        F.lit(IVF_PROBES_MIN).cast("long"),
-        F.ceil(F.sqrt(F.col("n_cells").cast("double"))),
-    )
-    probes = (
-        vec_seed_d2.filter(F.col("vec_id") < N_QUERIES)
-        .withColumn("prnk", F.row_number().over(pw))
-        .join(F.broadcast(n_cells), F.lit(True))
-        .filter(F.col("prnk") <= probe_k)
-        .select(F.col("vec_id").alias("query_id"), "cell")
-    )
-    cand = (
-        probes.join(assign.withColumnRenamed("vec_id", "neighbor_id"), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-    )
-    # filter BEFORE the broadcast hint: query_id is already bounded by
-    # N_QUERIES upstream (join key restricts rows either way), but
-    # broadcasting the unfiltered corpus-sized relation would OOM the
-    # driver at scale (ADVICE r5 #1)
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    n = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ne"))
-    return (
-        cand.join(F.broadcast(q), "query_id")
-        .join(n, "neighbor_id")
-        .select("query_id", "neighbor_id", F.round(qcosine("qe", "ne"), 6).alias("sim"))
-    )
+    return ivf_rerank(emb, ivf_seed_d2(emb_q, seeds), seeds)
 
 
 # cosine threshold for the radius (range) search — chosen so the
@@ -919,44 +1008,56 @@ def hier_branches(emb_q: DataFrame) -> DataFrame:
     )
 
 
+def _branches_by_d2(vec_col: str, *fields: str) -> Column:
+    """The row's `vec_col` against every branch of the collected branch
+    array `bs`: (bd2, branch, *fields) structs in (bd2, branch) order."""
+    return F.array_sort(
+        F.transform(
+            "bs",
+            lambda b: F.struct(
+                _d2_fold(vec_col, b["bq"]).alias("bd2"),
+                b["branch"].alias("branch"),
+                *[b[f].alias(f) for f in fields],
+            ),
+        )
+    )
+
+
+def _hier_index(src: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(branches, barr, seeds_b) — the two-level index built from the
+    population `src`: the level-1 branches, the same branches as ONE
+    collected row `bs` (routing is in-row against it: a 1-row
+    broadcast, zero shuffle), and every second-level seed (cell, sq)
+    with its nearest branch."""
+    seeds = quantizer_seeds(src)
+    branches = hier_branches(src)
+    barr = branches.agg(F.collect_list(F.struct("branch", "bq")).alias("bs"))
+    seeds_b = seeds.join(F.broadcast(barr), F.lit(True)).select(
+        "cell", "sq", F.element_at(_branches_by_d2("sq"), 1)["branch"].alias("branch")
+    )
+    return branches, barr, seeds_b
+
+
 def _hier_cand_seed(emb_q: DataFrame, index_q: DataFrame | None = None) -> DataFrame:
     """(vec_id, vq, cell, d2) — each vector's exact integer distances
     to the second-level seeds of its BRANCH_PROBES routed branches
     only: the shared core of the two-level quantizer. Routing is
-    in-row against a collected branch array (1-row broadcast, zero
-    shuffle); the seed join is a broadcast equi-join on branch —
-    O(N·N^(1/4)) dot products total vs the flat quantizer's O(N·√N),
-    the measured flat-IVF frontier's assignment term paid down
-    (SCALE.md).
+    in-row against the collected branch array; the seed join is a
+    broadcast equi-join on branch — O(N·N^(1/4)) dot products total
+    vs the flat quantizer's O(N·√N), the measured flat-IVF frontier's
+    assignment term paid down (SCALE.md).
 
     `index_q` (default: emb_q itself) is the population the INDEX is
     built from — seeds, branches and thresholds. The incremental /
     streaming forms pass the committed BASE corpus here and route the
     full (base + delta) relation through it, so delta arrivals ride a
     published index instead of triggering a rebuild."""
-    src = emb_q if index_q is None else index_q
-    seeds = quantizer_seeds(src)
-    branches = hier_branches(src)
-    barr = branches.agg(F.collect_list(F.struct("branch", "bq")).alias("bs"))
-
-    def route_arr(vec_col: str) -> F.Column:
-        return F.array_sort(
-            F.transform(
-                "bs",
-                lambda b: F.struct(
-                    _d2_fold(vec_col, b["bq"]).alias("bd2"),
-                    b["branch"].alias("branch"),
-                ),
-            )
-        )
-
-    seeds_b = (
-        seeds.join(F.broadcast(barr), F.lit(True))
-        .select("cell", "sq", F.element_at(route_arr("sq"), 1)["branch"].alias("branch"))
-    )
+    _, barr, seeds_b = _hier_index(emb_q if index_q is None else index_q)
     routed = (
         emb_q.join(F.broadcast(barr), F.lit(True))
-        .select("vec_id", "vq", F.slice(route_arr("vq"), 1, BRANCH_PROBES).alias("route"))
+        .select(
+            "vec_id", "vq", F.slice(_branches_by_d2("vq"), 1, BRANCH_PROBES).alias("route")
+        )
         .select("vec_id", "vq", F.explode("route").alias("r"))
         .select("vec_id", "vq", F.col("r.branch").alias("branch"))
     )
@@ -970,30 +1071,9 @@ def hier_branch_cells_row(emb_q: DataFrame) -> DataFrame:
     sq)>)>) — the two-level index as a single broadcastable artifact:
     every branch with its quantized vector and its second-level seed
     list. The streaming twins (serving, mining, admission, balance)
-    ride this as their static side; cache it so the stream-static join
-    doesn't rebuild the subtree per micro-batch."""
-    seeds = quantizer_seeds(emb_q)
-    branches = hier_branches(emb_q)
-    barr = branches.agg(F.collect_list(F.struct("branch", "bq")).alias("bs"))
-    seeds_b = (
-        seeds.join(F.broadcast(barr), F.lit(True))
-        .select(
-            "cell",
-            "sq",
-            F.element_at(
-                F.array_sort(
-                    F.transform(
-                        "bs",
-                        lambda b: F.struct(
-                            _d2_fold("sq", b["bq"]).alias("bd2"),
-                            b["branch"].alias("branch"),
-                        ),
-                    )
-                ),
-                1,
-            )["branch"].alias("branch"),
-        )
-    )
+    ride this as their static side (hier_routed); truncate it so the
+    stream-static join doesn't rebuild the subtree per micro-batch."""
+    branches, _, seeds_b = _hier_index(emb_q)
     bcells = seeds_b.groupBy("branch").agg(
         F.collect_list(F.struct("cell", "sq")).alias("cells")
     )
@@ -1008,41 +1088,25 @@ def hier_branch_cells_row(emb_q: DataFrame) -> DataFrame:
     )
 
 
-def hier_route_expr(n_branches: int = BRANCH_PROBES) -> F.Column:
-    """In-row routing over a hier_branch_cells_row artifact: the
-    current row's `vq` against every branch in `bs`, sorted by
-    (bd2, branch), top n_branches kept with their cell lists."""
-    return F.slice(
-        F.array_sort(
-            F.transform(
-                "bs",
-                lambda b: F.struct(
-                    _d2_fold("vq", b["bq"]).alias("bd2"),
-                    b["branch"].alias("branch"),
-                    b["cells"].alias("cells"),
-                ),
-            )
-        ),
-        1,
-        n_branches,
+def hier_routed(df: DataFrame, brow: DataFrame) -> DataFrame:
+    """`df` (with `vq`) joined to a 1-row hier_branch_cells_row
+    artifact, plus `cand`: the (cell, sq) lists of the row's
+    BRANCH_PROBES nearest branches by (bd2, branch), flattened — its
+    routed candidate cells, in-row."""
+    return (
+        df.join(F.broadcast(brow), F.lit(True))
+        .withColumn("route", F.slice(_branches_by_d2("vq", "cells"), 1, BRANCH_PROBES))
+        .withColumn("cand", F.flatten(F.transform("route", lambda r: r["cells"])))
     )
 
 
-def hier_best_cell_expr() -> F.Column:
-    """In-row argmin over a routed candidate-cell array `cand` (the
-    flattened cell lists of the routed branches) — reproduces
-    hier_assign's (d2, cell) tiebreak per row, no state."""
-    return F.element_at(
-        F.array_sort(
-            F.transform(
-                "cand",
-                lambda s: F.struct(
-                    _d2_fold("vq", s["sq"]).alias("d2"), s["cell"].alias("cell")
-                ),
-            )
-        ),
-        1,
-    )["cell"]
+def hier_cell_inrow(df: DataFrame, brow: DataFrame, *keep: str | Column) -> DataFrame:
+    """(*keep, cell) — each row's two-level cell, in-row: the argmin
+    over its routed candidate cells (hier_routed), reproducing
+    hier_assign's (d2, cell) tiebreak with no state."""
+    return hier_routed(df, brow).select(
+        *keep, F.element_at(_cells_by_d2("cand"), 1)["cell"].alias("cell")
+    )
 
 
 def hier_assign(emb_q: DataFrame) -> DataFrame:
@@ -1057,84 +1121,26 @@ def hier_assign(emb_q: DataFrame) -> DataFrame:
     )
 
 
-def _hivf_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The hierarchical-IVF candidate pipeline (quantize → seed →
-    branch → route → assign → probe → exact-cosine score) up to the
-    scored candidate relation — ann_hivf_topk takes its per-query
-    top-k. This is the production mitigation for the measured flat-IVF
-    N^1.5 assignment frontier (SCALE.md): a ≈N^(1/4) branch layer
-    routes every vector in-row against a collected branch array (one
-    1-row broadcast; zero shuffle), and assignment probes only the
-    routed branches' ≈N^(1/4) second-level seeds — O(N·N^(1/4)) dot
-    products instead of the flat quantizer's O(N·√N). Cells, cell
-    populations (≈√N) and the probe/rerank tail are unchanged, so
-    within-cell work inherits the flat index's cell cap.
-
-    Exactness for the oracle: branch selection, seed→branch routing,
-    vector routing and assignment are all fixed-point integer algebra
-    with (d2, id) tiebreaks, so both engines build the identical
-    two-level index and rank identical candidates."""
-    from pyspark.sql import Window
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    emb_q = emb.select("vec_id", quantize_fp().alias("vq"))
-    seeds = quantizer_seeds(emb_q)
-    cand_seed = _hier_cand_seed(emb_q)
-    assign = (
-        cand_seed.groupBy("vec_id")
-        .agg(F.min(F.struct("d2", "cell")).alias("m"))
-        .select("vec_id", F.col("m.cell").alias("cell"))
-    )
-    # probe: each query's max(3, ⌈√cells⌉) nearest ROUTED cells — the
-    # hierarchical narrowing applies to the query side too
-    pw = Window.partitionBy("vec_id").orderBy(F.asc("d2"), F.asc("cell"))
-    n_cells = seeds.agg(F.count("*").alias("n_cells"))
-    probe_k = F.greatest(
-        F.lit(IVF_PROBES_MIN).cast("long"),
-        F.ceil(F.sqrt(F.col("n_cells").cast("double"))),
-    )
-    probes = (
-        cand_seed.filter(F.col("vec_id") < N_QUERIES)
-        .withColumn("prnk", F.row_number().over(pw))
-        .join(F.broadcast(n_cells), F.lit(True))
-        .filter(F.col("prnk") <= probe_k)
-        .select(F.col("vec_id").alias("query_id"), "cell")
-    )
-    cand = (
-        probes.join(assign.withColumnRenamed("vec_id", "neighbor_id"), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-    )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    n = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ne"))
-    return (
-        cand.join(F.broadcast(q), "query_id")
-        .join(n, "neighbor_id")
-        .select("query_id", "neighbor_id", F.round(qcosine("qe", "ne"), 6).alias("sim"))
-    )
-
-
 def ann_hivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-level (hierarchical) IVF ANN: ≈N^(1/4) hash-sampled branch
     seeds route each vector to its BRANCH_PROBES nearest branches;
     assignment probes only those branches' second-level seeds. Same
     ≈√N cells, same probe ≈ √cells and exact-cosine rerank tail as
-    ann_ivf_topk — the quantizer-assignment stage drops from O(N·√N)
-    to O(N·N^(1/4)) dot products, which is the measured flat-IVF
-    N^1.5 frontier (SCALE.md) paid down. Recall vs the flat index is
-    pinned on a clustered fixture in tests (identical where cluster
-    structure exists; boundary vectors may route differently)."""
-    from pyspark.sql import Window
+    ann_ivf_topk (ivf_rerank) — the quantizer-assignment stage drops
+    from O(N·√N) to O(N·N^(1/4)) dot products, which is the measured
+    flat-IVF N^1.5 frontier (SCALE.md) paid down; the query side
+    probes its nearest ROUTED cells, so the hierarchical narrowing
+    applies to it too. Recall vs the flat index is pinned on a
+    clustered fixture in tests (identical where cluster structure
+    exists; boundary vectors may route differently).
 
-    scored = _hivf_scored(spark, sf_dir)
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id", "sim", "rnk")
-    )
+    Exactness for the oracle: branch selection, seed→branch routing,
+    vector routing and assignment are all fixed-point integer algebra
+    with (d2, id) tiebreaks, so both engines build the identical
+    two-level index and rank identical candidates."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    emb_q = emb.select("vec_id", quantize_fp().alias("vq"))
+    return sim_topk(ivf_rerank(emb, _hier_cand_seed(emb_q), quantizer_seeds(emb_q)))
 
 
 # WITH-chain through the two-level assignment — shared by the
@@ -1240,8 +1246,6 @@ def hivf_cell_medoids(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: candidate selection (hash-least per cell with vec_id
     tiebreak), distance totals (int64 fixed-point sums) and the
     (tot_d2, vec_id) argmin are identical algebra in both engines."""
-    from pyspark.sql import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
     emb_q = emb.select("vec_id", quantize_fp().alias("vq"))
     assign = cached(hier_assign(emb_q))
@@ -1442,8 +1446,6 @@ def bitext_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     those 6dp values (float-sum order cannot drift), the margin is one
     IEEE division of identical doubles, and every argmax tiebreaks on
     (margin desc, sim desc, partner asc)."""
-    from pyspark.sql import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
     emb_q = emb.select("vec_id", quantize_fp().alias("vq"))
     assign = cached(hier_assign(emb_q).select("vec_id", "cell"))
@@ -1454,7 +1456,13 @@ def bitext_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = withe.filter(F.col("vec_id") % 2 == 1).select(
         F.col("vec_id").alias("tgt_id"), "cell", F.col("embedding").alias("ne")
     )
-    pairs = cached(_bitext_capped_pairs(a, b))
+    return _bitext_verdicts(cached(_bitext_capped_pairs(a, b)))
+
+
+def _bitext_verdicts(pairs: DataFrame) -> DataFrame:
+    """(src_id, tgt_id, sim, margin) — the margin / mutual-argmax
+    verdict assembly over a (src_id, tgt_id, sim) candidate relation,
+    shared by bitext_mining and its stream twin."""
     wx = Window.partitionBy("src_id").orderBy(F.desc("sim"), F.asc("tgt_id"))
     wy = Window.partitionBy("tgt_id").orderBy(F.desc("sim"), F.asc("src_id"))
     dec = lambda c: F.col(c).cast("decimal(18,6)")  # noqa: E731
@@ -1555,26 +1563,9 @@ def ivf_probe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     are exact int sums over the (grid × query) top-k relations —
     TOP_K is constant per query, so macro recall = Σhits / (q·k)
     exactly, no double accumulation."""
-    from pyspark.sql import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
-    quant = quantize_fp()
-    emb_q = emb.select("vec_id", quant.alias("vq"))
-    seeds = quantizer_seeds(emb_q)
-    d2_col = _d2_fold("vq", "sq")
-    vec_seed_d2 = emb_q.join(F.broadcast(seeds), F.lit(True)).select(
-        "vec_id", "cell", d2_col.alias("d2")
-    )
-    assign = (
-        vec_seed_d2.groupBy("vec_id")
-        .agg(F.min(F.struct("d2", "cell")).alias("m"))
-        .select(F.col("vec_id").alias("neighbor_id"), F.col("m.cell").alias("cell"))
-    )
-    pw = Window.partitionBy("vec_id").orderBy(F.asc("d2"), F.asc("cell"))
-    ranked = (
-        vec_seed_d2.filter(F.col("vec_id") < N_QUERIES)
-        .withColumn("prnk", F.row_number().over(pw))
-    )
+    emb_q = emb.select("vec_id", quantize_fp().alias("vq"))
+    vec_seed_d2 = ivf_seed_d2(emb_q, quantizer_seeds(emb_q))
     # Score each (query, neighbor) cosine ONCE at the grid maximum and
     # explode the grid AFTER scoring: the grid values are nested
     # (candidates at p ⊆ candidates at p'>p — a neighbor lives in
@@ -1583,22 +1574,14 @@ def ivf_probe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # appeared under (~1.9× the flops and the neighbor-embedding join
     # volume for the 1/2/4/8 grid). Same rows reach the per-grid top-k
     # window either way — guide §1.2: don't compute things twice.
-    cand1 = (
-        ranked.filter(F.col("prnk") <= max(IVF_PROBE_GRID))
-        .select(F.col("vec_id").alias("query_id"), "cell", "prnk")
-        .join(assign, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", "prnk")
+    cand1 = ivf_candidates(
+        ivf_probe_ranks(vec_seed_d2)
+        .filter(F.col("prnk") <= max(IVF_PROBE_GRID))
+        .select(F.col("vec_id").alias("query_id"), "cell", "prnk"),
+        nearest_cell(vec_seed_d2),
+        "prnk",
     )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    n = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ne"))
-    scored1 = (
-        cand1.join(F.broadcast(q), "query_id")
-        .join(n, "neighbor_id")
-        .select("query_id", "neighbor_id", "prnk", F.round(qcosine("qe", "ne"), 6).alias("sim"))
-    )
+    scored1 = cosine_rerank(emb, cand1, "prnk")
     scored = scored1.select(
         "query_id",
         "neighbor_id",
@@ -1607,7 +1590,7 @@ def ivf_probe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.array(*[F.lit(p) for p in IVF_PROBE_GRID])).alias("n_probes"),
     ).filter(F.col("prnk") <= F.col("n_probes")).drop("prnk")
     cand = scored.select("n_probes", "query_id", "neighbor_id")
-    tw = Window.partitionBy("n_probes", "query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
+    tw = sim_window("n_probes", "query_id")
     topk = scored.withColumn("rnk", F.row_number().over(tw)).filter(F.col("rnk") <= TOP_K)
     exact = cached(ann_brute_topk(spark, sf_dir).select("query_id", "neighbor_id"))
     hits = topk.join(exact, ["query_id", "neighbor_id"], "left_semi")
@@ -1744,23 +1727,21 @@ PQ_M = 4                 # subspaces
 PQ_SUBDIM = DIM // PQ_M  # dims per subspace codeword
 
 
+def _pq_split(col: str) -> Column:
+    """posexplode of the quantized array `col` into its PQ_M
+    (m, subvector) pairs."""
+    return F.posexplode(
+        F.array(*[F.slice(col, m * PQ_SUBDIM + 1, PQ_SUBDIM) for m in range(PQ_M)])
+    )
+
+
 def _pq_subspace_dists(emb_q: DataFrame, seeds: DataFrame) -> DataFrame:
     """(vec_id, m, cell, d2): exact int64 distance from every vector's
     m-th subvector to every codeword of subspace m. Shared by the PQ
     encoder (argmin per (vec, m)) and the ADC search (query-side
     distance tables)."""
-    vec_sub = emb_q.select(
-        "vec_id",
-        F.posexplode(
-            F.array(*[F.slice("vq", m * PQ_SUBDIM + 1, PQ_SUBDIM) for m in range(PQ_M)])
-        ).alias("m", "sub"),
-    )
-    seed_sub = seeds.select(
-        "cell",
-        F.posexplode(
-            F.array(*[F.slice("sq", m * PQ_SUBDIM + 1, PQ_SUBDIM) for m in range(PQ_M)])
-        ).alias("m", "ssub"),
-    )
+    vec_sub = emb_q.select("vec_id", _pq_split("vq").alias("m", "sub"))
+    seed_sub = seeds.select("cell", _pq_split("sq").alias("m", "ssub"))
     d2 = _d2_fold("sub", "ssub")
     return vec_sub.join(F.broadcast(seed_sub), "m").select(
         "vec_id", "m", "cell", d2.alias("d2")
@@ -1934,12 +1915,7 @@ def _pq_hier_codes(emb_q: DataFrame) -> DataFrame:
     seeds = quantizer_seeds(emb_q)
     branches = hier_branches(emb_q)
     barr = branches.agg(F.collect_list(F.struct("branch", "bq")).alias("bs"))
-    seed_sub = seeds.select(
-        "cell",
-        F.posexplode(
-            F.array(*[F.slice("sq", m * PQ_SUBDIM + 1, PQ_SUBDIM) for m in range(PQ_M)])
-        ).alias("m", "ssub"),
-    )
+    seed_sub = seeds.select("cell", _pq_split("sq").alias("m", "ssub"))
 
     def sub_route(vec_col: str) -> F.Column:
         # distances from this row's m-th subvector to every branch's
@@ -1965,12 +1941,7 @@ def _pq_hier_codes(emb_q: DataFrame) -> DataFrame:
     bcells = seeds_bm.groupBy("m", "branch").agg(
         F.collect_list(F.struct("cell", "ssub")).alias("cells")
     )
-    vec_sub = emb_q.select(
-        "vec_id",
-        F.posexplode(
-            F.array(*[F.slice("vq", m * PQ_SUBDIM + 1, PQ_SUBDIM) for m in range(PQ_M)])
-        ).alias("m", "sub"),
-    )
+    vec_sub = emb_q.select("vec_id", _pq_split("vq").alias("m", "sub"))
     routed = (
         vec_sub.join(F.broadcast(barr), F.lit(True))
         .select(
@@ -2132,8 +2103,6 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast equi-join on (subspace, codeword); per-(query, candidate)
     sums have exactly M exact-int64 terms, so ranking is
     engine-identical with the (distance, neighbor) tiebreak."""
-    from pyspark.sql import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
     quant = quantize_fp()
     emb_q = emb.select("vec_id", quant.alias("vq"))
@@ -2147,23 +2116,9 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qtab = dists.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), "m", "cell", F.col("d2").alias("qd2")
     )
-    adc = (
-        codes.join(F.broadcast(qtab), ["m", "cell"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("qd2").alias("adc"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
-    return (
-        adc.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                F.sqrt(F.col("adc").cast("double")) / F.lit(float(CENTROID_SCALE)), 6
-            ).alias("adc_dist"),
-            "rnk",
+    return adc_topk(
+        codes.join(F.broadcast(qtab), ["m", "cell"]).filter(
+            F.col("neighbor_id") != F.col("query_id")
         )
     )
 
@@ -2226,8 +2181,6 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a broadcast equi-join on (query, subspace, codeword) at
     (queries × M × ≈√N) rows; the candidate join shuffles on the
     uniform cell key. No corpus self-join, no explode fan-out."""
-    from pyspark.sql import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
     quant = quantize_fp()
     emb_q = emb.select("vec_id", quant.alias("vq"))
@@ -2240,19 +2193,7 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min(F.struct("d2f", "cell")).alias("a"))
         .select("vec_id", F.col("a.cell").alias("cell"))
     )
-    n_cells = seeds.agg(F.count("*").alias("n_cells"))
-    probe_k = F.greatest(
-        F.lit(IVF_PROBES_MIN).cast("long"),
-        F.ceil(F.sqrt(F.col("n_cells").cast("double"))),
-    )
-    pw = Window.partitionBy("vec_id").orderBy(F.asc("d2f"), F.asc("cell"))
-    probes = (
-        full.filter(F.col("vec_id") < N_QUERIES)
-        .withColumn("prnk", F.row_number().over(pw))
-        .join(F.broadcast(n_cells), F.lit(True))
-        .filter(F.col("prnk") <= probe_k)
-        .select(F.col("vec_id").alias("query_id"), "cell")
-    )
+    probes = ivf_probes(full, seeds, "d2f")
     # fine: PQ codes for the corpus, ADC tables for the queries
     codes = (
         dists.groupBy("vec_id", "m")
@@ -2262,29 +2203,10 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qtab = dists.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), "m", F.col("cell").alias("cw"), F.col("d2").alias("qd2")
     )
-    cand = (
-        probes.join(assign.withColumnRenamed("vec_id", "neighbor_id"), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-    )
-    adc = (
-        cand.join(codes, "neighbor_id")
+    return adc_topk(
+        ivf_candidates(probes, assign)
+        .join(codes, "neighbor_id")
         .join(F.broadcast(qtab), ["query_id", "m", "cw"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("qd2").alias("adc"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
-    return (
-        adc.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                F.sqrt(F.col("adc").cast("double")) / F.lit(float(CENTROID_SCALE)), 6
-            ).alias("adc_dist"),
-            "rnk",
-        )
     )
 
 
@@ -2371,8 +2293,6 @@ def ann_hivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles candidates on neighbor_id against the M-row code relation
     and broadcasts the Q·M·√N query tables; no corpus self-join, no
     explode beyond the M-subspace posexplode."""
-    from pyspark.sql import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
     emb_q = emb.select("vec_id", quantize_fp().alias("vq"))
     seeds = quantizer_seeds(emb_q)
@@ -2382,19 +2302,7 @@ def ann_hivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min(F.struct("d2", "cell")).alias("a"))
         .select("vec_id", F.col("a.cell").alias("cell"))
     )
-    n_cells = seeds.agg(F.count("*").alias("n_cells"))
-    probe_k = F.greatest(
-        F.lit(IVF_PROBES_MIN).cast("long"),
-        F.ceil(F.sqrt(F.col("n_cells").cast("double"))),
-    )
-    pw = Window.partitionBy("vec_id").orderBy(F.asc("d2"), F.asc("cell"))
-    probes = (
-        cand_seed.filter(F.col("vec_id") < N_QUERIES)
-        .withColumn("prnk", F.row_number().over(pw))
-        .join(F.broadcast(n_cells), F.lit(True))
-        .filter(F.col("prnk") <= probe_k)
-        .select(F.col("vec_id").alias("query_id"), "cell")
-    )
+    probes = ivf_probes(cand_seed, seeds)
     codes = _pq_hier_codes(emb_q).select(
         F.col("vec_id").alias("neighbor_id"), "m", F.col("cell").alias("cw")
     )
@@ -2404,29 +2312,10 @@ def ann_hivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), "m",
         F.col("cell").alias("cw"), F.col("d2").alias("qd2"),
     )
-    cand = (
-        probes.join(assign.withColumnRenamed("vec_id", "neighbor_id"), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-    )
-    adc = (
-        cand.join(codes, "neighbor_id")
+    return adc_topk(
+        ivf_candidates(probes, assign)
+        .join(codes, "neighbor_id")
         .join(F.broadcast(qtab), ["query_id", "m", "cw"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("qd2").alias("adc"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
-    return (
-        adc.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                F.sqrt(F.col("adc").cast("double")) / F.lit(float(CENTROID_SCALE)), 6
-            ).alias("adc_dist"),
-            "rnk",
-        )
     )
 
 
@@ -2507,8 +2396,6 @@ KMEANS_CELLS = 8
 
 def _lloyd_argmin(dists: DataFrame) -> DataFrame:
     """Nearest cell per vector — deterministic (dist, cell) tiebreak."""
-    from pyspark.sql import Window
-
     w = Window.partitionBy("vec_id").orderBy("dist_sq", "cell")
     return (
         dists.withColumn("rn", F.row_number().over(w))
@@ -2657,8 +2544,6 @@ def kmeans_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     trick as the covariance snap). 100 TB: adds one window over the
     K-bounded per-vector distance rows and one groupBy(cell) on top of
     the Lloyd core's cost."""
-    from pyspark.sql import Window
-
     _, dists2 = _lloyd_two_rounds(spark, sf_dir)
     w = Window.partitionBy("vec_id").orderBy("dist_sq", "cell")
     ranked = dists2.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 2)
@@ -2748,8 +2633,6 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle threshold compare is unchanged; measured 3.5x on the
     pair stage at sf0.1 (higher-order folds are interpreted, not
     codegen'd — minimizing per-pair folds is the lever)."""
-    from pyspark.sql import Window
-
     from capstone_etl_spark.functions.vectors import dot_long, quantized_cosine
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -2761,18 +2644,8 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and min(struct(d2, cell)) is the same (d2, cell)-lexicographic
     # argmin the oracle's ROW_NUMBER computes — no window, one groupBy
     # of N×cells rows.
-    quant = quantize_fp()
-    emb_q = emb.select("vec_id", quant.alias("vq"))
-    seeds = quantizer_seeds(emb_q)
-    d2_col = _d2_fold("vq", "sq")
-    assign = (
-        emb_q.join(F.broadcast(seeds), F.lit(True))
-        .select("vec_id", "cell", d2_col.alias("d2"))
-        .groupBy("vec_id")
-        .agg(F.min(F.struct("d2", "cell")).alias("m"))
-        .select("vec_id", F.col("m.cell").alias("cell"))
-        .transform(cached)
-    )
+    emb_q = emb.select("vec_id", quantize_fp().alias("vq"))
+    assign = cached(nearest_cell(ivf_seed_d2(emb_q, quantizer_seeds(emb_q))))
     # pair stage rides the ALREADY-QUANTIZED vectors: the verify
     # threshold compares the quantized-integer cosine (exact BIGINT
     # folds + one sqrt/mul/div — bit-reproducible in any engine build;
@@ -2961,8 +2834,6 @@ def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiebreak, so cross-engine last-ulp drift cannot reorder. The window
     partitions on label — bounded per-label population, never a global
     window."""
-    from pyspark.sql import Window
-
     d = label_centroid_assignment(spark, sf_dir)
     w = Window.partitionBy("label").orderBy(F.desc("dist_to_centroid"), F.asc("vec_id"))
     return (
@@ -3010,8 +2881,6 @@ def matryoshka_recall(
     mode, while DuckDB's IEEE division yields inf/NaN) — both engines
     therefore pin zero-norm similarity to 0.0 (coalesce over the
     guarded cosine here, COALESCE in the oracle)."""
-    from pyspark.sql import Window
-
     td = TRUNC_DIM if trunc_dim is None else trunc_dim
     emb = load_table(spark, sf_dir, "embeddings")
 
@@ -3020,7 +2889,6 @@ def matryoshka_recall(
             F.col("vec_id").alias("query_id"), qe_col.alias("qe")
         )
         n = emb.select(F.col("vec_id").alias("neighbor_id"), ne_col.alias("ne"))
-        w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
         return (
             F.broadcast(q)
             .crossJoin(n)
@@ -3030,7 +2898,7 @@ def matryoshka_recall(
                 "neighbor_id",
                 F.round(F.coalesce(qcosine("qe", "ne"), F.lit(0.0)), 6).alias("sim"),
             )
-            .withColumn("rnk", F.row_number().over(w))
+            .withColumn("rnk", F.row_number().over(sim_window("query_id")))
             .filter(F.col("rnk") <= TOP_K)
             .select("query_id", "neighbor_id")
         )
@@ -3487,8 +3355,6 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     label filter drops same-class candidates BEFORE the rerank join
     touches the vectors. Ranking keys on the rounded similarity with a
     neighbor_id tiebreak, same determinism contract as the ANN family."""
-    from pyspark.sql import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
     labels = emb.select("vec_id", "label")
     buckets = lsh_buckets(emb).transform(cached)
@@ -3533,11 +3399,8 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(qcosine("qe", "ne"), 6).alias("sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "query_label", "neighbor_id", "neighbor_label", "sim", "rnk")
+    return sim_topk(
+        scored, ("query_id", "query_label", "neighbor_id", "neighbor_label", "sim", "rnk")
     )
 
 

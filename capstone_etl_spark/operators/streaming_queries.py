@@ -25,6 +25,14 @@ hand-written when its stream form needs more than the drain: static
 index legs, a deploy-time literal from `staged`, a watermark, or state
 that is not the batch accumulation.
 
+The IVF-family twins (serving, mining, admission, index balance) keep
+their index as static legs and route, probe and rank through the IVF
+steps in `similarity` that their batch forms call too: `hier_routed` /
+`hier_cell_inrow` (in-row two-level routing), `probe_cells_inrow` (the
+in-row form of the batch probe window), `ivf_candidates` (inverted-list
+lookup), `sim_topk` / `adc_topk` (the ranked tails). A probe, route or
+rank rule is therefore written once for batch and stream.
+
 Every stream twin is checked against its batch oracle: `BATCH_TWIN`
 (derived from the specs plus the hand-written twins) maps it to the
 batch query by name. `ORACLE_SQL` holds only the stream queries with
@@ -42,7 +50,30 @@ from pyspark.sql import functions as F
 
 from capstone_etl_spark.functions.text import tokenize_sql
 from capstone_etl_spark.operators import dedup, events, privacy, quality, textstats
-from capstone_etl_spark.operators.similarity import _d2_fold
+from capstone_etl_spark.operators.similarity import (
+    N_QUERIES,
+    PQ_SUBDIM,
+    SEMDEDUP_THRESHOLD,
+    _bitext_capped_pairs,
+    _bitext_verdicts,
+    _d2_fold,
+    _hier_cand_seed,
+    _pq_hier_codes,
+    _pq_split,
+    adc_topk,
+    hier_assign,
+    hier_branch_cells_row,
+    hier_cell_inrow,
+    hier_routed,
+    ivf_candidates,
+    ivf_seed_d2,
+    nearest_cell,
+    probe_cells_inrow,
+    qcosine,
+    quantize_fp,
+    quantizer_seeds,
+    sim_topk,
+)
 from capstone_etl_spark.session import cached, checkpoint_truncate
 from capstone_etl_spark.sources import tables
 from capstone_etl_spark.streaming import (
@@ -664,56 +695,23 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def stream_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN SERVING at ingest — the batch/stream twin for the IVF index
-    (similarity.ann_ivf_topk): the quantizer seeds, the cell-assigned
-    corpus, and the raw embeddings are STATIC relations (in production
-    the published index artifacts); query vectors stream in, and each
-    arriving row picks its probe cells, joins the inverted lists, and
-    reranks by exact cosine — the lookup path an online retrieval tier
-    runs against the batch-built index.
-
-    The streaming trick: the batch probe selection is a row_number
-    window over (d2, cell) — windows don't exist on streams, so probe
-    selection here is PER-ROW column math instead: the ≈√N seed table
-    rides in as a 1-row collect_list broadcast, each arriving vector
-    computes all seed distances with one zip_with fold, array_sort on
-    (d2, cell) structs reproduces the window's exact ordering, and
-    slice(…, probe_k) takes the probe set — no state at all. The
-    scored candidates flow through append-mode stream-static joins;
-    the TOP_K ranking runs on the drained candidate table (bounded by
-    queries × probed cells' population). Oracle: the batch
-    ANN_IVF_TOPK_SQL verbatim."""
-    from capstone_etl_spark.operators.similarity import qcosine
-    from capstone_etl_spark.operators.similarity import (
-        IVF_PROBES_MIN,
-        N_QUERIES,
-        TOP_K,
-        quantize_fp,
-        quantizer_seeds,
-    )
-    from capstone_etl_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
+def _stream_cosine_topk(
+    spark: SparkSession,
+    sf_dir: str,
+    emb: DataFrame,
+    assign: DataFrame,
+    route: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """The cosine SERVING twin of an IVF index: query vectors stream in,
+    `route` attaches each arriving row's candidate cell array `cand`
+    and the seed count, the row probes in-row (probe_cells_inrow),
+    joins the static inverted lists `assign` (vec_id, cell) and reranks
+    by exact cosine through append-mode stream-static joins — no state.
+    The TOP_K ranking runs on the drained candidate table (bounded by
+    queries × probed cells' population)."""
     quant = quantize_fp()
-    emb_q = emb.select("vec_id", quant.alias("vq"))
-    seeds = quantizer_seeds(emb_q)
-    d2_col = _d2_fold("vq", "sq")
-    assign = _stream_static(
-        emb_q.join(F.broadcast(seeds), F.lit(True))
-        .select("vec_id", "cell", d2_col.alias("d2"))
-        .groupBy("vec_id")
-        .agg(F.min(F.struct("d2", "cell")).alias("m"))
-        .select(F.col("vec_id").alias("neighbor_id"), F.col("m.cell").alias("cell"))
-    )
     neigh = emb.select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ne")
-    )
-    seed_row = _stream_static(
-        seeds.agg(
-            F.collect_list(F.struct("cell", "sq")).alias("seeds"),
-            F.count("*").alias("n_cells"),
-        )
     )
 
     def transform(stream, staged):
@@ -722,35 +720,9 @@ def stream_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("embedding").alias("qe"),
             quant.alias("vq"),
         )
-        dists = F.array_sort(
-            F.transform(
-                "seeds",
-                lambda s: F.struct(
-                    _d2_fold("vq", s["sq"]).alias("d2"),
-                    s["cell"].alias("cell"),
-                ),
-            )
-        )
-        probes = (
-            arriving.join(F.broadcast(seed_row), F.lit(True))
-            .withColumn(
-                "pk",
-                F.greatest(
-                    F.lit(IVF_PROBES_MIN).cast("long"),
-                    F.ceil(F.sqrt(F.col("n_cells").cast("double"))),
-                ),
-            )
-            .withColumn("ds", dists)
-            .select(
-                "query_id",
-                "qe",
-                F.explode(F.expr("slice(ds, 1, pk)")).alias("p"),
-            )
-            .select("query_id", "qe", F.col("p.cell").alias("cell"))
-        )
+        probes = probe_cells_inrow(route(arriving), "query_id", "qe")
         return (
-            probes.join(assign, "cell")
-            .filter(F.col("query_id") != F.col("neighbor_id"))
+            ivf_candidates(probes, assign, "qe")
             .join(neigh, "neighbor_id")
             .select(
                 "query_id",
@@ -759,12 +731,40 @@ def stream_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    got = drain_staged(spark, sf_dir, "embeddings", transform, "append")
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        got.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id", "sim", "rnk")
+    return sim_topk(drain_staged(spark, sf_dir, "embeddings", transform, "append"))
+
+
+def _hier_probe_row(emb_q: DataFrame) -> DataFrame:
+    """hier_branch_cells_row with the seed count `n_cells` (the probe
+    count's input) — the serving twins' static 1-row artifact."""
+    n_cells = quantizer_seeds(emb_q).agg(F.count("*").alias("n_cells"))
+    return _stream_static(
+        hier_branch_cells_row(emb_q).join(F.broadcast(n_cells), F.lit(True))
+    )
+
+
+def stream_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ANN SERVING at ingest — the batch/stream twin for the IVF index
+    (similarity.ann_ivf_topk): the quantizer seeds, the cell-assigned
+    corpus, and the raw embeddings are STATIC relations (in production
+    the published index artifacts); each arriving query probes the
+    ≈√N seed list (one 1-row broadcast: every seed is a candidate
+    cell) and reranks its probed cells by exact cosine — the lookup
+    path an online retrieval tier runs against the batch-built index
+    (_stream_cosine_topk). Oracle: the batch ANN_IVF_TOPK_SQL
+    verbatim."""
+    emb = tables.load_table(spark, sf_dir, "embeddings")
+    emb_q = emb.select("vec_id", quantize_fp().alias("vq"))
+    seeds = quantizer_seeds(emb_q)
+    assign = _stream_static(nearest_cell(ivf_seed_d2(emb_q, seeds)))
+    seed_row = _stream_static(
+        seeds.agg(
+            F.collect_list(F.struct("cell", "sq")).alias("cand"),
+            F.count("*").alias("n_cells"),
+        )
+    )
+    return _stream_cosine_topk(
+        spark, sf_dir, emb, assign, lambda a: a.join(F.broadcast(seed_row), F.lit(True))
     )
 
 
@@ -774,99 +774,17 @@ def stream_ann_hivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hier_assign) and a 1-row branch→cells broadcast (each branch
     carries its second-level seeds as a nested array) are the static
     published artifacts; each arriving query routes to its
-    BRANCH_PROBES nearest branches, computes distances to ONLY those
-    branches' ≈B·N^(1/4) seeds and slices its probe set — all in-row
-    (array_sort over (d2, id) structs reproduces the batch tiebreaks),
-    zero streaming state. Candidates flow through append-mode
-    stream-static joins; top-k runs on the drained candidate table.
-    The per-query routing work drops from the flat serving twin's ≈√N
-    seed folds to ≈N^(1/4) + B·N^(1/4) — the same asymptotic win the
-    batch index measured (SCALE.md). Oracle: ANN_HIVF_TOPK_SQL
-    verbatim (the drained serving results equal the batch index
-    lookups)."""
-    from capstone_etl_spark.operators.similarity import qcosine
-    from capstone_etl_spark.operators.similarity import (
-        IVF_PROBES_MIN,
-        N_QUERIES,
-        TOP_K,
-        hier_assign,
-        hier_branch_cells_row,
-        hier_route_expr,
-        quantize_fp,
-        quantizer_seeds,
-    )
-    from capstone_etl_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    quant = quantize_fp()
-    emb_q = emb.select("vec_id", quant.alias("vq"))
-    assign = _stream_static(
-        hier_assign(emb_q).select(
-            F.col("vec_id").alias("neighbor_id"), "cell"
-        )
-    )
-    neigh = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ne")
-    )
-    # branch → second-level seed list, one nested 1-row broadcast
-    n_cells_row = quantizer_seeds(emb_q).agg(F.count("*").alias("n_cells"))
-    brow = _stream_static(
-        hier_branch_cells_row(emb_q).join(F.broadcast(n_cells_row), F.lit(True))
-    )
-
-    def transform(stream, staged):
-        arriving = stream.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qe"),
-            quant.alias("vq"),
-        )
-        route = hier_route_expr()
-        cand_cells = F.flatten(F.transform(F.col("route"), lambda r: r["cells"]))
-        ds = F.array_sort(
-            F.transform(
-                "cand",
-                lambda s: F.struct(
-                    _d2_fold("vq", s["sq"]).alias("d2"), s["cell"].alias("cell")
-                ),
-            )
-        )
-        probes = (
-            arriving.join(F.broadcast(brow), F.lit(True))
-            .withColumn(
-                "pk",
-                F.greatest(
-                    F.lit(IVF_PROBES_MIN).cast("long"),
-                    F.ceil(F.sqrt(F.col("n_cells").cast("double"))),
-                ),
-            )
-            .withColumn("route", route)
-            .withColumn("cand", cand_cells)
-            .withColumn("ds", ds)
-            .select(
-                "query_id",
-                "qe",
-                F.explode(F.expr("slice(ds, 1, pk)")).alias("p"),
-            )
-            .select("query_id", "qe", F.col("p.cell").alias("cell"))
-        )
-        return (
-            probes.join(assign, "cell")
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .join(neigh, "neighbor_id")
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.round(qcosine("qe", "ne"), 6).alias("sim"),
-            )
-        )
-
-    got = drain_staged(spark, sf_dir, "embeddings", transform, "append")
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        got.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id", "sim", "rnk")
-    )
+    BRANCH_PROBES nearest branches (hier_routed) and probes ONLY those
+    branches' ≈B·N^(1/4) seeds, all in-row. The per-query routing work
+    drops from the flat serving twin's ≈√N seed folds to ≈N^(1/4) +
+    B·N^(1/4) — the same asymptotic win the batch index measured
+    (SCALE.md). Oracle: ANN_HIVF_TOPK_SQL verbatim (the drained
+    serving results equal the batch index lookups)."""
+    emb = tables.load_table(spark, sf_dir, "embeddings")
+    emb_q = emb.select("vec_id", quantize_fp().alias("vq"))
+    assign = _stream_static(hier_assign(emb_q).select("vec_id", "cell"))
+    brow = _hier_probe_row(emb_q)
+    return _stream_cosine_topk(spark, sf_dir, emb, assign, lambda a: hier_routed(a, brow))
 
 
 def stream_ann_hivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -875,13 +793,12 @@ def stream_ann_hivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment, the per-subspace hier PQ codes and the (m, codeword)
     subvector table are STATIC relations (the published index
     artifacts — at 100 TB the codes ARE the corpus the serving tier
-    holds); arriving queries route in-row through the branch artifact
-    (stream_ann_hivf_topk's zero-state trick), probe their top-√cells
-    routed cells, and the stream-static joins emit one EXACT integer
-    per-(query, neighbor, subspace) ADC term into the append sink —
-    no state at all. The drained term table goes through the batch
-    operator's identical Σ_m / rank / TOP_K tail, so the oracle is
-    ANN_HIVF_PQ_TOPK_SQL verbatim.
+    holds); arriving queries route and probe in-row exactly as
+    stream_ann_hivf_topk does, and the stream-static joins emit one
+    EXACT integer per-(query, neighbor, subspace) ADC term into the
+    append sink — no state at all. The drained term table goes
+    through the batch operator's ADC ranking (adc_topk), so the oracle
+    is ANN_HIVF_PQ_TOPK_SQL verbatim.
 
     Scale: per-arrival work is one branch fold pass (≈N^(1/4) + the
     routed branches' seeds) plus M code-term lookups per candidate
@@ -889,87 +806,31 @@ def stream_ann_hivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured (decade-2 exponent 0.95 vs the flat 1.24, SCALE.md); the
     sink holds candidate×M bounded rows, and re-delivery cannot
     corrupt anything because nothing aggregates in-stream."""
-    from capstone_etl_spark.operators.similarity import (
-        CENTROID_SCALE,
-        IVF_PROBES_MIN,
-        N_QUERIES,
-        PQ_M,
-        PQ_SUBDIM,
-        TOP_K,
-        _pq_hier_codes,
-        hier_assign,
-        hier_branch_cells_row,
-        hier_route_expr,
-        quantize_fp,
-        quantizer_seeds,
-    )
-    from capstone_etl_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
+    emb = tables.load_table(spark, sf_dir, "embeddings")
     quant = quantize_fp()
     emb_q = emb.select("vec_id", quant.alias("vq"))
-    seeds = quantizer_seeds(emb_q)
-    assign = _stream_static(
-        hier_assign(emb_q).select(F.col("vec_id").alias("neighbor_id"), "cell")
-    )
+    assign = _stream_static(hier_assign(emb_q).select("vec_id", "cell"))
     # static code relation joined to its codeword subvectors ONCE:
     # (neighbor_id, m, ssub) is the compressed corpus the serving
     # tier actually stores
-    seed_sub = seeds.select(
-        F.col("cell").alias("cw"),
-        F.posexplode(
-            F.array(
-                *[F.slice("sq", m * PQ_SUBDIM + 1, PQ_SUBDIM) for m in range(PQ_M)]
-            )
-        ).alias("m", "ssub"),
+    seed_sub = quantizer_seeds(emb_q).select(
+        F.col("cell").alias("cw"), _pq_split("sq").alias("m", "ssub")
     )
     code_sub = _stream_static(
         _pq_hier_codes(emb_q)
         .select(F.col("vec_id").alias("neighbor_id"), "m", F.col("cell").alias("cw"))
         .join(seed_sub, ["m", "cw"])
     )
-    n_cells_row = seeds.agg(F.count("*").alias("n_cells"))
-    brow = _stream_static(
-        hier_branch_cells_row(emb_q).join(F.broadcast(n_cells_row), F.lit(True))
-    )
+    brow = _hier_probe_row(emb_q)
 
     def transform(stream, staged):
         arriving = stream.filter(F.col("vec_id") < N_QUERIES).select(
             F.col("vec_id").alias("query_id"), quant.alias("vq")
         )
-        route = hier_route_expr()
-        cand_cells = F.flatten(F.transform(F.col("route"), lambda r: r["cells"]))
-        ds = F.array_sort(
-            F.transform(
-                "cand",
-                lambda s: F.struct(
-                    _d2_fold("vq", s["sq"]).alias("d2"), s["cell"].alias("cell")
-                ),
-            )
-        )
-        probes = (
-            arriving.join(F.broadcast(brow), F.lit(True))
-            .withColumn(
-                "pk",
-                F.greatest(
-                    F.lit(IVF_PROBES_MIN).cast("long"),
-                    F.ceil(F.sqrt(F.col("n_cells").cast("double"))),
-                ),
-            )
-            .withColumn("route", route)
-            .withColumn("cand", cand_cells)
-            .withColumn("ds", ds)
-            .select(
-                "query_id",
-                "vq",
-                F.explode(F.expr("slice(ds, 1, pk)")).alias("p"),
-            )
-            .select("query_id", "vq", F.col("p.cell").alias("cell"))
-        )
+        probes = probe_cells_inrow(hier_routed(arriving, brow), "query_id", "vq")
         qsub = F.slice("vq", F.col("m") * PQ_SUBDIM + 1, PQ_SUBDIM)
         return (
-            probes.join(assign, "cell")
-            .filter(F.col("query_id") != F.col("neighbor_id"))
+            ivf_candidates(probes, assign, "vq")
             .join(code_sub, "neighbor_id")
             .select(
                 "query_id",
@@ -984,22 +845,9 @@ def stream_ann_hivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partition — at sf1 (4-core VM, 8 interleaved pairs) the sized
     # count read 16.2 -> 17.2 s median, trigger 1.46 -> 1.97 s — so
     # keep the session's shuffle parallelism (state_partitions=None)
-    got = drain_staged(
-        spark, sf_dir, "embeddings", transform, "append", state_partitions=None
-    )
-    adc = got.groupBy("query_id", "neighbor_id").agg(F.sum("qd2").alias("adc"))
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
-    return (
-        adc.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                F.sqrt(F.col("adc").cast("double")) / F.lit(float(CENTROID_SCALE)),
-                6,
-            ).alias("adc_dist"),
-            "rnk",
+    return adc_topk(
+        drain_staged(
+            spark, sf_dir, "embeddings", transform, "append", state_partitions=None
         )
     )
 
@@ -1009,8 +857,7 @@ def stream_bitext_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     source-side vectors arrive: the committed target-side index
     (hier_assign cells + raw vectors, static) is the published
     artifact; each arriving source vector routes to its cell in-row
-    (the stream_ann_hivf_topk trick — collected branch array, argmin
-    over routed seeds, zero state) and emits exact-cosine candidate
+    (hier_cell_inrow — zero state) and emits exact-cosine candidate
     pairs against its cell's target members through an append-mode
     stream-static join. The drained pair table IS the batch candidate
     relation (cell-bounded AND per-source top-C capped — the source
@@ -1018,19 +865,7 @@ def stream_bitext_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     mutual-argmax verdict assembly runs the batch code on it and the
     mined set equals the batch miner row-for-row. Oracle:
     BITEXT_MINING_SQL verbatim."""
-    from capstone_etl_spark.operators.similarity import (
-        BITEXT_K,
-        BITEXT_MARGIN,
-        _bitext_capped_pairs,
-        hier_assign,
-        hier_best_cell_expr,
-        hier_branch_cells_row,
-        hier_route_expr,
-        quantize_fp,
-    )
-    from capstone_etl_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
+    emb = tables.load_table(spark, sf_dir, "embeddings")
     quant = quantize_fp()
     emb_q = emb.select("vec_id", quant.alias("vq"))
     assign = _stream_static(hier_assign(emb_q).select("vec_id", "cell"))
@@ -1047,9 +882,6 @@ def stream_bitext_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("embedding").alias("qe"),
             quant.alias("vq"),
         )
-        route = hier_route_expr()
-        cand_cells = F.flatten(F.transform(F.col("route"), lambda r: r["cells"]))
-        best_cell = hier_best_cell_expr()
         # r11: each arriving source emits only its top-BITEXT_C
         # within-cell cosines (_bitext_capped_pairs — in-row scoring
         # against the static per-cell target arrays), so the memory
@@ -1057,82 +889,29 @@ def stream_bitext_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         # FULL within-cell pair relation (≈N^1.5 rows) and measured
         # decade-2 exponent 1.41 at sf10 — the sink volume, not the
         # mining, was the scale wall.
-        routed = (
-            arriving.join(F.broadcast(brow), F.lit(True))
-            .withColumn("route", route)
-            .withColumn("cand", cand_cells)
-            .select("src_id", "qe", best_cell.alias("cell"))
-        )
-        return _bitext_capped_pairs(routed, tgt)
+        return _bitext_capped_pairs(hier_cell_inrow(arriving, brow, "src_id", "qe"), tgt)
 
     # truncate the sink lineage: the assembly joins the pair table
     # with its own per-endpoint aggregates (the sink-self-join
     # conflicting-reference class)
-    pairs = checkpoint_truncate(
-        drain_staged(spark, sf_dir, "embeddings", transform, "append")
-    )
-
-    # batch margin / mutual-argmax verdict assembly on the drained
-    # candidate relation
-    dec = lambda c: F.col(c).cast("decimal(18,6)")  # noqa: E731
-    wx = Window.partitionBy("src_id").orderBy(F.desc("sim"), F.asc("tgt_id"))
-    wy = Window.partitionBy("tgt_id").orderBy(F.desc("sim"), F.asc("src_id"))
-    avg_x = (
-        pairs.withColumn("rk", F.row_number().over(wx))
-        .filter(F.col("rk") <= BITEXT_K)
-        .groupBy("src_id")
-        .agg((F.sum(dec("sim")).cast("double") / F.count("*")).alias("ax"))
-    )
-    avg_y = (
-        pairs.withColumn("rk", F.row_number().over(wy))
-        .filter(F.col("rk") <= BITEXT_K)
-        .groupBy("tgt_id")
-        .agg((F.sum(dec("sim")).cast("double") / F.count("*")).alias("ay"))
-    )
-    den = F.lit(0.5) * (F.col("ax") + F.col("ay"))
-    scored = (
-        pairs.join(avg_x, "src_id")
-        .join(avg_y, "tgt_id")
-        .withColumn("margin", F.when(den > 0, F.col("sim") / den))
-        .filter(F.col("margin") >= BITEXT_MARGIN)
-    )
-    mx = Window.partitionBy("src_id").orderBy(
-        F.desc("margin"), F.desc("sim"), F.asc("tgt_id")
-    )
-    my = Window.partitionBy("tgt_id").orderBy(
-        F.desc("margin"), F.desc("sim"), F.asc("src_id")
-    )
-    return (
-        scored.withColumn("rx", F.row_number().over(mx))
-        .withColumn("ry", F.row_number().over(my))
-        .filter((F.col("rx") == 1) & (F.col("ry") == 1))
-        .select("src_id", "tgt_id", "sim", F.round("margin", 6).alias("margin"))
+    return _bitext_verdicts(
+        checkpoint_truncate(drain_staged(spark, sf_dir, "embeddings", transform, "append"))
     )
 
 
 def stream_semantic_dedup_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic near-dup ADMISSION at ingest on the two-level index:
-    each arriving vector routes to its cell in-row (zero streaming
-    state) and checks itself against the committed corpus's LOWER-id
-    cell members by exact cosine through an append-mode stream-static
-    join — the SemDeDup keep-one rule evaluated as vectors land. The
-    drained dup relation left-joins the static assignment into the
-    batch output shape, so the admitted set equals the batch
-    semantic_dedup_hier row-for-row (same oracle). This is
-    stream_dedup_incremental's embedding-space sibling — the admission
-    gate an embedding-deduped 100 TB corpus runs at its front door."""
-    from capstone_etl_spark.operators.similarity import qcosine
-    from capstone_etl_spark.operators.similarity import (
-        SEMDEDUP_THRESHOLD,
-        hier_assign,
-        hier_best_cell_expr,
-        hier_branch_cells_row,
-        hier_route_expr,
-        quantize_fp,
-    )
-    from capstone_etl_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
+    each arriving vector routes to its cell in-row (hier_cell_inrow —
+    zero streaming state) and checks itself against the committed
+    corpus's LOWER-id cell members by exact cosine through an
+    append-mode stream-static join — the SemDeDup keep-one rule
+    evaluated as vectors land. The drained dup relation left-joins the
+    static assignment into the batch output shape, so the admitted set
+    equals the batch semantic_dedup_hier row-for-row (same oracle).
+    This is stream_dedup_incremental's embedding-space sibling — the
+    admission gate an embedding-deduped 100 TB corpus runs at its
+    front door."""
+    emb = tables.load_table(spark, sf_dir, "embeddings")
     quant = quantize_fp()
     emb_q = emb.select("vec_id", quant.alias("vq"))
     assign = _stream_static(hier_assign(emb_q).select("vec_id", "cell"))
@@ -1147,21 +926,22 @@ def stream_semantic_dedup_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("embedding").alias("qe"),
             quant.alias("vq"),
         )
-        route = hier_route_expr()
-        cand_cells = F.flatten(F.transform(F.col("route"), lambda r: r["cells"]))
-        best_cell = hier_best_cell_expr()
         return (
-            arriving.join(F.broadcast(brow), F.lit(True))
-            .withColumn("route", route)
-            .withColumn("cand", cand_cells)
-            .select("vec_b", "qe", best_cell.alias("cell"))
+            hier_cell_inrow(arriving, brow, "vec_b", "qe")
             .join(members, "cell")
             .filter(F.col("vec_a") < F.col("vec_b"))
             .filter(qcosine("qe", "ne") >= SEMDEDUP_THRESHOLD)
             .select("vec_b", "vec_a")
         )
 
-    got = drain_staged(spark, sf_dir, "embeddings", transform, "append")
+    # stateless, and its per-trigger work is the within-cell cosine join,
+    # which the sized state store (1 partition) runs on one task: at sf1
+    # (4-core VM, 8 interleaved pairs) the sized count read 263.8 s vs
+    # 158.5 s median (trigger 247.8 vs 144.6 s, slower in 8/8 pairs), so
+    # keep the session's shuffle parallelism (state_partitions=None)
+    got = drain_staged(
+        spark, sf_dir, "embeddings", transform, "append", state_partitions=None
+    )
     dup = got.groupBy("vec_b").agg(F.min("vec_a").alias("dup_of"))
     return assign.join(dup, assign.vec_id == dup.vec_b, "left").select(
         "vec_id", "cell", F.col("dup_of").isNull().alias("keep"), "dup_of"
@@ -1171,39 +951,22 @@ def stream_semantic_dedup_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_hivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INDEX MAINTENANCE on the two-level quantizer — stream_ivf_assign's
     round-9 sibling: vectors arrive, each routes to its cell entirely
-    in-row (branch array → routed seeds → argmin; ≈N^(1/4)+B·N^(1/4)
-    folds per vector instead of the flat twin's ≈√N), and the
-    complete-mode per-cell population table is the live balance
-    dashboard for the hierarchical index. Per-cell populations merge
-    by addition, so drained it equals the batch hivf_cell_balance
-    exactly (shared _cell_balance_tail + shared oracle) — the
-    share/cap audit a 100 TB deployment watches while shards of
-    vectors land."""
+    in-row (hier_cell_inrow: branch array → routed seeds → argmin;
+    ≈N^(1/4)+B·N^(1/4) folds per vector instead of the flat twin's
+    ≈√N), and the complete-mode per-cell population table is the live
+    balance dashboard for the hierarchical index. Per-cell populations
+    merge by addition, so drained it equals the batch
+    hivf_cell_balance exactly (shared _cell_balance_tail + shared
+    oracle) — the share/cap audit a 100 TB deployment watches while
+    shards of vectors land."""
     from capstone_etl_spark.operators.scaleaudit import _cell_balance_tail
-    from capstone_etl_spark.operators.similarity import (
-        hier_best_cell_expr,
-        hier_branch_cells_row,
-        hier_route_expr,
-        quantize_fp,
-    )
-    from capstone_etl_spark.sources.tables import load_table
 
-    emb = load_table(spark, sf_dir, "embeddings")
+    emb = tables.load_table(spark, sf_dir, "embeddings")
     quant = quantize_fp()
-    emb_q = emb.select("vec_id", quant.alias("vq"))
-    brow = _stream_static(hier_branch_cells_row(emb_q))
+    brow = _stream_static(hier_branch_cells_row(emb.select("vec_id", quant.alias("vq"))))
 
     def transform(stream, staged):
-        route = hier_route_expr()
-        cand_cells = F.flatten(F.transform(F.col("route"), lambda r: r["cells"]))
-        best_cell = hier_best_cell_expr()
-        assigned = (
-            stream.select(quant.alias("vq"))
-            .join(F.broadcast(brow), F.lit(True))
-            .withColumn("route", route)
-            .withColumn("cand", cand_cells)
-            .select(best_cell.alias("cell"))
-        )
+        assigned = hier_cell_inrow(stream.select(quant.alias("vq")), brow)
         return assigned.groupBy("cell").agg(F.count("*").cast("long").alias("pop"))
 
     snap = drain_staged(spark, sf_dir, "embeddings", transform, "complete")
@@ -1228,7 +991,6 @@ def stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     care). The share/cap columns attach in the final batch projection
     over the drained ≈√N-row table."""
     from capstone_etl_spark.operators.scaleaudit import _cell_balance_tail
-    from capstone_etl_spark.operators.similarity import quantize_fp, quantizer_seeds
     from capstone_etl_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1985,10 +1747,10 @@ def stream_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcastable row carrying every branch with its second-level seed
     list) and the cell-assigned base members are STATIC relations (the
     published index artifacts); delta vectors arrive as a stream, each
-    one routes to its base cell with PER-ROW column math (the
-    stream_ann_hivf trick — hier_route_expr picks the BRANCH_PROBES
-    nearest branches in-row, then an integer argmin over the routed
-    branches' flattened cell lists), and the stream-static cell join
+    one routes to its base cell with PER-ROW column math
+    (hier_cell_inrow — the BRANCH_PROBES nearest branches in-row, then
+    an integer argmin over the routed branches' cell lists), and the
+    stream-static cell join
     emits (arrival, base-member) vote candidates keyed by the EXACT
     integer squared-L2 distance in APPEND mode — no state at all, no
     float anywhere in the rank path (the family's r11 discipline).
@@ -2002,15 +1764,6 @@ def stream_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-stream, so re-delivery cannot corrupt state (there is none) and
     the sink is verdict-relevant rows only."""
     from capstone_etl_spark.operators.dedup import _is_delta
-    from capstone_etl_spark.operators.similarity import (
-        BRANCH_PROBES,
-        _hier_cand_seed,
-        hier_assign,
-        hier_best_cell_expr,
-        hier_branch_cells_row,
-        hier_route_expr,
-        quantize_fp,
-    )
     from capstone_etl_spark.operators.valuation import (
         NOISE_K,
         NOISE_MIN_VOTES,
@@ -2038,23 +1791,12 @@ def stream_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def transform(stream, staged):
-        routed = (
-            stream.filter(_is_delta(F.col("vec_id")))
-            .select(
-                F.col("vec_id").alias("vec_a"),
-                F.col("label").alias("la"),
-                quant.alias("vq"),
-            )
-            .join(F.broadcast(index_row), F.lit(True))
-            .withColumn("route", hier_route_expr(BRANCH_PROBES))
-            .withColumn("cand", F.flatten(F.transform("route", lambda r: r["cells"])))
-            .select(
-                "vec_a",
-                F.col("vq").alias("qa"),
-                "la",
-                hier_best_cell_expr().alias("cell"),
-            )
+        arriving = stream.filter(_is_delta(F.col("vec_id"))).select(
+            F.col("vec_id").alias("vec_a"),
+            F.col("label").alias("la"),
+            quant.alias("vq"),
         )
+        routed = hier_cell_inrow(arriving, index_row, "vec_a", F.col("vq").alias("qa"), "la")
         return routed.join(members, "cell").select(
             "vec_a",
             "vec_b",
@@ -2083,13 +1825,9 @@ def stream_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # delta rows with their routed cells, recomputed batch-side for
     # the left join (cheap: |delta| rows against the hier index)
-    delta_rows = (
+    delta_rows = nearest_cell(
         _hier_cand_seed(emb_q.filter(_is_delta(F.col("vec_id"))), index_q=base_q)
-        .groupBy("vec_id")
-        .agg(F.min(F.struct("d2", "cell")).alias("m"))
-        .select("vec_id", F.col("m.cell").alias("cell"))
-        .join(emb.select("vec_id", "label"), "vec_id")
-    )
+    ).join(emb.select("vec_id", "label"), "vec_id")
     out = delta_rows.join(votes, "vec_id", "left").select(
         "vec_id", "label", "cell", *_noise_verdict_cols()
     )
@@ -2184,7 +1922,6 @@ def stream_coreset_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     saw the whole corpus), so the oracle is CORESET_COVERAGE_AUDIT_SQL
     verbatim."""
     from capstone_etl_spark.functions.vectors import dot_long
-    from capstone_etl_spark.operators.similarity import quantize_fp
     from capstone_etl_spark.operators.valuation import _kcenter_select
     from capstone_etl_spark.sources.tables import load_table
 

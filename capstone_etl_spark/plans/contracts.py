@@ -339,7 +339,7 @@ ALLOWED_CARTESIAN: dict[str, str] = {
     "ann_hivf_topk": (
         "1-row corpus-stats / min-hash / probe-count broadcasts + the "
         "1-row collected ~N^(1/4) branch-array broadcast that routes "
-        "every vector in-row (similarity._hivf_scored); the only "
+        "every vector in-row (similarity._hier_cand_seed); the only "
         "Generate is the bounded BRANCH_PROBES=2 route explode"
     ),
     "hivf_cell_medoids": (

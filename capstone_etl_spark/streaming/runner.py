@@ -55,12 +55,14 @@ def run_to_memory(
     sdf: DataFrame,
     checkpoint_dir: str,
     output_mode: str = "complete",
-    name: str | None = None,
     once: bool = False,
     state_partitions: int | None = STATE_PARTITIONS,
 ) -> DataFrame:
     """Start sdf → memory sink, await termination, return the sink
-    table. output_mode: 'complete' for aggregations, 'append' for
+    table. The sink's temp view is dropped on the way out, also on a
+    timeout (the returned frame keeps the sink's rows; the catalog does
+    not), so a session's drains leave no `mem_sink_N` views behind.
+    output_mode: 'complete' for aggregations, 'append' for
     dedup/map-only streams. Default trigger is availableNow (drain a
     BOUNDED source and stop); pass once=True for UNBOUNDED sources
     (rate/Kafka) where "everything available" never ends — one
@@ -85,7 +87,7 @@ def run_to_memory(
     # tools/profile_queries.py) raise it via the environment so a
     # legitimately-bigger drain isn't misread as a hang
     timeout_sec = env_int("SPARK_GRAFT_STREAM_TIMEOUT_SEC", STREAM_TIMEOUT_SEC, 1)
-    qname = name or f"mem_sink_{next(_COUNTER)}"
+    qname = f"mem_sink_{next(_COUNTER)}"
     writer = (
         sdf.writeStream.format("memory")
         .queryName(qname)
@@ -101,13 +103,14 @@ def run_to_memory(
         try:
             if not q.awaitTermination(timeout_sec):
                 raise TimeoutError(f"streaming query {qname} exceeded {timeout_sec}s")
+            return spark.table(qname)
         finally:
             if q.isActive:
                 q.stop()
+            spark.catalog.dropTempView(qname)
     finally:
         if state_partitions:
             spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(qname)
 
 
 def sized_state_partitions(staged_bytes: int, advisory: int, ceiling: int) -> int:

@@ -359,6 +359,18 @@ EMB_NAMES = [
     # → shap NULL for every row; all pairs at cosine 1 → keep-one and
     # vote ties must resolve identically through the shared pairs
     "embedding_curation_manifest",
+    # the stream twins route and probe IN-ROW (array_sort over (bd2,
+    # branch) / (d2, cell) structs) where their batch forms use
+    # windows and min(struct): with every distance tied, the in-row
+    # tiebreaks must pick the batch oracle's branches, cells and ranks
+    "stream_ann_topk",
+    "stream_ann_hivf_topk",
+    "stream_ann_hivf_pq_topk",
+    "stream_bitext_mining",
+    "stream_semantic_dedup_hier",
+    "stream_ivf_assign",
+    "stream_hivf_cell_balance",
+    "stream_label_noise",
 ]
 
 

@@ -122,15 +122,14 @@ def test_streaming_checkpoint_incremental_restart(spark, tmp_path):
     staged = stage_events(spark, sf, staging, n_files=2)
     total_first = staged.count()
 
-    def run(name):
+    def run():
         return run_to_memory(
             stream_tumbling(events_stream(spark, staging), watermark="400 days"),
             ckpt,
             "complete",
-            name=name,
         )
 
-    first = run("ckpt_run_1")
+    first = run()
     n1 = first.agg(F.sum("n_events")).collect()[0][0]
     assert n1 == total_first
 
@@ -140,7 +139,7 @@ def test_streaming_checkpoint_incremental_restart(spark, tmp_path):
 
     extra = load_table(spark, sf, "events").limit(500)
     extra.coalesce(1).write.mode("append").parquet(staging)
-    second = run("ckpt_run_2")
+    second = run()
     n2 = second.agg(F.sum("n_events")).collect()[0][0]
     # complete-mode state resumed from checkpoint: old events counted
     # once (not re-read), new events added exactly once

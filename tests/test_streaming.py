@@ -240,8 +240,9 @@ def test_stream_timeout_knob_fails_safe(spark, tmp_path, monkeypatch, raw):
 def test_drain_staged_cleans_up_and_equals_batch(spark, tmp_path, monkeypatch):
     """The one stream harness: the per-query work dir (staged files +
     checkpoint) exists during the drain and is gone afterwards, on the
-    success path AND when the transform raises; a trivial per-type
-    count drained through it equals its batch form."""
+    success path AND when the transform raises; the memory sink's temp
+    view is dropped (the returned frame still holds the rows); a
+    trivial per-type count drained through it equals its batch form."""
     import tempfile
 
     from capstone_etl_spark.streaming import drain_staged
@@ -259,6 +260,7 @@ def test_drain_staged_cleans_up_and_equals_batch(spark, tmp_path, monkeypatch):
     got = drain_staged(spark, SF_DIR, "events", transform, "complete")
     assert len(seen) == 1  # the work dir really was under tmp_path
     assert list(tmp_path.iterdir()) == []
+    assert not [t.name for t in spark.catalog.listTables() if t.name.startswith("mem_sink_")]
     want = per_type(load_table(spark, SF_DIR, "events"))
     pd.testing.assert_frame_equal(_pdf(got), _pdf(want))
 
