@@ -297,16 +297,24 @@ MIN_FAIL_DELTA_SEC = 2.0
 
 
 def exec_totals(spark) -> dict | None:
-    """Cumulative deterministic execution counters from the
-    AppStatusStore (VERDICT r11 #2: put counters in the bench contract
-    so perf verdicts stop hinging on the host probe): jobs, stages
-    (every stage in stageList, skipped ones included), tasks, shuffle
-    read/write bytes (executor totals). Cheap by construction — two
-    list-size calls plus the per-executor totals (one object in local
-    mode), never a per-element iteration, so capturing between queries
-    costs microseconds and nothing inside the timed region. Returns
-    None if the py4j surface drifts (counters then just drop out of
-    the JSON — additions-only contract)."""
+    """Cumulative execution counters from the AppStatusStore (VERDICT
+    r11 #2: put counters in the bench contract so perf verdicts stop
+    hinging on the host probe): jobs, stages (every stage in
+    stageList, skipped ones included), tasks, shuffle read/write bytes
+    (executor totals). The jobs, tasks and shuffle-byte deltas match
+    the query's own job-tag counts (perfbench.spans.tagged_counters);
+    stages do not repeat run to run, since stageList also counts the
+    stages AQE skips, and a query's first call in a session can run an
+    extra build job. A counter claim therefore rests on jobs, tasks
+    and shuffle bytes taken after one warm call, and on value sets
+    over repeated calls for a query whose counts still move (an IVF
+    stream twin's jobs moved by one between warm calls). Cheap by
+    construction — two list-size calls plus the per-executor totals
+    (one object in local mode), never a per-element iteration, so
+    capturing between queries costs microseconds and nothing inside
+    the timed region. Returns None if the py4j surface drifts
+    (counters then just drop out of the JSON — additions-only
+    contract)."""
     try:
         store = spark._jsc.sc().statusStore()
         n_jobs = store.jobsList(None).size()

@@ -3,9 +3,11 @@
 The reference has no streaming surface; the driver's `events` table
 (ts, user_id, event_type, value, props JSON) is the designated
 extension target. Every query here is the *batch-equivalent* of a
-Structured Streaming operator (the streaming forms live in
-capstone_etl_spark/streaming/ and are tested for result-equivalence
-against these), which keeps the DuckDB oracle valid.
+Structured Streaming operator, which keeps the DuckDB oracle valid.
+An operator shared with a stream twin (`tumbling`, `sliding`,
+`dedup_counts`, the Twin accumulations) is written once, here, over a
+batch-or-stream frame: the batch query applies it to the events table,
+the twin (operators/streaming_queries.py) drains it with a watermark.
 
 Timestamp discipline for cross-engine hashing: window starts are
 emitted as epoch-second BIGINTs (floor-truncated), never raw
@@ -41,13 +43,29 @@ def _dsum(col: Column) -> Column:
     return F.sum(col.cast("decimal(18,2)")).cast("double")
 
 
-def tumbling_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """10-minute tumbling window × event_type: count + exact sum(value).
-    Uses the native F.window operator (epoch-aligned); start emitted as
-    epoch seconds."""
-    ev = _events(spark, sf_dir)
+# The watermark bounds the event-time DISORDER a stream operator
+# tolerates before dropping late rows and evicting state. In production
+# (near-ordered arrival) minutes are right. A REPLAYED historical table
+# arrives in arbitrary event-time order, so batch-exact replay needs a
+# watermark beyond the replay disorder, the full data horizon
+# (streaming_queries._horizon_watermark passes one). The late-drop
+# behaviour itself is pinned by
+# tests/test_streaming.py::test_watermark_drops_late.
+WATERMARK = "30 minutes"
+
+
+def _watermarked(ev: DataFrame, watermark: str) -> DataFrame:
+    """A stream watermarked on ts; a batch frame as it is (same plan)."""
+    return ev.withWatermark("ts", watermark) if ev.isStreaming else ev
+
+
+def tumbling(ev: DataFrame, watermark: str = WATERMARK) -> DataFrame:
+    """10-minute tumbling window × event_type over a batch or streaming
+    events frame: count + exact sum(value). Uses the native F.window
+    operator (epoch-aligned); start emitted as epoch seconds."""
     return (
-        ev.groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
+        _watermarked(ev, watermark)
+        .groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
         .agg(F.count("*").alias("n_events"), _dsum(F.col("value")).alias("total_value"))
         .select(
             F.col("w.start").cast("long").alias("window_start"),
@@ -56,6 +74,10 @@ def tumbling_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
+
+
+def tumbling_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return tumbling(_events(spark, sf_dir))
 
 
 TUMBLING_WINDOWS_SQL = """
@@ -68,15 +90,21 @@ GROUP BY 1, 2
 """
 
 
-def sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """10-minute windows sliding every 5 — each event lands in exactly 2
-    windows (native F.window with slide)."""
-    ev = _events(spark, sf_dir)
+def sliding(ev: DataFrame, watermark: str = WATERMARK) -> DataFrame:
+    """10-minute windows sliding every 5 over a batch or streaming
+    events frame — each event lands in exactly 2 windows (native
+    F.window with slide); on a stream, every event enters two
+    overlapping state-store windows."""
     return (
-        ev.groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"))
+        _watermarked(ev, watermark)
+        .groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"))
         .agg(F.count("*").alias("n_events"))
         .select(F.col("w.start").cast("long").alias("window_start"), "n_events")
     )
+
+
+def sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return sliding(_events(spark, sf_dir))
 
 
 SLIDING_WINDOWS_SQL = """
@@ -198,16 +226,27 @@ SELECT user_id, n_events, total_value, rnk FROM (
 """
 
 
-def event_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact event dedup on (user_id, event_type, ts) — batch form of
-    streaming dropDuplicatesWithinWatermark."""
-    ev = _events(spark, sf_dir)
-    return (
-        ev.select("user_id", "event_type", F.col("ts").cast("long").alias("ts_sec"))
-        .dropDuplicates(["user_id", "event_type", "ts_sec"])
-        .groupBy("event_type")
-        .agg(F.count("*").alias("n_distinct_events"))
+def dedup_counts(ev: DataFrame, watermark: str = WATERMARK) -> DataFrame:
+    """Exact event dedup on (user_id, event_type, ts) then per-type
+    counts, over a batch or streaming events frame. Event time is
+    truncated to whole seconds first, so the keys match the oracle's
+    DISTINCT on floored seconds. A stream deduplicates with
+    dropDuplicatesWithinWatermark (state evicted past the watermark,
+    which carries through into the per-type aggregation); a batch
+    frame, where that call is rejected, with dropDuplicates."""
+    keys = ["user_id", "event_type", "ts"]
+    sec = ev.select(
+        "user_id", "event_type", F.timestamp_seconds(F.col("ts").cast("long")).alias("ts")
     )
+    if ev.isStreaming:
+        deduped = sec.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
+    else:
+        deduped = sec.dropDuplicates(keys)
+    return deduped.groupBy("event_type").agg(F.count("*").alias("n_distinct_events"))
+
+
+def event_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return dedup_counts(_events(spark, sf_dir))
 
 
 EVENT_DEDUP_SQL = """

@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from capstone_etl_spark.functions.text import tokenize_sql
+from capstone_etl_spark.functions.vectors import dot_long, quantized_cosine
 from capstone_etl_spark.operators import dedup, events, privacy, quality, textstats
 from capstone_etl_spark.operators.similarity import (
     N_QUERIES,
@@ -79,10 +80,7 @@ from capstone_etl_spark.sources import tables
 from capstone_etl_spark.streaming import (
     drain_staged,
     stream_click_purchase_join,
-    stream_dedup_counts,
     stream_session_windows,
-    stream_sliding,
-    stream_tumbling,
 )
 from capstone_etl_spark.streaming.windows import (
     ATTRIBUTION_WINDOW_SEC,
@@ -116,7 +114,7 @@ def _horizon_watermark(staged: DataFrame) -> str:
     reader has no aggregate pushdown, and the `cast("long")` would
     block it anyway. Called only from the transforms whose operators
     take a watermark, so the scan is paid only there.
-    See streaming/windows.py watermark note."""
+    See the watermark note at operators/events.py's WATERMARK."""
     lo, hi = staged.agg(
         F.min(F.col("ts").cast("long")), F.max(F.col("ts").cast("long"))
     ).first()
@@ -125,8 +123,8 @@ def _horizon_watermark(staged: DataFrame) -> str:
 
 
 def _replay(spark: SparkSession, sf_dir: str, operator) -> DataFrame:
-    """Drain one of streaming/windows.py's watermarked event operators
-    (complete mode) with the replay-horizon watermark."""
+    """Drain a watermarked batch-or-stream event operator (complete
+    mode) with the replay-horizon watermark."""
     return drain_staged(
         spark,
         sf_dir,
@@ -137,20 +135,22 @@ def _replay(spark: SparkSession, sf_dir: str, operator) -> DataFrame:
 
 
 def stream_tumbling_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming tumbling windows, oracle-identical to the batch form."""
-    return _replay(spark, sf_dir, stream_tumbling)
+    """Streaming tumbling windows: events.tumbling drained, equal to
+    event_tumbling_windows."""
+    return _replay(spark, sf_dir, events.tumbling)
 
 
 def stream_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming sliding windows (10 min / slide 5): every event enters
-    two overlapping state-store windows — overlapping-window state is
-    the piece tumbling doesn't exercise."""
-    return _replay(spark, sf_dir, stream_sliding)
+    """Streaming sliding windows: events.sliding drained, equal to
+    event_sliding_windows — overlapping-window state is the piece
+    tumbling doesn't exercise."""
+    return _replay(spark, sf_dir, events.sliding)
 
 
 def stream_event_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming dropDuplicatesWithinWatermark → per-type counts."""
-    return _replay(spark, sf_dir, stream_dedup_counts)
+    """Streaming dropDuplicatesWithinWatermark → per-type counts:
+    events.dedup_counts drained, equal to event_dedup."""
+    return _replay(spark, sf_dir, events.dedup_counts)
 
 
 def stream_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -910,27 +910,29 @@ def stream_semantic_dedup_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
     equals the batch semantic_dedup_hier row-for-row (same oracle).
     This is stream_dedup_incremental's embedding-space sibling — the
     admission gate an embedding-deduped 100 TB corpus runs at its
-    front door."""
+    front door. Pairs are scored as the batch form scores them: the
+    quantized cosine over each side's `vq` and squared norm (the
+    members carry theirs; an arriving row quantizes once, for routing,
+    and folds its norm), one integer fold per pair."""
     emb = tables.load_table(spark, sf_dir, "embeddings")
     quant = quantize_fp()
     emb_q = emb.select("vec_id", quant.alias("vq"))
-    assign = _stream_static(hier_assign(emb_q).select("vec_id", "cell"))
-    members = assign.join(emb.select("vec_id", "embedding"), "vec_id").select(
-        F.col("vec_id").alias("vec_a"), "cell", F.col("embedding").alias("ne")
+    withv = _stream_static(hier_assign(emb_q).withColumn("qn2", dot_long("vq", "vq")))
+    assign = withv.select("vec_id", "cell")
+    members = withv.select(
+        F.col("vec_id").alias("vec_a"), "cell",
+        F.col("vq").alias("qa"), F.col("qn2").alias("na2"),
     )
     brow = _stream_static(hier_branch_cells_row(emb_q))
 
     def transform(stream, staged):
-        arriving = stream.select(
-            F.col("vec_id").alias("vec_b"),
-            F.col("embedding").alias("qe"),
-            quant.alias("vq"),
-        )
+        arriving = stream.select(F.col("vec_id").alias("vec_b"), quant.alias("vq"))
         return (
-            hier_cell_inrow(arriving, brow, "vec_b", "qe")
+            hier_cell_inrow(arriving, brow, "vec_b", F.col("vq").alias("qb"))
+            .withColumn("nb2", dot_long("qb", "qb"))
             .join(members, "cell")
             .filter(F.col("vec_a") < F.col("vec_b"))
-            .filter(qcosine("qe", "ne") >= SEMDEDUP_THRESHOLD)
+            .filter(quantized_cosine("qa", "qb", "na2", "nb2") >= SEMDEDUP_THRESHOLD)
             .select("vec_b", "vec_a")
         )
 
@@ -1314,11 +1316,16 @@ def stream_conversion_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECREASES as replayed batches land — is solved relationally
     instead: conversions keep their own (user, ts) state rows ('c'
     kind, exact integers, order-free), and the qualifying minimum is
-    taken over the DRAINED state where fv is final. State is one 'm'
-    row per user + one 'c' row per distinct (user, conversion ts) —
-    the same accepted class as stream_training_manifest's one row per
-    admitted doc; merges are min/max on exact integers, so the drained
-    table is replay-order-independent like the Python form."""
+    taken over the DRAINED state where fv is final. Merges are min/max
+    on exact integers, so the drained table is replay-order-independent
+    like the Python form.
+
+    State bound: O(rows), with no watermark eviction. One 'm' row per
+    user plus one 'c' row per distinct (user, conversion ts); no
+    watermark is set, so no row is ever evicted and the 'c' rows grow
+    with the conversions a stream has seen. Bounded for the replay,
+    unbounded on a long-lived stream — the same declared class as
+    stream_training_manifest's one state row per admitted doc."""
     from capstone_etl_spark.operators.events import (
         AB_CONVERT_TYPE,
         AB_EXPOSE_TYPE,
@@ -1921,7 +1928,6 @@ def stream_coreset_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     share/mean projection (total = sum of drained pops — the stream
     saw the whole corpus), so the oracle is CORESET_COVERAGE_AUDIT_SQL
     verbatim."""
-    from capstone_etl_spark.functions.vectors import dot_long
     from capstone_etl_spark.operators.valuation import _kcenter_select
     from capstone_etl_spark.sources.tables import load_table
 

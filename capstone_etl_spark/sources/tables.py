@@ -29,7 +29,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from capstone_etl_spark.session import env_int
 
 # The driver-generated star schema + text/embedding/event tables (TESTDATA.md).
 TABLES = (
@@ -174,14 +173,10 @@ def _fan_out_small_scan(spark: SparkSession, df: DataFrame, path: str) -> DataFr
     here shuffles 100 TB. Filters/projections still push down: Catalyst
     moves them through Repartition into the parquet reader. Results are
     partitioning-independent across this repo by design (sort-first
-    dense ids, key-based aggregations; tests pin it)."""
-    # 0 and 1 switch the fan-out off; malformed or negative values
-    # fall back to the default target
-    target = env_int(
-        "SPARK_GRAFT_FANOUT",
-        min(int(spark.conf.get("spark.sql.shuffle.partitions")), 16),
-        0,
-    )
+    dense ids, key-based aggregations; tests pin it). The target is
+    min(shuffle partitions, 16); a session of 1 shuffle partition has
+    nothing to fan out to."""
+    target = min(int(spark.conf.get("spark.sql.shuffle.partitions")), 16)
     if target <= 1:
         return df
     # memoized per (app, path): getNumPartitions plans the scan —

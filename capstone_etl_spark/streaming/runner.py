@@ -55,7 +55,6 @@ def run_to_memory(
     sdf: DataFrame,
     checkpoint_dir: str,
     output_mode: str = "complete",
-    once: bool = False,
     state_partitions: int | None = STATE_PARTITIONS,
 ) -> DataFrame:
     """Start sdf → memory sink, await termination, return the sink
@@ -63,10 +62,8 @@ def run_to_memory(
     timeout (the returned frame keeps the sink's rows; the catalog does
     not), so a session's drains leave no `mem_sink_N` views behind.
     output_mode: 'complete' for aggregations, 'append' for
-    dedup/map-only streams. Default trigger is availableNow (drain a
-    BOUNDED source and stop); pass once=True for UNBOUNDED sources
-    (rate/Kafka) where "everything available" never ends — one
-    micro-batch, then stop.
+    dedup/map-only streams. The trigger is availableNow: the staged
+    replay is a BOUNDED source, drained and then stopped.
 
     state_partitions pins spark.sql.shuffle.partitions for THIS query's
     lifetime (the setting is frozen into the state store at the first
@@ -93,8 +90,8 @@ def run_to_memory(
         .queryName(qname)
         .outputMode(output_mode)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
     )
-    writer = writer.trigger(once=True) if once else writer.trigger(availableNow=True)
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     if state_partitions:
         spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))

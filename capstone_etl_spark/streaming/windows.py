@@ -1,65 +1,29 @@
-"""Streaming window/dedup operators (batch-or-stream polymorphic).
+"""Stream-only event operators (batch-or-stream polymorphic).
 
 Each function takes an events DataFrame — streaming or batch — and
 returns the transformed frame. On a stream, watermarks bound state:
-late events beyond WATERMARK are dropped and closed windows are
-evicted from the state store (the 100 TB streaming-state design —
-unbounded state is the streaming analogue of an unbounded shuffle).
-On a batch frame the same code yields the batch-equivalent answer
-(withWatermark is a no-op in batch), which is what the equivalence
-tests and DuckDB oracles check.
+late events beyond the watermark are dropped and closed windows or
+join buffers are evicted from the state store (unbounded state is the
+streaming analogue of an unbounded shuffle). On a batch frame the same
+code yields the batch answer (no watermark is applied), which is what
+the equivalence tests and DuckDB oracles check.
 
-Output schemas mirror operators/events.py (window starts as epoch
-seconds, DECIMAL-exact value sums) so results hash identically.
+The event operators whose batch query is the same transformation —
+tumbling and sliding windows, event dedup — are written once in
+operators/events.py (`tumbling`, `sliding`, `dedup_counts`, with the
+watermark note); the ones here have no batch query of the same shape.
+Output schemas mirror operators/events.py (epoch-second times,
+DECIMAL-exact value sums) so results hash identically.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-WATERMARK = "30 minutes"
+from capstone_etl_spark.operators.events import WATERMARK, _dsum, _watermarked
+
 SESSION_GAP = "30 minutes"
-
-# Watermark semantics note: the watermark bounds event-time DISORDER
-# the operator tolerates before dropping late rows + evicting state.
-# In production (near-ordered arrival) minutes are right. When
-# REPLAYING a historical table through the file source, files arrive
-# in arbitrary event-time order, so exact batch-equivalence requires a
-# watermark exceeding the replay disorder — the full data horizon
-# (operators/streaming_queries.py passes one). The late-drop behavior
-# itself is pinned by tests/test_streaming.py::test_watermark_drops_late.
-
-
-def _dsum(col: Column) -> Column:
-    return F.sum(col.cast("decimal(18,2)")).cast("double")
-
-
-def stream_tumbling(events: DataFrame, watermark: str = WATERMARK) -> DataFrame:
-    """10-minute tumbling window × event_type (streaming form of
-    events.tumbling_windows)."""
-    ev = events.withWatermark("ts", watermark) if events.isStreaming else events
-    return (
-        ev.groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"), _dsum(F.col("value")).alias("total_value"))
-        .select(
-            F.col("w.start").cast("long").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
-
-
-def stream_sliding(events: DataFrame, watermark: str = WATERMARK) -> DataFrame:
-    """10-minute windows sliding every 5 (streaming form of
-    events.sliding_windows)."""
-    ev = events.withWatermark("ts", watermark) if events.isStreaming else events
-    return (
-        ev.groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"))
-        .agg(F.count("*").alias("n_events"))
-        .select(F.col("w.start").cast("long").alias("window_start"), "n_events")
-    )
 
 
 def stream_session_windows(
@@ -72,13 +36,12 @@ def stream_session_windows(
     gaps, matching the lag+cumsum batch sessionize's strict `>` close
     (pinned against the sf0.1 corpus, which contains an exact-gap
     pair). The window end is last_event + gap. Event time is truncated
-    to whole
-    seconds BEFORE sessionization so gap decisions match the
+    to whole seconds BEFORE sessionization so gap decisions match the
     second-granularity oracle (raw micros would move boundary cases)."""
     ev = events.withColumn("ts", F.timestamp_seconds(F.col("ts").cast("long")))
-    ev = ev.withWatermark("ts", watermark) if events.isStreaming else ev
     return (
-        ev.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        _watermarked(ev, watermark)
+        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"))
         .select(
             "user_id",
@@ -87,23 +50,6 @@ def stream_session_windows(
             "n_events",
         )
     )
-
-
-def stream_dedup_counts(events: DataFrame, watermark: str = WATERMARK) -> DataFrame:
-    """Exact dedup on (user_id, event_type, ts) then per-type counts —
-    streaming uses dropDuplicatesWithinWatermark (state evicted past
-    the watermark horizon); batch falls back to dropDuplicates."""
-    # seconds-truncated event time: dedup keys match the batch form /
-    # oracle (DISTINCT on floored seconds), not raw micros
-    ev = events.withColumn("ts", F.timestamp_seconds(F.col("ts").cast("long")))
-    keys = ["user_id", "event_type", "ts"]
-    if events.isStreaming:
-        # the watermark definition carries through the dedup into the
-        # downstream aggregation (redefining it is disallowed)
-        deduped = ev.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
-    else:
-        deduped = ev.dropDuplicates(keys)
-    return deduped.groupBy("event_type").agg(F.count("*").alias("n_distinct_events"))
 
 
 def stream_enrich_user_tier(events: DataFrame, user_tiers: DataFrame) -> DataFrame:
@@ -144,9 +90,9 @@ def stream_click_purchase_join(events: DataFrame, watermark: str = WATERMARK) ->
     seconds first so pair decisions match the second-granularity
     oracle. Inner join ⇒ append output mode (pairs emit as soon as
     both sides have arrived, possibly in different micro-batches)."""
-    ev = events.withColumn("ts", F.timestamp_seconds(F.col("ts").cast("long")))
-    if events.isStreaming:
-        ev = ev.withWatermark("ts", watermark)
+    ev = _watermarked(
+        events.withColumn("ts", F.timestamp_seconds(F.col("ts").cast("long"))), watermark
+    )
     clicks = ev.filter(F.col("event_type") == "click").select(
         F.col("user_id").alias("c_user"), F.col("ts").alias("c_ts")
     )

@@ -64,20 +64,17 @@ def test_dense_ids_empty(spark):
 
 
 def test_session_and_windows_empty_events(spark):
-    from capstone_etl_spark.streaming.windows import (
-        stream_dedup_counts,
-        stream_session_windows,
-        stream_tumbling,
-    )
+    from capstone_etl_spark.operators.events import dedup_counts, tumbling
+    from capstone_etl_spark.streaming.windows import stream_session_windows
 
     ev = spark.createDataFrame(
         [],
         "event_id long, ts timestamp, user_id long, event_type string, "
         "value double, props string",
     )
-    assert stream_tumbling(ev).count() == 0
+    assert tumbling(ev).count() == 0
     assert stream_session_windows(ev).count() == 0
-    assert stream_dedup_counts(ev).count() == 0
+    assert dedup_counts(ev).count() == 0
 
 
 def test_connected_components_degenerate(spark):

@@ -14,8 +14,7 @@ bit-identical; these tests pin the equivalences:
    the per-aggregate form.
 3. load_table's fan-out repartition leaves results identical (it only
    changes partitioning) and never fires when the scan is already
-   parallel enough; a malformed SPARK_GRAFT_FANOUT falls back to the
-   default target instead of failing the scan.
+   parallel enough.
 """
 
 from __future__ import annotations
@@ -133,29 +132,18 @@ def test_minhash_hoisted_mod_matches_per_aggregate_form(spark):
         release_caches()
 
 
-@pytest.mark.parametrize(
-    "raw", [None, "0", "1", "many", "2.5", "-3"], ids=lambda r: r or "ambient"
-)
-def test_fan_out_guard_noop_when_scan_parallel(spark, monkeypatch, raw):
+def test_fan_out_guard_noop_when_scan_parallel(spark):
     """The fan-out must be a no-op when the scan already has >= target
     partitions (the cluster-scale guard) and must never change row
-    content when it fires. SPARK_GRAFT_FANOUT=0/1 switch it off; a
-    value that is not an integer, or is negative, falls back to the
-    default target instead of failing every load_table."""
-    from capstone_etl_spark.session import env_int
+    content when it fires."""
     from capstone_etl_spark.sources.tables import _fan_out_small_scan
 
-    if raw is not None:
-        monkeypatch.setenv("SPARK_GRAFT_FANOUT", raw)
     df = spark.range(0, 1000, 1, 32).select(F.col("id").alias("doc_id"))
     assert _fan_out_small_scan(spark, df, "mem://wide") is df
 
     narrow = spark.range(0, 1000, 1, 1).select(F.col("id").alias("doc_id"))
     out = _fan_out_small_scan(spark, narrow, "mem://narrow")
-    default = min(int(spark.conf.get("spark.sql.shuffle.partitions")), 16)
-    target = env_int("SPARK_GRAFT_FANOUT", default, 0)
-    if raw in ("many", "2.5", "-3"):
-        assert target == default > 1
+    target = min(int(spark.conf.get("spark.sql.shuffle.partitions")), 16)
     assert (out is not narrow) == (target > 1)
     assert sorted(r.doc_id for r in out.collect()) == list(range(1000))
 

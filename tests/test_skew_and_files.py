@@ -114,8 +114,8 @@ def test_orc_roundtrip_nested(spark, tmp_path):
 def test_streaming_checkpoint_incremental_restart(spark, tmp_path):
     """Exactly-once file-source semantics: a second availableNow run
     against the SAME checkpoint processes only newly-arrived files."""
-    from capstone_etl_spark.streaming import events_stream, run_to_memory, stage_events
-    from capstone_etl_spark.streaming.windows import stream_tumbling
+    from capstone_etl_spark.operators.events import tumbling
+    from capstone_etl_spark.streaming import run_to_memory, stage_events
 
     sf = "/root/testdata/sf0.001"
     staging, ckpt = str(tmp_path / "staging"), str(tmp_path / "ckpt")
@@ -123,11 +123,12 @@ def test_streaming_checkpoint_incremental_restart(spark, tmp_path):
     total_first = staged.count()
 
     def run():
-        return run_to_memory(
-            stream_tumbling(events_stream(spark, staging), watermark="400 days"),
-            ckpt,
-            "complete",
+        stream = (
+            spark.readStream.schema(staged.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(staging)
         )
+        return run_to_memory(tumbling(stream, watermark="400 days"), ckpt, "complete")
 
     first = run()
     n1 = first.agg(F.sum("n_events")).collect()[0][0]

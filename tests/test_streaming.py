@@ -6,20 +6,16 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql import types as _t
 
 import __spark_entry__ as entrymod
 from capstone_etl_spark.operators import events as batch_events
 from capstone_etl_spark.operators.streaming_queries import BATCH_TWIN
 from capstone_etl_spark.sources.tables import load_table
 from capstone_etl_spark.streaming import (
-    events_stream,
     run_to_memory,
     stage_events,
     stream_click_purchase_join,
-    stream_dedup_counts,
     stream_session_windows,
-    stream_tumbling,
 )
 from capstone_etl_spark.streaming.stateful import running_user_activity
 
@@ -32,8 +28,13 @@ def _pdf(df) -> pd.DataFrame:
 
 
 def _staged_stream(spark, tmp_path, files=4, per_trigger=1):
-    stage_events(spark, SF_DIR, str(tmp_path / "staging"), n_files=files)
-    return events_stream(spark, str(tmp_path / "staging"), max_files_per_trigger=per_trigger)
+    staging = str(tmp_path / "staging")
+    staged = stage_events(spark, SF_DIR, staging, n_files=files)
+    return (
+        spark.readStream.schema(staged.schema)
+        .option("maxFilesPerTrigger", per_trigger)
+        .parquet(staging)
+    )
 
 
 def test_stream_tumbling_equals_batch(spark, tmp_path):
@@ -41,7 +42,7 @@ def test_stream_tumbling_equals_batch(spark, tmp_path):
     state must converge to the batch answer."""
     stream = _staged_stream(spark, tmp_path)
     got = run_to_memory(
-        stream_tumbling(stream, watermark=HORIZON), str(tmp_path / "ckpt"), "complete"
+        batch_events.tumbling(stream, watermark=HORIZON), str(tmp_path / "ckpt"), "complete"
     )
     want = batch_events.tumbling_windows(spark, SF_DIR)
     pd.testing.assert_frame_equal(_pdf(got), _pdf(want))
@@ -50,7 +51,9 @@ def test_stream_tumbling_equals_batch(spark, tmp_path):
 def test_stream_dedup_equals_batch(spark, tmp_path):
     stream = _staged_stream(spark, tmp_path)
     got = run_to_memory(
-        stream_dedup_counts(stream, watermark=HORIZON), str(tmp_path / "ckpt"), "complete"
+        batch_events.dedup_counts(stream, watermark=HORIZON),
+        str(tmp_path / "ckpt"),
+        "complete",
     )
     want = batch_events.event_dedup(spark, SF_DIR)
     pd.testing.assert_frame_equal(_pdf(got), _pdf(want))
@@ -94,7 +97,7 @@ def test_watermark_drops_late(spark, tmp_path):
     complete mode retains all state by definition."""
     stream = _staged_stream(spark, tmp_path)
     got = run_to_memory(
-        stream_tumbling(stream, watermark="30 minutes"), str(tmp_path / "ckpt"), "update"
+        batch_events.tumbling(stream, watermark="30 minutes"), str(tmp_path / "ckpt"), "update"
     )
     # update mode emits revised window rows per batch; counts per window
     # are monotone — max per window = that window's final count
@@ -192,49 +195,19 @@ def test_stream_foreachbatch_incremental_upsert(spark, tmp_path):
     assert {r.id for r in spark.read.parquet(base).collect()} == {1, 2}
 
 
-def test_source_factory_seam_rate_source(spark, tmp_path):
-    """A Kafka-shaped source factory plugs into the SAME pipeline the
-    file-staged oracle queries run: rate-micro-batch generator → events
-    schema → stream_tumbling → memory sink. Unbounded source, so one
-    micro-batch via trigger(once) instead of availableNow."""
-    from capstone_etl_spark.streaming.runner import run_to_memory
-    from capstone_etl_spark.streaming.source import (
-        EVENTS_DDL,
-        events_stream,
-        rate_events_source,
-    )
-    from capstone_etl_spark.streaming.windows import stream_tumbling
-
-    stream = events_stream(spark, source=rate_events_source(rows_per_batch=200))
-    assert stream.isStreaming
-    want = _t.StructType.fromDDL(EVENTS_DDL)
-    assert [(f.name, f.dataType) for f in stream.schema] == [
-        (f.name, f.dataType) for f in want
-    ]  # nullability differs by source; names/types are the contract
-    out = run_to_memory(
-        stream_tumbling(stream, watermark="1 day"),
-        str(tmp_path / "ckpt"),
-        output_mode="complete",
-        once=True,
-    )
-    rows = out.collect()
-    assert sum(r["n_events"] for r in rows) == 200
-    assert set(r["event_type"] for r in rows) == {"view", "click", "purchase"}
-
-
 @pytest.mark.parametrize("raw", ["soon", "0", "1.5"])
-def test_stream_timeout_knob_fails_safe(spark, tmp_path, monkeypatch, raw):
+def test_stream_timeout_knob_fails_safe(spark, monkeypatch, raw):
     """A malformed SPARK_GRAFT_STREAM_TIMEOUT_SEC (not an integer, or
     below 1 s) falls back to the default hang guard: the drain runs
     instead of raising ValueError or timing out at once."""
-    from capstone_etl_spark.streaming.source import rate_events_source
+    from capstone_etl_spark.streaming import drain_staged
 
     monkeypatch.setenv("SPARK_GRAFT_STREAM_TIMEOUT_SEC", raw)
-    stream = events_stream(spark, source=rate_events_source(rows_per_batch=50))
-    out = run_to_memory(
-        stream.groupBy("event_type").count(), str(tmp_path / "ckpt"), once=True
+    out = drain_staged(
+        spark, SF_DIR, "events", lambda s, staged: s.groupBy("event_type").count(), "complete"
     )
-    assert sum(r["count"] for r in out.collect()) == 50
+    n = load_table(spark, SF_DIR, "events").count()
+    assert sum(r["count"] for r in out.collect()) == n > 0
 
 
 def test_drain_staged_cleans_up_and_equals_batch(spark, tmp_path, monkeypatch):
@@ -323,42 +296,6 @@ def test_stream_result_is_state_partition_independent(spark, monkeypatch, stream
         release_caches()
     assert used == [1, runner.STATE_PARTITIONS]
     assert sized == pinned and len(sized) > 0
-
-
-def test_events_stream_requires_dir_or_factory(spark):
-    import pytest as _pytest
-
-    from capstone_etl_spark.streaming.source import events_stream
-
-    with _pytest.raises(ValueError):
-        events_stream(spark)
-
-
-def test_kafka_value_parser_roundtrip(spark):
-    """parse_kafka_events on a STATIC frame with Kafka's wire shape:
-    events → to_json → binary value column → parse → identical rows
-    (the connector jar is deployment-only; the parse stage is the
-    code under test)."""
-    from capstone_etl_spark.streaming.source import parse_kafka_events
-
-    events = spark.createDataFrame(
-        [
-            (1, "2024-01-01 00:00:01", 7, "view", 1.5, "{}"),
-            (2, "2024-01-01 00:00:02", 8, "purchase", 99.0, '{"k":1}'),
-        ],
-        "event_id long, ts string, user_id long, event_type string, value double, props string",
-    ).withColumn("ts", F.to_timestamp("ts"))
-    wire = events.select(
-        F.lit(None).cast("binary").alias("key"),
-        F.to_json(F.struct(*events.columns)).cast("binary").alias("value"),
-        F.lit("events").alias("topic"),
-        F.lit(0).alias("partition"),
-        F.monotonically_increasing_id().alias("offset"),
-        F.current_timestamp().alias("timestamp"),
-    )
-    parsed = parse_kafka_events(wire)
-    assert parsed.schema.simpleString() == events.schema.simpleString()
-    assert sorted(map(tuple, parsed.collect())) == sorted(map(tuple, events.collect()))
 
 
 @pytest.mark.parametrize("stream_name", sorted(BATCH_TWIN))
