@@ -1062,6 +1062,38 @@ def _is_delta(doc_id_col):
     return b < DELTA_PCT
 
 
+def admission_verdicts(docs: DataFrame, sizes: DataFrame, inter: DataFrame) -> DataFrame:
+    """dedup_incremental's verdict assembly, shared with its stream
+    twin: the (doc_a, doc_b, n_inter) overlap table plus the per-doc
+    shingle `sizes` (doc_id, sz) → Jaccard-thresholded pairs → one
+    (doc_id, is_dup, dup_of, n_dups, best_jaccard) row per delta doc
+    of `docs`, dup_of the smallest matching partner (itself when new)."""
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
+    jac = F.col("n_inter") / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter"))
+    pairs = (
+        inter.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .filter(jac >= JACCARD_THRESHOLD)
+        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
+    )
+    best = pairs.groupBy("doc_a").agg(
+        F.min(F.struct("doc_b", "jaccard")).alias("m"),
+        F.count("*").cast("long").alias("n_dups"),
+    )
+    delta_docs = docs.select("doc_id").filter(_is_delta(F.col("doc_id")))
+    return (
+        delta_docs.join(best.withColumnRenamed("doc_a", "doc_id"), "doc_id", "left")
+        .select(
+            "doc_id",
+            F.col("m").isNotNull().alias("is_dup"),
+            F.coalesce(F.col("m.doc_b"), F.col("doc_id")).alias("dup_of"),
+            F.coalesce(F.col("n_dups"), F.lit(0).cast("long")).alias("n_dups"),
+            F.coalesce(F.col("m.jaccard"), F.lit(0.0)).alias("best_jaccard"),
+        )
+    )
+
+
 def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, is_dup, dup_of, n_dups, best_jaccard) — the admission
     verdict for every DELTA document: is_dup when some base or
@@ -1091,30 +1123,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count("*").alias("n_inter"))
     )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
-    jac = F.col("n_inter") / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter"))
-    pairs = (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(jac >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-    )
-    best = pairs.groupBy("doc_a").agg(
-        F.min(F.struct("doc_b", "jaccard")).alias("m"),
-        F.count("*").cast("long").alias("n_dups"),
-    )
-    delta_docs = docs.select("doc_id").filter(_is_delta(F.col("doc_id")))
-    return (
-        delta_docs.join(best.withColumnRenamed("doc_a", "doc_id"), "doc_id", "left")
-        .select(
-            "doc_id",
-            F.col("m").isNotNull().alias("is_dup"),
-            F.coalesce(F.col("m.doc_b"), F.col("doc_id")).alias("dup_of"),
-            F.coalesce(F.col("n_dups"), F.lit(0).cast("long")).alias("n_dups"),
-            F.coalesce(F.col("m.jaccard"), F.lit(0.0)).alias("best_jaccard"),
-        )
-    )
+    return admission_verdicts(docs, sizes, inter)
 
 
 def _delta_pred_sql(id_expr: str) -> str:

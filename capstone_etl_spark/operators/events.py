@@ -2005,8 +2005,6 @@ GROUP BY 1
 
 # ------------------------------------------- sequential pattern mining
 
-SEQ_N = 3  # pattern length: consecutive event-type triples
-
 
 def event_frequent_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(t1, t2, t3, n, n_users, share) — support counts for every

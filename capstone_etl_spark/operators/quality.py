@@ -981,7 +981,6 @@ SIGNAL_CORRELATIONS_SQL = _signal_correlations_sql()
 # unigram-LM screen (the doc's per-token NLL — nll_nats is already
 # nats/token — at or below the occurrence-weighted corpus mean;
 # derived, not hand-tuned), "length" = NOT mad_outliers.is_outlier.
-QA_SCREENS = ("gopher", "lm", "length")
 QA_PAIRS = (("gopher", "lm"), ("gopher", "length"), ("lm", "length"))
 
 

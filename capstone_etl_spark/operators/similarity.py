@@ -152,13 +152,6 @@ _PAIR_BUCKETS_SQL = " UNION ALL ".join(
     _bucket_sql_one_table(t, row) for t, row in enumerate(_PAIR_PLANES)
 )
 
-_COSINE_SQL = (
-    "list_sum(list_transform(range({dim}), d -> CAST(qe[d+1] AS DOUBLE) * CAST(ne[d+1] AS DOUBLE)))"
-    " / (sqrt(list_sum(list_transform(qe, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-    " * sqrt(list_sum(list_transform(ne, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))"
-).format(dim=DIM)
-
-
 CENTROID_SCALE = 10_000  # fixed-point scale for exact accumulation
 
 
@@ -2920,19 +2913,6 @@ def matryoshka_recall(
         )
     )
 
-
-# zero-norm guard mirrors the Spark coalesce: an all-zero prefix
-# pins sim to 0.0 instead of DuckDB's IEEE inf/NaN (ADVICE r6)
-_COSINE_TRUNC_SQL = (
-    "CASE WHEN"
-    " list_sum(list_transform(range({td}), d -> CAST(qe[d+1] AS DOUBLE) * CAST(qe[d+1] AS DOUBLE))) > 0"
-    " AND list_sum(list_transform(range({td}), d -> CAST(ne[d+1] AS DOUBLE) * CAST(ne[d+1] AS DOUBLE))) > 0"
-    " THEN"
-    " list_sum(list_transform(range({td}), d -> CAST(qe[d+1] AS DOUBLE) * CAST(ne[d+1] AS DOUBLE)))"
-    " / (sqrt(list_sum(list_transform(range({td}), d -> CAST(qe[d+1] AS DOUBLE) * CAST(qe[d+1] AS DOUBLE))))"
-    " * sqrt(list_sum(list_transform(range({td}), d -> CAST(ne[d+1] AS DOUBLE) * CAST(ne[d+1] AS DOUBLE)))))"
-    " ELSE 0.0 END"
-).format(td=TRUNC_DIM)
 
 MATRYOSHKA_RECALL_SQL = f"""
 WITH q AS (

@@ -19,7 +19,7 @@ KMV behavior). K=256 ⇒ ~1/√(k−2) ≈ 6% relative error.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from capstone_etl_spark.functions.hashing import md5_hash60, md5_hash60_sql
@@ -30,6 +30,64 @@ from capstone_etl_spark.sources.tables import load_table
 KMV_K = 256
 NGRAM_N = 3
 HASH_SPACE = float(2**60)   # md5_hash60 range; exact power of two in double
+
+
+def shingle_hashes(docs: DataFrame) -> DataFrame:
+    """(source, h): one row per token 3-gram of each document, h its
+    md5_hash60 — the hash stream every KMV sketch is built from. Not
+    distinct: the batch queries take `.distinct()`, the stream's
+    bottom-k state dedups as it merges."""
+    toks = docs.select("source", tokenize("text").alias("toks"))
+    grams = toks.select("source", F.explode(token_ngrams("toks", NGRAM_N)).alias("shingle"))
+    return grams.select("source", md5_hash60(F.col("shingle")).alias("h"))
+
+
+def kmv_estimate(fallback: str) -> Column:
+    """D̂ = (K−1)·M/h_k over an `hk` column; `fallback` (the exact count)
+    when the sketch holds fewer than K hashes and `hk` is null."""
+    return F.when(F.col("hk").isNull(), F.col(fallback).cast("double")).otherwise(
+        F.lit(float(KMV_K - 1)) * F.lit(HASH_SPACE) / F.col("hk")
+    )
+
+
+def _kmv_mins(hashed: DataFrame) -> DataFrame:
+    """(source, h): each source's bottom-K hashes, cached — the sketch."""
+    w = Window.partitionBy("source").orderBy("h")
+    return cached(
+        hashed.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= KMV_K)
+        .select("source", "h")
+    )
+
+
+def _kmv_pair_sketch(mins: DataFrame, *counts: Column) -> tuple[DataFrame, DataFrame]:
+    """(pairs, agg) for every source pair src_a < src_b: the union's
+    bottom-K, built from the two K-row sketches alone, aggregated to
+    kp = k' = min(K, |union sketch|), the `counts` over its in_a/in_b
+    membership flags, and hk (the K-th union hash, null below K)."""
+    srcs = mins.select("source").distinct()
+    pairs = srcs.select(F.col("source").alias("src_a")).join(
+        srcs.select(F.col("source").alias("src_b")), F.col("src_a") < F.col("src_b")
+    )
+    ua = pairs.join(mins.withColumnRenamed("source", "src_a"), "src_a").select(
+        "src_a", "src_b", "h", F.lit(1).alias("in_a"), F.lit(0).alias("in_b")
+    )
+    ub = pairs.join(mins.withColumnRenamed("source", "src_b"), "src_b").select(
+        "src_a", "src_b", "h", F.lit(0).alias("in_a"), F.lit(1).alias("in_b")
+    )
+    union = (
+        ua.unionByName(ub)
+        .groupBy("src_a", "src_b", "h")
+        .agg(F.max("in_a").alias("in_a"), F.max("in_b").alias("in_b"))
+    )
+    uw = Window.partitionBy("src_a", "src_b").orderBy("h")  # ≤ 2k rows per pair
+    ranked = union.withColumn("rnk", F.row_number().over(uw)).filter(F.col("rnk") <= KMV_K)
+    agg = ranked.groupBy("src_a", "src_b").agg(
+        F.count("*").alias("kp"),
+        *counts,
+        F.max(F.when(F.col("rnk") == KMV_K, F.col("h"))).alias("hk"),
+    )
+    return pairs, agg
 
 
 def kmv_distinct_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -46,12 +104,7 @@ def kmv_distinct_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     values per group are all that ever cross the wire). The estimate is
     pure double arithmetic on the identical integer h_k, so DuckDB
     reproduces it bit-for-bit."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("source", tokenize("text").alias("toks"))
-    grams = toks.select("source", F.explode(token_ngrams("toks", NGRAM_N)).alias("shingle"))
-    hashed = cached(
-        grams.select("source", md5_hash60(F.col("shingle")).alias("h")).distinct()
-    )
+    hashed = cached(shingle_hashes(load_table(spark, sf_dir, "documents")).distinct())
     counts = hashed.groupBy("source").agg(F.count("*").alias("n_exact"))
     w = Window.partitionBy("source").orderBy("h")
     kth = (
@@ -59,8 +112,7 @@ def kmv_distinct_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rnk") == KMV_K)
         .select("source", F.col("h").alias("hk"))
     )
-    est_raw = F.lit(float(KMV_K - 1)) * F.lit(HASH_SPACE) / F.col("hk")
-    est = F.when(F.col("hk").isNull(), F.col("n_exact").cast("double")).otherwise(est_raw)
+    est = kmv_estimate("n_exact")
     return counts.join(kth, "source", "left").select(
         "source",
         "n_exact",
@@ -69,7 +121,10 @@ def kmv_distinct_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-KMV_DISTINCT_SHINGLES_SQL = f"""
+# DuckDB mirrors: the (source, h) distinct-hash prologue of every KMV
+# oracle, the estimator's numerator, and the bottom-K + pairwise
+# union-sketch chain of the two pair oracles.
+KMV_HASHED_SQL = f"""
 WITH toks AS (
   SELECT source,
          {tokenize_sql()} AS t
@@ -80,7 +135,44 @@ WITH toks AS (
   WHERE len(t) >= {NGRAM_N}
 ), hashed AS (
   SELECT DISTINCT source, {md5_hash60_sql('shingle')} AS h FROM grams
-), counts AS (
+)"""
+KMV_EST_SQL = f"CAST({float(KMV_K - 1)} AS DOUBLE) * CAST({HASH_SPACE!r} AS DOUBLE) / "
+
+
+def _kmv_pairs_sql(*counts: str) -> str:
+    """`mins … agg` CTEs of a pair oracle: the bottom-K sketches, the
+    source pairs, the union sketch ranked per pair and its aggregate
+    (kp, the `counts`, hk) — _kmv_pair_sketch's DuckDB mirror."""
+    cols = "".join(f"\n         {c}," for c in counts)
+    return f"""mins AS (
+  SELECT source, h FROM (
+    SELECT source, h, ROW_NUMBER() OVER (PARTITION BY source ORDER BY h) AS rnk FROM hashed
+  ) t WHERE rnk <= {KMV_K}
+), srcs AS (SELECT DISTINCT source FROM mins),
+pairs AS (
+  SELECT a.source AS src_a, b.source AS src_b
+  FROM srcs a JOIN srcs b ON a.source < b.source
+), unioned AS (
+  SELECT src_a, src_b, h, MAX(in_a) AS in_a, MAX(in_b) AS in_b FROM (
+    SELECT p.src_a, p.src_b, m.h, 1 AS in_a, 0 AS in_b
+    FROM pairs p JOIN mins m ON m.source = p.src_a
+    UNION ALL
+    SELECT p.src_a, p.src_b, m.h, 0 AS in_a, 1 AS in_b
+    FROM pairs p JOIN mins m ON m.source = p.src_b
+  ) u GROUP BY 1, 2, 3
+), ranked AS (
+  SELECT *, ROW_NUMBER() OVER (PARTITION BY src_a, src_b ORDER BY h) AS rnk
+  FROM unioned
+), agg AS (
+  SELECT src_a, src_b,
+         COUNT(*) AS kp,{cols}
+         MAX(CASE WHEN rnk = {KMV_K} THEN h END) AS hk
+  FROM ranked WHERE rnk <= {KMV_K}
+  GROUP BY 1, 2
+)"""
+
+
+KMV_DISTINCT_SHINGLES_SQL = f"""{KMV_HASHED_SQL}, counts AS (
   SELECT source, COUNT(*) AS n_exact FROM hashed GROUP BY source
 ), kth AS (
   SELECT source, h AS hk FROM (
@@ -89,7 +181,7 @@ WITH toks AS (
 ), est AS (
   SELECT c.source, c.n_exact,
          CASE WHEN k.hk IS NULL THEN CAST(c.n_exact AS DOUBLE)
-              ELSE CAST({float(KMV_K - 1)} AS DOUBLE) * CAST({HASH_SPACE!r} AS DOUBLE) / k.hk
+              ELSE {KMV_EST_SQL}k.hk
          END AS e
   FROM counts c LEFT JOIN kth k USING (source)
 )
@@ -117,41 +209,12 @@ def kmv_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows; the pairwise stage touches |sources|²·k sketch rows — never
     corpus data. All arithmetic is integer counts + double division on
     identical ints, so the oracle reproduces every estimate exactly."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("source", tokenize("text").alias("toks"))
-    grams = toks.select("source", F.explode(token_ngrams("toks", NGRAM_N)).alias("shingle"))
-    hashed = grams.select("source", md5_hash60(F.col("shingle")).alias("h")).distinct()
-    w = Window.partitionBy("source").orderBy("h")
-    mins = cached(
-        hashed.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= KMV_K).select("source", "h")
-    )
-    srcs = mins.select("source").distinct()
-    pairs = (
-        srcs.select(F.col("source").alias("src_a"))
-        .join(srcs.select(F.col("source").alias("src_b")), F.col("src_a") < F.col("src_b"))
-    )
-    ua = pairs.join(mins.withColumnRenamed("source", "src_a"), "src_a").select(
-        "src_a", "src_b", "h", F.lit(1).alias("in_a"), F.lit(0).alias("in_b")
-    )
-    ub = pairs.join(mins.withColumnRenamed("source", "src_b"), "src_b").select(
-        "src_a", "src_b", "h", F.lit(0).alias("in_a"), F.lit(1).alias("in_b")
-    )
-    union = (
-        ua.unionByName(ub)
-        .groupBy("src_a", "src_b", "h")
-        .agg(F.max("in_a").alias("in_a"), F.max("in_b").alias("in_b"))
-    )
-    uw = Window.partitionBy("src_a", "src_b").orderBy("h")  # ≤ 2k rows per pair
-    ranked = union.withColumn("rnk", F.row_number().over(uw)).filter(F.col("rnk") <= KMV_K)
-    agg = ranked.groupBy("src_a", "src_b").agg(
-        F.count("*").alias("kp"),                                  # k' = min(k, |union sketch|)
-        F.sum((F.col("in_a") * F.col("in_b"))).alias("n_both"),
-        F.max(F.when(F.col("rnk") == KMV_K, F.col("h"))).alias("hk"),
+    hashed = shingle_hashes(load_table(spark, sf_dir, "documents")).distinct()
+    _, agg = _kmv_pair_sketch(
+        _kmv_mins(hashed), F.sum((F.col("in_a") * F.col("in_b"))).alias("n_both")
     )
     j_est = F.col("n_both").cast("double") / F.col("kp")
-    u_est = F.when(
-        F.col("hk").isNull(), F.col("kp").cast("double")
-    ).otherwise(F.lit(float(KMV_K - 1)) * F.lit(HASH_SPACE) / F.col("hk"))
+    u_est = kmv_estimate("kp")
     return agg.select(
         "src_a",
         "src_b",
@@ -161,51 +224,14 @@ def kmv_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-KMV_SOURCE_OVERLAP_SQL = f"""
-WITH toks AS (
-  SELECT source,
-         {tokenize_sql()} AS t
-  FROM documents
-), grams AS (
-  SELECT source, array_to_string(t[i : i + {NGRAM_N} - 1], ' ') AS shingle
-  FROM toks, LATERAL (SELECT unnest(range(1, len(t) - {NGRAM_N} + 2)) AS i) r
-  WHERE len(t) >= {NGRAM_N}
-), hashed AS (
-  SELECT DISTINCT source, {md5_hash60_sql('shingle')} AS h FROM grams
-), mins AS (
-  SELECT source, h FROM (
-    SELECT source, h, ROW_NUMBER() OVER (PARTITION BY source ORDER BY h) AS rnk FROM hashed
-  ) t WHERE rnk <= {KMV_K}
-), srcs AS (SELECT DISTINCT source FROM mins),
-pairs AS (
-  SELECT a.source AS src_a, b.source AS src_b
-  FROM srcs a JOIN srcs b ON a.source < b.source
-), unioned AS (
-  SELECT src_a, src_b, h, MAX(in_a) AS in_a, MAX(in_b) AS in_b FROM (
-    SELECT p.src_a, p.src_b, m.h, 1 AS in_a, 0 AS in_b
-    FROM pairs p JOIN mins m ON m.source = p.src_a
-    UNION ALL
-    SELECT p.src_a, p.src_b, m.h, 0 AS in_a, 1 AS in_b
-    FROM pairs p JOIN mins m ON m.source = p.src_b
-  ) u GROUP BY 1, 2, 3
-), ranked AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY src_a, src_b ORDER BY h) AS rnk
-  FROM unioned
-), agg AS (
-  SELECT src_a, src_b,
-         COUNT(*) AS kp,
-         CAST(SUM(in_a * in_b) AS BIGINT) AS n_both,
-         MAX(CASE WHEN rnk = {KMV_K} THEN h END) AS hk
-  FROM ranked WHERE rnk <= {KMV_K}
-  GROUP BY 1, 2
-)
+KMV_SOURCE_OVERLAP_SQL = f"""{KMV_HASHED_SQL}, {_kmv_pairs_sql("CAST(SUM(in_a * in_b) AS BIGINT) AS n_both")}
 SELECT src_a, src_b,
        ROUND(CAST(n_both AS DOUBLE) / kp, 6) AS jaccard_est,
        ROUND(CASE WHEN hk IS NULL THEN CAST(kp AS DOUBLE)
-                  ELSE CAST({float(KMV_K - 1)} AS DOUBLE) * CAST({HASH_SPACE!r} AS DOUBLE) / hk END, 6) AS union_est,
+                  ELSE {KMV_EST_SQL}hk END, 6) AS union_est,
        ROUND((CAST(n_both AS DOUBLE) / kp)
              * (CASE WHEN hk IS NULL THEN CAST(kp AS DOUBLE)
-                     ELSE CAST({float(KMV_K - 1)} AS DOUBLE) * CAST({HASH_SPACE!r} AS DOUBLE) / hk END), 6) AS intersection_est
+                     ELSE {KMV_EST_SQL}hk END), 6) AS intersection_est
 FROM agg
 """
 
@@ -229,42 +255,13 @@ def kmv_set_difference(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketches. Scale: the sketch stage touches |sources|²·k rows; the
     exact branch is one h-keyed self-join over the distinct
     (source, h) relation (uniform 60-bit key) plus per-source counts."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("source", tokenize("text").alias("toks"))
-    grams = toks.select("source", F.explode(token_ngrams("toks", NGRAM_N)).alias("shingle"))
-    hashed = cached(grams.select("source", md5_hash60(F.col("shingle")).alias("h")).distinct())
-    w = Window.partitionBy("source").orderBy("h")
-    mins = cached(
-        hashed.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= KMV_K)
-        .select("source", "h")
-    )
-    srcs = mins.select("source").distinct()
-    pairs = srcs.select(F.col("source").alias("src_a")).join(
-        srcs.select(F.col("source").alias("src_b")), F.col("src_a") < F.col("src_b")
-    )
-    ua = pairs.join(mins.withColumnRenamed("source", "src_a"), "src_a").select(
-        "src_a", "src_b", "h", F.lit(1).alias("in_a"), F.lit(0).alias("in_b")
-    )
-    ub = pairs.join(mins.withColumnRenamed("source", "src_b"), "src_b").select(
-        "src_a", "src_b", "h", F.lit(0).alias("in_a"), F.lit(1).alias("in_b")
-    )
-    union = (
-        ua.unionByName(ub)
-        .groupBy("src_a", "src_b", "h")
-        .agg(F.max("in_a").alias("in_a"), F.max("in_b").alias("in_b"))
-    )
-    uw = Window.partitionBy("src_a", "src_b").orderBy("h")
-    ranked = union.withColumn("rnk", F.row_number().over(uw)).filter(F.col("rnk") <= KMV_K)
-    agg = ranked.groupBy("src_a", "src_b").agg(
-        F.count("*").alias("kp"),
+    hashed = cached(shingle_hashes(load_table(spark, sf_dir, "documents")).distinct())
+    pairs, agg = _kmv_pair_sketch(
+        _kmv_mins(hashed),
         F.sum(F.col("in_a") * (1 - F.col("in_b"))).alias("n_a_only"),
         F.sum(F.col("in_b") * (1 - F.col("in_a"))).alias("n_b_only"),
-        F.max(F.when(F.col("rnk") == KMV_K, F.col("h"))).alias("hk"),
     )
-    u_est = F.when(
-        F.col("hk").isNull(), F.col("kp").cast("double")
-    ).otherwise(F.lit(float(KMV_K - 1)) * F.lit(HASH_SPACE) / F.col("hk"))
+    u_est = kmv_estimate("kp")
     # exact branch: per-source sizes + h-keyed pair intersection
     sizes = hashed.groupBy("source").agg(F.count("*").alias("sz"))
     inter = (
@@ -297,50 +294,12 @@ def kmv_set_difference(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_KMV_DIFF_UEST_SQL = (
-    f"(CASE WHEN hk IS NULL THEN CAST(kp AS DOUBLE) "
-    f"ELSE CAST({float(KMV_K - 1)} AS DOUBLE) * CAST({HASH_SPACE!r} AS DOUBLE) / hk END)"
-)
+_KMV_DIFF_UEST_SQL = f"(CASE WHEN hk IS NULL THEN CAST(kp AS DOUBLE) ELSE {KMV_EST_SQL}hk END)"
 
-KMV_SET_DIFFERENCE_SQL = f"""
-WITH toks AS (
-  SELECT source,
-         {tokenize_sql()} AS t
-  FROM documents
-), grams AS (
-  SELECT source, array_to_string(t[i : i + {NGRAM_N} - 1], ' ') AS shingle
-  FROM toks, LATERAL (SELECT unnest(range(1, len(t) - {NGRAM_N} + 2)) AS i) r
-  WHERE len(t) >= {NGRAM_N}
-), hashed AS (
-  SELECT DISTINCT source, {md5_hash60_sql('shingle')} AS h FROM grams
-), mins AS (
-  SELECT source, h FROM (
-    SELECT source, h, ROW_NUMBER() OVER (PARTITION BY source ORDER BY h) AS rnk FROM hashed
-  ) t WHERE rnk <= {KMV_K}
-), srcs AS (SELECT DISTINCT source FROM mins),
-pairs AS (
-  SELECT a.source AS src_a, b.source AS src_b
-  FROM srcs a JOIN srcs b ON a.source < b.source
-), unioned AS (
-  SELECT src_a, src_b, h, MAX(in_a) AS in_a, MAX(in_b) AS in_b FROM (
-    SELECT p.src_a, p.src_b, m.h, 1 AS in_a, 0 AS in_b
-    FROM pairs p JOIN mins m ON m.source = p.src_a
-    UNION ALL
-    SELECT p.src_a, p.src_b, m.h, 0 AS in_a, 1 AS in_b
-    FROM pairs p JOIN mins m ON m.source = p.src_b
-  ) u GROUP BY 1, 2, 3
-), ranked AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY src_a, src_b ORDER BY h) AS rnk
-  FROM unioned
-), agg AS (
-  SELECT src_a, src_b,
-         COUNT(*) AS kp,
-         CAST(SUM(in_a * (1 - in_b)) AS BIGINT) AS n_a_only,
-         CAST(SUM(in_b * (1 - in_a)) AS BIGINT) AS n_b_only,
-         MAX(CASE WHEN rnk = {KMV_K} THEN h END) AS hk
-  FROM ranked WHERE rnk <= {KMV_K}
-  GROUP BY 1, 2
-), sizes AS (
+KMV_SET_DIFFERENCE_SQL = f"""{KMV_HASHED_SQL}, {_kmv_pairs_sql(
+    "CAST(SUM(in_a * (1 - in_b)) AS BIGINT) AS n_a_only",
+    "CAST(SUM(in_b * (1 - in_a)) AS BIGINT) AS n_b_only",
+)}, sizes AS (
   SELECT source, COUNT(*) AS sz FROM hashed GROUP BY 1
 ), inter AS (
   SELECT x.source AS src_a, y.source AS src_b, COUNT(*) AS n_inter
@@ -368,6 +327,20 @@ CM_D = 4            # count-min depth (independent hash rows)
 CM_MIN_COUNT = 50   # probe set: tokens with true count >= this
 
 
+def cm_cells() -> Column:
+    """The CM_D count-min cells of a `token` column: an array of
+    (d, bucket) structs, bucket = md5_hash60('cm{d}:' || token) % CM_W."""
+    return F.array(
+        *[
+            F.struct(
+                F.lit(d).alias("d"),
+                (md5_hash60(F.concat(F.lit(f"cm{d}:"), F.col("token"))) % CM_W).alias("bucket"),
+            )
+            for d in range(CM_D)
+        ]
+    )
+
+
 def count_min_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min sketch (Cormode & Muthukrishnan 2005) built over the
     corpus token stream, evaluated against truth on the heavy tokens —
@@ -388,16 +361,7 @@ def count_min_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(F.explode(tokenize("text")).alias("token"))
     tf = cached(tok.groupBy("token").agg(F.count("*").alias("cnt")))
-    buckets = F.array(
-        *[
-            F.struct(
-                F.lit(d).alias("d"),
-                (md5_hash60(F.concat(F.lit(f"cm{d}:"), F.col("token"))) % CM_W).alias("bucket"),
-            )
-            for d in range(CM_D)
-        ]
-    )
-    expanded = tf.select("token", "cnt", F.explode(buckets).alias("b")).select(
+    expanded = tf.select("token", "cnt", F.explode(cm_cells()).alias("b")).select(
         "token", "cnt", "b.d", "b.bucket"
     )
     cm = expanded.groupBy("d", "bucket").agg(F.sum("cnt").alias("c"))

@@ -86,7 +86,7 @@ from capstone_etl_spark.streaming.windows import (
     ATTRIBUTION_WINDOW_SEC,
     stream_enrich_user_tier,
 )
-from capstone_etl_spark.streaming.stateful import running_user_activity
+from capstone_etl_spark.streaming.stateful import bottom_k
 
 SESSION_GAP_SEC = 30 * 60
 
@@ -188,22 +188,21 @@ FROM with_id GROUP BY user_id, session_seq
 
 
 def stream_user_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The CUSTOM stateful operator (applyInPandasWithState) end-to-end:
-    per-user running count / value-sum / last-seen evolved across
-    micro-batches, state in exact integer cents so the final answer is
-    replay-order independent and ORACLE-CHECKABLE. Update mode emits a
-    row per touched user per batch; the final state is the row with the
-    highest running count (strictly increasing per touch) — extracted
-    with a lexicographic struct-max, no ordering assumptions on the
-    value column."""
-    got = drain_staged(
-        spark, sf_dir, "events", lambda s, staged: running_user_activity(s), "update"
-    )
-    final = F.max(F.struct("n_events", "total_value", "last_seen_sec")).alias("s")
-    return (
-        got.groupBy("user_id")
-        .agg(final)
-        .select("user_id", "s.n_events", "s.total_value", "s.last_seen_sec")
+    """Per-user running count / value sum / last-seen second, kept
+    across micro-batches as a built-in complete-mode aggregation: the
+    state is three cells per user, O(users), and the value sum is the
+    oracle's own exact DECIMAL(18,2) sum, so the drained table is
+    replay-order independent and equals STREAM_USER_ACTIVITY_SQL."""
+    return drain_staged(
+        spark,
+        sf_dir,
+        "events",
+        lambda s, staged: s.groupBy("user_id").agg(
+            F.count("*").alias("n_events"),
+            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
+            F.max(F.col("ts").cast("long")).alias("last_seen_sec"),
+        ),
+        "complete",
     )
 
 
@@ -321,54 +320,35 @@ def stream_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The KMV sketch as a STREAMING stateful operator — sketches are
     the streaming-native cardinality tool precisely because their merge
     is tiny and associative: per-source state is the bottom-k hash list
-    (k int64s, bounded forever), each micro-batch unions its distinct
+    (`bottom_k`, k int64s, bounded forever), each micro-batch unions its
     shingle hashes into it, and the k-th minimum yields the same
     deterministic estimate the batch operator computes. After draining,
     the final state MUST equal the batch sketch exactly (bottom-k of a
-    union is order-free) — so the query shares the batch estimator's
-    arithmetic and is oracle-checked value-for-value, not approximately.
-    Update-mode emissions carry a per-key update counter; the final row
-    per source is selected by struct-max on it (stream_user_activity's
-    device)."""
-    from capstone_etl_spark.functions.hashing import md5_hash60
-    from capstone_etl_spark.functions.text import token_ngrams, tokenize
-    from capstone_etl_spark.operators.sketches import NGRAM_N
-    from capstone_etl_spark.streaming.stateful import kmv_bottom_k
+    union is order-free) — so the query shares the batch hash stream
+    and estimator and is oracle-checked value-for-value. The final
+    state is read off all emissions in one pass: the bottom-k only
+    grows to K, and its K-th hash only falls, so kp = max(rnk) and
+    hk = min(h at rnk = K)."""
+    from capstone_etl_spark.operators.sketches import KMV_K, kmv_estimate, shingle_hashes
 
-    def transform(stream, staged):
-        toks = stream.select("source", tokenize("text").alias("toks"))
-        hashes = toks.select(
-            "source",
-            F.explode(token_ngrams("toks", NGRAM_N)).alias("g"),
-        ).select("source", md5_hash60(F.col("g")).alias("h"))
-        return kmv_bottom_k(hashes)
-
-    got = drain_staged(spark, sf_dir, "documents", transform, "update")
-    final = F.max(F.struct("upd", "kp", "hk", "kmv_estimate")).alias("s")
-    return (
-        got.groupBy("source")
-        .agg(final)
-        .select("source", F.col("s.kp").alias("kp"), F.col("s.hk").alias("hk"),
-                F.round(F.col("s.kmv_estimate"), 6).alias("kmv_estimate"))
+    got = drain_staged(
+        spark,
+        sf_dir,
+        "documents",
+        lambda s, staged: bottom_k(shingle_hashes(s), KMV_K),
+        "update",
     )
+    sk = got.groupBy("source").agg(
+        F.max("rnk").alias("kp"),
+        F.min(F.when(F.col("rnk") == KMV_K, F.col("h"))).alias("hk"),
+    )
+    return sk.select("source", "kp", "hk", F.round(kmv_estimate("kp"), 6).alias("kmv_estimate"))
 
 
 def _stream_kmv_sketch_sql() -> str:
-    from capstone_etl_spark.operators.sketches import HASH_SPACE, KMV_K, NGRAM_N
-    from capstone_etl_spark.functions.hashing import md5_hash60_sql
+    from capstone_etl_spark.operators.sketches import KMV_EST_SQL, KMV_HASHED_SQL, KMV_K
 
-    return f"""
-WITH toks AS (
-  SELECT source,
-         {tokenize_sql()} AS t
-  FROM documents
-), grams AS (
-  SELECT source, array_to_string(t[i : i + {NGRAM_N} - 1], ' ') AS shingle
-  FROM toks, LATERAL (SELECT unnest(range(1, len(t) - {NGRAM_N} + 2)) AS i) r
-  WHERE len(t) >= {NGRAM_N}
-), hashed AS (
-  SELECT DISTINCT source, {md5_hash60_sql('shingle')} AS h FROM grams
-), ranked AS (
+    return f"""{KMV_HASHED_SQL}, ranked AS (
   SELECT source, h, ROW_NUMBER() OVER (PARTITION BY source ORDER BY h) AS rnk FROM hashed
 ), sk AS (
   SELECT source,
@@ -378,7 +358,7 @@ WITH toks AS (
 )
 SELECT source, kp, hk,
        ROUND(CASE WHEN kp < {KMV_K} THEN CAST(kp AS DOUBLE)
-                  ELSE CAST({float(KMV_K - 1)} AS DOUBLE) * CAST({HASH_SPACE!r} AS DOUBLE) / hk END, 6) AS kmv_estimate
+                  ELSE {KMV_EST_SQL}hk END, 6) AS kmv_estimate
 FROM sk
 """
 
@@ -386,29 +366,20 @@ FROM sk
 def stream_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The deterministic reservoir sample as a STREAMING stateful
     operator: per-source state is the K smallest (salted-hash, doc_id)
-    pairs — bounded forever, merged per micro-batch exactly like the
-    KMV sketch's bottom-k. Because bottom-K of a union is order-free,
-    the drained state equals the BATCH reservoir_sample row-for-row
-    (same salt, same hash), so the streaming query shares the batch
-    oracle verbatim — the streaming form of 'the sample is stable
-    under reruns' becomes 'the sample is independent of
-    micro-batching'. Final snapshot per source selected by the
-    update-counter max (stream_user_activity's device)."""
+    pairs — bounded forever, merged per micro-batch by the same
+    `bottom_k` tracker as the KMV sketch. Because bottom-K of a union
+    is order-free, the drained state equals the BATCH reservoir_sample
+    row-for-row (same salt, same hash), so the streaming query shares
+    the batch oracle verbatim — the streaming form of 'the sample is
+    stable under reruns' becomes 'the sample is independent of
+    micro-batching'. The final snapshot per source is the emission
+    with the highest update counter."""
     from capstone_etl_spark.functions.hashing import md5_hash60
-    from capstone_etl_spark.operators.sampling import RESERVOIR_SALT
-    from capstone_etl_spark.streaming.stateful import reservoir_bottom_k
+    from capstone_etl_spark.operators.sampling import RESERVOIR_K, RESERVOIR_SALT
 
     def transform(stream, staged):
-        return reservoir_bottom_k(
-            stream.select(
-                "source",
-                "doc_id",
-                "lang",
-                md5_hash60(
-                    F.concat(F.lit(RESERVOIR_SALT), F.col("doc_id").cast("string"))
-                ).alias("h"),
-            )
-        )
+        h = md5_hash60(F.concat(F.lit(RESERVOIR_SALT), F.col("doc_id").cast("string")))
+        return bottom_k(stream.select("source", h.alias("h"), "doc_id", "lang"), RESERVOIR_K)
 
     got = drain_staged(spark, sf_dir, "documents", transform, "update")
     mx = got.groupBy(F.col("source").alias("msrc")).agg(F.max("upd").alias("mupd"))
@@ -484,25 +455,12 @@ def stream_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch sketch EXACTLY and shares its oracle arithmetic. Complete-
     mode aggregation on (d, bucket): |state| = CM_D·CM_W keys no
     matter how many shards stream in."""
-    from capstone_etl_spark.functions.hashing import md5_hash60
     from capstone_etl_spark.functions.text import tokenize
-    from capstone_etl_spark.operators.sketches import CM_D, CM_W
-
-    buckets = F.array(
-        *[
-            F.struct(
-                F.lit(d).alias("d"),
-                (md5_hash60(F.concat(F.lit(f"cm{d}:"), F.col("token"))) % CM_W).alias(
-                    "bucket"
-                ),
-            )
-            for d in range(CM_D)
-        ]
-    )
+    from capstone_etl_spark.operators.sketches import cm_cells
 
     def transform(stream, staged):
         tok = stream.select(F.explode(tokenize("text")).alias("token"))
-        cells = tok.select(F.explode(buckets).alias("b")).select("b.d", "b.bucket")
+        cells = tok.select(F.explode(cm_cells()).alias("b")).select("b.d", "b.bucket")
         return cells.groupBy("d", "bucket").agg(F.count("*").cast("long").alias("c"))
 
     return drain_staged(spark, sf_dir, "documents", transform, "complete")
@@ -634,9 +592,9 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from capstone_etl_spark.functions.hashing import md5_hash60
     from capstone_etl_spark.functions.text import token_ngrams, tokenize
     from capstone_etl_spark.operators.dedup import (
-        JACCARD_THRESHOLD,
         NGRAM_N,
         _is_delta,
+        admission_verdicts,
         shingles,
     )
     from capstone_etl_spark.sources.tables import load_table
@@ -667,32 +625,7 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     pairs_raw = drain_staged(spark, sf_dir, "documents", transform, "complete")
-
-    # batch verdict assembly over the drained pair table
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
-    jac = F.col("n_inter") / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter"))
-    pairs = (
-        pairs_raw.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(jac >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-    )
-    best = pairs.groupBy("doc_a").agg(
-        F.min(F.struct("doc_b", "jaccard")).alias("m"),
-        F.count("*").cast("long").alias("n_dups"),
-    )
-    delta_docs = docs.select("doc_id").filter(_is_delta(F.col("doc_id")))
-    return (
-        delta_docs.join(best.withColumnRenamed("doc_a", "doc_id"), "doc_id", "left")
-        .select(
-            "doc_id",
-            F.col("m").isNotNull().alias("is_dup"),
-            F.coalesce(F.col("m.doc_b"), F.col("doc_id")).alias("dup_of"),
-            F.coalesce(F.col("n_dups"), F.lit(0).cast("long")).alias("n_dups"),
-            F.coalesce(F.col("m.jaccard"), F.lit(0.0)).alias("best_jaccard"),
-        )
-    )
+    return admission_verdicts(docs, sizes, pairs_raw)
 
 
 def _stream_cosine_topk(

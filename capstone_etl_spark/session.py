@@ -170,9 +170,9 @@ def get_spark(
       coalesces from a deliberately-high initial number).
     - UTC session timezone so timestamp semantics match the DuckDB
       oracle exactly.
-    - Arrow enabled for the few pandas-backed operators (stateful
-      streaming via applyInPandasWithState, multimodal decode stubs
-      via mapInPandas) — everything else is JVM-side.
+    - Arrow enabled for the few pandas-backed operators (the one
+      bottom-k stream tracker via applyInPandasWithState, multimodal
+      decode stubs via mapInPandas) — everything else is JVM-side.
     """
     cpus, shuffle = _core_knobs(cpus, shuffle_partitions)
     builder = (

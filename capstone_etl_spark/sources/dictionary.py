@@ -29,7 +29,6 @@ _RES = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "resources"
 )
 DEFAULT_WORDLIST = os.path.join(_RES, "wordlist_en_full.txt")
-SMALL_WORDLIST = os.path.join(_RES, "wordlist_en.txt")
 
 
 def load_dictionary(spark: SparkSession, path: str | None = None) -> DataFrame:

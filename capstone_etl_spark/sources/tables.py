@@ -24,8 +24,6 @@ same capability has three branches:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,8 +41,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # The reference's document projection (main.go:130) — the 5 columns its
 # SQL scan reads; everything else in the row is never touched.

@@ -11,8 +11,9 @@ An operator takes a frame that may be a stream or a batch frame; the
 same transformation plans incrementally or as a batch. One shared with
 a batch query is written once in the batch module (operators/events.py
 `tumbling`, `sliding`, `dedup_counts`, the Twin accumulations);
-windows.py holds the stream-only ones, stateful.py the
-applyInPandasWithState trackers. tests/test_streaming.py checks
+windows.py holds the stream-only ones, stateful.py the one
+applyInPandasWithState tracker (`bottom_k`, for state no built-in
+aggregation can hold). tests/test_streaming.py checks
 multi-batch replay against the batch forms; the stream_* queries
 hash-compare against DuckDB (their batch twin's oracle in BATCH_TWIN).
 """

@@ -12,11 +12,8 @@ small queries.
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
 import bench
 
 

@@ -6,9 +6,6 @@ incident). VERDICT r2 'What's wrong' #4."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
 import __spark_entry__ as entrymod
 from capstone_etl_spark.session import release_caches
 

@@ -10,12 +10,9 @@ classes of bug it found stay fixed."""
 
 from __future__ import annotations
 
-import sys
-
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
 import __spark_entry__ as entrymod
 from tools.check_correctness import compare
 

@@ -101,12 +101,13 @@ def test_degenerate_events_match_oracle(spark, degen_events_sf, duck, name):
     assert compare(name, spark_pdf, duck_pdf) == []
 
 
-# The streaming twins on the SAME pathological stream: the three whose
+# The streaming queries on the SAME pathological stream whose
 # semantics are subtlest under ties and boundaries — session windows
 # (the exact-gap event must MERGE, a strictly-greater gap must split),
-# watermarked dedup, and the stream-stream interval join (clicks and
-# the in-window purchase can land in different micro-batch files).
-# Job-per-call, so only these three are pinned; the full 217-query
+# watermarked dedup, the stream-stream interval join (clicks and the
+# in-window purchase can land in different micro-batch files), CDC
+# apply and the running activity sums. Job-per-call, so only these
+# are pinned; the full 217-query
 # degenerate-events sweep runs ad hoc via tools/check_correctness.py.
 STREAM_NAMES = [
     "stream_user_sessions",
@@ -117,6 +118,9 @@ STREAM_NAMES = [
     # state, and user 4's final 'error' write must tombstone the user
     # out of the drained snapshot
     "stream_changelog_apply",
+    # running activity: the 0.125 / 0.01 / 490.02 values put the value
+    # sum's DECIMAL(18,2) tie rounding through the streaming aggregation
+    "stream_user_activity",
 ]
 
 

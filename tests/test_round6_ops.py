@@ -6,9 +6,6 @@ the semantic invariants oracle hashing can't express."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
 from capstone_etl_spark.operators.dedup import TEMPLATE_MIN_DOCS, template_extraction
 from capstone_etl_spark.operators.packing import (
     BATCH_BUCKETS,

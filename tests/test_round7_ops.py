@@ -3,10 +3,6 @@ and the streaming incremental-dedup admission query."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 
 def test_bpe_encode_invariants(spark, sf_dir):
     from capstone_etl_spark.operators.textstats import bpe_encode

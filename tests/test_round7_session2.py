@@ -4,10 +4,6 @@ simplified k-means silhouette."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 
 def test_cms_join_size_never_underestimates(spark, sf_dir):
     """The CMS inner product is a provable overestimate: colliding keys

@@ -4,10 +4,6 @@ code-vs-prose detection."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 
 def test_snm_candidate_set_is_exactly_the_window(spark, sf_dir):
     """Ranks are dense and unique, so the candidate relation must hold

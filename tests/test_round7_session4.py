@@ -5,9 +5,7 @@ and the ε-DP per-source histogram release."""
 from __future__ import annotations
 
 import math
-import sys
 
-sys.path.insert(0, "/root/repo")
 
 SF_01 = "/root/testdata/sf0.01"
 

@@ -7,9 +7,7 @@ from __future__ import annotations
 
 import hashlib
 import math
-import sys
 
-sys.path.insert(0, "/root/repo")
 
 SF_01 = "/root/testdata/sf0.01"
 

@@ -1,15 +1,15 @@
 """Regression tests for the ADVICE r3 semantic edges: year-wrapping
-cohort weeks, unknown-language sampling drops, guessed watermark
-horizons, and banker's-rounding drift in the stateful operator. Each
-test pins the FIXED behavior on a fixture that the sf0.01 gate data
-can't exercise (30 days of events, 5 known languages)."""
+cohort weeks, unknown-language sampling drops and guessed watermark
+horizons. Each test pins the FIXED behavior on a fixture that the
+sf0.01 gate data can't exercise (30 days of events, 5 known languages).
+The DECIMAL(18,2) tie rounding of stream_user_activity's value sum is
+checked against DuckDB on test_degenerate_events' fixture."""
 
 from __future__ import annotations
 
 import datetime as dt
 
 import duckdb
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -19,7 +19,6 @@ from capstone_etl_spark.operators.sampling import (
     doc_sample_stratified,
 )
 from capstone_etl_spark.operators.streaming_queries import _horizon_watermark
-from capstone_etl_spark.streaming.stateful import _to_cents
 
 
 def _write_events(spark, path: str, rows: list[tuple]) -> None:
@@ -89,24 +88,3 @@ def test_horizon_watermark_covers_staged_span(spark):
     days = int(wm.split()[0])
     assert wm.endswith("days")
     assert days * 86400 > dt.timedelta(days=3, hours=2).total_seconds()
-
-
-def test_to_cents_rounds_half_away_from_zero(spark):
-    # 0.125 is exact in binary: *100 = 12.5, a true tie. HALF_UP → 13;
-    # pandas .round() (banker's) would give 12 and diverge from the
-    # DECIMAL(18,2) oracle.
-    assert _to_cents(pd.Series([0.125])) == 13
-    assert _to_cents(pd.Series([-0.125])) == -13
-    # Both engines round the double's SHORTEST decimal repr, so 2.675
-    # ("2.675" → HALF_UP) is 2.68 and 1.005 is 1.01, even though the
-    # underlying doubles sit just below the tie.
-    assert _to_cents(pd.Series([2.675])) == 268
-    assert _to_cents(pd.Series([1.005])) == 101
-    # pin agreement with Spark's DECIMAL(18,2) cast on a mixed batch
-    vals = [0.125, -0.125, 2.675, 1.005, -1.005, 3.333, 99.995]
-    spark_cents = (
-        spark.createDataFrame([(v,) for v in vals], "value double")
-        .agg(F.sum(F.col("value").cast("decimal(18,2)")).alias("s"))
-        .first()["s"]
-    )
-    assert _to_cents(pd.Series(vals)) == int(spark_cents * 100)

@@ -1,5 +1,6 @@
 """Structured Streaming layer: multi-batch equivalence vs batch forms,
-watermark late-drop semantics, custom stateful operator."""
+watermark late-drop semantics, the bottom-k state tracker (through
+stream_reservoir_sample's twin)."""
 
 from __future__ import annotations
 
@@ -17,7 +18,6 @@ from capstone_etl_spark.streaming import (
     stream_click_purchase_join,
     stream_session_windows,
 )
-from capstone_etl_spark.streaming.stateful import running_user_activity
 
 SF_DIR = "/root/testdata/sf0.001"
 HORIZON = "400 days"
@@ -109,38 +109,6 @@ def test_watermark_drops_late(spark, tmp_path):
     )
     n_batch = spark.read.parquet(str(tmp_path / "staging")).count()
     assert n_stream < n_batch
-
-
-def test_stateful_running_activity(spark, tmp_path):
-    """applyInPandasWithState accumulates per-user state across
-    micro-batches; the final update per user equals the batch rollup."""
-    stream = _staged_stream(spark, tmp_path, per_trigger=2)
-    got = run_to_memory(
-        running_user_activity(stream), str(tmp_path / "ckpt"), output_mode="update"
-    )
-    # update mode emits one row per (user, batch-touched); the running
-    # count is monotone — the max row per user is the final state
-    final = (
-        got.groupBy("user_id")
-        .agg(
-            F.max("n_events").alias("n_events"),
-            F.max("total_value").alias("total_value"),
-            F.max("last_seen_sec").alias("last_seen_sec"),
-        )
-    )
-    ev = spark.read.parquet(str(tmp_path / "staging"))
-    want = ev.groupBy("user_id").agg(
-        F.count("*").alias("n_events"),
-        F.round(F.sum(F.col("value").cast("double")), 2).alias("total_value"),
-        F.max(F.col("ts").cast("long")).alias("last_seen_sec"),
-    )
-    g = {r.user_id: r for r in final.collect()}
-    w = {r.user_id: r for r in want.collect()}
-    assert set(g) == set(w)
-    for uid, row in w.items():
-        assert g[uid].n_events == row.n_events, uid
-        assert abs(g[uid].total_value - row.total_value) < 0.05, uid
-        assert g[uid].last_seen_sec == row.last_seen_sec, uid
 
 
 def test_stream_foreachbatch_incremental_upsert(spark, tmp_path):
@@ -306,11 +274,8 @@ def test_stream_equals_batch(spark, stream_name):
     legs and the deterministic draws are all replay-order free."""
     from collections import Counter
 
-    from capstone_etl_spark.operators.sampling import RESERVOIR_K
     from capstone_etl_spark.session import release_caches
-    from capstone_etl_spark.streaming.stateful import _RESERVOIR_K
 
-    assert _RESERVOIR_K == RESERVOIR_K
     qs = entrymod.queries()
     try:
         got = Counter(map(tuple, qs[stream_name](spark, SF_DIR).collect()))

@@ -16,6 +16,7 @@ oracle parity for every registered query is then evidenced in-repo
 from __future__ import annotations
 
 import json
+import os
 import sys
 
 import duckdb
@@ -101,7 +102,7 @@ def main() -> int:
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
     from capstone_etl_spark.session import get_spark, release_caches
 
