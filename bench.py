@@ -416,6 +416,12 @@ def warm_up(spark, sf_dir: str, first_query: str | None) -> None:
         spark, sf_dir, "events", lambda stream, staged: stream.groupBy("event_type").count(),
         "complete",
     ).collect()
+    # The Python workers: started here, so the first pandas-backed
+    # query measured (mapInPandas, applyInPandasWithState) does not
+    # absorb their start-up. One identity pass on every slot.
+    spark.range(0, 64, 1, spark.sparkContext.defaultParallelism).mapInPandas(
+        lambda batches: batches, "id long"
+    ).collect()
 
 
 def _host_probe(spark) -> float:

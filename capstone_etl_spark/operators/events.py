@@ -1280,8 +1280,6 @@ def scd_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id (uniform key, bounded by a user's own history); nothing is
     corpus-global. Exactness: interval edges are the event timestamps
     themselves (cast to long seconds; no float anywhere)."""
-    from pyspark.sql import Window
-
     ev = _events(spark, sf_dir).select(
         "user_id", "event_type", F.col("ts").cast("long").alias("ts_sec"), "event_id"
     )
@@ -1448,32 +1446,43 @@ def ab_test_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns (treatment minus/over control, pooled-variance z) repeat on
     both rows so the table is self-contained.
 
-    Scale plan: one groupBy(user) for first-exposure timestamps, one
-    semi-join-shaped conversion pass (conversions join the exposed-user
-    relation on user, filter ts > first view, distinct), one ≤2-row
-    variant rollup — two user-keyed shuffles regardless of event count.
-    The z/lift scalars ride back over the 2-row relation as a 1-row
-    pivot broadcast (allowlisted). Exactness: counts are exact int64;
+    Scale plan: one user-keyed aggregation (ab_users), then one global
+    aggregation (ab_readout) — a single user-keyed shuffle regardless
+    of event count, no join; stream_ab_test keeps the same per-user
+    state during ingest (a `Twin`). Exactness: counts are exact int64;
     rates/z divide identical doubles and round once."""
-    ev = load_table(spark, sf_dir, "events")
-    exposed = cached(
-        ev.filter(F.col("event_type") == AB_EXPOSE_TYPE)
+    return ab_release(ab_users(_events(spark, sf_dir)))
+
+
+def ab_users(ev: DataFrame) -> DataFrame:
+    """(user_id, mn, mx, exposed) over a batch-or-stream events frame:
+    first view and last purchase in exact microseconds, and whether the
+    user has any view row (a view with a NULL ts still exposes, as the
+    oracle's MIN(ts) … GROUP BY keeps the user). min/max merge
+    order-free, so a purchase arriving batches before its view still
+    classifies correctly."""
+    is_view = F.col("event_type") == AB_EXPOSE_TYPE
+    us = F.unix_micros("ts")
+    return (
+        ev.filter(F.col("event_type").isin(AB_EXPOSE_TYPE, AB_CONVERT_TYPE))
         .groupBy("user_id")
-        .agg(F.min("ts").alias("first_view"))
-        .select("user_id", "first_view", ab_variant_col().alias("variant"))
+        .agg(
+            F.min(F.when(is_view, us)).alias("mn"),
+            F.max(F.when(~is_view, us)).alias("mx"),
+            F.max(is_view).alias("exposed"),
+        )
     )
-    converted = (
-        ev.filter(F.col("event_type") == AB_CONVERT_TYPE)
-        .join(exposed.select("user_id", "first_view"), "user_id")
-        .filter(F.col("ts") > F.col("first_view"))
-        .select("user_id")
-        .distinct()
-        .withColumn("conv", F.lit(1).cast("long"))
+
+
+def ab_release(users: DataFrame) -> DataFrame:
+    """Exposed users → (variant, conv) → ab_readout. No purchase or no
+    timed view makes mx > mn NULL: not converted."""
+    return ab_readout(
+        users.filter(F.col("exposed")).select(
+            ab_variant_col().alias("variant"),
+            F.coalesce((F.col("mx") > F.col("mn")).cast("long"), F.lit(0)).alias("conv"),
+        )
     )
-    per_user = exposed.join(converted, "user_id", "left").select(
-        "variant", F.coalesce(F.col("conv"), F.lit(0)).cast("long").alias("conv")
-    )
-    return ab_readout(per_user)
 
 
 def ab_variant_col(user_col: str = "user_id") -> Column:
@@ -1487,23 +1496,14 @@ def ab_variant_col(user_col: str = "user_id") -> Column:
 
 
 def ab_readout(per_user: DataFrame) -> DataFrame:
-    """(variant, conv 0/1) exposed-user rows → the 2-row experiment
-    readout. Shared tail of ab_test_analysis and stream_ab_test: the
-    variant rollup, the lift columns, and the pooled z live here
-    once."""
-    # cached: the 2-row rollup feeds BOTH the stats pivot and the output
-    # rows — uncached, the conversion join over events would run twice
-    per_variant = cached(
-        per_user.groupBy("variant").agg(
-            F.count("*").cast("long").alias("n_exposed"),
-            F.sum("conv").cast("long").alias("n_converted"),
-        )
-    )
-    pivot = per_variant.agg(
-        F.sum(F.when(F.col("variant") == 0, F.col("n_exposed"))).alias("n0"),
-        F.sum(F.when(F.col("variant") == 0, F.col("n_converted"))).alias("c0"),
-        F.sum(F.when(F.col("variant") == 1, F.col("n_exposed"))).alias("n1"),
-        F.sum(F.when(F.col("variant") == 1, F.col("n_converted"))).alias("c1"),
+    """(variant, conv 0/1) exposed-user rows → the per-arm readout from
+    ONE global aggregation: n{v}/c{v} per arm, the lift and z scalars
+    on that row, the arm rows unpacked from it. An arm with no exposed
+    users has NULL counts and no row, as under groupBy("variant")."""
+    arms = range(AB_VARIANTS)
+    tot = per_user.agg(
+        *[F.sum(F.when(F.col("variant") == v, 1)).alias(f"n{v}") for v in arms],
+        *[F.sum(F.when(F.col("variant") == v, F.col("conv"))).alias(f"c{v}") for v in arms],
     )
     n0, c0 = F.col("n0").cast("double"), F.col("c0").cast("double")
     n1, c1 = F.col("n1").cast("double"), F.col("c1").cast("double")
@@ -1513,12 +1513,22 @@ def ab_readout(per_user: DataFrame) -> DataFrame:
     # guards: a zero-conversion control (p0 = 0) or an all-or-nothing
     # pooled rate (se = 0) yields NULL — Spark ANSI would throw on /0
     # and DuckDB would emit inf; NULL is the cross-engine agreement
-    stats = pivot.select(
+    rows = F.array(
+        *[
+            F.struct(
+                F.lit(v).cast("long").alias("variant"),
+                F.col(f"n{v}").alias("n_exposed"),
+                F.col(f"c{v}").alias("n_converted"),
+            )
+            for v in arms
+        ]
+    )
+    return tot.select(
+        F.inline(rows),
         F.round(p1 - p0, 6).alias("abs_lift"),
         F.when(p0 > 0, F.round((p1 - p0) / p0, 6)).alias("rel_lift"),
         F.when(se > 0, F.round((p1 - p0) / se, 6)).alias("z_score"),
-    )
-    return per_variant.join(F.broadcast(stats), F.lit(True)).select(
+    ).filter(F.col("n_exposed") > 0).select(
         "variant",
         "n_exposed",
         "n_converted",
@@ -1530,8 +1540,6 @@ def ab_readout(per_user: DataFrame) -> DataFrame:
 
 
 def _ab_test_sql() -> str:
-    from capstone_etl_spark.functions.hashing import md5_hash60_sql
-
     v = md5_hash60_sql(f"'{AB_SALT}' || CAST(user_id AS VARCHAR)")
     return f"""
 WITH exposed AS (

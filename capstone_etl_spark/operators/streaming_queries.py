@@ -48,7 +48,8 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from capstone_etl_spark.functions.text import tokenize_sql
+from capstone_etl_spark.functions.hashing import md5_hash60
+from capstone_etl_spark.functions.text import token_ngrams, tokenize, tokenize_sql
 from capstone_etl_spark.functions.vectors import dot_long, quantized_cosine
 from capstone_etl_spark.operators import dedup, events, privacy, quality, textstats
 from capstone_etl_spark.operators.similarity import (
@@ -76,7 +77,7 @@ from capstone_etl_spark.operators.similarity import (
     sim_topk,
 )
 from capstone_etl_spark.session import cached, checkpoint_truncate
-from capstone_etl_spark.sources import tables
+from capstone_etl_spark.sources.tables import load_table
 from capstone_etl_spark.streaming import (
     drain_staged,
     stream_click_purchase_join,
@@ -265,7 +266,6 @@ def _user_tiers(spark: SparkSession, sf_dir: str):
     """Batch-computed static dimension: per-user lifetime purchase
     value bucketed into fixed tiers (fixed thresholds, DECIMAL-exact
     sums — deterministic on both engines)."""
-    from capstone_etl_spark.sources.tables import load_table
 
     ev = load_table(spark, sf_dir, "events")
     total = (
@@ -374,7 +374,6 @@ def stream_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     stable under reruns' becomes 'the sample is independent of
     micro-batching'. The final snapshot per source is the emission
     with the highest update counter."""
-    from capstone_etl_spark.functions.hashing import md5_hash60
     from capstone_etl_spark.operators.sampling import RESERVOIR_K, RESERVOIR_SALT
 
     def transform(stream, staged):
@@ -405,7 +404,6 @@ def stream_mixing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     source_mixing_weights (same √ snap to DECIMAL(28,10), same one
     double division), and the oracle is the batch SQL minus the
     dup-rate column — the streaming engine must reproduce it exactly."""
-    from capstone_etl_spark.functions.text import tokenize
 
     ws = F.size(tokenize("text")).cast("long")
     snap = drain_staged(
@@ -455,7 +453,6 @@ def stream_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch sketch EXACTLY and shares its oracle arithmetic. Complete-
     mode aggregation on (d, bucket): |state| = CM_D·CM_W keys no
     matter how many shards stream in."""
-    from capstone_etl_spark.functions.text import tokenize
     from capstone_etl_spark.operators.sketches import cm_cells
 
     def transform(stream, staged):
@@ -502,8 +499,6 @@ def stream_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     train doc's groups = its matched allowed-shingle count. One
     streaming aggregation, state bounded by cross-cut candidate pairs
     (+ one NULL-bench row per train doc)."""
-    from capstone_etl_spark.functions.hashing import md5_hash60
-    from capstone_etl_spark.functions.text import token_ngrams, tokenize
     from capstone_etl_spark.operators.dedup import (
         BENCH_MOD,
         CONTAINMENT_THRESHOLD,
@@ -511,7 +506,6 @@ def stream_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         NGRAM_N,
         shingles,
     )
-    from capstone_etl_spark.sources.tables import load_table
 
     sh = shingles(load_table(spark, sf_dir, "documents"))
     bench = sh.filter(F.col("doc_id") % BENCH_MOD == 0).select(
@@ -589,15 +583,12 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch n_inter; both partner sizes come from the static size table
     at verdict time. State is bounded by cross-delta candidate pairs
     (df-capped), never |base|²."""
-    from capstone_etl_spark.functions.hashing import md5_hash60
-    from capstone_etl_spark.functions.text import token_ngrams, tokenize
     from capstone_etl_spark.operators.dedup import (
         NGRAM_N,
         _is_delta,
         admission_verdicts,
         shingles,
     )
-    from capstone_etl_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
     sh = _stream_static(shingles(docs))
@@ -686,7 +677,7 @@ def stream_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     path an online retrieval tier runs against the batch-built index
     (_stream_cosine_topk). Oracle: the batch ANN_IVF_TOPK_SQL
     verbatim."""
-    emb = tables.load_table(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     emb_q = emb.select("vec_id", quantize_fp().alias("vq"))
     seeds = quantizer_seeds(emb_q)
     assign = _stream_static(nearest_cell(ivf_seed_d2(emb_q, seeds)))
@@ -713,7 +704,7 @@ def stream_ann_hivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     B·N^(1/4) — the same asymptotic win the batch index measured
     (SCALE.md). Oracle: ANN_HIVF_TOPK_SQL verbatim (the drained
     serving results equal the batch index lookups)."""
-    emb = tables.load_table(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     emb_q = emb.select("vec_id", quantize_fp().alias("vq"))
     assign = _stream_static(hier_assign(emb_q).select("vec_id", "cell"))
     brow = _hier_probe_row(emb_q)
@@ -739,7 +730,7 @@ def stream_ann_hivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured (decade-2 exponent 0.95 vs the flat 1.24, SCALE.md); the
     sink holds candidate×M bounded rows, and re-delivery cannot
     corrupt anything because nothing aggregates in-stream."""
-    emb = tables.load_table(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     quant = quantize_fp()
     emb_q = emb.select("vec_id", quant.alias("vq"))
     assign = _stream_static(hier_assign(emb_q).select("vec_id", "cell"))
@@ -798,7 +789,7 @@ def stream_bitext_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     mutual-argmax verdict assembly runs the batch code on it and the
     mined set equals the batch miner row-for-row. Oracle:
     BITEXT_MINING_SQL verbatim."""
-    emb = tables.load_table(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     quant = quantize_fp()
     emb_q = emb.select("vec_id", quant.alias("vq"))
     assign = _stream_static(hier_assign(emb_q).select("vec_id", "cell"))
@@ -847,7 +838,7 @@ def stream_semantic_dedup_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantized cosine over each side's `vq` and squared norm (the
     members carry theirs; an arriving row quantizes once, for routing,
     and folds its norm), one integer fold per pair."""
-    emb = tables.load_table(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     quant = quantize_fp()
     emb_q = emb.select("vec_id", quant.alias("vq"))
     withv = _stream_static(hier_assign(emb_q).withColumn("qn2", dot_long("vq", "vq")))
@@ -896,7 +887,7 @@ def stream_hivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     shards of vectors land."""
     from capstone_etl_spark.operators.scaleaudit import _cell_balance_tail
 
-    emb = tables.load_table(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     quant = quantize_fp()
     brow = _stream_static(hier_branch_cells_row(emb.select("vec_id", quant.alias("vq"))))
 
@@ -926,7 +917,6 @@ def stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     care). The share/cap columns attach in the final batch projection
     over the drained ≈√N-row table."""
     from capstone_etl_spark.operators.scaleaudit import _cell_balance_tail
-    from capstone_etl_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
     quant = quantize_fp()
@@ -968,9 +958,7 @@ def stream_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     register file equals the batch sketch's exactly; the shared
     hll_finalize tail (estimator arithmetic) and the static exact
     counts produce the identical audit row — batch oracle verbatim."""
-    from capstone_etl_spark.functions.text import tokenize
     from capstone_etl_spark.operators.sketches import hll_finalize, hll_rho_rows
-    from capstone_etl_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
 
@@ -988,60 +976,6 @@ def stream_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("long").alias("n_exact"))
     )
     return hll_finalize(snap, exact)
-
-
-def stream_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The experiment readout computed DURING ingest: per-user
-    exposure/conversion state evolved across micro-batches as a
-    BUILT-IN streaming aggregation — O(1) state per user (first-view
-    min, last-purchase max in exact microseconds; min/max merges are
-    replay-order free, so a purchase arriving batches before its
-    preceding view still classifies correctly), then the SAME shared
-    variant-rollup/lift/z tail as the batch query (events.ab_readout)
-    over the drained per-user table. Oracle: the batch readout SQL —
-    streaming and batch experiments agree row-for-row.
-
-    r12 (guide §4.1): the tracker moved from applyInPandasWithState to
-    groupBy(user_id).agg(min/max) — the state IS two min/max cells, so
-    the JVM streaming aggregation expresses it exactly, and the Python
-    boundary (one pandas group call + one 1-row DataFrame per user per
-    micro-batch) disappears. Update-mode emissions are cumulative
-    per-user (mn never rises, mx never falls), so the drained table's
-    per-user min(mn)/max(mx) is the final state — the `upd` counter
-    the Python form needed for last-emission selection is redundant.
-    Output equality is oracle-pinned (same batch SQL)."""
-    from capstone_etl_spark.operators.events import (
-        AB_CONVERT_TYPE,
-        AB_EXPOSE_TYPE,
-        ab_readout,
-        ab_variant_col,
-    )
-
-    def transform(stream, staged):
-        prepared = stream.filter(
-            F.col("event_type").isin(AB_EXPOSE_TYPE, AB_CONVERT_TYPE)
-        ).select(
-            "user_id",
-            (F.col("event_type") == AB_CONVERT_TYPE).alias("is_purchase"),
-            F.unix_micros("ts").alias("ts_us"),
-        )
-        return prepared.groupBy("user_id").agg(
-            F.min(F.when(~F.col("is_purchase"), F.col("ts_us"))).alias("mn"),
-            F.max(F.when(F.col("is_purchase"), F.col("ts_us"))).alias("mx"),
-        )
-
-    got = drain_staged(spark, sf_dir, "events", transform, "update")
-    final = got.groupBy("user_id").agg(
-        F.min("mn").alias("mn"), F.max("mx").alias("mx")
-    )
-    # no view ⇒ mn NULL (excluded, as the sentinel form excluded it);
-    # no purchase ⇒ mx NULL ⇒ NULL > mn is NULL ⇒ coalesce to 0, the
-    # sentinel form's (very-negative > mn) = False
-    per_user = final.filter(F.col("mn").isNotNull()).select(
-        ab_variant_col().alias("variant"),
-        F.coalesce((F.col("mx") > F.col("mn")).cast("long"), F.lit(0)).alias("conv"),
-    )
-    return ab_readout(per_user)
 
 
 # fixed equi-width grid for the streaming quantile sketch: streaming
@@ -1373,8 +1307,6 @@ def stream_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebuild); the production deployment reads them as published
     artifacts and pays only the streaming legs + the drained
     assembly."""
-    from capstone_etl_spark.functions.hashing import md5_hash60
-    from capstone_etl_spark.functions.text import token_ngrams, tokenize
     from capstone_etl_spark.operators.corpus import MIN_CHARS, N_SHARDS
     from capstone_etl_spark.operators.dedup import (
         BENCH_MOD,
@@ -1385,7 +1317,6 @@ def stream_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         shingle_df_cap,
     )
     from capstone_etl_spark.operators.sampling import split_column
-    from capstone_etl_spark.sources.tables import load_table
 
     # static index legs go through checkpoint_truncate, not cached()
     # (r12, guide §1.2/§5): a cache is matched BY PLAN, and the
@@ -1575,9 +1506,7 @@ def stream_kll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     verbatim. The nested-sample property (level L+1 ⊆ level L) is what
     makes this THE 100 TB shape: shards sketched at different corpus
     epochs merge by re-filter + union, never by resampling."""
-    from capstone_etl_spark.functions.hashing import md5_hash60
     from capstone_etl_spark.operators.sketches import KLL_QS, _kll_stats
-    from capstone_etl_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
     h = md5_hash60(F.concat(F.lit("kll:"), F.col("doc_id").cast("string")))
@@ -1709,7 +1638,6 @@ def stream_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
         NOISE_MIN_VOTES,
         _noise_verdict_cols,
     )
-    from capstone_etl_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
     quant = quantize_fp()
@@ -1791,7 +1719,6 @@ def stream_embedding_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is EMBEDDING_SHIFT_AUDIT_SQL verbatim. Decimal sums are
     order-free, so micro-batch arrival order cannot change a digit."""
     from capstone_etl_spark.operators.dedup import _is_delta
-    from capstone_etl_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
     dec = lambda c: c.cast("decimal(20,12)")  # noqa: E731
@@ -1862,7 +1789,6 @@ def stream_coreset_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     saw the whole corpus), so the oracle is CORESET_COVERAGE_AUDIT_SQL
     verbatim."""
     from capstone_etl_spark.operators.valuation import _kcenter_select
-    from capstone_etl_spark.sources.tables import load_table
 
     emb_full = load_table(spark, sf_dir, "embeddings")
     _, acc = _kcenter_select(spark, sf_dir)
@@ -1959,7 +1885,7 @@ def _twin_stream(twin: Twin) -> Callable[[SparkSession, str], DataFrame]:
         # truncation cuts the plan without a job of its own
         return twin.release(
             checkpoint_truncate(drained, eager=False),
-            lambda: tables.load_table(spark, sf_dir, twin.table),
+            lambda: load_table(spark, sf_dir, twin.table),
         )
 
     query.__name__ = query.__qualname__ = twin.stream
@@ -2013,6 +1939,10 @@ TWINS = (
         quality.pareto_maxima, lambda acc, docs: quality.pareto_release(acc, docs()),
         "complete",
     ),
+    Twin(
+        "stream_ab_test", "ab_test_analysis", "events",
+        events.ab_users, lambda acc, ev: events.ab_release(acc), "complete",
+    ),
 )
 
 QUERIES = {
@@ -2032,7 +1962,6 @@ QUERIES = {
     "stream_ann_topk": stream_ann_topk,
     "stream_ivf_assign": stream_ivf_assign,
     "stream_hll_sketch": stream_hll_sketch,
-    "stream_ab_test": stream_ab_test,
     "stream_conversion_survival": stream_conversion_survival,
     "stream_quantile_sketch": stream_quantile_sketch,
     "stream_psi_drift": stream_psi_drift,
@@ -2073,7 +2002,6 @@ BATCH_TWIN: dict[str, str] = {t.stream: t.batch for t in TWINS} | {
     "stream_ann_topk": "ann_ivf_topk",
     "stream_ivf_assign": "ivf_cell_balance",
     "stream_hll_sketch": "hll_distinct_sketch",
-    "stream_ab_test": "ab_test_analysis",
     "stream_conversion_survival": "conversion_survival",
     "stream_psi_drift": "event_psi_drift",
     "stream_cuped": "event_cuped_adjustment",

@@ -57,10 +57,6 @@ ALLOWED_CARTESIAN: dict[str, str] = {
         "inequality join (bounded nested loop) + the 1-row fit "
         "broadcast back over the 10-row curve (textstats.py)"
     ),
-    "ab_test_analysis": (
-        "1-row lift/z stats broadcast back over the 2-row variant "
-        "relation (events.py)"
-    ),
     "hubness_audit": (
         "composes ann_ivf_topk's candidate pipeline — inherits its "
         "seed/probe-count broadcasts; adds a 1-row totals broadcast "

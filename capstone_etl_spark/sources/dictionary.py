@@ -9,12 +9,10 @@ the consumer broadcasts it into a left_semi join (P2/J2). The set never
 lives on the driver; the broadcast ships the deduplicated relation to
 executors once.
 
-The shipped fixtures (tools/gen_wordlist.py) stand in for the
+The shipped fixture (tools/gen_wordlist.py) stands in for the
 reference's `en` file: resources/wordlist_en_full.txt matches its
 EXACT line count (235,886, ~2.3 MB) so the scan→distinct→broadcast
-path runs at reference size — this is the default;
-resources/wordlist_en.txt is the same head at test size (8,108 lines)
-for fast unit fixtures. Both share the shape: one word per line, mixed
+path runs at reference size. Its shape: one word per line, mixed
 case, duplicates, whitespace padding.
 """
 

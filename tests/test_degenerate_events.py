@@ -135,3 +135,45 @@ def test_degenerate_events_streaming_match_oracle(spark, degen_events_sf, duck, 
         release_caches()
     duck_pdf = duck.execute(oracles[name]).df()
     assert compare(name, spark_pdf, duck_pdf) == []
+
+
+# A/B exposure edges, in a fixture of their own (ROWS feeds every event
+# query): user 20's only view has a NULL ts, so the user is exposed with
+# no first-view time and cannot convert; user 21 views then buys; user
+# 22 buys before the only view. The oracle's MIN(ts) ... GROUP BY keeps
+# user 20 in n_exposed, so batch and stream must too.
+AB_EDGE_ROWS = [
+    (0, None, 20, "view", 0.0, "{}"),
+    (1, T0 + dt.timedelta(seconds=5), 20, "purchase", 3.0, "{}"),
+    (2, T0, 21, "view", 0.0, "{}"),
+    (3, T0 + dt.timedelta(seconds=1), 21, "purchase", 4.0, "{}"),
+    (4, T0, 22, "purchase", 5.0, "{}"),
+    (5, T0 + dt.timedelta(seconds=1), 22, "view", 0.0, "{}"),
+]
+
+
+def test_ab_null_ts_view_is_exposed(spark, tmp_path):
+    from collections import Counter
+
+    import pandas as pd
+
+    from capstone_etl_spark.session import release_caches
+
+    pdf = pd.DataFrame(
+        AB_EDGE_ROWS, columns=["event_id", "ts", "user_id", "event_type", "value", "props"]
+    ).astype({"event_id": "int64", "user_id": "int64", "value": "float64"})
+    pdf["ts"] = pd.to_datetime(pdf["ts"])
+    pdf.to_parquet(str(tmp_path / "events.parquet"))
+    sf, qs, oracles = str(tmp_path), entrymod.queries(), entrymod.oracle_sql()
+    try:
+        batch = qs["ab_test_analysis"](spark, sf)
+        batch_pdf, batch_rows = batch.toPandas(), Counter(map(tuple, batch.collect()))
+        stream_rows = Counter(map(tuple, qs["stream_ab_test"](spark, sf).collect()))
+    finally:
+        release_caches()
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{sf}/events.parquet'")
+    duck_pdf = con.execute(oracles["ab_test_analysis"]).df()
+    assert compare("ab_test_analysis", batch_pdf, duck_pdf) == []
+    assert batch_pdf["n_exposed"].sum() == 3 and batch_pdf["n_converted"].sum() == 1
+    assert stream_rows == batch_rows

@@ -36,7 +36,7 @@ def test_stream_km_matches_batch_on_adversarial_corpus(spark):
     streamed curve to equal the batch curve row for row."""
     from capstone_etl_spark.operators.events import conversion_survival
     from capstone_etl_spark.operators.streaming_queries import (
-        stream_ab_test,
+        QUERIES,
         stream_conversion_survival,
     )
     from capstone_etl_spark.operators.events import ab_test_analysis
@@ -93,7 +93,7 @@ def test_stream_km_matches_batch_on_adversarial_corpus(spark):
         release_caches()
         assert got == want and len(want) > 0
 
-        ab_got = [r.asDict() for r in stream_ab_test(spark, work).collect()]
+        ab_got = [r.asDict() for r in QUERIES["stream_ab_test"](spark, work).collect()]
         release_caches()
         ab_want = [r.asDict() for r in ab_test_analysis(spark, work).collect()]
         release_caches()

@@ -230,7 +230,7 @@ def test_sized_state_partitions():
 @pytest.mark.parametrize(
     "stream_name",
     [
-        "stream_ab_test",  # update mode, min/max state
+        "stream_ab_test",  # a Twin spec, min/max/flag state
         "stream_tumbling_windows",  # watermarked
         "stream_reservoir_sample",  # applyInPandasWithState
         "stream_rfm_segments",  # a Twin spec
@@ -288,6 +288,39 @@ def test_stream_equals_batch(spark, stream_name):
         # is a tombstone, so that user is absent from the snapshot
         n_users = load_table(spark, SF_DIR, "events").select("user_id").distinct().count()
         assert len(want) < n_users
+
+
+def _jobs(spark, tag: str, run) -> int:
+    """Run `run()` under job tag `tag`; return how many jobs it ran."""
+    sc = spark.sparkContext
+    sc.addJobTag(tag)
+    try:
+        run()
+    finally:
+        sc.removeJobTag(tag)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    return len(jsc.statusTracker().getJobIdsForTag(tag))
+
+
+@pytest.mark.parametrize("name,budget", [("ab_test_analysis", 4), ("stream_ab_test", 7)])
+def test_ab_job_budget(spark, name, budget):
+    """The A/B pair's Spark jobs per forced call, after one warm call:
+    the per-user state is one aggregation and the readout one global
+    aggregation. Before that form, ab_test_analysis ran 14 jobs (cached
+    exposure relation, conversion join, cached rollup, pivot, stats
+    broadcast) and stream_ab_test 13 (update-mode drain, per-user
+    regroup, the same rollup tail)."""
+    import bench
+    from capstone_etl_spark.session import release_caches
+
+    query = entrymod.queries()[name]
+    for i in range(2):  # the first call warms this query's code paths
+        try:
+            n = _jobs(spark, f"ab-budget-{name}-{i}", lambda: bench.force(query(spark, SF_DIR)))
+        finally:
+            release_caches()
+    assert n <= budget, n
 
 
 def test_twin_registry_invariants():

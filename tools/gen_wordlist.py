@@ -3,7 +3,7 @@
 The reference ships a 235,886-word English wordlist (`en`, 2.4 MB)
 loaded at startup into a membership set (main.go:108-118). This
 generator produces a deterministic stand-in at
-capstone_etl_spark/resources/wordlist_en.txt:
+capstone_etl_spark/resources/wordlist_en_full.txt:
 
 - the corpus vocabulary words that the gate should KEEP (deliberately
   excluding 'spark', 'vector', 'dup' and 'merge' so the gate provably
@@ -11,7 +11,8 @@ capstone_etl_spark/resources/wordlist_en.txt:
 - mixed-case + duplicated + whitespace-padded entries of those words,
   so the loader's lower/trim/distinct normalization is exercised;
 - ~25k deterministic pronounceable filler words (syllable product), so
-  the scan/broadcast path carries a realistically-sized set.
+  the scan/broadcast path carries a realistically-sized set;
+- deterministic CV³ filler up to the reference's exact line count.
 
 Run: python tools/gen_wordlist.py   (idempotent, writes the fixture)
 """
@@ -72,14 +73,9 @@ def main() -> None:
     )
     os.makedirs(res, exist_ok=True)
 
+    # the base lines + deterministic CV³ filler up to the reference's
+    # exact line count, duplicates skipped
     base = _base_lines()
-    small = os.path.join(res, "wordlist_en.txt")
-    with open(small, "w", encoding="ascii") as f:
-        f.write("\n".join(base) + "\n")
-    print(f"wrote {small}: {len(base)} lines, {os.path.getsize(small)} bytes")
-
-    # full-size: the small fixture + deterministic CV³ filler up to the
-    # reference's exact line count, duplicates skipped
     seen = {ln.strip().lower() for ln in base}
     lines = list(base)
     for a, b, c in itertools.product(_CV, _CV, _CV):
