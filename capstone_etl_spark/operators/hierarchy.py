@@ -7,11 +7,18 @@ works because `ORDER BY url` guarantees parents arrive before children
 (main.go:194-204, :130). The Spark join is order-independent: same
 result on well-formed data, robust otherwise (SURVEY.md §7.6.6).
 
+Both steps are keyed by path, as the reference's map is: a page finds
+its parent at its `parent_path` (`link_hierarchy`) and its children
+under its own `page_loc` (`child_aggregates` groups the pages by
+`parent_path`), so neither needs the other's output.
+
 Divergence ledger: no-parent is NULL, not the 0-sentinel (§7.6.3).
 
 Scale: a self equi-join on page path — both sides shuffle on the path
 key unless one side is broadcastable. Paths are near-unique (join key
-cardinality ≈ row count, no skew); AQE handles residual imbalance.
+cardinality ≈ row count, no skew); AQE handles residual imbalance. The
+child aggregate has one row per parent path, so its consumers
+broadcast it.
 """
 
 from __future__ import annotations
@@ -42,16 +49,16 @@ def link_hierarchy(pages: DataFrame, id_col: str = "page_id") -> DataFrame:
     ).drop("_parent_loc")
 
 
-def child_aggregates(linked: DataFrame, id_col: str = "page_id") -> DataFrame:
-    """Per-parent child list + count (A3, main.go:200-202): sorted
-    collect_list for determinism."""
-    return (
-        linked.filter(F.col("parent_page").isNotNull())
-        .groupBy("parent_page")
-        .agg(
-            F.count("*").alias("count_children"),
-            F.sort_array(F.collect_list(F.col(id_col))).alias("child_pages"),
-        )
+def child_aggregates(pages: DataFrame, id_col: str = "page_id") -> DataFrame:
+    """Per-path child list + count (A3, main.go:200-202), the
+    reference's by-path map: pages grouped by `parent_path`, keyed by
+    that path as `page_loc`, so a parent page joins its children on its
+    own page_loc. A path no page sits at (an orphan's parent) matches
+    nothing. Input needs (id_col, parent_path); sorted collect_list for
+    determinism."""
+    return pages.groupBy(F.col("parent_path").alias("page_loc")).agg(
+        F.count("*").alias("count_children"),
+        F.sort_array(F.collect_list(F.col(id_col))).alias("child_pages"),
     )
 
 
@@ -77,10 +84,11 @@ def synthetic_doc_paths(docs: DataFrame, fanout: int = 50) -> DataFrame:
     """Deterministic path tree over the driver's `documents` table (which
     has no URL column): docs with doc_id < fanout are roots at
     'b<doc_id>'; every other doc is a child at 'b<doc_id % fanout>/p<doc_id>'.
-    Exercises F3/J1/A3 with a real multi-level key derivation."""
+    Exercises F3/J1/A3 with a real multi-level key derivation. Keeps the
+    input's columns, so per-document scalars ride on the page rows."""
     is_root = F.col("doc_id") < fanout
     loc = F.when(is_root, F.concat(F.lit("b"), F.col("doc_id"))).otherwise(
         F.concat(F.lit("b"), F.col("doc_id") % fanout, F.lit("/p"), F.col("doc_id"))
     )
-    with_loc = docs.select("doc_id", loc.alias("page_loc"))
+    with_loc = docs.withColumn("page_loc", loc)
     return with_loc.withColumn("parent_path", parent_path("page_loc"))

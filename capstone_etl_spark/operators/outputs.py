@@ -24,6 +24,13 @@ Plan shape / scale notes:
   back in one job instead of recomposing the relation. The projections
   are consumed once, so they build from the uncached builder and pay no
   cache fill. Callers of `*_output` release it after writing.
+- wikibooks is composed from one page relation: the per-document
+  scalar (count_external_links) rides on the page rows, the parent is
+  found at the page's parent_path and the children come from one
+  path-keyed aggregate broadcast on page_loc (hierarchy.py). No read of
+  documents joins another on doc_id, and the hierarchy is built once.
+- building a `*_output` runs no Spark job: `documents` is read with a
+  declared schema (sources/tables.py), so there is no inference scan.
 - wikibooks groups TF by doc_id ONCE: the stats columns
   (tokenize.doc_stats_columns) and the sorted token array
   (index.doc_token_array_column) come out of one aggregate, so one
@@ -31,8 +38,9 @@ Plan shape / scale notes:
 - tokens and token_vector each read TF twice (postings or sparse
   vectors, plus the vocabulary), so their TF relation is cached — the
   corpus tokenizes once per composed relation.
-- every join is doc_id- or token-keyed (uniform, high-cardinality);
-  the child-aggregate and vocabulary sides are small → broadcast.
+- every join is doc_id-, path- or token-keyed (uniform,
+  high-cardinality); the child-aggregate and vocabulary sides are
+  small → broadcast.
 - F1 (substring-occurrence count) runs here as `count_external_links`:
   the reference counts 'href=\"h' in body_html (main.go:192); the test
   corpus has no HTML column, so the needle is the marker token below —
@@ -59,7 +67,7 @@ from capstone_etl_spark.session import cached
 # F1 needle (stands in for the reference's 'href="h' over body_html).
 EXTERNAL_LINK_MARKER = "scan"
 
-# Synthetic page tree CTE shared by the oracles (mirrors
+# Synthetic page tree CTE of the token_vector oracle (mirrors
 # hierarchy.synthetic_doc_paths — the corpus has no URL column).
 _PAGES_CTE = """
 pages AS (
@@ -87,28 +95,28 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _wikibooks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed per-page document (typed): hierarchy + counts +
-    tokens array + norm in ONE relation (struct main.go:46-64)."""
+    tokens array + norm in ONE relation (struct main.go:46-64), one row
+    per scanned page (main.go:174; a page whose parent id repeats gets
+    one row per parent row). The per-document scalar rides on the page
+    rows, parent and children are found by path (main.go:194-204), and
+    the TF stats join on doc_id. A NULL doc_id has no page."""
     docs = _docs(spark, sf_dir)
     tf = term_frequencies(docs)
 
-    pages = hier_ops.synthetic_doc_paths(docs)
-    linked = hier_ops.link_hierarchy(pages, id_col="doc_id").select(
-        pages["doc_id"].alias("doc_id"), "page_loc", "parent_page"
-    )
-    children = hier_ops.child_aggregates(linked, id_col="doc_id").select(
-        F.col("parent_page").alias("doc_id"), "count_children", "child_pages"
-    )
-    per_doc = tf.groupBy("doc_id").agg(*doc_stats_columns(), index_ops.doc_token_array_column())
-
-    return (
-        docs.select(
+    pages = hier_ops.synthetic_doc_paths(
+        docs.filter(F.col("doc_id").isNotNull()).select(
             "doc_id",
             count_substring("text", EXTERNAL_LINK_MARKER)
             .cast("long")
             .alias("count_external_links"),
         )
-        .join(linked, "doc_id")
-        .join(F.broadcast(children), "doc_id", "left")
+    )
+    children = hier_ops.child_aggregates(pages, id_col="doc_id")
+    per_doc = tf.groupBy("doc_id").agg(*doc_stats_columns(), index_ops.doc_token_array_column())
+
+    return (
+        hier_ops.link_hierarchy(pages, id_col="doc_id")
+        .join(F.broadcast(children), "page_loc", "left")
         .join(per_doc, "doc_id", "left")
         .select(
             "doc_id",
@@ -155,12 +163,25 @@ def wikibooks_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# The page relation carries count_external_links, so no documents read
+# joins another on doc_id; children are keyed by path, as in _wikibooks.
 WIKIBOOKS_DOCS_SQL = _TF_CTE + f"""
-, {_PAGES_CTE.strip().lstrip()}
-, children AS (
-  SELECT parent_page AS doc_id, COUNT(*) AS count_children,
+, pages AS (
+  SELECT doc_id,
+         CASE WHEN doc_id < 50 THEN 'b' || doc_id
+              ELSE 'b' || (doc_id % 50) || '/p' || doc_id END AS page_loc,
+         CAST((length(text) - length(replace(text, '{EXTERNAL_LINK_MARKER}', '')))
+              / {len(EXTERNAL_LINK_MARKER)} AS BIGINT) AS count_external_links
+  FROM documents WHERE doc_id IS NOT NULL
+), withp AS (
+  SELECT doc_id, page_loc, count_external_links,
+         CASE WHEN strpos(page_loc, '/') = 0 THEN ''
+              ELSE regexp_replace(page_loc, '/[^/]*$', '') END AS parent_path
+  FROM pages
+), children AS (
+  SELECT parent_path AS page_loc, COUNT(*) AS count_children,
          string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id) AS child_pages
-  FROM linked WHERE parent_page IS NOT NULL GROUP BY parent_page
+  FROM withp GROUP BY parent_path
 ), stats AS (
   SELECT doc_id,
          CAST(SUM(qty) AS BIGINT) AS n_tokens,
@@ -171,22 +192,21 @@ WIKIBOOKS_DOCS_SQL = _TF_CTE + f"""
   SELECT doc_id, string_agg(token || ':' || qty, ',' ORDER BY token) AS tokens
   FROM tf GROUP BY doc_id
 )
-SELECT d.doc_id,
-       l.page_loc,
-       l.parent_page,
+SELECT w.doc_id,
+       w.page_loc,
+       p.doc_id AS parent_page,
        COALESCE(c.count_children, 0) AS count_children,
        COALESCE(c.child_pages, '') AS child_pages,
        COALESCE(s.n_tokens, 0) AS n_tokens,
        COALESCE(s.count_unique_words, 0) AS count_unique_words,
        COALESCE(s.euclidian_norm, 0.0) AS euclidian_norm,
-       CAST((length(d.text) - length(replace(d.text, '{EXTERNAL_LINK_MARKER}', '')))
-            / {len(EXTERNAL_LINK_MARKER)} AS BIGINT) AS count_external_links,
+       w.count_external_links,
        COALESCE(t.tokens, '') AS tokens
-FROM documents d
-JOIN linked l ON l.doc_id = d.doc_id
-LEFT JOIN children c ON c.doc_id = d.doc_id
-LEFT JOIN stats s ON s.doc_id = d.doc_id
-LEFT JOIN tokarr t ON t.doc_id = d.doc_id
+FROM withp w
+LEFT JOIN withp p ON w.parent_path = p.page_loc
+LEFT JOIN children c ON c.page_loc = w.page_loc
+LEFT JOIN stats s ON s.doc_id = w.doc_id
+LEFT JOIN tokarr t ON t.doc_id = w.doc_id
 """
 
 
@@ -211,16 +231,18 @@ def tokens_output(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def tokens_collection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Oracle projection of tokens_output (posting list → 'doc:qty,...'
-    sorted by doc id)."""
+    sorted by doc id). A NULL-doc posting renders NULL and array_join
+    drops it, as `||` and string_agg do in the oracle; a list of only
+    such postings is NULL, not ''."""
     out = _tokens(spark, sf_dir)
-    return out.select(
-        "_id",
-        "token",
-        F.array_join(
-            F.transform(F.sort_array("references"), lambda r: F.concat_ws(":", r.doc_id, r.qty)),
-            ",",
-        ).alias("references"),
+    postings = F.array_join(
+        F.transform(
+            F.sort_array("references"),
+            lambda r: F.concat(r.doc_id.cast("string"), F.lit(":"), r.qty.cast("string")),
+        ),
+        ",",
     )
+    return out.select("_id", "token", F.nullif(postings, F.lit("")).alias("references"))
 
 
 TOKENS_COLLECTION_SQL = _TF_CTE + """
@@ -248,7 +270,7 @@ def _token_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
     sv = index_ops.sparse_vectors(tf, vocabulary(tf))
     dense = with_dense_ids(
         hier_ops.synthetic_doc_paths(docs).select("doc_id", "page_loc"),
-        "page_loc",
+        F.col("page_loc").asc_nulls_last(),
         id_name="_id",
     ).select("doc_id", "_id")
     return dense.join(sv, "doc_id").select(

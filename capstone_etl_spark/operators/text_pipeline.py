@@ -367,11 +367,12 @@ def doc_dense_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O2: dense 0-based document ids over the page_loc sort order
     (reference: id++ per row in url order, main.go:137-141). Uses the
     distributed partition-offset implementation — no single-partition
-    window, no RDD — so the same code is the 100 TB path."""
+    window, no RDD — so the same code is the 100 TB path. A NULL
+    page_loc (NULL doc_id) sorts last, as in the oracle's ORDER BY."""
     pages = hier_ops.synthetic_doc_paths(_docs(spark, sf_dir)).select("doc_id", "page_loc")
-    return with_dense_ids(pages, "page_loc", id_name="dense_id").select(
-        "doc_id", "page_loc", "dense_id"
-    )
+    return with_dense_ids(
+        pages, F.col("page_loc").asc_nulls_last(), id_name="dense_id"
+    ).select("doc_id", "page_loc", "dense_id")
 
 
 DOC_DENSE_IDS_SQL = """
@@ -440,14 +441,22 @@ FROM withp c LEFT JOIN withp p ON c.parent_path = p.page_loc
 
 def parent_child_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3: per-parent child count + canonical sorted child list (over
-    the URL-derived hierarchy — F2 path)."""
+    the URL-derived hierarchy — F2 path): the path-keyed child
+    aggregate joined to the pages at that path. A parent id with k
+    rows at its path counts each child k times, as the oracle's
+    child × parent-row join does, so its rows are summed."""
     urls = hier_ops.synthetic_doc_urls(_docs(spark, sf_dir))
     pages = hier_ops.derive_paths(urls, url_col="url").select(
         "doc_id", "page_loc", "parent_path"
     )
-    linked = hier_ops.link_hierarchy(pages, id_col="doc_id")
-    agg = hier_ops.child_aggregates(
-        linked.select(pages["doc_id"].alias("doc_id"), "parent_page"), id_col="doc_id"
+    agg = (
+        pages.select(F.col("doc_id").alias("parent_page"), "page_loc")
+        .join(F.broadcast(hier_ops.child_aggregates(pages, id_col="doc_id")), "page_loc")
+        .groupBy("parent_page")
+        .agg(
+            F.sum("count_children").alias("count_children"),
+            F.sort_array(F.flatten(F.collect_list("child_pages"))).alias("child_pages"),
+        )
     )
     return agg.select(
         "parent_page",

@@ -464,6 +464,7 @@ HEADLINE: list[str] = [
     "sparse_vectors",
     "tf_idf",
     "wikibooks_docs",
+    "parent_child_agg",
     "pricing_summary",
     "top_customers",
     "revenue_by_nation",

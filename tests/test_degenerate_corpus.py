@@ -221,6 +221,12 @@ NAMES = [
     # ties on BOTH dimensions (several zero-token docs share
     # (n_chars, 0)) must all survive the skyline in both engines
     "pareto_frontier_docs",
+    # the composed collections: empty/whitespace docs have no tokens
+    # (COALESCE'd stats, '' token lists) and all ten docs are roots
+    "wikibooks_docs",
+    "tokens_collection",
+    "token_vector_collection",
+    "parent_child_agg",
 ]
 
 
@@ -245,17 +251,65 @@ def duck(degenerate_sf):
     return con
 
 
-@pytest.mark.parametrize("name", NAMES)
-def test_degenerate_corpus_matches_oracle(spark, degenerate_sf, duck, name):
+def _matches_oracle(spark, sf_dir: str, duck, name: str) -> None:
     from capstone_etl_spark.session import release_caches
 
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     try:
-        spark_pdf = qs[name](spark, degenerate_sf).toPandas()
+        spark_pdf = qs[name](spark, sf_dir).toPandas()
     finally:
         release_caches()
     duck_pdf = duck.execute(oracles[name]).df()
     assert compare(name, spark_pdf, duck_pdf) == []
+
+
+@pytest.mark.parametrize("name", NAMES)
+def test_degenerate_corpus_matches_oracle(spark, degenerate_sf, duck, name):
+    _matches_oracle(spark, degenerate_sf, duck, name)
+
+
+# ROWS plus the id anomalies the page hierarchy must carry: a NULL
+# doc_id (no page: page_loc and parent_path are NULL), a second row
+# reusing root id 5 and a child of that root (b5/p55, whose parent path
+# holds two rows). The text of the NULL row shares 'ordinary' and
+# 'document' with doc 5 and has one token of its own.
+ID_ANOMALY_ROWS = ROWS + [
+    (None, "an ordinary nullid document", "en", "web", 27),
+    (5, "a second ordinary document reusing five", "en", "books", 39),
+    (55, "child page of the fifth root", "en", "web", 28),
+]
+ID_ANOMALY_NAMES = [
+    "wikibooks_docs",
+    "parent_child_agg",
+    "tokens_collection",
+    "token_vector_collection",
+    "doc_dense_ids",
+]
+
+
+@pytest.fixture(scope="module")
+def id_anomaly_sf(tmp_path_factory):
+    import pandas as pd
+
+    d = tmp_path_factory.mktemp("id_anomaly")
+    pdf = pd.DataFrame(
+        ID_ANOMALY_ROWS, columns=["doc_id", "text", "lang", "source", "n_chars"]
+    ).astype({"doc_id": "Int64", "n_chars": "int64"})
+    pdf.to_parquet(str(d / "documents.parquet"))
+    return str(d)
+
+
+@pytest.mark.parametrize("name", ID_ANOMALY_NAMES)
+def test_id_anomalies_match_oracle(spark, id_anomaly_sf, name):
+    """NULL and duplicated doc_ids through the page hierarchy and the
+    composed collections: the wikibooks relation has one row per
+    non-NULL document row and parent row at its parent path (13 here:
+    b5/p55 sits under both rows of id 5), the children of a path count
+    each child row once per row at that path in parent_child_agg, and
+    a NULL id sorts last and renders no posting."""
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{id_anomaly_sf}/documents.parquet'")
+    _matches_oracle(spark, id_anomaly_sf, con, name)
 
 
 # Degenerate embeddings: ALL-IDENTICAL vectors → zero covariance matrix

@@ -29,9 +29,15 @@ def test_left_outer_parent_links(spark):
 
 
 def test_child_aggregates(spark):
-    agg = {r.parent_page: r for r in child_aggregates(_linked(spark), id_col="page_id").collect()}
-    assert agg[1].count_children == 1 and agg[1].child_pages == [2]
-    assert agg[2].count_children == 1 and agg[2].child_pages == [3]
+    """Children are keyed by their parent path: a page finds its
+    children under its own page_loc."""
+    pages = derive_paths(spark.createDataFrame(PAGES, "page_id long, url string"))
+    agg = {r.page_loc: r for r in child_aggregates(pages, id_col="page_id").collect()}
+    assert agg["Book"].count_children == 1 and agg["Book"].child_pages == [2]
+    assert agg["Book/Ch1"].count_children == 1 and agg["Book/Ch1"].child_pages == [3]
+    # the orphan's parent path is a key no page sits at
+    assert agg["Orphan"].child_pages == [4]
+    assert "Orphan" not in {r.page_loc for r in pages.collect()}
 
 
 def test_pagerank_fixed_point_invariants(spark):
