@@ -220,31 +220,10 @@ def _cell_balance_tail(pops: DataFrame) -> DataFrame:
     )
 
 
-def _ivf_cell_balance_sql() -> str:
-    from capstone_etl_spark.operators.similarity import (
-        _SEED_IDS_SQL,
-        CENTROID_SCALE,
-        DIM,
-    )
-
-    return f"""
-WITH by_dim AS (
-  SELECT vec_id, d,
-         CAST(floor(CAST(embedding[d + 1] AS DOUBLE) * {CENTROID_SCALE} + 0.5) AS BIGINT) AS vs
-  FROM embeddings CROSS JOIN (SELECT unnest(range(0, {DIM})) AS d) dims
-), {_SEED_IDS_SQL}, seeds AS (
-  SELECT b.vec_id AS cell, b.d, b.vs AS ss
-  FROM by_dim b JOIN seed_ids si ON si.vec_id = b.vec_id
-), vec_seed_d2 AS (
-  SELECT v.vec_id, s.cell, CAST(SUM((v.vs - s.ss) * (v.vs - s.ss)) AS BIGINT) AS d2
-  FROM by_dim v JOIN seeds s ON s.d = v.d
-  GROUP BY v.vec_id, s.cell
-), assign AS (
-  SELECT vec_id, cell FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cell) AS arnk
-    FROM vec_seed_d2
-  ) t WHERE arnk = 1
-), pops AS (
+# pops … release: _cell_balance_tail over the `assign` CTE, shared by
+# both balance oracles
+_CELL_BALANCE_SQL = f"""
+, pops AS (
   SELECT cell, CAST(COUNT(*) AS BIGINT) AS pop FROM assign GROUP BY 1
 ), total AS (SELECT CAST(SUM(pop) AS DOUBLE) AS n_vec FROM pops)
 SELECT cell, pop,
@@ -252,6 +231,13 @@ SELECT cell, pop,
        pop > CAST(ceil({CELL_CAP_FACTOR} * sqrt(t.n_vec)) AS BIGINT) AS over_cap
 FROM pops CROSS JOIN total t
 """
+
+
+def _ivf_cell_balance_sql() -> str:
+    from capstone_etl_spark.operators.similarity import _FLAT_ASSIGN_SQL, _seeds_sql
+
+    return f"""
+WITH {_seeds_sql("embeddings")}, {_FLAT_ASSIGN_SQL}""" + _CELL_BALANCE_SQL
 
 
 def hivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -277,18 +263,7 @@ def hivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _hivf_cell_balance_sql() -> str:
     from capstone_etl_spark.operators.similarity import _HIER_ASSIGN_SQL
 
-    return (
-        _HIER_ASSIGN_SQL
-        + f"""
-, pops AS (
-  SELECT cell, CAST(COUNT(*) AS BIGINT) AS pop FROM assign GROUP BY 1
-), total AS (SELECT CAST(SUM(pop) AS DOUBLE) AS n_vec FROM pops)
-SELECT cell, pop,
-       ROUND(pop / t.n_vec, 6) AS share,
-       pop > CAST(ceil({CELL_CAP_FACTOR} * sqrt(t.n_vec)) AS BIGINT) AS over_cap
-FROM pops CROSS JOIN total t
-"""
-    )
+    return _HIER_ASSIGN_SQL + _CELL_BALANCE_SQL
 
 
 # --- z-order layout ---------------------------------------------------------

@@ -308,6 +308,25 @@ def ann_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim_topk(scored)
 
 
+# scored: the exact quantized cosine of every `cand` pair, 6 dp (the
+# family's rank key) — cosine_rerank
+_SCORED_SQL = f"""scored AS (
+  SELECT c.query_id, c.neighbor_id,
+         ROUND({cosine_q_cols_sql('q.embedding', 'n.embedding')}, 6) AS sim
+  FROM cand c
+  JOIN embeddings q ON q.vec_id = c.query_id
+  JOIN embeddings n ON n.vec_id = c.neighbor_id
+)"""
+
+# each query's TOP_K scored rows by (sim desc, neighbor_id) — sim_topk
+_SIM_TOPK_SQL = f"""
+SELECT query_id, neighbor_id, sim, rnk FROM (
+  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rnk
+  FROM scored
+) t WHERE rnk <= {TOP_K}
+"""
+
+
 ANN_BRUTE_TOPK_SQL = f"""
 WITH q AS (
   SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < {N_QUERIES}
@@ -316,12 +335,7 @@ WITH q AS (
          ROUND(COALESCE({cosine_q_cols_sql('qe', 'e.embedding')}, 0.0), 6) AS sim
   FROM q CROSS JOIN embeddings e
   WHERE e.vec_id <> q.query_id
-)
-SELECT query_id, neighbor_id, sim, rnk FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rnk
-  FROM scored
-) t WHERE rnk <= {TOP_K}
-"""
+){_SIM_TOPK_SQL}"""
 
 
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -354,18 +368,7 @@ WITH buckets AS (
   FROM buckets qb
   JOIN buckets nb ON qb.tbl = nb.tbl AND qb.bucket = nb.bucket AND qb.vec_id <> nb.vec_id
   WHERE qb.vec_id < {N_QUERIES}
-), scored AS (
-  SELECT c.query_id, c.neighbor_id,
-         ROUND({cosine_q_cols_sql('q.embedding', 'n.embedding')}, 6) AS sim
-  FROM cand c
-  JOIN embeddings q ON q.vec_id = c.query_id
-  JOIN embeddings n ON n.vec_id = c.neighbor_id
-)
-SELECT query_id, neighbor_id, sim, rnk FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rnk
-  FROM scored
-) t WHERE rnk <= {TOP_K}
-"""
+), {_SCORED_SQL}{_SIM_TOPK_SQL}"""
 
 
 def embedding_pairs_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -659,15 +662,29 @@ def quantizer_seeds(emb_q: DataFrame) -> DataFrame:
     )
 
 
-# Oracle mirror of quantizer_seeds: same hash, same threshold, same
-# min-hash fallback. Spliced into the IVF / SemDeDup WITH-chains.
-_SEED_IDS_SQL = f"""hseed AS (
-  SELECT vec_id, {md5_hash60_sql("CAST(vec_id AS VARCHAR)")} AS h FROM embeddings
+# by_dim: every vector on quantize_fp's grid, one (vec_id, d, vs) row
+# per dimension — the oracles' quantized corpus
+_BY_DIM_SQL = f"""by_dim AS (
+  SELECT vec_id, d,
+         CAST(floor(CAST(embedding[d + 1] AS DOUBLE) * {CENTROID_SCALE} + 0.5) AS BIGINT) AS vs
+  FROM embeddings CROSS JOIN (SELECT unnest(range(0, {DIM})) AS d) dims
+)"""
+
+
+def _seeds_sql(pop: str) -> str:
+    """by_dim … seeds: every vector quantized (one row per dimension)
+    and the quantizer_seeds of the population relation `pop`, as
+    (cell, d, ss) rows; seed_ids keeps the seed count."""
+    return f"""{_BY_DIM_SQL}, hseed AS (
+  SELECT vec_id, {md5_hash60_sql("CAST(vec_id AS VARCHAR)")} AS h FROM {pop}
 ), seed_ids AS (
   SELECT vec_id FROM hseed
   WHERE h < CAST(floor(CAST({HASH_SPACE_INT} AS DOUBLE)
-                 / sqrt(GREATEST((SELECT COUNT(*) FROM embeddings), 1))) AS BIGINT)
+                 / sqrt(GREATEST((SELECT COUNT(*) FROM {pop}), 1))) AS BIGINT)
      OR vec_id = (SELECT vec_id FROM hseed ORDER BY h, vec_id LIMIT 1)
+), seeds AS (
+  SELECT b.vec_id AS cell, b.d, b.vs AS ss
+  FROM by_dim b JOIN seed_ids si ON si.vec_id = b.vec_id
 )"""
 
 
@@ -688,6 +705,64 @@ _SEED_IDS_SQL = f"""hseed AS (
 # ivf_rerank (exact-cosine score), sim_topk / adc_topk (ranked tails).
 # The two-level index adds in-row routing below: hier_routed (a row's
 # routed candidate cells) and hier_cell_inrow (its cell).
+#
+# The DuckDB oracles build every index the same way, from WITH-chain
+# fragments that each state one step once, next to the Spark helper
+# they mirror: _BY_DIM_SQL + _seeds_sql(pop) (quantize_fp +
+# quantizer_seeds), _FLAT_ASSIGN_SQL / _assign_sql (ivf_seed_d2 +
+# nearest_cell), _probe_ranks_sql / _probes_sql (ivf_probe_ranks /
+# ivf_probes), _IVF_CAND_SQL + _SCORED_SQL (ivf_candidates +
+# cosine_rerank), _SIM_TOPK_SQL (sim_topk), _ADC_TOPK_SQL (adc_topk),
+# _PQ_DISTS_SQL / _pq_best_sql (_pq_subspace_dists and its per-subspace
+# argmin), _branches_sql(pop) + _HIER_ROUTE_SQL (hier_branches +
+# hier_assign) and _PQ_HIER_CODES_SQL (_pq_hier_codes). The seed and
+# branch fragments take the index population as their one argument,
+# as quantizer_seeds(emb_q) does: every oracle passes `embeddings`
+# except the base-indexed label-noise oracle, which passes the base.
+
+
+def _assign_sql(dists: str, d2: str = "d2") -> str:
+    """assign: the (vec_id, cell) argmin over the distance CTE `dists`
+    by (d2, cell) — nearest_cell."""
+    return f"""assign AS (
+  SELECT vec_id, cell FROM (
+    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY {d2}, cell) AS arnk
+    FROM {dists}
+  ) t WHERE arnk = 1
+)"""
+
+
+_FLAT_ASSIGN_SQL = f"""vec_seed_d2 AS (
+  SELECT v.vec_id, s.cell, CAST(SUM((v.vs - s.ss) * (v.vs - s.ss)) AS BIGINT) AS d2
+  FROM by_dim v JOIN seeds s ON s.d = v.d
+  GROUP BY v.vec_id, s.cell
+), {_assign_sql("vec_seed_d2")}"""
+
+
+def _probe_ranks_sql(dists: str, d2: str = "d2") -> str:
+    """The query rows of the distance CTE `dists` with `prnk`, each
+    query's rank of the cell by (d2, cell) — ivf_probe_ranks."""
+    return f"""SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY {d2}, cell) AS prnk
+    FROM {dists} WHERE vec_id < {N_QUERIES}"""
+
+
+def _probes_sql(dists: str, d2: str = "d2") -> str:
+    """probes: (query_id, cell), each query's ivf_probe_k() nearest
+    cells of the distance CTE `dists` — ivf_probes."""
+    return f"""probes AS (
+  SELECT vec_id AS query_id, cell FROM (
+    {_probe_ranks_sql(dists, d2)}
+  ) t WHERE prnk <= GREATEST({IVF_PROBES_MIN},
+        CAST(ceil(sqrt((SELECT COUNT(*) FROM seed_ids))) AS BIGINT))
+)"""
+
+
+# cand: the inverted-list lookup of `probes` in `assign` — ivf_candidates
+_IVF_CAND_SQL = """cand AS (
+  SELECT p.query_id, a.vec_id AS neighbor_id
+  FROM probes p JOIN assign a ON a.cell = p.cell
+  WHERE a.vec_id <> p.query_id
+)"""
 
 
 def ivf_probe_k() -> Column:
@@ -900,50 +975,11 @@ def ann_radius_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _IVF_SCORED_SQL = f"""
-WITH by_dim AS (
-  SELECT vec_id, d,
-         CAST(floor(CAST(embedding[d + 1] AS DOUBLE) * {CENTROID_SCALE} + 0.5) AS BIGINT) AS vs
-  FROM embeddings CROSS JOIN (SELECT unnest(range(0, {DIM})) AS d) dims
-), {_SEED_IDS_SQL}, seeds AS (
-  SELECT b.vec_id AS cell, b.d, b.vs AS ss
-  FROM by_dim b JOIN seed_ids si ON si.vec_id = b.vec_id
-), vec_seed_d2 AS (
-  SELECT v.vec_id, s.cell, CAST(SUM((v.vs - s.ss) * (v.vs - s.ss)) AS BIGINT) AS d2
-  FROM by_dim v JOIN seeds s ON s.d = v.d
-  GROUP BY v.vec_id, s.cell
-), assign AS (
-  SELECT vec_id, cell FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cell) AS arnk
-    FROM vec_seed_d2
-  ) t WHERE arnk = 1
-), probes AS (
-  SELECT vec_id AS query_id, cell FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cell) AS prnk
-    FROM vec_seed_d2 WHERE vec_id < {N_QUERIES}
-  ) t WHERE prnk <= GREATEST({IVF_PROBES_MIN},
-        CAST(ceil(sqrt((SELECT COUNT(*) FROM seed_ids))) AS BIGINT))
-), cand AS (
-  SELECT p.query_id, a.vec_id AS neighbor_id
-  FROM probes p JOIN assign a ON a.cell = p.cell
-  WHERE a.vec_id <> p.query_id
-), scored AS (
-  SELECT c.query_id, c.neighbor_id,
-         ROUND({cosine_q_cols_sql('q.embedding', 'n.embedding')}, 6) AS sim
-  FROM cand c
-  JOIN embeddings q ON q.vec_id = c.query_id
-  JOIN embeddings n ON n.vec_id = c.neighbor_id
-)"""
+WITH {_seeds_sql("embeddings")}, {_FLAT_ASSIGN_SQL},
+{_probes_sql("vec_seed_d2")}, {_IVF_CAND_SQL}, {_SCORED_SQL}"""
 
 
-ANN_IVF_TOPK_SQL = (
-    _IVF_SCORED_SQL
-    + f"""
-SELECT query_id, neighbor_id, sim, rnk FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rnk
-  FROM scored
-) t WHERE rnk <= {TOP_K}
-"""
-)
+ANN_IVF_TOPK_SQL = _IVF_SCORED_SQL + _SIM_TOPK_SQL
 
 
 ANN_RADIUS_SEARCH_SQL = (
@@ -999,6 +1035,25 @@ def hier_branches(emb_q: DataFrame) -> DataFrame:
         .filter((F.col("h") < thresh_b) | (F.col("cell") == F.col("mh.cell")))
         .select(F.col("cell").alias("branch"), F.col("sq").alias("bq"))
     )
+
+
+def _branches_sql(pop: str) -> str:
+    """hcell … branches: hier_branches over the population relation
+    `pop`, as (branch, d, bs) rows — the seeds of _seeds_sql(pop) whose
+    hash also clears 2^60/N^(3/4), N = |pop|."""
+    n = f"GREATEST((SELECT COUNT(*) FROM {pop}), 1)"
+    return f"""hcell AS (
+  SELECT vec_id AS cell, {md5_hash60_sql("CAST(vec_id AS VARCHAR)")} AS h FROM seed_ids
+), branch_ids AS (
+  SELECT cell AS branch FROM hcell
+  WHERE h < CAST(floor(CAST({HASH_SPACE_INT} AS DOUBLE) / (
+          sqrt({n})
+        * sqrt(sqrt({n})))) AS BIGINT)
+     OR cell = (SELECT cell FROM hcell ORDER BY h, cell LIMIT 1)
+), branches AS (
+  SELECT s.cell AS branch, s.d, s.ss AS bs
+  FROM seeds s JOIN branch_ids b ON b.branch = s.cell
+)"""
 
 
 def _branches_by_d2(vec_col: str, *fields: str) -> Column:
@@ -1136,28 +1191,11 @@ def ann_hivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim_topk(ivf_rerank(emb, _hier_cand_seed(emb_q), quantizer_seeds(emb_q)))
 
 
-# WITH-chain through the two-level assignment — shared by the
-# ann_hivf_topk and hivf_cell_medoids oracles.
-_HIER_ASSIGN_SQL = f"""
-WITH by_dim AS (
-  SELECT vec_id, d,
-         CAST(floor(CAST(embedding[d + 1] AS DOUBLE) * {CENTROID_SCALE} + 0.5) AS BIGINT) AS vs
-  FROM embeddings CROSS JOIN (SELECT unnest(range(0, {DIM})) AS d) dims
-), {_SEED_IDS_SQL}, seeds AS (
-  SELECT b.vec_id AS cell, b.d, b.vs AS ss
-  FROM by_dim b JOIN seed_ids si ON si.vec_id = b.vec_id
-), hcell AS (
-  SELECT vec_id AS cell, {md5_hash60_sql("CAST(vec_id AS VARCHAR)")} AS h FROM seed_ids
-), branch_ids AS (
-  SELECT cell AS branch FROM hcell
-  WHERE h < CAST(floor(CAST({HASH_SPACE_INT} AS DOUBLE) / (
-          sqrt(GREATEST((SELECT COUNT(*) FROM embeddings), 1))
-        * sqrt(sqrt(GREATEST((SELECT COUNT(*) FROM embeddings), 1))))) AS BIGINT)
-     OR cell = (SELECT cell FROM hcell ORDER BY h, cell LIMIT 1)
-), branches AS (
-  SELECT s.cell AS branch, s.d, s.ss AS bs
-  FROM seeds s JOIN branch_ids b ON b.branch = s.cell
-), seed_branch_d2 AS (
+# seed_branch_d2 … assign: hier_assign after _seeds_sql + _branches_sql —
+# each seed's nearest branch, each vector's BRANCH_PROBES nearest
+# branches, its distances to those branches' seeds (cand_seed) and
+# their argmin.
+_HIER_ROUTE_SQL = f"""seed_branch_d2 AS (
   SELECT s.cell, b.branch, CAST(SUM((s.ss - b.bs) * (s.ss - b.bs)) AS BIGINT) AS bd2
   FROM seeds s JOIN branches b ON b.d = s.d
   GROUP BY 1, 2
@@ -1182,39 +1220,23 @@ WITH by_dim AS (
   JOIN seeds s ON s.cell = sr.cell
   JOIN by_dim v ON v.vec_id = r.vec_id AND v.d = s.d
   GROUP BY 1, 2
-), assign AS (
-  SELECT vec_id, cell FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cell) AS arnk
-    FROM cand_seed
-  ) t WHERE arnk = 1
-)"""
+), {_assign_sql("cand_seed")}"""
+
+
+def _hier_assign_sql(pop: str) -> str:
+    """The WITH-chain through the two-level assignment, its index built
+    from the population relation `pop`."""
+    return f"\nWITH {_seeds_sql(pop)}, {_branches_sql(pop)}, {_HIER_ROUTE_SQL}"
+
+
+_HIER_ASSIGN_SQL = _hier_assign_sql("embeddings")
 
 
 ANN_HIVF_TOPK_SQL = (
     _HIER_ASSIGN_SQL
-    + f"""
-, probes AS (
-  SELECT vec_id AS query_id, cell FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cell) AS prnk
-    FROM cand_seed WHERE vec_id < {N_QUERIES}
-  ) t WHERE prnk <= GREATEST({IVF_PROBES_MIN},
-        CAST(ceil(sqrt((SELECT COUNT(*) FROM seed_ids))) AS BIGINT))
-), cand AS (
-  SELECT p.query_id, a.vec_id AS neighbor_id
-  FROM probes p JOIN assign a ON a.cell = p.cell
-  WHERE a.vec_id <> p.query_id
-), scored AS (
-  SELECT c.query_id, c.neighbor_id,
-         ROUND({cosine_q_cols_sql('q.embedding', 'n.embedding')}, 6) AS sim
-  FROM cand c
-  JOIN embeddings q ON q.vec_id = c.query_id
-  JOIN embeddings n ON n.vec_id = c.neighbor_id
-)
-SELECT query_id, neighbor_id, sim, rnk FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rnk
-  FROM scored
-) t WHERE rnk <= {TOP_K}
-"""
+    + f""", {_probes_sql("cand_seed")},
+{_IVF_CAND_SQL}, {_SCORED_SQL}"""
+    + _SIM_TOPK_SQL
 )
 
 
@@ -1610,13 +1632,10 @@ def ivf_probe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ivf_probe_curve_sql() -> str:
     grid_rows = ", ".join(f"({p})" for p in IVF_PROBE_GRID)
-    scored_body = _IVF_SCORED_SQL.split("probes AS (")[0]
-    return (
-        scored_body
-        + f"""ranked AS (
+    return f"""
+WITH {_seeds_sql("embeddings")}, {_FLAT_ASSIGN_SQL}, ranked AS (
   SELECT vec_id AS query_id, cell, prnk FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cell) AS prnk
-    FROM vec_seed_d2 WHERE vec_id < {N_QUERIES}
+    {_probe_ranks_sql("vec_seed_d2")}
   ) t
 ), cand AS (
   SELECT g.n_probes, r.query_id, a.vec_id AS neighbor_id
@@ -1655,7 +1674,6 @@ FROM cc c
 LEFT JOIN hits h USING (n_probes)
 CROSS JOIN nq
 """
-    )
 
 
 def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1741,6 +1759,52 @@ def _pq_subspace_dists(emb_q: DataFrame, seeds: DataFrame) -> DataFrame:
     )
 
 
+# dists: _pq_subspace_dists — (vec_id, m, cell, d2) after _seeds_sql
+_PQ_DISTS_SQL = f"""dists AS (
+  SELECT v.vec_id, v.d // {PQ_SUBDIM} AS m, s.cell,
+         CAST(SUM((v.vs - s.ss) * (v.vs - s.ss)) AS BIGINT) AS d2
+  FROM by_dim v JOIN seeds s ON s.d = v.d
+  GROUP BY v.vec_id, v.d // {PQ_SUBDIM}, s.cell
+)"""
+
+# qtab: the query rows of dists — the ADC distance tables
+_QTAB_SQL = f"""qtab AS (
+  SELECT vec_id AS query_id, m, cell, d2 AS qd2 FROM dists WHERE vec_id < {N_QUERIES}
+)"""
+
+
+def _pq_best_sql(dists: str) -> str:
+    """best: the PQ codes — each vector's (d2, cell)-nearest codeword
+    per subspace of the (vec_id, m, cell, d2) CTE `dists`."""
+    return f"""best AS (
+  SELECT vec_id, m, cell, d2 FROM (
+    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY d2, cell) AS r
+    FROM {dists}
+  ) t WHERE r = 1
+)"""
+
+
+# adc: the IVF candidates' table-lookup distances, Σ_m qtab at the
+# neighbor's code `best`
+_IVF_ADC_SQL = """adc AS (
+  SELECT c.query_id, c.neighbor_id, CAST(SUM(q.qd2) AS BIGINT) AS adc
+  FROM cand c
+  JOIN best k ON k.vec_id = c.neighbor_id
+  JOIN qtab q ON q.query_id = c.query_id AND q.m = k.m AND q.cell = k.cell
+  GROUP BY 1, 2
+)"""
+
+# each query's TOP_K adc rows by (adc, neighbor_id) — adc_topk
+_ADC_TOPK_SQL = f"""
+SELECT query_id, neighbor_id,
+       ROUND(sqrt(CAST(adc AS DOUBLE)) / {CENTROID_SCALE}.0, 6) AS adc_dist, rnk
+FROM (
+  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY adc, neighbor_id) AS rnk
+  FROM adc
+) t WHERE rnk <= {TOP_K}
+"""
+
+
 def embedding_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization encode (Jégou et al. 2011): the vector is
     split into PQ_M subvectors and each is replaced by the id of its
@@ -1778,24 +1842,7 @@ def embedding_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 EMBEDDING_PQ_SQL = f"""
-WITH by_dim AS (
-  SELECT vec_id, d,
-         CAST(floor(CAST(embedding[d + 1] AS DOUBLE) * {CENTROID_SCALE} + 0.5) AS BIGINT) AS vs
-  FROM embeddings CROSS JOIN (SELECT unnest(range(0, {DIM})) AS d) dims
-), {_SEED_IDS_SQL}, seeds AS (
-  SELECT b.vec_id AS cell, b.d, b.vs AS ss
-  FROM by_dim b JOIN seed_ids si ON si.vec_id = b.vec_id
-), dists AS (
-  SELECT v.vec_id, v.d // {PQ_SUBDIM} AS m, s.cell,
-         CAST(SUM((v.vs - s.ss) * (v.vs - s.ss)) AS BIGINT) AS d2
-  FROM by_dim v JOIN seeds s ON s.d = v.d
-  GROUP BY v.vec_id, v.d // {PQ_SUBDIM}, s.cell
-), best AS (
-  SELECT vec_id, m, cell, d2 FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY d2, cell) AS r
-    FROM dists
-  ) t WHERE r = 1
-)
+WITH {_seeds_sql("embeddings")}, {_PQ_DISTS_SQL}, {_pq_best_sql("dists")}
 SELECT vec_id,
        string_agg(CAST(cell AS VARCHAR), ',' ORDER BY m) AS pq_code,
        ROUND(sqrt(CAST(SUM(d2) AS DOUBLE)) / {CENTROID_SCALE}.0, 6) AS recon_err
@@ -1803,31 +1850,11 @@ FROM best GROUP BY vec_id
 """
 
 
-def pq_distortion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(m, n_vectors, n_cells_used, utilization, mse, err_share) — the
-    per-subspace health check of the PQ codebook: mean squared
-    quantization error per subspace (which subspace is starving for
-    codewords), the share of total distortion it contributes, and
-    codeword utilization (distinct codewords actually chosen / seed
-    count — dead codewords waste code space). The audit that decides
-    whether PQ_M / the seed budget are allocated where the variance
-    is, read BEFORE shipping the embedding_pq codes.
-
-    Scale plan: reuses _pq_subspace_dists (codebooks broadcast at ≈√N
-    rows; one exact-int64 fold per (vector, seed, subspace)) and the
-    same per-(vec, m) argmin; the audit itself is ONE hash agg on PQ_M
-    keys, with the seed count and the distortion total entering as
-    1-row broadcasts. Exact int d2 sums; two divisions at the end."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    quant = quantize_fp()
-    emb_q = emb.select("vec_id", quant.alias("vq"))
-    seeds = quantizer_seeds(emb_q)
-    dists = _pq_subspace_dists(emb_q, seeds)
-    best = (
-        dists.groupBy("vec_id", "m")
-        .agg(F.min(F.struct("d2", "cell")).alias("b"))
-        .select("m", F.col("b.cell").alias("cell"), F.col("b.d2").alias("d2"))
-    )
+def _pq_audit_release(best: DataFrame, seeds: DataFrame) -> DataFrame:
+    """The per-subspace audit columns over a (m, cell, d2) code relation
+    `best` encoded against the codebook `seeds`: ONE hash agg on PQ_M
+    keys, the seed count and the distortion total as 1-row broadcasts,
+    exact int d2 sums and two divisions at the end."""
     per_m = best.groupBy("m").agg(
         F.count("*").cast("long").alias("n_vectors"),
         F.countDistinct("cell").cast("long").alias("n_cells_used"),
@@ -1857,25 +1884,37 @@ def pq_distortion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PQ_DISTORTION_AUDIT_SQL = f"""
-WITH by_dim AS (
-  SELECT vec_id, d,
-         CAST(floor(CAST(embedding[d + 1] AS DOUBLE) * {CENTROID_SCALE} + 0.5) AS BIGINT) AS vs
-  FROM embeddings CROSS JOIN (SELECT unnest(range(0, {DIM})) AS d) dims
-), {_SEED_IDS_SQL}, seeds AS (
-  SELECT b.vec_id AS cell, b.d, b.vs AS ss
-  FROM by_dim b JOIN seed_ids si ON si.vec_id = b.vec_id
-), dists AS (
-  SELECT v.vec_id, v.d // {PQ_SUBDIM} AS m, s.cell,
-         CAST(SUM((v.vs - s.ss) * (v.vs - s.ss)) AS BIGINT) AS d2
-  FROM by_dim v JOIN seeds s ON s.d = v.d
-  GROUP BY v.vec_id, v.d // {PQ_SUBDIM}, s.cell
-), best AS (
-  SELECT m, cell, d2 FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY d2, cell) AS r
-    FROM dists
-  ) t WHERE r = 1
-), per_m AS (
+def pq_distortion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(m, n_vectors, n_cells_used, utilization, mse, err_share) — the
+    per-subspace health check of the PQ codebook: mean squared
+    quantization error per subspace (which subspace is starving for
+    codewords), the share of total distortion it contributes, and
+    codeword utilization (distinct codewords actually chosen / seed
+    count — dead codewords waste code space). The audit that decides
+    whether PQ_M / the seed budget are allocated where the variance
+    is, read BEFORE shipping the embedding_pq codes.
+
+    Scale plan: reuses _pq_subspace_dists (codebooks broadcast at ≈√N
+    rows; one exact-int64 fold per (vector, seed, subspace)) and the
+    same per-(vec, m) argmin; the audit itself is ONE hash agg on PQ_M
+    keys, with the seed count and the distortion total entering as
+    1-row broadcasts. Exact int d2 sums; two divisions at the end."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    quant = quantize_fp()
+    emb_q = emb.select("vec_id", quant.alias("vq"))
+    seeds = quantizer_seeds(emb_q)
+    dists = _pq_subspace_dists(emb_q, seeds)
+    best = (
+        dists.groupBy("vec_id", "m")
+        .agg(F.min(F.struct("d2", "cell")).alias("b"))
+        .select("m", F.col("b.cell").alias("cell"), F.col("b.d2").alias("d2"))
+    )
+    return _pq_audit_release(best, seeds)
+
+
+# per_m … release: pq_distortion_audit's per-subspace release over
+# `best`, shared by both audits (_pq_audit_release)
+_PQ_AUDIT_SQL = f""", per_m AS (
   SELECT m, CAST(COUNT(*) AS BIGINT) AS n_vectors,
          CAST(COUNT(DISTINCT cell) AS BIGINT) AS n_cells_used,
          CAST(SUM(d2) AS BIGINT) AS td2
@@ -1892,6 +1931,10 @@ SELECT m, n_vectors, n_cells_used,
             THEN ROUND(CAST(td2 AS DOUBLE) / all_d2, 6) END AS err_share
 FROM per_m CROSS JOIN ns CROSS JOIN tot
 """
+
+
+PQ_DISTORTION_AUDIT_SQL = f"""
+WITH {_seeds_sql("embeddings")}, {_PQ_DISTS_SQL}, {_pq_best_sql("dists")}{_PQ_AUDIT_SQL}"""
 
 
 def _pq_hier_codes(emb_q: DataFrame) -> DataFrame:
@@ -1970,6 +2013,42 @@ def _pq_hier_codes(emb_q: DataFrame) -> DataFrame:
     )
 
 
+# srm … cand_m: _pq_hier_codes after _seeds_sql + _branches_sql — each
+# codeword's nearest branch and each vector's BRANCH_PROBES nearest
+# branches per subspace, and the vector's distances to those branches'
+# codewords (cand_m, argmin by _pq_best_sql). Suffixed _m: the
+# two-level assignment chain owns seed_route / vec_route.
+_PQ_HIER_CODES_SQL = f"""srm AS (
+  SELECT s.cell, s.d // {PQ_SUBDIM} AS m, b.branch,
+         CAST(SUM((s.ss - b.bs) * (s.ss - b.bs)) AS BIGINT) AS bd2
+  FROM seeds s JOIN branches b ON b.d = s.d
+  GROUP BY 1, 2, 3
+), seed_route_m AS (
+  SELECT cell, m, branch FROM (
+    SELECT *, ROW_NUMBER() OVER (PARTITION BY cell, m ORDER BY bd2, branch) AS rn
+    FROM srm
+  ) t WHERE rn = 1
+), vrm AS (
+  SELECT v.vec_id, v.d // {PQ_SUBDIM} AS m, b.branch,
+         CAST(SUM((v.vs - b.bs) * (v.vs - b.bs)) AS BIGINT) AS bd2
+  FROM by_dim v JOIN branches b ON b.d = v.d
+  GROUP BY 1, 2, 3
+), vec_route_m AS (
+  SELECT vec_id, m, branch FROM (
+    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY bd2, branch) AS rn
+    FROM vrm
+  ) t WHERE rn <= {BRANCH_PROBES}
+), cand_m AS (
+  SELECT r.vec_id, r.m, sr.cell,
+         CAST(SUM((v.vs - s.ss) * (v.vs - s.ss)) AS BIGINT) AS d2
+  FROM vec_route_m r
+  JOIN seed_route_m sr ON sr.m = r.m AND sr.branch = r.branch
+  JOIN seeds s ON s.cell = sr.cell AND s.d // {PQ_SUBDIM} = r.m
+  JOIN by_dim v ON v.vec_id = r.vec_id AND v.d = s.d
+  GROUP BY 1, 2, 3
+), {_pq_best_sql("cand_m")}"""
+
+
 def pq_hier_distortion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """pq_distortion_audit's release over the two-level PER-SUBSPACE
     router (_pq_hier_codes): same per-subspace health columns
@@ -1980,105 +2059,12 @@ def pq_hier_distortion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     emb_q = emb.select("vec_id", quantize_fp().alias("vq"))
     seeds = quantizer_seeds(emb_q)
-    best = _pq_hier_codes(emb_q).select("m", "cell", "d2")
-    per_m = best.groupBy("m").agg(
-        F.count("*").cast("long").alias("n_vectors"),
-        F.countDistinct("cell").cast("long").alias("n_cells_used"),
-        F.sum("d2").cast("long").alias("td2"),
-    )
-    n_seeds = seeds.agg(F.count("*").alias("n_cells"))
-    tot = per_m.agg(F.sum("td2").alias("all_d2"))
-    scale2 = float(CENTROID_SCALE) * float(CENTROID_SCALE)
-    return (
-        per_m.crossJoin(F.broadcast(n_seeds))
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "m",
-            "n_vectors",
-            "n_cells_used",
-            F.round(F.col("n_cells_used").cast("double") / F.col("n_cells"), 6).alias(
-                "utilization"
-            ),
-            F.round(
-                F.col("td2").cast("double") / F.col("n_vectors") / F.lit(scale2), 6
-            ).alias("mse"),
-            F.when(
-                F.col("all_d2") > 0,
-                F.round(F.col("td2").cast("double") / F.col("all_d2"), 6),
-            ).alias("err_share"),
-        )
-    )
+    return _pq_audit_release(_pq_hier_codes(emb_q).select("m", "cell", "d2"), seeds)
 
 
 PQ_HIER_DISTORTION_AUDIT_SQL = f"""
-WITH by_dim AS (
-  SELECT vec_id, d,
-         CAST(floor(CAST(embedding[d + 1] AS DOUBLE) * {CENTROID_SCALE} + 0.5) AS BIGINT) AS vs
-  FROM embeddings CROSS JOIN (SELECT unnest(range(0, {DIM})) AS d) dims
-), {_SEED_IDS_SQL}, seeds AS (
-  SELECT b.vec_id AS cell, b.d, b.vs AS ss
-  FROM by_dim b JOIN seed_ids si ON si.vec_id = b.vec_id
-), hcell AS (
-  SELECT vec_id AS cell, {md5_hash60_sql("CAST(vec_id AS VARCHAR)")} AS h FROM seed_ids
-), branch_ids AS (
-  SELECT cell AS branch FROM hcell
-  WHERE h < CAST(floor(CAST({HASH_SPACE_INT} AS DOUBLE) / (
-          sqrt(GREATEST((SELECT COUNT(*) FROM embeddings), 1))
-        * sqrt(sqrt(GREATEST((SELECT COUNT(*) FROM embeddings), 1))))) AS BIGINT)
-     OR cell = (SELECT cell FROM hcell ORDER BY h, cell LIMIT 1)
-), branches AS (
-  SELECT s.cell AS branch, s.d, s.ss AS bs
-  FROM seeds s JOIN branch_ids b ON b.branch = s.cell
-), srm AS (
-  SELECT s.cell, s.d // {PQ_SUBDIM} AS m, b.branch,
-         CAST(SUM((s.ss - b.bs) * (s.ss - b.bs)) AS BIGINT) AS bd2
-  FROM seeds s JOIN branches b ON b.d = s.d
-  GROUP BY 1, 2, 3
-), seed_route AS (
-  SELECT cell, m, branch FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY cell, m ORDER BY bd2, branch) AS rn
-    FROM srm
-  ) t WHERE rn = 1
-), vrm AS (
-  SELECT v.vec_id, v.d // {PQ_SUBDIM} AS m, b.branch,
-         CAST(SUM((v.vs - b.bs) * (v.vs - b.bs)) AS BIGINT) AS bd2
-  FROM by_dim v JOIN branches b ON b.d = v.d
-  GROUP BY 1, 2, 3
-), vec_route AS (
-  SELECT vec_id, m, branch FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY bd2, branch) AS rn
-    FROM vrm
-  ) t WHERE rn <= {BRANCH_PROBES}
-), cand AS (
-  SELECT r.vec_id, r.m, sr.cell,
-         CAST(SUM((v.vs - s.ss) * (v.vs - s.ss)) AS BIGINT) AS d2
-  FROM vec_route r
-  JOIN seed_route sr ON sr.m = r.m AND sr.branch = r.branch
-  JOIN seeds s ON s.cell = sr.cell AND s.d // {PQ_SUBDIM} = r.m
-  JOIN by_dim v ON v.vec_id = r.vec_id AND v.d = s.d
-  GROUP BY 1, 2, 3
-), best AS (
-  SELECT m, cell, d2 FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY d2, cell) AS r
-    FROM cand
-  ) t WHERE r = 1
-), per_m AS (
-  SELECT m, CAST(COUNT(*) AS BIGINT) AS n_vectors,
-         CAST(COUNT(DISTINCT cell) AS BIGINT) AS n_cells_used,
-         CAST(SUM(d2) AS BIGINT) AS td2
-  FROM best GROUP BY 1
-), ns AS (
-  SELECT COUNT(*) AS n_cells FROM seed_ids
-), tot AS (
-  SELECT SUM(td2) AS all_d2 FROM per_m
-)
-SELECT m, n_vectors, n_cells_used,
-       ROUND(CAST(n_cells_used AS DOUBLE) / n_cells, 6) AS utilization,
-       ROUND(CAST(td2 AS DOUBLE) / n_vectors / {CENTROID_SCALE}.0 / {CENTROID_SCALE}.0, 6) AS mse,
-       CASE WHEN all_d2 > 0
-            THEN ROUND(CAST(td2 AS DOUBLE) / all_d2, 6) END AS err_share
-FROM per_m CROSS JOIN ns CROSS JOIN tot
-"""
+WITH {_seeds_sql("embeddings")}, {_branches_sql("embeddings")},
+{_PQ_HIER_CODES_SQL}{_PQ_AUDIT_SQL}"""
 
 
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2117,38 +2103,13 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ANN_PQ_TOPK_SQL = f"""
-WITH by_dim AS (
-  SELECT vec_id, d,
-         CAST(floor(CAST(embedding[d + 1] AS DOUBLE) * {CENTROID_SCALE} + 0.5) AS BIGINT) AS vs
-  FROM embeddings CROSS JOIN (SELECT unnest(range(0, {DIM})) AS d) dims
-), {_SEED_IDS_SQL}, seeds AS (
-  SELECT b.vec_id AS cell, b.d, b.vs AS ss
-  FROM by_dim b JOIN seed_ids si ON si.vec_id = b.vec_id
-), dists AS (
-  SELECT v.vec_id, v.d // {PQ_SUBDIM} AS m, s.cell,
-         CAST(SUM((v.vs - s.ss) * (v.vs - s.ss)) AS BIGINT) AS d2
-  FROM by_dim v JOIN seeds s ON s.d = v.d
-  GROUP BY v.vec_id, v.d // {PQ_SUBDIM}, s.cell
-), codes AS (
-  SELECT vec_id AS neighbor_id, m, cell FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY d2, cell) AS r
-    FROM dists
-  ) t WHERE r = 1
-), qtab AS (
-  SELECT vec_id AS query_id, m, cell, d2 AS qd2 FROM dists WHERE vec_id < {N_QUERIES}
-), adc AS (
-  SELECT q.query_id, c.neighbor_id, CAST(SUM(q.qd2) AS BIGINT) AS adc
-  FROM codes c JOIN qtab q ON q.m = c.m AND q.cell = c.cell
-  WHERE c.neighbor_id <> q.query_id
+WITH {_seeds_sql("embeddings")}, {_PQ_DISTS_SQL}, {_pq_best_sql("dists")},
+{_QTAB_SQL}, adc AS (
+  SELECT q.query_id, k.vec_id AS neighbor_id, CAST(SUM(q.qd2) AS BIGINT) AS adc
+  FROM best k JOIN qtab q ON q.m = k.m AND q.cell = k.cell
+  WHERE k.vec_id <> q.query_id
   GROUP BY 1, 2
-)
-SELECT query_id, neighbor_id,
-       ROUND(sqrt(CAST(adc AS DOUBLE)) / {CENTROID_SCALE}.0, 6) AS adc_dist, rnk
-FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY adc, neighbor_id) AS rnk
-  FROM adc
-) t WHERE rnk <= {TOP_K}
-"""
+){_ADC_TOPK_SQL}"""
 
 
 def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2204,56 +2165,10 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ANN_IVF_PQ_TOPK_SQL = f"""
-WITH by_dim AS (
-  SELECT vec_id, d,
-         CAST(floor(CAST(embedding[d + 1] AS DOUBLE) * {CENTROID_SCALE} + 0.5) AS BIGINT) AS vs
-  FROM embeddings CROSS JOIN (SELECT unnest(range(0, {DIM})) AS d) dims
-), {_SEED_IDS_SQL}, seeds AS (
-  SELECT b.vec_id AS cell, b.d, b.vs AS ss
-  FROM by_dim b JOIN seed_ids si ON si.vec_id = b.vec_id
-), dists AS (
-  SELECT v.vec_id, v.d // {PQ_SUBDIM} AS m, s.cell,
-         CAST(SUM((v.vs - s.ss) * (v.vs - s.ss)) AS BIGINT) AS d2
-  FROM by_dim v JOIN seeds s ON s.d = v.d
-  GROUP BY v.vec_id, v.d // {PQ_SUBDIM}, s.cell
-), coarse AS (
+WITH {_seeds_sql("embeddings")}, {_PQ_DISTS_SQL}, coarse AS (
   SELECT vec_id, cell, CAST(SUM(d2) AS BIGINT) AS d2f FROM dists GROUP BY 1, 2
-), assign AS (
-  SELECT vec_id, cell FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2f, cell) AS arnk
-    FROM coarse
-  ) t WHERE arnk = 1
-), probes AS (
-  SELECT vec_id AS query_id, cell FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2f, cell) AS prnk
-    FROM coarse WHERE vec_id < {N_QUERIES}
-  ) t WHERE prnk <= GREATEST({IVF_PROBES_MIN},
-        CAST(ceil(sqrt((SELECT COUNT(*) FROM seed_ids))) AS BIGINT))
-), codes AS (
-  SELECT vec_id AS neighbor_id, m, cell AS cw FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY d2, cell) AS r
-    FROM dists
-  ) t WHERE r = 1
-), qtab AS (
-  SELECT vec_id AS query_id, m, cell AS cw, d2 AS qd2 FROM dists WHERE vec_id < {N_QUERIES}
-), cand AS (
-  SELECT p.query_id, a.vec_id AS neighbor_id
-  FROM probes p JOIN assign a ON a.cell = p.cell
-  WHERE a.vec_id <> p.query_id
-), adc AS (
-  SELECT c.query_id, c.neighbor_id, CAST(SUM(q.qd2) AS BIGINT) AS adc
-  FROM cand c
-  JOIN codes k ON k.neighbor_id = c.neighbor_id
-  JOIN qtab q ON q.query_id = c.query_id AND q.m = k.m AND q.cw = k.cw
-  GROUP BY 1, 2
-)
-SELECT query_id, neighbor_id,
-       ROUND(sqrt(CAST(adc AS DOUBLE)) / {CENTROID_SCALE}.0, 6) AS adc_dist, rnk
-FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY adc, neighbor_id) AS rnk
-  FROM adc
-) t WHERE rnk <= {TOP_K}
-"""
+), {_assign_sql("coarse", "d2f")}, {_probes_sql("coarse", "d2f")},
+{_pq_best_sql("dists")}, {_QTAB_SQL}, {_IVF_CAND_SQL}, {_IVF_ADC_SQL}{_ADC_TOPK_SQL}"""
 
 
 def ann_hivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2313,74 +2228,12 @@ def ann_hivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # HIVF-PQ oracle: the coarse two-level WITH-chain (_HIER_ASSIGN_SQL)
-# + the per-subspace hier code CTEs (suffixed _m — the coarse chain
-# already owns seed_route/vec_route) + flat query-side ADC tables.
+# + the per-subspace hier codes + flat query-side ADC tables.
 ANN_HIVF_PQ_TOPK_SQL = (
     _HIER_ASSIGN_SQL
-    + f"""
-, probes AS (
-  SELECT vec_id AS query_id, cell FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cell) AS prnk
-    FROM cand_seed WHERE vec_id < {N_QUERIES}
-  ) t WHERE prnk <= GREATEST({IVF_PROBES_MIN},
-        CAST(ceil(sqrt((SELECT COUNT(*) FROM seed_ids))) AS BIGINT))
-), srm AS (
-  SELECT s.cell, s.d // {PQ_SUBDIM} AS m, b.branch,
-         CAST(SUM((s.ss - b.bs) * (s.ss - b.bs)) AS BIGINT) AS bd2
-  FROM seeds s JOIN branches b ON b.d = s.d
-  GROUP BY 1, 2, 3
-), seed_route_m AS (
-  SELECT cell, m, branch FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY cell, m ORDER BY bd2, branch) AS rn
-    FROM srm
-  ) t WHERE rn = 1
-), vrm AS (
-  SELECT v.vec_id, v.d // {PQ_SUBDIM} AS m, b.branch,
-         CAST(SUM((v.vs - b.bs) * (v.vs - b.bs)) AS BIGINT) AS bd2
-  FROM by_dim v JOIN branches b ON b.d = v.d
-  GROUP BY 1, 2, 3
-), vec_route_m AS (
-  SELECT vec_id, m, branch FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY bd2, branch) AS rn
-    FROM vrm
-  ) t WHERE rn <= {BRANCH_PROBES}
-), cand_m AS (
-  SELECT r.vec_id, r.m, sr.cell,
-         CAST(SUM((v.vs - s.ss) * (v.vs - s.ss)) AS BIGINT) AS d2
-  FROM vec_route_m r
-  JOIN seed_route_m sr ON sr.m = r.m AND sr.branch = r.branch
-  JOIN seeds s ON s.cell = sr.cell AND s.d // {PQ_SUBDIM} = r.m
-  JOIN by_dim v ON v.vec_id = r.vec_id AND v.d = s.d
-  GROUP BY 1, 2, 3
-), codes AS (
-  SELECT vec_id AS neighbor_id, m, cell AS cw FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY d2, cell) AS r
-    FROM cand_m
-  ) t WHERE r = 1
-), qtab AS (
-  SELECT v.vec_id AS query_id, s.d // {PQ_SUBDIM} AS m, s.cell AS cw,
-         CAST(SUM((v.vs - s.ss) * (v.vs - s.ss)) AS BIGINT) AS qd2
-  FROM by_dim v JOIN seeds s ON s.d = v.d
-  WHERE v.vec_id < {N_QUERIES}
-  GROUP BY 1, 2, 3
-), cand AS (
-  SELECT p.query_id, a.vec_id AS neighbor_id
-  FROM probes p JOIN assign a ON a.cell = p.cell
-  WHERE a.vec_id <> p.query_id
-), adc AS (
-  SELECT c.query_id, c.neighbor_id, CAST(SUM(q.qd2) AS BIGINT) AS adc
-  FROM cand c
-  JOIN codes k ON k.neighbor_id = c.neighbor_id
-  JOIN qtab q ON q.query_id = c.query_id AND q.m = k.m AND q.cw = k.cw
-  GROUP BY 1, 2
-)
-SELECT query_id, neighbor_id,
-       ROUND(sqrt(CAST(adc AS DOUBLE)) / {CENTROID_SCALE}.0, 6) AS adc_dist, rnk
-FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY adc, neighbor_id) AS rnk
-  FROM adc
-) t WHERE rnk <= {TOP_K}
-"""
+    + f""", {_probes_sql("cand_seed")}, {_PQ_HIER_CODES_SQL},
+{_PQ_DISTS_SQL}, {_QTAB_SQL}, {_IVF_CAND_SQL}, {_IVF_ADC_SQL}"""
+    + _ADC_TOPK_SQL
 )
 
 
@@ -2479,11 +2332,7 @@ def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
 # of _lloyd_two_rounds, reused by KMEANS_LLOYD_SQL and
 # KMEANS_SILHOUETTE_SQL so the two queries can never drift apart.
 _LLOYD_CORE_SQL = f"""
-WITH by_dim AS (
-  SELECT vec_id, d,
-         CAST(floor(CAST(embedding[d + 1] AS DOUBLE) * {CENTROID_SCALE} + 0.5) AS BIGINT) AS vs
-  FROM embeddings CROSS JOIN (SELECT unnest(range(0, {DIM})) AS d) dims
-), cent0 AS (
+WITH {_BY_DIM_SQL}, cent0 AS (
   SELECT CAST(vec_id AS INT) AS cell, d, vs AS qc FROM by_dim WHERE vec_id < {KMEANS_CELLS}
 ), dist1 AS (
   SELECT b.vec_id, c.cell, CAST(SUM((b.vs - c.qc) * (b.vs - c.qc)) AS BIGINT) AS dist_sq
@@ -2673,21 +2522,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SEMANTIC_DEDUP_SQL = f"""
-WITH by_dim AS (
-  SELECT vec_id, d,
-         CAST(floor(CAST(embedding[d + 1] AS DOUBLE) * {CENTROID_SCALE} + 0.5) AS BIGINT) AS vs
-  FROM embeddings CROSS JOIN (SELECT unnest(range(0, {DIM})) AS d) dims
-), {_SEED_IDS_SQL}, seeds AS (
-  SELECT b.vec_id AS cell, b.d, b.vs AS ss
-  FROM by_dim b JOIN seed_ids si ON si.vec_id = b.vec_id
-), d2 AS (
-  SELECT v.vec_id, s.cell, CAST(SUM((v.vs - s.ss) * (v.vs - s.ss)) AS BIGINT) AS d2
-  FROM by_dim v JOIN seeds s ON s.d = v.d GROUP BY 1, 2
-), assign AS (
-  SELECT vec_id, cell FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cell) AS arnk FROM d2
-  ) t WHERE arnk = 1
-), dup AS (
+WITH {_seeds_sql("embeddings")}, {_FLAT_ASSIGN_SQL}, dup AS (
   SELECT b.vec_id AS vec_b, MIN(a.vec_id) AS dup_of
   FROM assign a JOIN assign b ON a.cell = b.cell AND a.vec_id < b.vec_id
   JOIN embeddings ea ON ea.vec_id = a.vec_id
@@ -2791,9 +2626,9 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ANN_RECALL_EVAL_SQL = f"""
-WITH exact AS ({ANN_BRUTE_TOPK_SQL.replace(';', '')}),
-lsh AS ({ANN_LSH_TOPK_SQL.replace(';', '')}),
-ivf AS ({ANN_IVF_TOPK_SQL.replace(';', '')}),
+WITH exact AS ({ANN_BRUTE_TOPK_SQL}),
+lsh AS ({ANN_LSH_TOPK_SQL}),
+ivf AS ({ANN_IVF_TOPK_SQL}),
 ex AS (SELECT query_id, neighbor_id FROM exact)
 SELECT m.method, q.query_id,
        CAST(COALESCE(h.n_hit, 0) AS BIGINT) AS n_hit,
@@ -3596,23 +3431,7 @@ def ivf_cell_medoids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 IVF_CELL_MEDOIDS_SQL = f"""
-WITH by_dim AS (
-  SELECT vec_id, d,
-         CAST(floor(CAST(embedding[d + 1] AS DOUBLE) * {CENTROID_SCALE} + 0.5) AS BIGINT) AS vs
-  FROM embeddings CROSS JOIN (SELECT unnest(range(0, {DIM})) AS d) dims
-), {_SEED_IDS_SQL}, seeds AS (
-  SELECT b.vec_id AS cell, b.d, b.vs AS ss
-  FROM by_dim b JOIN seed_ids si ON si.vec_id = b.vec_id
-), vec_seed_d2 AS (
-  SELECT v.vec_id, s.cell, CAST(SUM((v.vs - s.ss) * (v.vs - s.ss)) AS BIGINT) AS d2
-  FROM by_dim v JOIN seeds s ON s.d = v.d
-  GROUP BY v.vec_id, s.cell
-), assign AS (
-  SELECT vec_id, cell FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cell) AS arnk
-    FROM vec_seed_d2
-  ) t WHERE arnk = 1
-), pd AS (
+WITH {_seeds_sql("embeddings")}, {_FLAT_ASSIGN_SQL}, pd AS (
   SELECT aa.cell, aa.vec_id AS va, bb.vec_id AS vb,
          CAST(SUM((x.vs - y.vs) * (x.vs - y.vs)) AS BIGINT) AS d2
   FROM assign aa

@@ -63,10 +63,9 @@ from pyspark.sql import functions as F
 from capstone_etl_spark.functions.vectors import dot_long, quantized_cosine
 from capstone_etl_spark.operators.similarity import (
     _HIER_ASSIGN_SQL,
-    _SEED_IDS_SQL,
     _d2_fold,
+    _hier_assign_sql,
     _hier_cand_seed,
-    CENTROID_SCALE,
     DIM,
     N_QUERIES,
     QN_SQL,
@@ -377,7 +376,7 @@ def label_noise_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # The shared within-cell vote chain over the hier `assign` relation —
-# spliced after _HIER_ASSIGN_SQL (or its base-indexed variant).
+# spliced after _HIER_ASSIGN_SQL.
 _NOISE_VOTES_SQL = f""", {QN_SQL}, pairs AS (
   SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
          {d2_q_sql('qa', 'qb')} AS d2p,
@@ -506,55 +505,14 @@ def label_noise_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _hier_assign_base_sql() -> str:
-    """_HIER_ASSIGN_SQL's base-indexed variant: seeds, branches and
-    both hash thresholds come from the BASE subset only (NOT delta),
-    while by_dim — and therefore routing and assignment — covers the
-    full relation. The tail (branches → assign) is SLICED OUT of
-    similarity._HIER_ASSIGN_SQL itself so the two chains cannot drift;
-    only the population-dependent head is restated here."""
-    from capstone_etl_spark.functions.hashing import md5_hash60_sql
-    from capstone_etl_spark.operators.dedup import _delta_pred_sql
-    from capstone_etl_spark.operators.similarity import (
-        _HIER_ASSIGN_SQL as full_sql,
-        HASH_SPACE_INT,
-    )
-
-    delta = _delta_pred_sql("vec_id")
-    nbase = f"(SELECT COUNT(*) FROM embeddings WHERE NOT {delta})"
-    tail = full_sql[full_sql.index("), branches AS ("):]
-    head = f"""
-WITH by_dim AS (
-  SELECT vec_id, d,
-         CAST(floor(CAST(embedding[d + 1] AS DOUBLE) * {CENTROID_SCALE} + 0.5) AS BIGINT) AS vs
-  FROM embeddings CROSS JOIN (SELECT unnest(range(0, {DIM})) AS d) dims
-), hseed AS (
-  SELECT vec_id, {md5_hash60_sql("CAST(vec_id AS VARCHAR)")} AS h
-  FROM embeddings WHERE NOT {delta}
-), seed_ids AS (
-  SELECT vec_id FROM hseed
-  WHERE h < CAST(floor(CAST({HASH_SPACE_INT} AS DOUBLE)
-                 / sqrt(GREATEST({nbase}, 1))) AS BIGINT)
-     OR vec_id = (SELECT vec_id FROM hseed ORDER BY h, vec_id LIMIT 1)
-), seeds AS (
-  SELECT b.vec_id AS cell, b.d, b.vs AS ss
-  FROM by_dim b JOIN seed_ids si ON si.vec_id = b.vec_id
-), hcell AS (
-  SELECT vec_id AS cell, {md5_hash60_sql("CAST(vec_id AS VARCHAR)")} AS h FROM seed_ids
-), branch_ids AS (
-  SELECT cell AS branch FROM hcell
-  WHERE h < CAST(floor(CAST({HASH_SPACE_INT} AS DOUBLE) / (
-          sqrt(GREATEST({nbase}, 1))
-        * sqrt(sqrt(GREATEST({nbase}, 1))))) AS BIGINT)
-     OR cell = (SELECT cell FROM hcell ORDER BY h, cell LIMIT 1)"""
-    return head + tail
-
-
 def _label_noise_incremental_sql() -> str:
     from capstone_etl_spark.operators.dedup import _delta_pred_sql
 
+    # the index (seeds, branches, thresholds) is built from the BASE
+    # subset only, while routing and assignment cover every vector
+    base = f"(SELECT vec_id FROM embeddings WHERE NOT {_delta_pred_sql('vec_id')})"
     return (
-        _hier_assign_base_sql()
+        _hier_assign_sql(base)
         + f""", {QN_SQL}, pairs AS (
   SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
          {d2_q_sql('qa', 'qb')} AS d2p,
@@ -921,8 +879,8 @@ def _embedding_curation_manifest_sql() -> str:
     FROM prs
   ) t WHERE rnk <= {NOISE_K}
   GROUP BY vec_a
-), shap AS ({KNN_SHAPLEY_VALUES_SQL.replace('SELECT train_id AS vec_id, label,',
-                                            'SELECT train_id AS vec_id,')}
+), shap AS (
+  SELECT vec_id, shap_value FROM ({KNN_SHAPLEY_VALUES_SQL}) k
 ), flags AS (
   SELECT s.vec_id, e.label, s.cell,
          d.dup_of IS NULL AS sem_keep, d.dup_of,

@@ -422,6 +422,21 @@ EMB_NAMES = [
     "stream_ivf_assign",
     "stream_hivf_cell_balance",
     "stream_label_noise",
+    # the remaining oracles over the quantized grid and similarity's
+    # shared index fragments (seeds, flat/two-level assignment,
+    # probes, PQ distances and codes): with every distance tied, each
+    # composed chain must tiebreak exactly as its engine form does
+    "ann_ivf_topk",
+    "ann_pq_topk",
+    "ann_recall_eval",
+    "hivf_cell_balance",
+    "ivf_probe_recall_curve",
+    "kmeans_lloyd",
+    "label_centroids",
+    "label_noise_cells",
+    "label_noise_votes",
+    "pq_distortion_audit",
+    "semantic_dedup",
 ]
 
 
