@@ -86,6 +86,34 @@ def token_ngrams(toks: Column | str, n: int) -> Column:
     return F.when(F.size(t) >= n, acc).otherwise(F.array().cast("array<string>"))
 
 
+def token_bigrams() -> Column:
+    """array<struct<w1, w2>> of the token array `t`'s adjacent pairs, in
+    position order. t[i-1]/t[i] is 0-based SQL indexing and
+    sequence(1, 0) DESCENDS, so arrays with < 2 tokens are guarded to
+    an empty array."""
+    return F.expr(
+        "CASE WHEN size(t) >= 2 THEN "
+        "transform(sequence(1, size(t) - 1), i -> struct(t[i-1] AS w1, t[i] AS w2)) "
+        "ELSE array() END"
+    )
+
+
+def ngram_window_sql(n: int, rel: str = "toks") -> str:
+    """DuckDB FROM-clause fragment: one row per n-gram start `i`
+    (1-based) of each token array `t` in `rel`; arrays with fewer than
+    n tokens yield no rows (token_ngrams' empty-array case)."""
+    return (
+        f"{rel}, LATERAL (SELECT unnest(range(1, len(t) - {n} + 2)) AS i) r\n"
+        f"  WHERE len(t) >= {n}"
+    )
+
+
+def ngram_sql(n: int) -> str:
+    """The space-joined n-gram starting at `i` of `t` — one element of
+    token_ngrams, DuckDB SQL fragment (rows from ngram_window_sql)."""
+    return f"array_to_string(t[i : i + {n} - 1], ' ')"
+
+
 def count_substring(col: Column | str, needle: str) -> Column:
     """Number of occurrences of a literal substring (main.go:192).
     split with -1 limit keeps trailing empties so counts are exact.

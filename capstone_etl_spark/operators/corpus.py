@@ -19,11 +19,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from capstone_etl_spark.functions.text import split_sql, tokenize_sql
+from capstone_etl_spark.functions.text import ngram_window_sql, split_sql, tokenize_sql
 from capstone_etl_spark.operators.dedup import (
-    _JACCARD_PAIRS_CTE,
-    _SHINGLES_CTE,
+    _COMPONENTS_SQL,
+    _both_ways,
+    _overlap_sql,
+    _pairs_sql,
+    _shingles_sql,
     connected_components,
+    gram_hashes,
     jaccard_pairs,
 )
 from capstone_etl_spark.operators.sampling import split_column, split_sql_case
@@ -43,10 +47,7 @@ def corpus_pipeline(
     docs = load_table(spark, sf_dir, "documents")
     kept = docs.filter(F.col("n_chars") >= MIN_CHARS).select("doc_id", "lang", "n_chars", "text")
     pairs = jaccard_pairs(kept, sh=sh).select("doc_a", "doc_b").transform(cached)
-    edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")).union(
-        pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-    )
-    labels = connected_components(edges)
+    labels = connected_components(_both_ways(pairs))
     comp = kept.join(labels, "doc_id", "left").select(
         "doc_id", "lang", "n_chars", F.coalesce("label", "doc_id").alias("cluster_id")
     )
@@ -56,39 +57,19 @@ def corpus_pipeline(
     )
 
 
-# Oracle: the shingle/pair CTEs rebased onto the quality-filtered `src`
-# relation, then the same recursive transitive closure as dedup_clusters.
-_SRC_SHINGLES = _SHINGLES_CTE.replace("FROM documents", "FROM src").replace(
-    "WITH toks",
-    "WITH RECURSIVE src AS (\n"
-    f"  SELECT doc_id, text, lang, n_chars FROM documents WHERE n_chars >= {MIN_CHARS}\n"
-    "), toks",
-    1,
-)
-
-CORPUS_PIPELINE_SQL = (
-    _SRC_SHINGLES
-    + _JACCARD_PAIRS_CTE
-    + f"""
-, edges AS (
-  SELECT doc_a AS s, doc_b AS d FROM pairs
-  UNION ALL
-  SELECT doc_b, doc_a FROM pairs
-), reach AS (
-  SELECT s, d FROM edges
-  UNION
-  SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s
-), minreach AS (
-  SELECT s AS doc_id, MIN(d) AS mr FROM reach GROUP BY s
-), comp AS (
+# Oracle: the shingle/pair fragments over the quality-filtered `src`
+# relation, then the same components closure as dedup_clusters.
+CORPUS_PIPELINE_SQL = f"""
+WITH RECURSIVE src AS (
+  SELECT doc_id, text, lang, n_chars FROM documents WHERE n_chars >= {MIN_CHARS}
+), {_shingles_sql("src")}, {_overlap_sql()}, {_pairs_sql()}, {_COMPONENTS_SQL}, comp AS (
   SELECT sr.doc_id, sr.lang, sr.n_chars,
-         LEAST(sr.doc_id, COALESCE(m.mr, sr.doc_id)) AS cluster_id
-  FROM src sr LEFT JOIN minreach m USING (doc_id)
+         LEAST(sr.doc_id, COALESCE(m.label, sr.doc_id)) AS cluster_id
+  FROM src sr LEFT JOIN labels m USING (doc_id)
 )
 SELECT doc_id, lang, n_chars, {split_sql_case('doc_id')} AS split
 FROM comp WHERE doc_id = cluster_id
 """
-)
 
 
 CHUNK_TOKENS = 50
@@ -128,8 +109,7 @@ WITH toks AS (
   FROM documents
 ), pos AS (
   SELECT doc_id, t[i] AS token, i - 1 AS pos
-  FROM toks, LATERAL (SELECT unnest(range(1, len(t) + 1)) AS i) r
-  WHERE len(t) >= 1
+  FROM {ngram_window_sql(1)}
 )
 SELECT doc_id, pos // {CHUNK_TOKENS} AS chunk_id,
        COUNT(*) AS n_tokens,
@@ -184,8 +164,7 @@ WITH toks AS (
   FROM documents
 ), pos AS (
   SELECT doc_id, t[i] AS token, i - 1 AS pos
-  FROM toks, LATERAL (SELECT unnest(range(1, len(t) + 1)) AS i) r
-  WHERE len(t) >= 1
+  FROM {ngram_window_sql(1)}
 ), member AS (
   SELECT doc_id, pos, token, k AS chunk_id
   FROM pos, LATERAL (
@@ -423,10 +402,9 @@ def training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     subset — the cap domain is part of each leg's semantics, so only
     the caps re-run, never the tokenize→gram→hash→distinct pass)."""
     from capstone_etl_spark.functions.hashing import md5_hash60
-    from capstone_etl_spark.functions.text import token_ngrams, tokenize
+    from capstone_etl_spark.functions.text import tokenize
     from capstone_etl_spark.operators.dedup import (
         BENCH_MOD,
-        NGRAM_N,
         benchmark_decontamination,
         shingle_df_cap,
     )
@@ -435,17 +413,7 @@ def training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = cached(
         docs.select("doc_id", "n_chars", tokenize("text").alias("toks"))
     )
-    # `kept` rides along as a flag (functional on doc_id — distinct is
-    # unaffected) so the kept-scoped cap needs no join back to docs
-    uncapped = cached(
-        toks.select(
-            "doc_id",
-            (F.col("n_chars") >= MIN_CHARS).alias("kept"),
-            F.explode(token_ngrams("toks", NGRAM_N)).alias("shingle"),
-        )
-        .select("doc_id", "kept", md5_hash60(F.col("shingle")).alias("sh"))
-        .distinct()
-    )
+    uncapped = cached(kept_flagged_shingles(toks))
     # each capped relation has 3 consumers (sizes + both sides of the
     # candidate self-join) — cached so the cap window runs once per leg
     kept_sh = cached(shingle_df_cap(uncapped.filter(F.col("kept")).select("doc_id", "sh")))
@@ -476,6 +444,15 @@ def training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("doc_id").cast("long").alias("min_doc_id"),
         F.max("doc_id").cast("long").alias("max_doc_id"),
     )
+
+
+def kept_flagged_shingles(toks: DataFrame) -> DataFrame:
+    """(doc_id, kept, sh): the UNCAPPED shingles of a (doc_id, n_chars,
+    toks) relation, with the quality gate as a `kept` flag so the
+    kept-scoped cap needs no join back to docs — the one base both
+    training manifests (batch and stream) derive their two cap domains
+    from. Callers pin it their own way (cached / static)."""
+    return gram_hashes(toks, kept=F.col("n_chars") >= MIN_CHARS)
 
 
 def _training_manifest_sql() -> str:
@@ -721,8 +698,7 @@ WITH toks AS (
   FROM documents
 ), pos AS (
   SELECT doc_id, i - 1 AS pos, t[i] AS token
-  FROM toks, LATERAL (SELECT unnest(range(1, len(t) + 1)) AS i) r
-  WHERE len(t) >= 1
+  FROM {ngram_window_sql(1)}
 ), masked AS (
   SELECT doc_id, pos FROM pos
   WHERE token <> '' AND ({h} % 100) < {MASK_PCT}

@@ -30,7 +30,14 @@ from capstone_etl_spark.functions.hashing import (
     minhash_expr_sql,
     minhash_params,
 )
-from capstone_etl_spark.functions.text import split_sql, token_ngrams, tokenize, tokenize_sql
+from capstone_etl_spark.functions.text import (
+    ngram_sql,
+    ngram_window_sql,
+    split_sql,
+    token_ngrams,
+    tokenize,
+    tokenize_sql,
+)
 from capstone_etl_spark.sources.tables import load_table
 from capstone_etl_spark.session import cached, checkpoint_truncate, release_checkpoint
 
@@ -95,42 +102,234 @@ def shingle_df_cap(hashed: DataFrame, max_df: int = MAX_SHINGLE_DF) -> DataFrame
     )
 
 
+def gram_hashes(toks: DataFrame, n: int = NGRAM_N, **flags: Column) -> DataFrame:
+    """(doc_id, *flags, sh) distinct — the token n-grams of a
+    (doc_id, toks) relation hashed to 60 bits. Each `flags` column is
+    a per-doc value carried through under its keyword name (functional
+    on doc_id, so the distinct is unaffected)."""
+    # token_ngrams yields [] for docs with < n tokens after cleaning,
+    # mirroring the oracle's len(t) >= n guard (ngram_window_sql).
+    grams = toks.select(
+        "doc_id",
+        *(c.alias(name) for name, c in flags.items()),
+        F.explode(token_ngrams("toks", n)).alias("shingle"),
+    )
+    return grams.select("doc_id", *flags, md5_hash60(F.col("shingle")).alias("sh")).distinct()
+
+
 def shingles(docs: DataFrame, n: int = NGRAM_N, max_df: int | None = MAX_SHINGLE_DF) -> DataFrame:
     """(doc_id, shingle_hash) distinct — token n-grams hashed to 60 bits.
     Tokenization is the raw pipeline (no stopword gate: dedup wants the
     full surface form). The df-cap drops non-discriminative shingles
     *before* any join (skew + volume control at scale)."""
-    toks = docs.select("doc_id", tokenize("text").alias("toks"))
-    # token_ngrams yields [] for docs with < n tokens after cleaning,
-    # mirroring the oracle's len(t) >= n guard below.
-    grams = toks.select(
-        "doc_id",
-        F.explode(token_ngrams("toks", n)).alias("shingle"),
-    )
-    hashed = grams.select("doc_id", md5_hash60(F.col("shingle")).alias("sh")).distinct()
+    hashed = gram_hashes(docs.select("doc_id", tokenize("text").alias("toks")), n)
     if max_df is not None:
         hashed = shingle_df_cap(hashed, max_df)
     return hashed
 
 
-# DuckDB mirror of the shingle relation (raw tokenize, n-gram, hash, df-cap).
-_SHINGLES_CTE = f"""
-WITH toks AS (
+def shingle_set() -> Column:
+    """The distinct NGRAM_N-gram hashes of a row's `toks` array, in-row —
+    the stream twins' arriving-document shingles (exploded after the
+    array_distinct, so no per-doc distinct shuffle is needed)."""
+    return F.array_distinct(F.transform(token_ngrams("toks", NGRAM_N), md5_hash60))
+
+
+# ------------------------------------------------- pair overlap (shared)
+#
+# Every near-dup pair score is |A∩B| from a shingle join plus the two
+# per-doc shingle counts: the overlap helpers emit (doc_a, doc_b,
+# n_inter), with_pair_sizes attaches (sz_a, sz_b), and the Jaccard /
+# containment columns divide exact int64 counts once on both engines.
+
+def shingle_sizes(sh: DataFrame, name: str = "sz") -> DataFrame:
+    """(doc_id, name): each document's shingle count."""
+    return sh.groupBy("doc_id").agg(F.count("*").alias(name))
+
+
+def shingle_overlap(
+    a: DataFrame, b: DataFrame, on: Column | None = None, names: tuple[str, str] = ("doc_a", "doc_b")
+) -> DataFrame:
+    """(names[0], names[1], n_inter): the shared-shingle count of every
+    (a, b) document pair that shares a shingle and passes `on`, a
+    predicate over the join aliases `a` and `b`. Candidates come from
+    the inverted shingle index (an equi-join on the hash), never from
+    all pairs."""
+    same = F.col("a.sh") == F.col("b.sh")
+    return (
+        a.alias("a")
+        .join(b.alias("b"), same if on is None else same & on)
+        .groupBy(F.col("a.doc_id").alias(names[0]), F.col("b.doc_id").alias(names[1]))
+        .agg(F.count("*").alias("n_inter"))
+    )
+
+
+def self_overlap(sh: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, n_inter) for every doc pair a < b sharing a shingle."""
+    return shingle_overlap(sh, sh, F.col("a.doc_id") < F.col("b.doc_id"))
+
+
+def candidate_overlap(cand: DataFrame, sh: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, n_inter) for the given candidate pairs (LSH bands,
+    sorted neighborhood): the shingle relation joined on both ends, so
+    verification touches only the candidates' shingles."""
+    return (
+        cand.join(sh.select(F.col("doc_id").alias("doc_a"), "sh"), "doc_a")
+        .join(sh.select(F.col("doc_id").alias("doc_b"), "sh"), ["doc_b", "sh"])
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count("*").alias("n_inter"))
+    )
+
+
+def with_pair_sizes(
+    inter: DataFrame,
+    sizes: DataFrame,
+    ends: tuple[str, str] = ("doc_a", "doc_b"),
+    cols: tuple[str, str] = ("sz_a", "sz_b"),
+) -> DataFrame:
+    """The overlap table with each end's shingle count (sizes' `sz`)
+    joined on as cols[0] / cols[1]."""
+    for end, col in zip(ends, cols):
+        inter = inter.join(sizes.select(F.col("doc_id").alias(end), F.col("sz").alias(col)), end)
+    return inter
+
+
+def jaccard_col(sz_a: str = "sz_a", sz_b: str = "sz_b") -> Column:
+    """|A∩B| / |A∪B| with |A∪B| = |A| + |B| − |A∩B| (raw double)."""
+    return F.col("n_inter") / (F.col(sz_a) + F.col(sz_b) - F.col("n_inter"))
+
+
+def containment_col(sz: str = "sz_b") -> Column:
+    """|A∩B| / |B| — how much of the `sz` side the overlap covers."""
+    return F.col("n_inter") / F.col(sz)
+
+
+def verified_pairs(
+    inter: DataFrame,
+    sizes: DataFrame,
+    threshold: float = JACCARD_THRESHOLD,
+    with_raw: bool = False,
+) -> DataFrame:
+    """(doc_a, doc_b, jaccard[, jaccard_raw]) of the overlap pairs whose
+    Jaccard reaches `threshold`. The filter reads the RAW jaccard
+    (identical doubles on both engines — one division of identical
+    ints); only the emitted value is rounded."""
+    jac = jaccard_col()
+    cols = ["doc_a", "doc_b", F.round(jac, 6).alias("jaccard")]
+    if with_raw:
+        cols.append(jac.alias("jaccard_raw"))
+    return with_pair_sizes(inter, sizes).filter(jac >= threshold).select(*cols)
+
+
+def _both_ways(pairs: DataFrame) -> DataFrame:
+    """(doc_a, doc_b) pair relation → symmetric (src, dst) edge list —
+    the shape connected_components requires."""
+    return pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")).union(
+        pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
+    )
+
+
+# DuckDB mirrors. Each fragment is a CTE list without the WITH keyword;
+# an oracle joins the fragments it needs with commas under its own WITH
+# (or WITH RECURSIVE) head. The fragments' CTE names (sh_toks, sh_grams,
+# sh_hashed, sh_df, shingles, inter, sizes, sized, pairs, sig, bands,
+# cand, edges, reach, labels) are reserved in every oracle that
+# composes them.
+
+def _shingles_sql(src: str = "documents", n: int = NGRAM_N, max_df: int | None = MAX_SHINGLE_DF) -> str:
+    """`shingles` (doc_id, sh) over the `src` relation — shingles(docs,
+    n, max_df)'s mirror (raw tokenize, n-gram, hash, df-cap)."""
+    head = f"""sh_toks AS (
   SELECT doc_id,
          {split_sql()} AS t
-  FROM documents
-), grams AS (
-  SELECT doc_id, array_to_string(t[i : i + {NGRAM_N} - 1], ' ') AS shingle
-  FROM toks, LATERAL (SELECT unnest(range(1, len(t) - {NGRAM_N} + 2)) AS i) r
-  WHERE len(t) >= {NGRAM_N}
-), hashed AS (
-  SELECT DISTINCT doc_id, {md5_hash60_sql('shingle')} AS sh FROM grams
-), df AS (
-  SELECT sh FROM hashed GROUP BY sh HAVING COUNT(*) <= {MAX_SHINGLE_DF}
+  FROM {src}
+), sh_grams AS (
+  SELECT doc_id, {ngram_sql(n)} AS shingle
+  FROM {ngram_window_sql(n, "sh_toks")}
+)"""
+    hashed = f"SELECT DISTINCT doc_id, {md5_hash60_sql('shingle')} AS sh FROM sh_grams"
+    if max_df is None:
+        return f"{head}, shingles AS (\n  {hashed}\n)"
+    return f"""{head}, sh_hashed AS (
+  {hashed}
+), sh_df AS (
+  SELECT sh FROM sh_hashed GROUP BY sh HAVING COUNT(*) <= {max_df}
 ), shingles AS (
-  SELECT h.doc_id, h.sh FROM hashed h JOIN df USING (sh)
-)
-"""
+  SELECT h.doc_id, h.sh FROM sh_hashed h JOIN sh_df USING (sh)
+)"""
+
+
+def _overlap_sql(on: str = "a.doc_id < b.doc_id") -> str:
+    """`inter` (doc_a, doc_b, n_inter) — shingle_overlap's mirror over
+    the `shingles` aliases a and b."""
+    return f"""inter AS (
+  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
+  FROM shingles a JOIN shingles b ON a.sh = b.sh AND {on}
+  GROUP BY 1, 2
+)"""
+
+
+# `inter` over the (doc_a, doc_b) pairs of `cand` — candidate_overlap's mirror
+_CANDIDATE_OVERLAP_SQL = """inter AS (
+  SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
+  FROM cand c
+  JOIN shingles sa ON sa.doc_id = c.doc_a
+  JOIN shingles sb ON sb.doc_id = c.doc_b AND sb.sh = sa.sh
+  GROUP BY 1, 2
+)"""
+
+
+def _jaccard_sql(sz_a: str = "sz_a", sz_b: str = "sz_b") -> str:
+    return f"CAST(n_inter AS DOUBLE) / ({sz_a} + {sz_b} - n_inter)"
+
+
+def _containment_sql(sz: str = "sz_b") -> str:
+    return f"CAST(n_inter AS DOUBLE) / {sz}"
+
+
+_SIZES_SQL = "sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shingles GROUP BY doc_id)"
+
+# `sized`: the `inter` table with both ends' sizes — with_pair_sizes' mirror
+_SIZED_SQL = f"""{_SIZES_SQL},
+sized AS (
+  SELECT i.*, sa.sz AS sz_a, sb.sz AS sz_b
+  FROM inter i
+  JOIN sizes sa ON sa.doc_id = i.doc_a
+  JOIN sizes sb ON sb.doc_id = i.doc_b
+)"""
+
+
+def _pairs_sql(threshold: float | None = JACCARD_THRESHOLD, with_raw: bool = False) -> str:
+    """`pairs` (doc_a, doc_b, jaccard[, jaccard_raw]) over `inter` —
+    verified_pairs' mirror; threshold=None keeps every overlap pair."""
+    where = f"\n  WHERE {_jaccard_sql()} >= {threshold}" if threshold is not None else ""
+    raw = f",\n         {_jaccard_sql()} AS jaccard_raw" if with_raw else ""
+    return f"""{_SIZED_SQL}, pairs AS (
+  SELECT doc_a, doc_b,
+         ROUND({_jaccard_sql()}, 6) AS jaccard{raw}
+  FROM sized{where}
+)"""
+
+
+# (src, dst) both ways over `pairs`, then `labels` (doc_id, label): the
+# min id reachable through the pair graph — a transitive closure via
+# WITH RECURSIVE (DuckDB's UNION-dedup recursion terminates on cycles)
+_EDGES_SQL = """edges AS (
+  SELECT doc_a AS src, doc_b AS dst FROM pairs
+  UNION ALL
+  SELECT doc_b, doc_a FROM pairs
+)"""
+_COMPONENTS_SQL = f"""{_EDGES_SQL}, reach AS (
+  SELECT src, dst FROM edges
+  UNION
+  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
+), labels AS (
+  SELECT src AS doc_id, MIN(dst) AS label FROM reach GROUP BY src
+)"""
+
+# the full-corpus thresholded pair relation, shared by the pair query,
+# the clustering oracles and the LSH audit
+_JACCARD_PAIRS_SQL = f"{_shingles_sql()}, {_overlap_sql()}, {_pairs_sql()}"
 
 
 # ------------------------------------------------- n-gram Jaccard pairs
@@ -149,10 +348,10 @@ def jaccard_pairs(
     """Near-dup pairs by n-gram Jaccard ≥ threshold over any docs
     relation (doc_id, text). Candidates come from the inverted shingle
     index (docs sharing ≥1 surviving shingle); |A∩B| falls out of the
-    same join; |A∪B| = |A|+|B|−|A∩B|. Pass a precomputed (cached)
-    shingle relation via `sh` to share one tokenize pass with sibling
-    consumers (minhash_signatures' pattern). `threshold=0.0` keeps the
-    WHOLE candidate relation (every candidate shares ≥1 shingle, so
+    same join. Pass a precomputed (cached) shingle relation via `sh` to
+    share one tokenize pass with sibling consumers
+    (minhash_signatures' pattern). `threshold=0.0` keeps the WHOLE
+    candidate relation (every candidate shares ≥1 shingle, so
     jaccard > 0) — the plan cost is identical either way, the filter
     is post-join; `with_raw=True` additionally emits the UNROUNDED
     jaccard so a downstream threshold compare matches this function's
@@ -160,65 +359,10 @@ def jaccard_pairs(
     (scaleaudit.dedup_threshold_sweep's seam)."""
     if sh is None:
         sh = shingles(docs).transform(cached)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
-    # filter on the RAW jaccard (identical doubles both engines — one
-    # division of identical ints); round only the emitted value
-    jac = F.col("n_inter") / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter"))
-    cols = ["doc_a", "doc_b", F.round(jac, 6).alias("jaccard")]
-    if with_raw:
-        cols.append(jac.alias("jaccard_raw"))
-    return inter.join(sa, "doc_a").join(sb, "doc_b").filter(jac >= threshold).select(*cols)
+    return verified_pairs(self_overlap(sh), shingle_sizes(sh), threshold, with_raw)
 
 
-# sizes/inter/pairs CTE block shared by the pair query, the
-# connected-components clustering oracle, and (unthresholded) the
-# threshold-sweep audit.
-def jaccard_pairs_cte(
-    threshold: float | None = JACCARD_THRESHOLD, with_raw: bool = False
-) -> str:
-    """The oracle twin of jaccard_pairs' threshold/with_raw parameters:
-    threshold=None keeps the whole candidate relation (filter
-    dropped); with_raw adds the unrounded jaccard column."""
-    where = (
-        f"WHERE CAST(n_inter AS DOUBLE) / (sa.sz + sb.sz - n_inter) >= {threshold}"
-        if threshold is not None
-        else ""
-    )
-    raw = (
-        ",\n         CAST(n_inter AS DOUBLE) / (sa.sz + sb.sz - n_inter) AS jaccard_raw"
-        if with_raw
-        else ""
-    )
-    return f"""
-, sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shingles GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-  FROM shingles a JOIN shingles b ON a.sh = b.sh AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), pairs AS (
-  SELECT doc_a, doc_b,
-         ROUND(CAST(n_inter AS DOUBLE) / (sa.sz + sb.sz - n_inter), 6) AS jaccard{raw}
-  FROM inter
-  JOIN sizes sa ON sa.doc_id = doc_a
-  JOIN sizes sb ON sb.doc_id = doc_b
-  {where}
-)
-"""
-
-
-_JACCARD_PAIRS_CTE = jaccard_pairs_cte()
-
-NGRAM_JACCARD_PAIRS_SQL = (
-    _SHINGLES_CTE + _JACCARD_PAIRS_CTE + "SELECT doc_a, doc_b, jaccard FROM pairs"
-)
+NGRAM_JACCARD_PAIRS_SQL = f"WITH {_JACCARD_PAIRS_SQL}\nSELECT doc_a, doc_b, jaccard FROM pairs"
 
 
 # ------------------------------------------- near-dup clusters (keep-one)
@@ -344,12 +488,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cached: the union below consumes the pair lineage twice (once per
     # edge direction), and each CC round walks the edge relation again
     pairs = ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b").transform(cached)
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .transform(cached)
-    )
-    labels = connected_components(edges)
+    labels = connected_components(_both_ways(pairs).transform(cached))
     comp = docs.join(labels, "doc_id", "left").select(
         "doc_id", F.coalesce("label", "doc_id").alias("cluster_id")
     )
@@ -362,26 +501,12 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Oracle: transitive closure over the pair graph via WITH RECURSIVE
-# (DuckDB's UNION-dedup recursion terminates on cycles), then component
-# label = min reachable id (∪ self).
-DEDUP_CLUSTERS_SQL = (
-    _SHINGLES_CTE.replace("WITH toks", "WITH RECURSIVE toks", 1)
-    + _JACCARD_PAIRS_CTE
-    + """
-, edges AS (
-  SELECT doc_a AS s, doc_b AS d FROM pairs
-  UNION ALL
-  SELECT doc_b, doc_a FROM pairs
-), reach AS (
-  SELECT s, d FROM edges
-  UNION
-  SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s
-), minreach AS (
-  SELECT s AS doc_id, MIN(d) AS mr FROM reach GROUP BY s
-), comp AS (
-  SELECT dd.doc_id, LEAST(dd.doc_id, COALESCE(m.mr, dd.doc_id)) AS cluster_id
-  FROM documents dd LEFT JOIN minreach m USING (doc_id)
+# Oracle: the pair graph's transitive closure, then component label =
+# min reachable id (∪ self).
+DEDUP_CLUSTERS_SQL = f"""
+WITH RECURSIVE {_JACCARD_PAIRS_SQL}, {_COMPONENTS_SQL}, comp AS (
+  SELECT dd.doc_id, LEAST(dd.doc_id, COALESCE(m.label, dd.doc_id)) AS cluster_id
+  FROM documents dd LEFT JOIN labels m USING (doc_id)
 ), csizes AS (
   SELECT cluster_id, COUNT(*) AS n_members FROM comp GROUP BY cluster_id
 )
@@ -389,7 +514,6 @@ SELECT c.doc_id, c.cluster_id, s.n_members,
        CAST(c.doc_id = c.cluster_id AS INT) AS is_kept
 FROM comp c JOIN csizes s USING (cluster_id)
 """
-)
 
 
 # ----------------------------------------- benchmark decontamination
@@ -417,48 +541,34 @@ def benchmark_decontamination(
     if sh is None:
         sh = shingles(docs).transform(cached)
     is_bench = F.col("doc_id") % BENCH_MOD == 0
-    shb = sh.filter(is_bench)
-    shc = sh.filter(~is_bench)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    inter = (
-        shc.alias("c")
-        .join(shb.alias("b"), F.col("c.sh") == F.col("b.sh"))
-        .groupBy(
-            F.col("c.doc_id").alias("train_doc"), F.col("b.doc_id").alias("bench_doc")
-        )
-        .agg(F.count("*").alias("n_inter"))
-    )
-    jac = F.col("n_inter") / (F.col("sz_c") + F.col("sz_b") - F.col("n_inter"))
-    cont = F.col("n_inter") / F.col("sz_b")
-    return (
-        inter.join(sizes.select(F.col("doc_id").alias("train_doc"), F.col("sz").alias("sz_c")), "train_doc")
-        .join(sizes.select(F.col("doc_id").alias("bench_doc"), F.col("sz").alias("sz_b")), "bench_doc")
-        .filter((jac >= JACCARD_THRESHOLD) | (cont >= CONTAINMENT_THRESHOLD))
-        .select(
-            "train_doc",
-            "bench_doc",
-            F.round(jac, 6).alias("jaccard"),
-            F.round(cont, 6).alias("containment"),
-        )
+    inter = shingle_overlap(sh.filter(~is_bench), sh.filter(is_bench), names=("train_doc", "bench_doc"))
+    ends = ("train_doc", "bench_doc")
+    return contamination_flags(with_pair_sizes(inter, shingle_sizes(sh), ends, ("sz_c", "sz_b")))
+
+
+def contamination_flags(sized: DataFrame) -> DataFrame:
+    """(train_doc, bench_doc, jaccard, containment) of the overlap pairs
+    (n_inter, sz_c, sz_b) flagged on either metric — shared with the
+    stream twin, which reads the same sizes off its drained table."""
+    jac, cont = jaccard_col("sz_c", "sz_b"), containment_col("sz_b")
+    return sized.filter((jac >= JACCARD_THRESHOLD) | (cont >= CONTAINMENT_THRESHOLD)).select(
+        "train_doc",
+        "bench_doc",
+        F.round(jac, 6).alias("jaccard"),
+        F.round(cont, 6).alias("containment"),
     )
 
 
-DECONTAMINATION_SQL = _SHINGLES_CTE + f"""
-, sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shingles GROUP BY doc_id),
-inter AS (
-  SELECT c.doc_id AS train_doc, b.doc_id AS bench_doc, COUNT(*) AS n_inter
-  FROM shingles c JOIN shingles b ON c.sh = b.sh
-  WHERE c.doc_id % {BENCH_MOD} <> 0 AND b.doc_id % {BENCH_MOD} = 0
-  GROUP BY 1, 2
-)
-SELECT train_doc, bench_doc,
-       ROUND(CAST(n_inter AS DOUBLE) / (sc.sz + sb.sz - n_inter), 6) AS jaccard,
-       ROUND(CAST(n_inter AS DOUBLE) / sb.sz, 6) AS containment
-FROM inter
-JOIN sizes sc ON sc.doc_id = train_doc
-JOIN sizes sb ON sb.doc_id = bench_doc
-WHERE CAST(n_inter AS DOUBLE) / (sc.sz + sb.sz - n_inter) >= {JACCARD_THRESHOLD}
-   OR CAST(n_inter AS DOUBLE) / sb.sz >= {CONTAINMENT_THRESHOLD}
+DECONTAMINATION_SQL = f"""
+WITH {_shingles_sql()},
+{_overlap_sql(f"a.doc_id % {BENCH_MOD} <> 0 AND b.doc_id % {BENCH_MOD} = 0")},
+{_SIZED_SQL}
+SELECT doc_a AS train_doc, doc_b AS bench_doc,
+       ROUND({_jaccard_sql()}, 6) AS jaccard,
+       ROUND({_containment_sql()}, 6) AS containment
+FROM sized
+WHERE {_jaccard_sql()} >= {JACCARD_THRESHOLD}
+   OR {_containment_sql()} >= {CONTAINMENT_THRESHOLD}
 """
 
 
@@ -525,9 +635,8 @@ WITH toks AS (
   FROM documents
 ), grams AS (
   SELECT doc_id, CAST(i AS BIGINT) AS pos,
-         {md5_hash60_sql(f"array_to_string(t[i : i + {SPAN_N} - 1], ' ')")} AS sh
-  FROM toks, LATERAL (SELECT unnest(range(1, len(t) - {SPAN_N} + 2)) AS i) r
-  WHERE len(t) >= {SPAN_N}
+         {md5_hash60_sql(ngram_sql(SPAN_N))} AS sh
+  FROM {ngram_window_sql(SPAN_N)}
 ), df_ok AS (
   SELECT sh FROM (SELECT DISTINCT sh, doc_id FROM grams) d
   GROUP BY sh HAVING COUNT(*) <= {MAX_SHINGLE_DF}
@@ -571,25 +680,15 @@ def gram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# shingles-CTE without the df-cap: document frequency is the signal here
+# shingles without the df-cap: document frequency is the signal here
 GRAM_NOVELTY_SQL = f"""
-WITH toks AS (
-  SELECT doc_id,
-         {split_sql()} AS t
-  FROM documents
-), grams AS (
-  SELECT doc_id, array_to_string(t[i : i + {NGRAM_N} - 1], ' ') AS shingle
-  FROM toks, LATERAL (SELECT unnest(range(1, len(t) - {NGRAM_N} + 2)) AS i) r
-  WHERE len(t) >= {NGRAM_N}
-), hashed AS (
-  SELECT DISTINCT doc_id, {md5_hash60_sql('shingle')} AS sh FROM grams
-), gdf AS (
-  SELECT sh, COUNT(*) AS gdf FROM hashed GROUP BY sh
+WITH {_shingles_sql(max_df=None)}, gdf AS (
+  SELECT sh, COUNT(*) AS gdf FROM shingles GROUP BY sh
 )
 SELECT h.doc_id, COUNT(*) AS n_grams,
        COUNT(CASE WHEN g.gdf = 1 THEN 1 END) AS n_unique_grams,
        CAST(COUNT(CASE WHEN g.gdf = 1 THEN 1 END) AS DOUBLE) / COUNT(*) AS novelty
-FROM hashed h JOIN gdf g ON h.sh = g.sh
+FROM shingles h JOIN gdf g ON h.sh = g.sh
 GROUP BY h.doc_id
 """
 
@@ -663,9 +762,8 @@ WITH toks AS (
   FROM documents
 ), grams AS (
   SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tokens, i AS pos,
-         {md5_hash60_sql("array_to_string(t[i : i + " + str(REPEAT_SPAN_N) + " - 1], ' ')")} AS sh
-  FROM toks, LATERAL (SELECT unnest(range(1, len(t) - {REPEAT_SPAN_N} + 2)) AS i) r
-  WHERE len(t) >= {REPEAT_SPAN_N}
+         {md5_hash60_sql(ngram_sql(REPEAT_SPAN_N))} AS sh
+  FROM {ngram_window_sql(REPEAT_SPAN_N)}
 ), flagged AS (
   SELECT * FROM (
     SELECT g.*, COUNT(*) OVER (PARTITION BY sh) AS c FROM grams g
@@ -774,62 +872,40 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # One shingle pass shared by the signature and verification stages
     # (the cache materializes on first action; both subtrees reuse it).
     sh = shingles(docs).transform(cached)
-    sig = minhash_signatures(docs, sh=sh)
-    cand = lsh_band_candidates(sig)
+    cand = lsh_band_candidates(minhash_signatures(docs, sh=sh))
     # exact-Jaccard verification on candidates only (reuses cached sh)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    sa_sh = sh.select(F.col("doc_id").alias("doc_a"), "sh")
-    sb_sh = sh.select(F.col("doc_id").alias("doc_b"), "sh")
-    inter = (
-        cand.join(sa_sh, "doc_a")
-        .join(sb_sh, ["doc_b", "sh"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    jac = F.col("n_inter") / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter"))
-    return (
-        inter.join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a")), "doc_a")
-        .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b")), "doc_b")
-        .filter(jac >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-    )
+    return verified_pairs(candidate_overlap(cand, sh), shingle_sizes(sh))
 
 
-def _minhash_sql_min_exprs() -> str:
-    return ",\n         ".join(
+def _lsh_cand_sql() -> str:
+    """`sig`, `bands` and `cand` (doc_a, doc_b) over `shingles` — the
+    minhash_signatures → lsh_band_candidates mirror. Each is fenced AS
+    MATERIALIZED: `sig` feeds LSH_BANDS band selects, `bands` both sides
+    of the self-join, and `cand` may have several readers."""
+    mins = ",\n         ".join(
         f"MIN({minhash_expr_sql('sh', a, b)}) AS h{i}" for i, (a, b) in enumerate(_MINHASH_AB)
     )
-
-
-def _band_key_sql(bi: int) -> str:
-    cols = " || ',' || ".join(f"h{bi * LSH_ROWS + r}" for r in range(LSH_ROWS))
-    return f"SELECT doc_id, {bi} AS band, {cols} AS key FROM sig"
-
-
-MINHASH_LSH_PAIRS_SQL = _SHINGLES_CTE + f"""
-, sig AS (
+    band_selects = " UNION ALL ".join(
+        f"SELECT doc_id, {bi} AS band, "
+        + " || ',' || ".join(f"h{bi * LSH_ROWS + r}" for r in range(LSH_ROWS))
+        + " AS key FROM sig"
+        for bi in range(LSH_BANDS)
+    )
+    return f"""sig AS MATERIALIZED (
   SELECT doc_id,
-         {_minhash_sql_min_exprs()}
+         {mins}
   FROM shingles GROUP BY doc_id
-), bands AS (
-  {" UNION ALL ".join(_band_key_sql(bi) for bi in range(LSH_BANDS))}
-), cand AS (
+), bands AS MATERIALIZED (
+  {band_selects}
+), cand AS MATERIALIZED (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM bands a JOIN bands b ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
-), sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shingles GROUP BY doc_id),
-inter AS (
-  SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
-  FROM cand c
-  JOIN shingles sa ON sa.doc_id = c.doc_a
-  JOIN shingles sb ON sb.doc_id = c.doc_b AND sb.sh = sa.sh
-  GROUP BY 1, 2
-)
-SELECT doc_a, doc_b,
-       ROUND(CAST(n_inter AS DOUBLE) / (za.sz + zb.sz - n_inter), 6) AS jaccard
-FROM inter
-JOIN sizes za ON za.doc_id = doc_a
-JOIN sizes zb ON zb.doc_id = doc_b
-WHERE CAST(n_inter AS DOUBLE) / (za.sz + zb.sz - n_inter) >= {JACCARD_THRESHOLD}
+)"""
+
+
+MINHASH_LSH_PAIRS_SQL = f"""
+WITH {_shingles_sql()}, {_lsh_cand_sql()}, {_CANDIDATE_OVERLAP_SQL}, {_pairs_sql()}
+SELECT doc_a, doc_b, jaccard FROM pairs
 """
 
 
@@ -1068,16 +1144,7 @@ def admission_verdicts(docs: DataFrame, sizes: DataFrame, inter: DataFrame) -> D
     shingle `sizes` (doc_id, sz) → Jaccard-thresholded pairs → one
     (doc_id, is_dup, dup_of, n_dups, best_jaccard) row per delta doc
     of `docs`, dup_of the smallest matching partner (itself when new)."""
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
-    jac = F.col("n_inter") / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter"))
-    pairs = (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(jac >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-    )
-    best = pairs.groupBy("doc_a").agg(
+    best = verified_pairs(inter, sizes).groupBy("doc_a").agg(
         F.min(F.struct("doc_b", "jaccard")).alias("m"),
         F.count("*").cast("long").alias("n_dups"),
     )
@@ -1110,34 +1177,20 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no join to tag rows)."""
     docs = _docs(spark, sf_dir)
     sh = shingles(docs).transform(cached)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    a = sh.filter(_is_delta(F.col("doc_id"))).alias("a")
-    b = sh.alias("b")
     # partner is admissible iff it is base, or an earlier delta doc
     partner_ok = (~_is_delta(F.col("b.doc_id"))) | (
         F.col("b.doc_id") < F.col("a.doc_id")
     )
-    inter = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") != F.col("b.doc_id")))
-        .filter(partner_ok)
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("n_inter"))
+    inter = shingle_overlap(
+        sh.filter(_is_delta(F.col("doc_id"))), sh, partner_ok & (F.col("a.doc_id") != F.col("b.doc_id"))
     )
-    return admission_verdicts(docs, sizes, inter)
+    return admission_verdicts(docs, shingle_sizes(sh), inter)
 
 
 def _delta_pred_sql(id_expr: str) -> str:
     """DuckDB mirror of _is_delta for a doc-id expression."""
     inner = f"'{DELTA_SALT}' || CAST({id_expr} AS VARCHAR)"
     return f"(({md5_hash60_sql(inner)} % 100) < {DELTA_PCT})"
-
-
-def _both_ways(pairs: DataFrame) -> DataFrame:
-    """(doc_a, doc_b) pair relation → symmetric (src, dst) edge list —
-    the shape connected_components requires."""
-    return pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")).union(
-        pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-    )
 
 
 def dedup_clusters_incremental(
@@ -1214,23 +1267,13 @@ def dedup_clusters_incremental(
     )
 
 
-DEDUP_INCREMENTAL_SQL = _SHINGLES_CTE + f"""
-, sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shingles GROUP BY 1),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-  FROM shingles a
-  JOIN shingles b ON b.sh = a.sh AND b.doc_id <> a.doc_id
-  WHERE {_delta_pred_sql('a.doc_id')}
-    AND (NOT {_delta_pred_sql('b.doc_id')} OR b.doc_id < a.doc_id)
-  GROUP BY 1, 2
-), pairs AS (
-  SELECT doc_a, doc_b,
-         ROUND(CAST(n_inter AS DOUBLE) / (sa.sz + sb.sz - n_inter), 6) AS jaccard
-  FROM inter
-  JOIN sizes sa ON sa.doc_id = doc_a
-  JOIN sizes sb ON sb.doc_id = doc_b
-  WHERE CAST(n_inter AS DOUBLE) / (sa.sz + sb.sz - n_inter) >= {JACCARD_THRESHOLD}
-), best AS (
+_DELTA_OVERLAP_ON = (
+    f"b.doc_id <> a.doc_id AND {_delta_pred_sql('a.doc_id')}"
+    f" AND (NOT {_delta_pred_sql('b.doc_id')} OR b.doc_id < a.doc_id)"
+)
+
+DEDUP_INCREMENTAL_SQL = f"""
+WITH {_shingles_sql()}, {_overlap_sql(_DELTA_OVERLAP_ON)}, {_pairs_sql()}, best AS (
   SELECT doc_a, MIN(doc_b) AS dup_of, CAST(COUNT(*) AS BIGINT) AS n_dups
   FROM pairs GROUP BY 1
 ), bj AS (
@@ -1323,16 +1366,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-sized. Division happens once on identical int64 operands in
     both engines; the threshold compares the raw double."""
     sh = shingles(_docs(spark, sf_dir)).transform(cached)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
-    undirected = inter.join(sa, "doc_a").join(sb, "doc_b")
+    undirected = with_pair_sizes(self_overlap(sh), shingle_sizes(sh))
     # both directions EXPLODED from one pass — a union of two
     # projections would embed the whole inter+sizes subtree twice in
     # the plan (measured: 38 exchanges vs 20)
@@ -1356,8 +1390,8 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("e")
     ).select("e.*")
-    cont = F.col("n_inter") / F.col("sz_src")
-    jac = F.col("n_inter") / (F.col("sz_src") + F.col("sz_dst") - F.col("n_inter"))
+    cont = containment_col("sz_src")
+    jac = jaccard_col("sz_src", "sz_dst")
     return directed.filter(cont >= CONTAIN_THRESHOLD).select(
         "src_doc",
         "dst_doc",
@@ -1367,32 +1401,19 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DEDUP_CONTAINMENT_SQL = (
-    _SHINGLES_CTE
-    + f"""
-, sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shingles GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-  FROM shingles a JOIN shingles b ON a.sh = b.sh AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), undirected AS (
-  SELECT i.doc_a, i.doc_b, i.n_inter, sa.sz AS sz_a, sb.sz AS sz_b
-  FROM inter i
-  JOIN sizes sa ON sa.doc_id = i.doc_a
-  JOIN sizes sb ON sb.doc_id = i.doc_b
-), directed AS (
+DEDUP_CONTAINMENT_SQL = f"""
+WITH {_shingles_sql()}, {_overlap_sql()}, {_SIZED_SQL}, directed AS (
   SELECT doc_a AS src_doc, doc_b AS dst_doc, n_inter, sz_a AS sz_src, sz_b AS sz_dst
-  FROM undirected
+  FROM sized
   UNION ALL
-  SELECT doc_b, doc_a, n_inter, sz_b, sz_a FROM undirected
+  SELECT doc_b, doc_a, n_inter, sz_b, sz_a FROM sized
 )
 SELECT src_doc, dst_doc, n_inter,
-       ROUND(CAST(n_inter AS DOUBLE) / sz_src, 6) AS containment,
-       ROUND(CAST(n_inter AS DOUBLE) / (sz_src + sz_dst - n_inter), 6) AS jaccard
+       ROUND({_containment_sql("sz_src")}, 6) AS containment,
+       ROUND({_jaccard_sql("sz_src", "sz_dst")}, 6) AS jaccard
 FROM directed
-WHERE CAST(n_inter AS DOUBLE) / sz_src >= {CONTAIN_THRESHOLD}
+WHERE {_containment_sql("sz_src")} >= {CONTAIN_THRESHOLD}
 """
-)
 
 
 # --- template extraction (structural near-dup) ------------------------------
@@ -1606,13 +1627,8 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     # candidate set is already linear-bounded, and the cap would bias
     # the Jaccard estimate the verdict is based on)
     sh = cached(shingles(docs, max_df=None))
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    inter = (
-        pairs.join(sh.select(F.col("doc_id").alias("doc_a"), "sh"), "doc_a")
-        .join(sh.select(F.col("doc_id").alias("doc_b"), "sh"), ["doc_b", "sh"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_inter"))
-    )
+    sizes = shingle_sizes(sh, "n_sh")
+    inter = candidate_overlap(pairs, sh)
     na, nb = F.coalesce("sa.n_sh", F.lit(0)), F.coalesce("sb.n_sh", F.lit(0))
     ni = F.coalesce("i.n_inter", F.lit(0)).cast("long")
     union = na + nb - ni
@@ -1649,36 +1665,22 @@ WITH toks AS (
            ORDER BY COALESCE(array_to_string(t[1 : {SNM_KEY_TOKENS}], ' '), ''), doc_id
          ) - 1 AS rnk
   FROM toks
-), pairs AS (
+), cand AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, b.rnk - a.rnk AS rank_gap
   FROM ranked a JOIN ranked b
     ON b.rnk > a.rnk AND b.rnk <= a.rnk + {SNM_WINDOW - 1}
-), grams AS (
-  SELECT doc_id, array_to_string(t[i : i + {NGRAM_N} - 1], ' ') AS shingle
-  FROM toks, LATERAL (SELECT unnest(range(1, len(t) - {NGRAM_N} + 2)) AS i) r
-  WHERE len(t) >= {NGRAM_N}
-), sh AS (
-  SELECT DISTINCT doc_id, {md5_hash60_sql('shingle')} AS sh FROM grams
-), sizes AS (
-  SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id
-), inter AS (
-  SELECT p.doc_a, p.doc_b, COUNT(*) AS n_inter
-  FROM pairs p
-  JOIN sh x ON x.doc_id = p.doc_a
-  JOIN sh y ON y.doc_id = p.doc_b AND y.sh = x.sh
-  GROUP BY p.doc_a, p.doc_b
-)
+), {_shingles_sql(max_df=None)}, {_SIZES_SQL}, {_CANDIDATE_OVERLAP_SQL}
 SELECT p.doc_a, p.doc_b, p.rank_gap,
        CAST(COALESCE(i.n_inter, 0) AS BIGINT) AS n_inter,
-       ROUND(CASE WHEN COALESCE(sa.n_sh, 0) + COALESCE(sb.n_sh, 0) - COALESCE(i.n_inter, 0) > 0
+       ROUND(CASE WHEN COALESCE(sa.sz, 0) + COALESCE(sb.sz, 0) - COALESCE(i.n_inter, 0) > 0
              THEN CAST(COALESCE(i.n_inter, 0) AS DOUBLE)
-                  / CAST(COALESCE(sa.n_sh, 0) + COALESCE(sb.n_sh, 0) - COALESCE(i.n_inter, 0) AS DOUBLE)
+                  / CAST(COALESCE(sa.sz, 0) + COALESCE(sb.sz, 0) - COALESCE(i.n_inter, 0) AS DOUBLE)
              ELSE 1.0 END, 6) AS jaccard,
-       (CASE WHEN COALESCE(sa.n_sh, 0) + COALESCE(sb.n_sh, 0) - COALESCE(i.n_inter, 0) > 0
+       (CASE WHEN COALESCE(sa.sz, 0) + COALESCE(sb.sz, 0) - COALESCE(i.n_inter, 0) > 0
              THEN CAST(COALESCE(i.n_inter, 0) AS DOUBLE)
-                  / CAST(COALESCE(sa.n_sh, 0) + COALESCE(sb.n_sh, 0) - COALESCE(i.n_inter, 0) AS DOUBLE)
+                  / CAST(COALESCE(sa.sz, 0) + COALESCE(sb.sz, 0) - COALESCE(i.n_inter, 0) AS DOUBLE)
              ELSE 1.0 END) >= {JACCARD_THRESHOLD} AS is_dup
-FROM pairs p
+FROM cand p
 LEFT JOIN inter i ON i.doc_a = p.doc_a AND i.doc_b = p.doc_b
 LEFT JOIN sizes sa ON sa.doc_id = p.doc_a
 LEFT JOIN sizes sb ON sb.doc_id = p.doc_b
@@ -1726,21 +1728,8 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 from capstone_etl_spark.operators.sampling import split_sql_case as _split_sql_case
 
 SPLIT_LEAKAGE_AUDIT_SQL = f"""
-WITH toks AS (
-  SELECT doc_id,
-         {split_sql()} AS t
-  FROM documents
-), grams AS (
-  SELECT doc_id, array_to_string(t[i : i + {LEAK_N} - 1], ' ') AS shingle
-  FROM toks, LATERAL (SELECT unnest(range(1, len(t) - {LEAK_N} + 2)) AS i) r
-  WHERE len(t) >= {LEAK_N}
-), hashed AS (
-  SELECT DISTINCT doc_id, {md5_hash60_sql('shingle')} AS sh FROM grams
-), df AS (
-  SELECT sh FROM hashed GROUP BY sh HAVING COUNT(*) <= {MAX_SHINGLE_DF}
-), g AS (
-  SELECT h.doc_id, h.sh, {_split_sql_case('h.doc_id')} AS split
-  FROM hashed h JOIN df USING (sh)
+WITH {_shingles_sql(n=LEAK_N)}, g AS (
+  SELECT doc_id, sh, {_split_sql_case('doc_id')} AS split FROM shingles
 )
 SELECT e.split, e.doc_id AS eval_doc,
        COUNT(DISTINCT t.doc_id) AS n_train_partners,
@@ -1778,11 +1767,7 @@ def label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost is LP_ROUNDS × (two joins + two aggregates) at any scale."""
     docs = _docs(spark, sf_dir).select("doc_id")
     pairs = ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b").transform(cached)
-    edges = cached(
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")).union(
-            pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-        )
-    )
+    edges = cached(_both_ways(pairs))
     labels = _truncate_lineage(docs.select("doc_id", F.col("doc_id").alias("label")))
     for _ in range(LP_ROUNDS):
         votes = (
@@ -1829,14 +1814,8 @@ def _label_propagation_sql() -> str:
   FROM l{i - 1} l LEFT JOIN m{i} m USING (doc_id)
 )""")
     return (
-        _SHINGLES_CTE
-        + _JACCARD_PAIRS_CTE
-        + """
-, edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION ALL
-  SELECT doc_b, doc_a FROM pairs
-), l0 AS (
+        f"""
+WITH {_JACCARD_PAIRS_SQL}, {_EDGES_SQL}, l0 AS (
   SELECT doc_id, doc_id AS label FROM documents
 )"""
         + "".join(rounds)

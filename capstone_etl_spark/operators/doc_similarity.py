@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from capstone_etl_spark.functions.text import split_sql
+from capstone_etl_spark.functions.text import ngram_window_sql, split_sql
 from capstone_etl_spark.operators.tokenize import term_frequencies
 from capstone_etl_spark.operators.text_pipeline import _TF_CTE
 from capstone_etl_spark.sources.tables import load_table
@@ -586,8 +586,7 @@ WITH ctoks AS (
   FROM documents
 ), pos AS (
   SELECT doc_id, t[i] AS token, i - 1 AS pos
-  FROM ctoks, LATERAL (SELECT unnest(range(1, len(t) + 1)) AS i) r
-  WHERE len(t) >= 1
+  FROM {ngram_window_sql(1, "ctoks")}
 ), tf AS (
   SELECT doc_id, pos // {CHUNK_TOKENS} AS chunk_id, token, COUNT(*) AS qty
   FROM pos WHERE token <> ''

@@ -23,7 +23,7 @@ broadcast it.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from capstone_etl_spark.functions.text import page_loc, parent_path
@@ -64,31 +64,47 @@ def child_aggregates(pages: DataFrame, id_col: str = "page_id") -> DataFrame:
 
 WIKI_PREFIX = "https://en.wikibooks.org/wiki/"
 
+# The synthetic page tree over the `documents` table (which has
+# no URL column): docs with doc_id < PAGE_FANOUT are roots at
+# 'b<doc_id>'; every other doc is a child at
+# 'b<doc_id % PAGE_FANOUT>/p<doc_id>'. In the URL-shaped variant, docs
+# with doc_id % OFF_WIKI_EVERY == 3 sit off the wiki prefix.
+PAGE_FANOUT = 50
+OFF_WIKI_EVERY = 97
 
-def synthetic_doc_urls(docs: DataFrame, fanout: int = 50, alt_every: int = 97) -> DataFrame:
-    """URL-shaped variant of synthetic_doc_paths: full wiki URLs so the
-    F2 prefix strip (page_loc, main.go:194) runs on real input. Docs
-    with doc_id % alt_every == 3 get an off-wiki URL — those yield NULL
-    page_loc (the reference would panic, divergence §7.6.5)."""
-    is_root = F.col("doc_id") < fanout
-    path = F.when(is_root, F.concat(F.lit("b"), F.col("doc_id"))).otherwise(
-        F.concat(F.lit("b"), F.col("doc_id") % fanout, F.lit("/p"), F.col("doc_id"))
+
+def _synthetic_path() -> Column:
+    is_root = F.col("doc_id") < PAGE_FANOUT
+    return F.when(is_root, F.concat(F.lit("b"), F.col("doc_id"))).otherwise(
+        F.concat(F.lit("b"), F.col("doc_id") % PAGE_FANOUT, F.lit("/p"), F.col("doc_id"))
     )
+
+
+def synthetic_doc_urls(docs: DataFrame) -> DataFrame:
+    """URL-shaped variant of synthetic_doc_paths: full wiki URLs so the
+    F2 prefix strip (page_loc, main.go:194) runs on real input. Off-wiki
+    URLs yield NULL page_loc (the reference would panic, divergence
+    §7.6.5)."""
+    path = _synthetic_path()
     url = F.when(
-        F.col("doc_id") % alt_every == 3, F.concat(F.lit("https://example.org/ext/"), path)
+        F.col("doc_id") % OFF_WIKI_EVERY == 3, F.concat(F.lit("https://example.org/ext/"), path)
     ).otherwise(F.concat(F.lit(WIKI_PREFIX), path))
     return docs.select("doc_id", url.alias("url"))
 
 
-def synthetic_doc_paths(docs: DataFrame, fanout: int = 50) -> DataFrame:
-    """Deterministic path tree over the driver's `documents` table (which
-    has no URL column): docs with doc_id < fanout are roots at
-    'b<doc_id>'; every other doc is a child at 'b<doc_id % fanout>/p<doc_id>'.
+def synthetic_doc_paths(docs: DataFrame) -> DataFrame:
+    """The synthetic page tree's (page_loc, parent_path) on every doc.
     Exercises F3/J1/A3 with a real multi-level key derivation. Keeps the
     input's columns, so per-document scalars ride on the page rows."""
-    is_root = F.col("doc_id") < fanout
-    loc = F.when(is_root, F.concat(F.lit("b"), F.col("doc_id"))).otherwise(
-        F.concat(F.lit("b"), F.col("doc_id") % fanout, F.lit("/p"), F.col("doc_id"))
-    )
-    with_loc = docs.withColumn("page_loc", loc)
+    with_loc = docs.withColumn("page_loc", _synthetic_path())
     return with_loc.withColumn("parent_path", parent_path("page_loc"))
+
+
+# DuckDB mirrors of the synthetic page_loc (over `doc_id`) and of
+# parent_path over `page_loc` (NULL stays NULL, a top-level path has
+# parent '').
+SYNTHETIC_PAGE_LOC_SQL = f"""CASE WHEN doc_id < {PAGE_FANOUT} THEN 'b' || doc_id
+              ELSE 'b' || (doc_id % {PAGE_FANOUT}) || '/p' || doc_id END"""
+PARENT_PATH_SQL = """CASE WHEN page_loc IS NULL THEN NULL
+              WHEN strpos(page_loc, '/') = 0 THEN ''
+              ELSE regexp_replace(page_loc, '/[^/]*$', '') END"""

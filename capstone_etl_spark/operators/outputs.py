@@ -69,20 +69,11 @@ EXTERNAL_LINK_MARKER = "scan"
 
 # Synthetic page tree CTE of the token_vector oracle (mirrors
 # hierarchy.synthetic_doc_paths — the corpus has no URL column).
-_PAGES_CTE = """
+_PAGES_CTE = f"""
 pages AS (
   SELECT doc_id,
-         CASE WHEN doc_id < 50 THEN 'b' || doc_id
-              ELSE 'b' || (doc_id % 50) || '/p' || doc_id END AS page_loc
+         {hier_ops.SYNTHETIC_PAGE_LOC_SQL} AS page_loc
   FROM documents
-), withp AS (
-  SELECT doc_id, page_loc,
-         CASE WHEN strpos(page_loc, '/') = 0 THEN ''
-              ELSE regexp_replace(page_loc, '/[^/]*$', '') END AS parent_path
-  FROM pages
-), linked AS (
-  SELECT c.doc_id, c.page_loc, p.doc_id AS parent_page
-  FROM withp c LEFT JOIN withp p ON c.parent_path = p.page_loc
 )
 """
 
@@ -168,15 +159,13 @@ def wikibooks_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 WIKIBOOKS_DOCS_SQL = _TF_CTE + f"""
 , pages AS (
   SELECT doc_id,
-         CASE WHEN doc_id < 50 THEN 'b' || doc_id
-              ELSE 'b' || (doc_id % 50) || '/p' || doc_id END AS page_loc,
+         {hier_ops.SYNTHETIC_PAGE_LOC_SQL} AS page_loc,
          CAST((length(text) - length(replace(text, '{EXTERNAL_LINK_MARKER}', '')))
               / {len(EXTERNAL_LINK_MARKER)} AS BIGINT) AS count_external_links
   FROM documents WHERE doc_id IS NOT NULL
 ), withp AS (
   SELECT doc_id, page_loc, count_external_links,
-         CASE WHEN strpos(page_loc, '/') = 0 THEN ''
-              ELSE regexp_replace(page_loc, '/[^/]*$', '') END AS parent_path
+         {hier_ops.PARENT_PATH_SQL} AS parent_path
   FROM pages
 ), children AS (
   SELECT parent_path AS page_loc, COUNT(*) AS count_children,

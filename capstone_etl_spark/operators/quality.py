@@ -31,7 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from capstone_etl_spark.functions.hashing import md5_hash60, md5_hash60_sql
-from capstone_etl_spark.functions.text import tokenize, tokenize_sql
+from capstone_etl_spark.functions.text import ngram_window_sql, tokenize, tokenize_sql
 from capstone_etl_spark.session import cached
 from capstone_etl_spark.sources.tables import load_table
 
@@ -733,8 +733,7 @@ keep AS (SELECT doc_id, ({_KEEP_PRED}) AS is_target FROM flags),
 toks AS (SELECT doc_id, {tokenize_sql()} AS t FROM documents),
 grams AS (
   SELECT doc_id, t[i] || ' ' || t[i+1] AS gram
-  FROM toks, LATERAL (SELECT unnest(range(1, len(t))) AS i) r
-  WHERE len(t) >= 2
+  FROM {ngram_window_sql(2)}
 ),
 tfb AS (
   SELECT doc_id, {md5_hash60_sql('gram')} % {DSIR_BUCKETS} AS bucket, COUNT(*) AS cnt

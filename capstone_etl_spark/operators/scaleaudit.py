@@ -693,28 +693,14 @@ def lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _lsh_tuning_curve_sql() -> str:
     from capstone_etl_spark.operators.dedup import (
-        _JACCARD_PAIRS_CTE,
-        _SHINGLES_CTE,
-        _band_key_sql,
-        _minhash_sql_min_exprs,
+        _JACCARD_PAIRS_SQL,
+        _lsh_cand_sql,
         LSH_BANDS,
         LSH_ROWS,
     )
 
-    return (
-        _SHINGLES_CTE
-        + _JACCARD_PAIRS_CTE
-        + f"""
-, sig AS MATERIALIZED (
-  SELECT doc_id,
-         {_minhash_sql_min_exprs()}
-  FROM shingles GROUP BY doc_id
-), bands AS MATERIALIZED (
-  {" UNION ALL ".join(_band_key_sql(bi) for bi in range(LSH_BANDS))}
-), cand AS MATERIALIZED (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
-), ncand AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_candidates FROM cand),
+    return f"""
+WITH {_JACCARD_PAIRS_SQL}, {_lsh_cand_sql()}, ncand AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_candidates FROM cand),
 nver AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n_verified
   FROM cand c JOIN pairs p ON p.doc_a = c.doc_a AND p.doc_b = c.doc_b
@@ -729,7 +715,6 @@ SELECT g.s,
             THEN ROUND(CAST(v.n_verified AS DOUBLE) / t.n_true, 6) ELSE 0.0 END AS recall
 FROM grid g CROSS JOIN ncand c CROSS JOIN nver v CROSS JOIN ntrue t
 """
-    )
 
 
 SWEEP_STEPS = 9  # thresholds t = i/10 for i in 1..9
@@ -780,13 +765,10 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dedup_threshold_sweep_sql() -> str:
-    from capstone_etl_spark.operators.dedup import _SHINGLES_CTE, jaccard_pairs_cte
+    from capstone_etl_spark.operators.dedup import _overlap_sql, _pairs_sql, _shingles_sql
 
-    return (
-        _SHINGLES_CTE
-        + jaccard_pairs_cte(None, with_raw=True)
-        + f"""
-, grid AS (
+    return f"""
+WITH {_shingles_sql()}, {_overlap_sql()}, {_pairs_sql(None, with_raw=True)}, grid AS (
   SELECT CAST(i AS DOUBLE) / 10.0 AS threshold
   FROM (SELECT UNNEST(range(1, {SWEEP_STEPS + 1})) AS i)
 ), stats AS (
@@ -807,7 +789,6 @@ SELECT g.threshold,
 FROM grid g
 LEFT JOIN stats s USING (threshold)
 """
-    )
 
 
 # --- rendezvous (HRW) sharding ----------------------------------------------

@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from capstone_etl_spark.functions.hashing import md5_hash60, md5_hash60_sql
-from capstone_etl_spark.functions.text import token_ngrams, tokenize, tokenize_sql
+from capstone_etl_spark.functions.text import ngram_sql, ngram_window_sql, token_ngrams, tokenize, tokenize_sql
 from capstone_etl_spark.session import cached
 from capstone_etl_spark.sources.tables import load_table
 
@@ -130,9 +130,8 @@ WITH toks AS (
          {tokenize_sql()} AS t
   FROM documents
 ), grams AS (
-  SELECT source, array_to_string(t[i : i + {NGRAM_N} - 1], ' ') AS shingle
-  FROM toks, LATERAL (SELECT unnest(range(1, len(t) - {NGRAM_N} + 2)) AS i) r
-  WHERE len(t) >= {NGRAM_N}
+  SELECT source, {ngram_sql(NGRAM_N)} AS shingle
+  FROM {ngram_window_sql(NGRAM_N)}
 ), hashed AS (
   SELECT DISTINCT source, {md5_hash60_sql('shingle')} AS h FROM grams
 )"""

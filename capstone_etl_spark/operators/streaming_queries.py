@@ -49,7 +49,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from capstone_etl_spark.functions.hashing import md5_hash60
-from capstone_etl_spark.functions.text import token_ngrams, tokenize, tokenize_sql
+from capstone_etl_spark.functions.text import tokenize, tokenize_sql
 from capstone_etl_spark.functions.vectors import dot_long, quantized_cosine
 from capstone_etl_spark.operators import dedup, events, privacy, quality, textstats
 from capstone_etl_spark.operators.similarity import (
@@ -501,9 +501,8 @@ def stream_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     (+ one NULL-bench row per train doc)."""
     from capstone_etl_spark.operators.dedup import (
         BENCH_MOD,
-        CONTAINMENT_THRESHOLD,
-        JACCARD_THRESHOLD,
-        NGRAM_N,
+        contamination_flags,
+        shingle_set,
         shingles,
     )
 
@@ -525,14 +524,7 @@ def stream_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         toks = stream.filter(F.col("doc_id") % BENCH_MOD != 0).select(
             F.col("doc_id").alias("train_doc"), tokenize("text").alias("toks")
         )
-        stream_sh = toks.select(
-            "train_doc",
-            F.explode(
-                F.array_distinct(
-                    F.transform(token_ngrams("toks", NGRAM_N), md5_hash60)
-                )
-            ).alias("sh"),
-        )
+        stream_sh = toks.select("train_doc", F.explode(shingle_set()).alias("sh"))
         return (
             stream_sh.join(static, "sh")
             .groupBy("train_doc", "bench_doc")
@@ -549,18 +541,8 @@ def stream_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     with_sz = got.withColumn(
         "sz_c", F.sum("n_first").over(Window.partitionBy("train_doc"))
     )
-    jac = F.col("n_inter") / (F.col("sz_c") + F.col("sz_b") - F.col("n_inter"))
-    cont = F.col("n_inter") / F.col("sz_b")
-    return (
-        with_sz.filter(F.col("bench_doc").isNotNull())
-        .join(sz_b, "bench_doc")
-        .filter((jac >= JACCARD_THRESHOLD) | (cont >= CONTAINMENT_THRESHOLD))
-        .select(
-            "train_doc",
-            "bench_doc",
-            F.round(jac, 6).alias("jaccard"),
-            F.round(cont, 6).alias("containment"),
-        )
+    return contamination_flags(
+        with_sz.filter(F.col("bench_doc").isNotNull()).join(sz_b, "bench_doc")
     )
 
 
@@ -584,29 +566,23 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     at verdict time. State is bounded by cross-delta candidate pairs
     (df-capped), never |base|²."""
     from capstone_etl_spark.operators.dedup import (
-        NGRAM_N,
         _is_delta,
         admission_verdicts,
+        shingle_set,
+        shingle_sizes,
         shingles,
     )
 
     docs = load_table(spark, sf_dir, "documents")
     sh = _stream_static(shingles(docs))
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
+    sizes = shingle_sizes(sh)
     index = sh.select("sh", F.col("doc_id").alias("doc_b"))
 
     def transform(stream, staged):
         arriving = stream.filter(_is_delta(F.col("doc_id"))).select(
             F.col("doc_id").alias("doc_a"), tokenize("text").alias("toks")
         )
-        stream_sh = arriving.select(
-            "doc_a",
-            F.explode(
-                F.array_distinct(
-                    F.transform(token_ngrams("toks", NGRAM_N), md5_hash60)
-                )
-            ).alias("sh"),
-        )
+        stream_sh = arriving.select("doc_a", F.explode(shingle_set()).alias("sh"))
         partner_ok = (~_is_delta(F.col("doc_b"))) | (F.col("doc_b") < F.col("doc_a"))
         return (
             stream_sh.join(index, "sh")
@@ -1307,14 +1283,16 @@ def stream_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebuild); the production deployment reads them as published
     artifacts and pays only the streaming legs + the drained
     assembly."""
-    from capstone_etl_spark.operators.corpus import MIN_CHARS, N_SHARDS
+    from capstone_etl_spark.operators.corpus import MIN_CHARS, N_SHARDS, kept_flagged_shingles
     from capstone_etl_spark.operators.dedup import (
         BENCH_MOD,
         CONTAINMENT_THRESHOLD,
         JACCARD_THRESHOLD,
-        NGRAM_N,
+        _both_ways,
         connected_components,
         shingle_df_cap,
+        shingle_set,
+        shingle_sizes,
     )
     from capstone_etl_spark.operators.sampling import split_column
 
@@ -1331,26 +1309,19 @@ def stream_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # static index artifacts — ONE tokenize pass, two cap domains
     # (the batch operator's exact sharing shape, corpus.py)
-    toks_b = docs.select(
-        "doc_id", (F.col("n_chars") >= MIN_CHARS).alias("kept"), tokenize("text").alias("toks")
-    )
     uncapped = _static(
-        toks_b.select(
-            "doc_id", "kept", F.explode(token_ngrams("toks", NGRAM_N)).alias("shingle")
-        )
-        .select("doc_id", "kept", md5_hash60(F.col("shingle")).alias("sh"))
-        .distinct()
+        kept_flagged_shingles(docs.select("doc_id", "n_chars", tokenize("text").alias("toks")))
     )
     kept_sh = _static(
         shingle_df_cap(uncapped.filter(F.col("kept")).select("doc_id", "sh"))
     )
     full_sh = _static(shingle_df_cap(uncapped.select("doc_id", "sh")))
-    kept_sizes = kept_sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
+    kept_sizes = shingle_sizes(kept_sh)
     dd_index = kept_sh.select("sh", F.col("doc_id").alias("partner"))
     bench = full_sh.filter(F.col("doc_id") % BENCH_MOD == 0).select(
         "sh", F.col("doc_id").alias("bench_doc")
     )
-    full_sizes = full_sh.groupBy("doc_id").agg(F.count("*").alias("szf"))
+    full_sizes = shingle_sizes(full_sh, "szf")
     sz_b = bench.groupBy("bench_doc").agg(F.count("*").alias("sz_b"))
 
     def transform(stream, staged):
@@ -1359,13 +1330,7 @@ def stream_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("n_chars") >= MIN_CHARS).alias("kept"),
             tokenize("text").alias("toks"),
         )
-        raw_sh = stoks.select(
-            "doc_id",
-            "kept",
-            F.explode(
-                F.array_distinct(F.transform(token_ngrams("toks", NGRAM_N), md5_hash60))
-            ).alias("sh"),
-        )
+        raw_sh = stoks.select("doc_id", "kept", F.explode(shingle_set()).alias("sh"))
         doc_rows = (
             stoks.filter(F.col("kept") & (F.col("doc_id") % BENCH_MOD != 0))
             .select(
@@ -1459,11 +1424,10 @@ def stream_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # batch verdict assembly over the drained (already-thresholded)
     # state table
-    pairs = got.filter(F.col("kind") == "dd").select("a", "b")
-    edges = pairs.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
-        pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"))
+    pairs = got.filter(F.col("kind") == "dd").select(
+        F.col("a").alias("doc_a"), F.col("b").alias("doc_b")
     )
-    labels = connected_components(edges)
+    labels = connected_components(_both_ways(pairs))
     contaminated = (
         got.filter(F.col("kind") == "dc")
         .select(F.col("a").alias("doc_id"))

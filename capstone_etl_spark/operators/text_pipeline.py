@@ -19,7 +19,7 @@ from capstone_etl_spark.functions.stopwords import (
     full_stopwords,
     stopwords_sql_in_list,
 )
-from capstone_etl_spark.functions.text import split_sql, tokenize
+from capstone_etl_spark.functions.text import ngram_window_sql, split_sql, tokenize
 from capstone_etl_spark.operators import index as index_ops
 from capstone_etl_spark.operators import hierarchy as hier_ops
 from capstone_etl_spark.operators.tokenize import doc_stats as _doc_stats
@@ -247,8 +247,7 @@ WITH toks AS (
   FROM documents
 ), pos AS (
   SELECT doc_id, t[i] AS token, i - 1 AS pos
-  FROM toks, LATERAL (SELECT unnest(range(1, len(t) + 1)) AS i) r
-  WHERE len(t) >= 1
+  FROM {ngram_window_sql(1)}
 ), per_doc AS (
   SELECT token, doc_id, string_agg(pos, '|' ORDER BY pos) AS posstr
   FROM pos WHERE token <> '' GROUP BY token, doc_id
@@ -375,11 +374,10 @@ def doc_dense_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "page_loc", "dense_id")
 
 
-DOC_DENSE_IDS_SQL = """
+DOC_DENSE_IDS_SQL = f"""
 WITH pages AS (
   SELECT doc_id,
-         CASE WHEN doc_id < 50 THEN 'b' || doc_id
-              ELSE 'b' || (doc_id % 50) || '/p' || doc_id END AS page_loc
+         {hier_ops.SYNTHETIC_PAGE_LOC_SQL} AS page_loc
   FROM documents
 )
 SELECT doc_id, page_loc,
@@ -390,15 +388,19 @@ FROM pages
 
 # ------------------------------------------------------------- hierarchy
 
+def _url_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, page_loc, parent_path) of the synthetic wiki URLs —
+    _URL_PAGES_CTE's Spark side."""
+    urls = hier_ops.synthetic_doc_urls(_docs(spark, sf_dir))
+    return hier_ops.derive_paths(urls, url_col="url").select("doc_id", "page_loc", "parent_path")
+
+
 def parent_child(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F2+F3+J1 on URL-shaped input: synthetic wiki URLs → page_loc via
     prefix strip (main.go:194 — off-prefix URLs yield NULL instead of
     the reference's panic, §7.6.5) → parent_path → LEFT OUTER self-join;
     NULL parent for roots/off-wiki docs (divergence §7.6.3)."""
-    urls = hier_ops.synthetic_doc_urls(_docs(spark, sf_dir))
-    pages = hier_ops.derive_paths(urls, url_col="url").select(
-        "doc_id", "page_loc", "parent_path"
-    )
+    pages = _url_pages(spark, sf_dir)
     linked = hier_ops.link_hierarchy(pages, id_col="doc_id")
     return linked.select(
         pages["doc_id"].alias("doc_id"), "page_loc", "parent_path", "parent_page"
@@ -406,28 +408,25 @@ def parent_child(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Mirrors synthetic_doc_urls + page_loc/parent_path derivations.
-_URL_PAGES_CTE = """
+_URL_PAGES_CTE = f"""
 paths AS (
   SELECT doc_id,
-         CASE WHEN doc_id < 50 THEN 'b' || doc_id
-              ELSE 'b' || (doc_id % 50) || '/p' || doc_id END AS path
+         {hier_ops.SYNTHETIC_PAGE_LOC_SQL} AS path
   FROM documents
 ), urls AS (
   SELECT doc_id,
-         CASE WHEN doc_id % 97 = 3 THEN 'https://example.org/ext/' || path
-              ELSE 'https://en.wikibooks.org/wiki/' || path END AS url
+         CASE WHEN doc_id % {hier_ops.OFF_WIKI_EVERY} = 3 THEN 'https://example.org/ext/' || path
+              ELSE '{hier_ops.WIKI_PREFIX}' || path END AS url
   FROM paths
 ), pages AS (
   SELECT doc_id,
-         CASE WHEN starts_with(url, 'https://en.wikibooks.org/wiki/')
-              THEN substr(url, length('https://en.wikibooks.org/wiki/') + 1)
+         CASE WHEN starts_with(url, '{hier_ops.WIKI_PREFIX}')
+              THEN substr(url, length('{hier_ops.WIKI_PREFIX}') + 1)
               END AS page_loc
   FROM urls
 ), withp AS (
   SELECT doc_id, page_loc,
-         CASE WHEN page_loc IS NULL THEN NULL
-              WHEN strpos(page_loc, '/') = 0 THEN ''
-              ELSE regexp_replace(page_loc, '/[^/]*$', '') END AS parent_path
+         {hier_ops.PARENT_PATH_SQL} AS parent_path
   FROM pages
 )
 """
@@ -445,10 +444,7 @@ def parent_child_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate joined to the pages at that path. A parent id with k
     rows at its path counts each child k times, as the oracle's
     child × parent-row join does, so its rows are summed."""
-    urls = hier_ops.synthetic_doc_urls(_docs(spark, sf_dir))
-    pages = hier_ops.derive_paths(urls, url_col="url").select(
-        "doc_id", "page_loc", "parent_path"
-    )
+    pages = _url_pages(spark, sf_dir)
     agg = (
         pages.select(F.col("doc_id").alias("parent_page"), "page_loc")
         .join(F.broadcast(hier_ops.child_aggregates(pages, id_col="doc_id")), "page_loc")
@@ -502,10 +498,7 @@ def hierarchy_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     enters as a 1-row broadcast (no driver .count()). Five fixed rounds
     keep lineage linear; an open-ended variant would checkpoint like
     the CC loop (dedup.py)."""
-    urls = hier_ops.synthetic_doc_urls(_docs(spark, sf_dir))
-    pages = hier_ops.derive_paths(urls, url_col="url").select(
-        "doc_id", "page_loc", "parent_path"
-    )
+    pages = _url_pages(spark, sf_dir)
     linked = hier_ops.link_hierarchy(pages, id_col="doc_id")
     edges = (
         linked.select(F.col("parent_page").alias("src"), pages["doc_id"].alias("dst"))

@@ -13,7 +13,15 @@ from pyspark.sql import functions as F
 
 from capstone_etl_spark.functions.hashing import MERSENNE_P, md5_hash60, md5_hash60_sql
 from capstone_etl_spark.functions.stopwords import STOPWORDS, stopwords_sql_in_list
-from capstone_etl_spark.functions.text import split_sql, token_ngrams, tokenize, tokenize_sql
+from capstone_etl_spark.functions.text import (
+    ngram_sql,
+    ngram_window_sql,
+    split_sql,
+    token_bigrams,
+    token_ngrams,
+    tokenize,
+    tokenize_sql,
+)
 from capstone_etl_spark.functions.windows import bounded_window_key
 from capstone_etl_spark.operators.vocab import with_dense_ids
 from capstone_etl_spark.sources.tables import load_table
@@ -273,9 +281,8 @@ WITH toks AS (
          {split_sql()} AS t
   FROM documents
 ), grams AS (
-  SELECT doc_id, array_to_string(t[i : i + {REP_N} - 1], ' ') AS g
-  FROM toks, LATERAL (SELECT unnest(range(1, len(t) - {REP_N} + 2)) AS i) r
-  WHERE len(t) >= {REP_N}
+  SELECT doc_id, {ngram_sql(REP_N)} AS g
+  FROM {ngram_window_sql(REP_N)}
 ), per_doc AS (
   SELECT doc_id, COUNT(*) AS total_grams, COUNT(DISTINCT g) AS distinct_grams
   FROM grams GROUP BY doc_id
@@ -310,17 +317,7 @@ def bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     the expensive stage, the downstream explodes are cheap."""
     docs = _docs(spark, sf_dir)
     toks = docs.select("doc_id", tokenize("text").alias("t")).transform(cached)
-    # t[i-1]/t[i] is 0-based SQL indexing; sequence(1, 0) DESCENDS, so
-    # docs with < 2 tokens must be guarded to an empty array.
-    bigr = toks.select(
-        F.explode(
-            F.expr(
-                "CASE WHEN size(t) >= 2 THEN "
-                "transform(sequence(1, size(t) - 1), i -> struct(t[i-1] AS w1, t[i] AS w2)) "
-                "ELSE array() END"
-            )
-        ).alias("bg")
-    ).select("bg.w1", "bg.w2")
+    bigr = toks.select(F.explode(token_bigrams()).alias("bg")).select("bg.w1", "bg.w2")
     bc = (
         bigr.groupBy("w1", "w2")
         .agg(F.count("*").alias("c_ab"))
@@ -349,8 +346,7 @@ def bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
 BIGRAM_PMI_SQL = _TOKS_CTE + f"""
 , bigr AS (
   SELECT t[i] AS w1, t[i+1] AS w2
-  FROM toks, LATERAL (SELECT unnest(range(1, len(t))) AS i) r
-  WHERE len(t) >= 2
+  FROM {ngram_window_sql(2)}
 ), bc AS (
   SELECT w1, w2, COUNT(*) AS c_ab FROM bigr GROUP BY 1, 2
   HAVING COUNT(*) >= {MIN_BIGRAM_COUNT}
@@ -547,9 +543,8 @@ WITH toks AS (
   FROM documents
 ), grams AS (
   SELECT doc_id, i - 1 AS pos,
-         ({md5_hash60_sql(f"array_to_string(t[i:i + {WINNOW_K - 1}], ' ')")} % {MERSENNE_P}) AS h
-  FROM toks, LATERAL (SELECT unnest(range(1, len(t) - {WINNOW_K} + 2)) AS i) r
-  WHERE len(t) >= {WINNOW_K}
+         ({md5_hash60_sql(ngram_sql(WINNOW_K))} % {MERSENNE_P}) AS h
+  FROM {ngram_window_sql(WINNOW_K)}
 ), wins AS (
   SELECT doc_id, pos,
          MIN(h) OVER (PARTITION BY doc_id ORDER BY pos
@@ -1598,16 +1593,9 @@ def bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     toks = docs.select("doc_id", tokenize("text").alias("t"))
     bigr = cached(
-        toks.select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "CASE WHEN size(t) >= 2 THEN "
-                    "transform(sequence(1, size(t) - 1), i -> struct(t[i-1] AS w1, t[i] AS w2)) "
-                    "ELSE array() END"
-                )
-            ).alias("bg"),
-        ).select("doc_id", "bg.w1", "bg.w2")
+        toks.select("doc_id", F.explode(token_bigrams()).alias("bg")).select(
+            "doc_id", "bg.w1", "bg.w2"
+        )
     )
     doc_bg = bigr.groupBy("doc_id", "w1", "w2").agg(F.count("*").alias("c_doc"))
     corpus_bg = bigr.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
@@ -1627,11 +1615,10 @@ def bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-BIGRAM_LM_PERPLEXITY_SQL = _FTOKS_CTE + """
+BIGRAM_LM_PERPLEXITY_SQL = _FTOKS_CTE + f"""
 , bigr AS (
   SELECT doc_id, t[i] AS w1, t[i+1] AS w2
-  FROM toks, LATERAL (SELECT unnest(range(1, len(t))) AS i) r
-  WHERE len(t) >= 2
+  FROM {ngram_window_sql(2)}
 ), doc_bg AS (
   SELECT doc_id, w1, w2, COUNT(*) AS c_doc FROM bigr GROUP BY 1, 2, 3
 ), corpus_bg AS (
@@ -1680,15 +1667,7 @@ def kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEEE-double tree in both engines; one 6-dp round at the end."""
     docs = _docs(spark, sf_dir)
     toks = docs.select("doc_id", tokenize("text").alias("t"))
-    bigr = toks.select(
-        F.explode(
-            F.expr(
-                "CASE WHEN size(t) >= 2 THEN "
-                "transform(sequence(1, size(t) - 1), i -> struct(t[i-1] AS w1, t[i] AS w2)) "
-                "ELSE array() END"
-            )
-        ).alias("bg")
-    ).select("bg.w1", "bg.w2")
+    bigr = toks.select(F.explode(token_bigrams()).alias("bg")).select("bg.w1", "bg.w2")
     cb = cached(bigr.groupBy("w1", "w2").agg(F.count("*").alias("c12")))
     ctx = bigr.groupBy("w1").agg(
         F.count("*").alias("c1"), F.countDistinct("w2").alias("n1p_fwd")
@@ -1719,8 +1698,7 @@ def kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
 KNESER_NEY_BIGRAM_SQL = _FTOKS_CTE + f"""
 , bigr AS (
   SELECT doc_id, t[i] AS w1, t[i+1] AS w2
-  FROM toks, LATERAL (SELECT unnest(range(1, len(t))) AS i) r
-  WHERE len(t) >= 2
+  FROM {ngram_window_sql(2)}
 ), cb AS (
   SELECT w1, w2, COUNT(*) AS c12 FROM bigr GROUP BY 1, 2
 ), ctx AS (
@@ -2732,15 +2710,7 @@ def lm_greedy_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cached argmax relation — constant-depth, nothing per-step
     scales with the corpus."""
     toks = _docs(spark, sf_dir).select(tokenize("text").alias("t")).transform(cached)
-    bigr = toks.select(
-        F.explode(
-            F.expr(
-                "CASE WHEN size(t) >= 2 THEN "
-                "transform(sequence(1, size(t) - 1), i -> struct(t[i-1] AS w1, t[i] AS w2)) "
-                "ELSE array() END"
-            )
-        ).alias("bg")
-    ).select("bg.w1", "bg.w2")
+    bigr = toks.select(F.explode(token_bigrams()).alias("bg")).select("bg.w1", "bg.w2")
     bc = bigr.groupBy("w1", "w2").agg(F.count("*").alias("c"))
     # argmax as min(struct(-c, w2)) instead of a row_number window: the
     # window re-shuffled bc by w1 AND sorted every partition; the
@@ -2789,8 +2759,7 @@ def _lm_greedy_decode_sql() -> str:
         + f"""
 , bigr AS (
   SELECT t[i] AS w1, t[i+1] AS w2
-  FROM toks, LATERAL (SELECT unnest(range(1, len(t))) AS i) r
-  WHERE len(t) >= 2
+  FROM {ngram_window_sql(2)}
 ), bc AS (
   SELECT w1, w2, COUNT(*) AS c FROM bigr GROUP BY 1, 2
 ), best AS (

@@ -312,6 +312,76 @@ def test_id_anomalies_match_oracle(spark, id_anomaly_sf, name):
     _matches_oracle(spark, id_anomaly_sf, con, name)
 
 
+# Threshold-boundary near-dup corpus: pairs that sit exactly on the
+# Jaccard (0.5) and containment (0.8) thresholds, a three-doc chain that
+# clusters only transitively, an exact duplicate, and a bench doc
+# (doc_id % 50 == 0) duplicating a train doc. Every doc passes the
+# corpus pipeline's n_chars gate. On the degenerate corpus above the
+# pair queries return no rows; here every near-dup step carries pairs.
+NEAR_DUP_ROWS = [
+    (0, "p q r s t u x"),  # bench: 4 of its 5 shingles are in doc 7
+    (1, "a b c d e f"),  # Jaccard 2/4 = 0.5 with doc 2 and with doc 50
+    (2, "c d e f"),
+    (3, "k l m n o"),  # chain 3 ~ 4 ~ 5 (Jaccard 3/5 each), 3 vs 5 only 1/5
+    (4, "k l m n o g h"),
+    (5, "m n o g h"),
+    (6, "k l m n o"),  # exact duplicate of doc 3
+    (7, "p q r s t u v w y z"),  # holds bench doc 0: containment 0.8, Jaccard 4/9
+    (9, "unrelated words that share no trigram"),
+    (50, "c d e f"),  # bench doc duplicating train doc 2
+]
+NEAR_DUP_NAMES = [
+    "dedup_ngram_jaccard",
+    "dedup_minhash_lsh",
+    "dedup_containment",
+    "decontamination",
+    "dedup_clusters",
+    "dedup_sorted_neighborhood",
+    "corpus_pipeline",
+    "training_manifest",
+    "gram_novelty",
+    "lsh_tuning_curve",
+    "dedup_threshold_sweep",
+    "label_propagation",
+]
+
+
+@pytest.fixture(scope="module")
+def near_dup_sf(tmp_path_factory):
+    import pandas as pd
+
+    d = tmp_path_factory.mktemp("near_dup")
+    pdf = pd.DataFrame(
+        [(i, text, "en", "web", 60) for i, text in NEAR_DUP_ROWS],
+        columns=["doc_id", "text", "lang", "source", "n_chars"],
+    ).astype({"doc_id": "int64", "n_chars": "int64"})
+    pdf.to_parquet(str(d / "documents.parquet"))
+    return str(d)
+
+
+@pytest.fixture(scope="module")
+def near_dup_duck(near_dup_sf):
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{near_dup_sf}/documents.parquet'")
+    return con
+
+
+def test_near_dup_fixture_sits_on_thresholds(near_dup_duck):
+    """The fixture's boundary pairs are in the oracles' output: the
+    >= compares keep a Jaccard of exactly 0.5 and a containment of
+    exactly 0.8."""
+    oracles = entrymod.oracle_sql()
+    pairs = set(near_dup_duck.execute(oracles["dedup_ngram_jaccard"]).fetchall())
+    assert {(1, 2, 0.5), (1, 50, 0.5)} <= pairs
+    flagged = set(near_dup_duck.execute(oracles["decontamination"]).fetchall())
+    assert (7, 0, 0.444444, 0.8) in flagged
+
+
+@pytest.mark.parametrize("name", NEAR_DUP_NAMES)
+def test_near_dup_boundaries_match_oracle(spark, near_dup_sf, near_dup_duck, name):
+    _matches_oracle(spark, near_dup_sf, near_dup_duck, name)
+
+
 # Degenerate embeddings: ALL-IDENTICAL vectors → zero covariance matrix
 # (the PCA normalization's 0/0 edge — guarded to the zero vector, λ
 # NULL), plus a zero vector and one normal vector in a second corpus
