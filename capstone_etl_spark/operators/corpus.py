@@ -16,10 +16,10 @@ against a single recursive-CTE oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from capstone_etl_spark.functions.text import ngram_window_sql, split_sql, tokenize_sql
+from capstone_etl_spark.functions.text import ngram_window_sql, split_sql, tokenize, tokenize_sql
 from capstone_etl_spark.operators.dedup import (
     _COMPONENTS_SQL,
     _both_ways,
@@ -225,49 +225,70 @@ def source_mixing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalizer is a whole-relation window over |sources| rows — single
     partition, but only AFTER aggregation (≤ thousands of sources at
     any scale), never over docs."""
-    from pyspark.sql import Window
-
-    from capstone_etl_spark.functions.text import tokenize
-
     docs = load_table(spark, sf_dir, "documents")
-    ws = F.size(tokenize("text")).cast("long")
-    per_src = docs.groupBy("source").agg(
+    per_src = mixing_per_source(docs, F.countDistinct(F.md5("text")).alias("n_unique"))
+    dup_rate = F.lit(1.0) - F.col("n_unique").cast("double") / F.col("n_docs")
+    return mixing_release(per_src, dup_rate.alias("dup_rate"))
+
+
+def mixing_per_source(docs: DataFrame, *extra: Column) -> DataFrame:
+    """(source, n_docs, n_tokens, *extra, n_chars_sum): the additive
+    per-source accounting, one groupBy. It runs on the batch table and
+    on the document stream alike; `extra` aggregates ride the same
+    pass (the batch dup-rate input, countDistinct, is not
+    streamable)."""
+    return docs.groupBy("source").agg(
         F.count("*").alias("n_docs"),
-        F.sum(ws).alias("n_tokens"),
-        F.countDistinct(F.md5("text")).alias("n_unique"),
+        F.sum(F.size(tokenize("text")).cast("long")).alias("n_tokens"),
+        *extra,
         F.sum(F.length("text").cast("long")).alias("n_chars_sum"),
     )
+
+
+def mixing_release(per_src: DataFrame, *extra: Column) -> DataFrame:
+    """(source, n_docs, n_tokens, *extra, mean_chars, mix_weight) from
+    `mixing_per_source`: each √tokens snaps to DECIMAL(28,10) before
+    the whole-relation normalizer sums them, and the weight is one
+    double division."""
     sq = F.sqrt(F.col("n_tokens").cast("double")).cast("decimal(28,10)")
-    w_all = Window.partitionBy()
-    return (
-        per_src.select(
-            "source",
-            "n_docs",
-            "n_tokens",
-            (F.lit(1.0) - F.col("n_unique").cast("double") / F.col("n_docs")).alias("dup_rate"),
-            (F.col("n_chars_sum").cast("double") / F.col("n_docs")).alias("mean_chars"),
-            (sq.cast("double") / F.sum(sq).over(w_all).cast("double")).alias("mix_weight"),
-        )
-        .orderBy("source")
-    )
+    return per_src.select(
+        "source",
+        "n_docs",
+        "n_tokens",
+        *extra,
+        (F.col("n_chars_sum").cast("double") / F.col("n_docs")).alias("mean_chars"),
+        (sq.cast("double") / F.sum(sq).over(Window.partitionBy()).cast("double")).alias(
+            "mix_weight"
+        ),
+    ).orderBy("source")
 
 
-SOURCE_MIXING_WEIGHTS_SQL = f"""
+def mixing_weights_sql(extra_aggs: tuple[str, ...] = (), extra_cols: tuple[str, ...] = ()) -> str:
+    """The oracle of `mixing_release(mixing_per_source(documents))`;
+    `extra_aggs` / `extra_cols` are the SQL of the `extra` arguments."""
+    aggs = "".join(f"         {a},\n" for a in extra_aggs)
+    cols = "".join(f"       {c},\n" for c in extra_cols)
+    sq = "CAST(sqrt(CAST(n_tokens AS DOUBLE)) AS DECIMAL(28,10))"
+    return f"""
 WITH per_src AS (
   SELECT source, COUNT(*) AS n_docs,
          CAST(SUM(len({tokenize_sql()})) AS BIGINT) AS n_tokens,
-         COUNT(DISTINCT md5(text)) AS n_unique,
-         CAST(SUM(length(text)) AS BIGINT) AS n_chars_sum
+{aggs}         CAST(SUM(length(text)) AS BIGINT) AS n_chars_sum
   FROM documents GROUP BY source
 )
 SELECT source, n_docs, n_tokens,
-       1.0 - CAST(n_unique AS DOUBLE) / n_docs AS dup_rate,
-       CAST(n_chars_sum AS DOUBLE) / n_docs AS mean_chars,
-       CAST(CAST(sqrt(CAST(n_tokens AS DOUBLE)) AS DECIMAL(28,10)) AS DOUBLE)
-         / CAST(SUM(CAST(sqrt(CAST(n_tokens AS DOUBLE)) AS DECIMAL(28,10))) OVER () AS DOUBLE) AS mix_weight
+{cols}       CAST(n_chars_sum AS DOUBLE) / n_docs AS mean_chars,
+       CAST({sq} AS DOUBLE)
+         / CAST(SUM({sq}) OVER () AS DOUBLE) AS mix_weight
 FROM per_src
 ORDER BY source
 """
+
+
+SOURCE_MIXING_WEIGHTS_SQL = mixing_weights_sql(
+    ("COUNT(DISTINCT md5(text)) AS n_unique",),
+    ("1.0 - CAST(n_unique AS DOUBLE) / n_docs AS dup_rate",),
+)
 
 
 def corpus_summary(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1784,26 +1784,24 @@ def conversion_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.min("ct").alias("conv_us"))
     )
-    per_user = (
-        u.join(conv, "user_id", "left")
-        .select(
-            F.floor(
-                (F.coalesce(F.col("conv_us"), F.col("last_us")) - F.col("fv"))
-                / KM_BUCKET_US
-            ).cast("long").alias("dur_min"),
-            F.col("conv_us").isNotNull().cast("long").alias("is_conv"),
-        )
-    )
-    return km_curve(per_user)
+    return km_curve(u.join(conv, "user_id", "left"))
 
 
-def km_curve(per_user: DataFrame) -> DataFrame:
+def km_curve(users: DataFrame) -> DataFrame:
     """The Kaplan-Meier tail shared by the batch and streaming
-    conversion-survival queries: (dur_min, is_conv) per subject →
-    (dur_min, n_risk, n_conv, n_censored, survival). One groupBy
-    collapses the subjects to the bounded per-bucket curve relation;
-    everything after runs on that bounded relation only (see
-    conversion_survival's scale/exactness notes)."""
+    conversion-survival queries: per exposed user (fv, last_us,
+    conv_us) → each subject's (dur_min, is_conv), the minute bucket of
+    the time to conversion or censoring → (dur_min, n_risk, n_conv,
+    n_censored, survival). One groupBy collapses the subjects to the
+    bounded per-bucket curve relation; everything after runs on that
+    bounded relation only (see conversion_survival's scale/exactness
+    notes)."""
+    per_user = users.select(
+        F.floor(
+            (F.coalesce(F.col("conv_us"), F.col("last_us")) - F.col("fv")) / KM_BUCKET_US
+        ).cast("long").alias("dur_min"),
+        F.col("conv_us").isNotNull().cast("long").alias("is_conv"),
+    )
     curve = cached(
         per_user.groupBy("dur_min").agg(
             F.sum("is_conv").cast("long").alias("n_conv"),
@@ -1914,9 +1912,7 @@ def event_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical doubles; each PSI term snaps to DECIMAL(28,12) before
     the order-free sum; one final 6-dp round."""
     ev = load_table(spark, sf_dir, "events")
-    bounds = ev.agg(
-        ((F.min(F.unix_micros("ts")) + F.max(F.unix_micros("ts"))) / 2).alias("t_mid"),
-    )
+    bounds = ev.agg(ts_midpoint().alias("t_mid"))
     halves = ev.join(F.broadcast(bounds), F.lit(True)).select(
         "event_type",
         "value",
@@ -1925,17 +1921,33 @@ def event_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     vb = halves.filter(F.col("is_ref")).agg(
         F.min("value").alias("v_lo"), F.max("value").alias("v_hi")
     )
-    # bin on the reference grid; clamp both halves into [0, bins-1] so
-    # out-of-range current values land in the edge bins
-    width = (F.col("v_hi") - F.col("v_lo")) / PSI_BINS
-    bin_raw = F.floor((F.col("value") - F.col("v_lo")) / width)
-    bin_id = F.when(width > 0, F.greatest(F.lit(0), F.least(F.lit(PSI_BINS - 1), bin_raw))).otherwise(F.lit(0))
-    binned = (
-        halves.join(F.broadcast(vb), F.lit(True))
-        .groupBy("event_type", "is_ref", bin_id.cast("long").alias("bin"))
-        .agg(F.count("*").alias("n"))
+    binned = psi_cells(
+        halves.join(F.broadcast(vb), F.lit(True)), "is_ref", F.col("v_lo"), F.col("v_hi")
     )
     return psi_release(binned)
+
+
+def ts_midpoint() -> Column:
+    """The pre/post split time as one aggregate expression: the midpoint
+    of the events' unix_micros span (PSI's reference half, CUPED's
+    pre-period)."""
+    return (F.min(F.unix_micros("ts")) + F.max(F.unix_micros("ts"))) / 2
+
+
+def psi_cells(ev: DataFrame, is_ref: Column | str, v_lo: Column, v_hi: Column) -> DataFrame:
+    """(event_type, is_ref, bin, n): the PSI cell counts. Values bin on
+    the reference grid [v_lo, v_hi]; both halves clamp into
+    [0, bins-1] so out-of-range current values land in the edge bins.
+    The batch query passes its broadcast columns, the stream twin its
+    deploy-time literals."""
+    width = (v_hi - v_lo) / PSI_BINS
+    bin_raw = F.floor((F.col("value") - v_lo) / width)
+    bin_id = F.when(
+        width > 0, F.greatest(F.lit(0), F.least(F.lit(PSI_BINS - 1), bin_raw))
+    ).otherwise(F.lit(0))
+    return ev.groupBy("event_type", is_ref, bin_id.cast("long").alias("bin")).agg(
+        F.count("*").alias("n")
+    )
 
 
 def psi_release(binned: DataFrame) -> DataFrame:
@@ -2861,35 +2873,27 @@ def event_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL(28,12) before its order-free sum; θ and the variance
     algebra are identical IEEE expressions on identical doubles."""
     ev = _events(spark, sf_dir)
-    mid = ev.agg(
-        ((F.min(F.unix_micros("ts")) + F.max(F.unix_micros("ts"))) / 2).alias("t_mid")
-    )
-    per_user = cached(
-        ev.crossJoin(F.broadcast(mid))
-        .groupBy("user_id")
+    mid = ev.agg(ts_midpoint().alias("t_mid"))
+    return cuped_release(cached(cuped_users(ev.crossJoin(F.broadcast(mid)), F.col("t_mid"))))
+
+
+def cuped_users(ev: DataFrame, t_mid: Column) -> DataFrame:
+    """(user_id, variant, x, y): each user's pre-period (ts ≤ t_mid)
+    and post-period spend as exact DECIMAL(18,2) sums cast once to
+    double. The batch query passes its broadcast midpoint column, the
+    stream twin its deploy-time literal; the sums merge order-free."""
+    dec = F.col("value").cast("decimal(18,2)")
+    zero = F.lit(0).cast("decimal(18,2)")
+    return (
+        ev.groupBy("user_id")
         .agg(
-            F.coalesce(
-                F.sum(
-                    F.when(
-                        F.unix_micros("ts") <= F.col("t_mid"),
-                        F.col("value").cast("decimal(18,2)"),
-                    )
-                ),
-                F.lit(0).cast("decimal(18,2)"),
-            ).cast("double").alias("x"),
-            F.coalesce(
-                F.sum(
-                    F.when(
-                        F.unix_micros("ts") > F.col("t_mid"),
-                        F.col("value").cast("decimal(18,2)"),
-                    )
-                ),
-                F.lit(0).cast("decimal(18,2)"),
-            ).cast("double").alias("y"),
+            F.coalesce(F.sum(F.when(F.unix_micros("ts") <= t_mid, dec)), zero)
+            .cast("double").alias("x"),
+            F.coalesce(F.sum(F.when(F.unix_micros("ts") > t_mid, dec)), zero)
+            .cast("double").alias("y"),
         )
         .select("user_id", ab_variant_col().alias("variant"), "x", "y")
     )
-    return cuped_release(per_user)
 
 
 def cuped_release(per_user: DataFrame) -> DataFrame:

@@ -994,27 +994,32 @@ KLL_K = 256
 KLL_QS = (0.25, 0.5, 0.75, 0.9, 0.99)
 
 
-def _kll_stats(vals: DataFrame) -> DataFrame:
-    """(source, n, L, w): per-source row count, subsample level (the
-    smallest L with n ≤ K·2^L, via integer bit-length) and survivor
-    weight w = 2^L."""
+def _kll_level(counts: DataFrame) -> DataFrame:
+    """`counts` (..., n) plus (L, w): the subsample level, the smallest
+    L with n ≤ K·2^L via integer bit-length, and the survivor weight
+    w = 2^L. The one level rule of the monolithic sketch, both merge
+    levels and the streaming twin."""
     t = F.expr(f"(n + {KLL_K - 1}) div {KLL_K}")
-    lvl = (
-        F.when(t <= 1, F.lit(0))
-        .otherwise(F.length(F.bin(t - 1)))
-        .cast("int")
-        .alias("L")
+    lvl = F.when(t <= 1, F.lit(0)).otherwise(F.length(F.bin(t - 1))).cast("int")
+    return counts.withColumn("L", lvl).withColumn(
+        "w", F.expr("shiftleft(CAST(1 AS BIGINT), L)")
     )
+
+
+def _kll_stats(vals: DataFrame) -> DataFrame:
+    """(source, n, L, w): per-source row count with its level."""
+    return _kll_level(vals.groupBy("source").agg(F.count("*").alias("n")))
+
+
+def _kll_sample(vals: DataFrame, stats: DataFrame) -> DataFrame:
+    """(source, v, c): the level-L survivors (h mod 2^L = 0) per
+    distinct value. Runs on the batch values and on the document
+    stream alike (the 1-row-per-source stats broadcast)."""
     return (
-        vals.groupBy("source")
-        .agg(F.count("*").alias("n"))
-        .select("source", "n", lvl)
-        .select(
-            "source",
-            "n",
-            "L",
-            F.expr("shiftleft(CAST(1 AS BIGINT), L)").alias("w"),
-        )
+        vals.join(F.broadcast(stats), "source")
+        .filter(F.col("h") % F.col("w") == 0)
+        .groupBy("source", "v")
+        .agg(F.count("*").alias("c"))
     )
 
 
@@ -1032,18 +1037,10 @@ def kll_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the ≤K-row sample or the bounded distinct-value domain, and
     the sketch merges across shards/streams by union — never a global
     sort of the data."""
-    from pyspark.sql import Window  # noqa: F401  (used by the shared tail)
-
     docs = load_table(spark, sf_dir, "documents")
     vals = _kll_vals(docs)
     stats = _kll_stats(vals)
-    samp = (
-        vals.join(F.broadcast(stats), "source")
-        .filter(F.col("h") % F.col("w") == 0)
-        .groupBy("source", "v")
-        .agg(F.count("*").alias("c"))
-    )
-    return _kll_release(vals, stats, samp)
+    return _kll_release(vals, stats, _kll_sample(vals, stats))
 
 
 def _kll_vals(docs: DataFrame) -> DataFrame:
@@ -1059,10 +1056,9 @@ def _kll_vals(docs: DataFrame) -> DataFrame:
 def _kll_release(vals: DataFrame, stats: DataFrame, samp: DataFrame) -> DataFrame:
     """The sketch's release tail (cumulative weights → ⌈q·n⌉ rank cut →
     shortfall fallback → exact-quantile audit) over any (source, v, c)
-    survivor relation — shared by the monolithic sketch, the shard
-    merge, and reused in shape by the streaming twin."""
-    from pyspark.sql import Window
-
+    survivor relation — called by the monolithic sketch, the shard
+    merge and the streaming twin (stream_kll_sketch, over its drained
+    survivor state)."""
     wv = Window.partitionBy("source").orderBy("v").rowsBetween(
         Window.unboundedPreceding, 0
     )
@@ -1089,13 +1085,10 @@ def _kll_release(vals: DataFrame, stats: DataFrame, samp: DataFrame) -> DataFram
         .groupBy(qcfg["source"], "q", "n", "L", "r")
         .agg(F.min("v").alias("est_v"))
     )
-    wvx = Window.partitionBy("source").orderBy("v").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
     val_cum = (
         vals.groupBy("source", "v")
         .agg(F.count("*").alias("cnt"))
-        .select("source", "v", F.sum("cnt").over(wvx).alias("cum"))
+        .select("source", "v", F.sum("cnt").over(wv).alias("cum"))
     )
     exact = (
         qcfg.select("source", "q", "r")
@@ -1158,26 +1151,17 @@ def kll_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         md5_hash60(F.concat(F.lit("shard:"), F.col("h").cast("string"))) % KLL_SHARDS,
     )
 
-    def with_level(counts: DataFrame) -> DataFrame:
-        t = F.expr(f"(n + {KLL_K - 1}) div {KLL_K}")
-        lvl = (
-            F.when(t <= 1, F.lit(0)).otherwise(F.length(F.bin(t - 1))).cast("int")
-        )
-        return counts.withColumn("L", lvl).withColumn(
-            "w", F.expr("shiftleft(CAST(1 AS BIGINT), L)")
-        )
-
     # per-(shard, source) sketch: own count, own level, own survivors
-    sh_stats = with_level(
+    sh_stats = _kll_level(
         shard_vals.groupBy("_shard", "source").agg(F.count("*").alias("n"))
     )
     shard_sketches = shard_vals.join(sh_stats, ["_shard", "source"]).filter(
         F.col("h") % F.col("w") == 0
     )
     # union level from sketch METADATA (sum of shard counts)
-    u_stats = with_level(
+    u_stats = _kll_level(
         sh_stats.groupBy("source").agg(F.sum("n").cast("long").alias("n"))
-    ).select("source", "n", "L", "w")
+    )
     merged = (
         shard_sketches.select("source", "v", "h")
         .join(F.broadcast(u_stats.select("source", F.col("w").alias("wu"))), "source")

@@ -23,7 +23,12 @@ and the stream query is generated from the spec as
 cut (lazily) so the release may read it more than once. A twin stays
 hand-written when its stream form needs more than the drain: static
 index legs, a deploy-time literal from `staged`, a watermark, or state
-that is not the batch accumulation.
+that is not the batch accumulation. That exemption covers the wiring
+only: a hand-written twin calls its batch query's own accumulation and
+release helpers (the KLL survivor step and release, the label-noise
+tally and verdict, the coverage cells and release, the shift release,
+the CUPED users and PSI cells over a literal, the KM curve, the
+mixing-weight aggregates and weights) and restates none of them.
 
 The IVF-family twins (serving, mining, admission, index balance) keep
 their index as static legs and route, probe and rank through the IVF
@@ -52,6 +57,14 @@ from capstone_etl_spark.functions.hashing import md5_hash60
 from capstone_etl_spark.functions.text import tokenize, tokenize_sql
 from capstone_etl_spark.functions.vectors import dot_long, quantized_cosine
 from capstone_etl_spark.operators import dedup, events, privacy, quality, textstats
+from capstone_etl_spark.operators.corpus import (
+    MIN_CHARS,
+    N_SHARDS,
+    kept_flagged_shingles,
+    mixing_per_source,
+    mixing_release,
+    mixing_weights_sql,
+)
 from capstone_etl_spark.operators.similarity import (
     N_QUERIES,
     PQ_SUBDIM,
@@ -394,54 +407,22 @@ def stream_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_mixing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The mixing-weight accounting as a STREAMING job: per-source doc
     count, token mass and char mass accumulate incrementally over the
-    documents file stream (complete-mode agg, no event time → no
-    watermark), and the √-temperature weight normalization runs in
-    batch on the final snapshot — exactly how a live ingest keeps the
-    training-blend dashboard current while shards land. The streaming
-    aggregation state is |sources|-bounded. countDistinct (the batch
-    dup_rate input) is not streamable, so the streaming form carries
-    the additive aggregates only; the weight arithmetic is shared with
-    source_mixing_weights (same √ snap to DECIMAL(28,10), same one
-    double division), and the oracle is the batch SQL minus the
-    dup-rate column — the streaming engine must reproduce it exactly."""
-
-    ws = F.size(tokenize("text")).cast("long")
+    documents file stream (corpus.mixing_per_source as a complete-mode
+    agg, no event time → no watermark), and the √-temperature weight
+    normalization (corpus.mixing_release) runs in batch on the final
+    snapshot — exactly how a live ingest keeps the training-blend
+    dashboard current while shards land. The streaming aggregation
+    state is |sources|-bounded. countDistinct (the batch dup_rate
+    input) is not streamable, so the streaming form carries the
+    additive aggregates only, and its oracle is the batch oracle's
+    composition without the dup-rate column."""
     snap = drain_staged(
-        spark,
-        sf_dir,
-        "documents",
-        lambda s, staged: s.groupBy("source").agg(
-            F.count("*").alias("n_docs"),
-            F.sum(ws).alias("n_tokens"),
-            F.sum(F.length("text").cast("long")).alias("n_chars_sum"),
-        ),
-        "complete",
+        spark, sf_dir, "documents", lambda s, staged: mixing_per_source(s), "complete"
     )
-    sq = F.sqrt(F.col("n_tokens").cast("double")).cast("decimal(28,10)")
-    w_all = Window.partitionBy()
-    return snap.select(
-        "source",
-        "n_docs",
-        "n_tokens",
-        (F.col("n_chars_sum").cast("double") / F.col("n_docs")).alias("mean_chars"),
-        (sq.cast("double") / F.sum(sq).over(w_all).cast("double")).alias("mix_weight"),
-    ).orderBy("source")
+    return mixing_release(snap)
 
 
-STREAM_MIXING_WEIGHTS_SQL = f"""
-WITH per_src AS (
-  SELECT source, COUNT(*) AS n_docs,
-         CAST(SUM(len({tokenize_sql()})) AS BIGINT) AS n_tokens,
-         CAST(SUM(length(text)) AS BIGINT) AS n_chars_sum
-  FROM documents GROUP BY source
-)
-SELECT source, n_docs, n_tokens,
-       CAST(n_chars_sum AS DOUBLE) / n_docs AS mean_chars,
-       CAST(CAST(sqrt(CAST(n_tokens AS DOUBLE)) AS DECIMAL(28,10)) AS DOUBLE)
-         / CAST(SUM(CAST(sqrt(CAST(n_tokens AS DOUBLE)) AS DECIMAL(28,10))) OVER () AS DOUBLE) AS mix_weight
-FROM per_src
-ORDER BY source
-"""
+STREAM_MIXING_WEIGHTS_SQL = mixing_weights_sql()
 
 
 def stream_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1075,32 +1056,14 @@ def stream_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     tail (events.cuped_release) runs on the drained snapshot. Oracle:
     the batch CUPED SQL verbatim.
 
-    checkpoint_truncate first: the tail references the per-user
-    relation twice (pooled moments + per-variant rollup)."""
-    from capstone_etl_spark.operators.events import ab_variant_col, cuped_release
+    The drained snapshot is cut lazily: the tail references the
+    per-user relation twice (pooled moments + per-variant rollup)."""
 
     def transform(stream, staged):
-        t_mid = staged.agg(
-            ((F.min(F.unix_micros("ts")) + F.max(F.unix_micros("ts"))) / 2).alias("m")
-        ).first()[0]
-        dec = F.col("value").cast("decimal(18,2)")
-        return (
-            stream.groupBy("user_id")
-            .agg(
-                F.coalesce(
-                    F.sum(F.when(F.unix_micros("ts") <= F.lit(t_mid), dec)),
-                    F.lit(0).cast("decimal(18,2)"),
-                ).cast("double").alias("x"),
-                F.coalesce(
-                    F.sum(F.when(F.unix_micros("ts") > F.lit(t_mid), dec)),
-                    F.lit(0).cast("decimal(18,2)"),
-                ).cast("double").alias("y"),
-            )
-            .select("user_id", ab_variant_col().alias("variant"), "x", "y")
-        )
+        return events.cuped_users(stream, F.lit(staged.agg(events.ts_midpoint()).first()[0]))
 
     snap = drain_staged(spark, sf_dir, "events", transform, "complete")
-    return cuped_release(checkpoint_truncate(snap))
+    return events.cuped_release(checkpoint_truncate(snap, eager=False))
 
 
 def stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1115,28 +1078,16 @@ def stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     landed events. Oracle: the batch PSI SQL verbatim (the grid
     literals are computed by the same expressions the batch plan
     evaluates, so the releases agree exactly)."""
-    from capstone_etl_spark.operators.events import PSI_BINS, psi_release
 
     def transform(stream, staged):
-        t_mid = staged.agg(
-            ((F.min(F.unix_micros("ts")) + F.max(F.unix_micros("ts"))) / 2).alias("m")
-        ).first()[0]
+        t_mid = staged.agg(events.ts_midpoint()).first()[0]
         v_lo, v_hi = staged.filter(F.unix_micros("ts") <= t_mid).agg(
             F.min("value"), F.max("value")
         ).first()
-        width = (F.lit(v_hi) - F.lit(v_lo)) / PSI_BINS
-        bin_raw = F.floor((F.col("value") - F.lit(v_lo)) / width)
-        bin_id = F.when(
-            width > 0,
-            F.greatest(F.lit(0), F.least(F.lit(PSI_BINS - 1), bin_raw)),
-        ).otherwise(F.lit(0))
-        return stream.groupBy(
-            "event_type",
-            (F.unix_micros("ts") <= F.lit(t_mid)).alias("is_ref"),
-            bin_id.cast("long").alias("bin"),
-        ).agg(F.count("*").alias("n"))
+        is_ref = (F.unix_micros("ts") <= F.lit(t_mid)).alias("is_ref")
+        return events.psi_cells(stream, is_ref, F.lit(v_lo), F.lit(v_hi))
 
-    return psi_release(drain_staged(spark, sf_dir, "events", transform, "complete"))
+    return events.psi_release(drain_staged(spark, sf_dir, "events", transform, "complete"))
 
 
 def stream_conversion_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1169,12 +1120,6 @@ def stream_conversion_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the conversions a stream has seen. Bounded for the replay,
     unbounded on a long-lived stream — the same declared class as
     stream_training_manifest's one state row per admitted doc."""
-    from capstone_etl_spark.operators.events import (
-        AB_CONVERT_TYPE,
-        AB_EXPOSE_TYPE,
-        KM_BUCKET_US,
-        km_curve,
-    )
 
     def transform(stream, staged):
         ev = stream.select(
@@ -1186,10 +1131,10 @@ def stream_conversion_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("m").alias("kind"),
             "user_id",
             F.lit(0).cast("long").alias("k2"),
-            F.when(F.col("event_type") == AB_EXPOSE_TYPE, F.col("ts_us")).alias("ex"),
+            F.when(F.col("event_type") == events.AB_EXPOSE_TYPE, F.col("ts_us")).alias("ex"),
             F.col("ts_us").alias("ts"),
         )
-        c_rows = ev.filter(F.col("event_type") == AB_CONVERT_TYPE).select(
+        c_rows = ev.filter(F.col("event_type") == events.AB_CONVERT_TYPE).select(
             F.lit("c").alias("kind"),
             "user_id",
             F.col("ts_us").alias("k2"),
@@ -1202,11 +1147,12 @@ def stream_conversion_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.min("ex").alias("fv"), F.max("ts").alias("last"))
         )
 
-    # truncate, not cache: m and convs below both descend from the
-    # drained sink, and a memory-sink self-join carries conflicting
-    # references (stream_kll_sketch's lesson) — the LogicalRDD form
-    # joins cleanly and the drained table is tiny
-    got = checkpoint_truncate(drain_staged(spark, sf_dir, "events", transform, "update"))
+    # truncate (lazily), not cache: m and convs below both descend
+    # from the drained sink, and a memory-sink self-join carries
+    # conflicting references — the LogicalRDD form joins cleanly
+    got = checkpoint_truncate(
+        drain_staged(spark, sf_dir, "events", transform, "update"), eager=False
+    )
     # per-user finals from the 'm' rows: update-mode emissions are
     # cumulative (fv never rises, last never falls), so min/max over
     # emissions IS the drained state
@@ -1221,18 +1167,11 @@ def stream_conversion_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", F.col("k2").alias("cts"))
         .distinct()
     )
-    qual = (
+    return events.km_curve(
         m.join(convs, "user_id", "left")
         .groupBy("user_id", "fv", "last_us")
-        .agg(F.min(F.when(F.col("cts") > F.col("fv"), F.col("cts"))).alias("cand"))
+        .agg(F.min(F.when(F.col("cts") > F.col("fv"), F.col("cts"))).alias("conv_us"))
     )
-    per_user = qual.select(
-        F.floor(
-            (F.coalesce("cand", "last_us") - F.col("fv")) / KM_BUCKET_US
-        ).cast("long").alias("dur_min"),
-        F.col("cand").isNotNull().cast("long").alias("is_conv"),
-    )
-    return km_curve(per_user)
 
 
 def stream_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1283,7 +1222,6 @@ def stream_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebuild); the production deployment reads them as published
     artifacts and pays only the streaming legs + the drained
     assembly."""
-    from capstone_etl_spark.operators.corpus import MIN_CHARS, N_SHARDS, kept_flagged_shingles
     from capstone_etl_spark.operators.dedup import (
         BENCH_MOD,
         CONTAINMENT_THRESHOLD,
@@ -1456,121 +1394,37 @@ def stream_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_kll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The mergeable quantile sketch AT INGEST — sketches.
     kll_quantile_sketch's level-subsample maintained over a live
-    document stream: the per-source subsample level L (a deploy-time
+    document stream: the per-source (n, L, w) stats (a deploy-time
     artifact of the committed corpus, the stream_psi_drift
-    deploy-literal convention) rides in as a static broadcast; each
-    arriving document either survives (h mod 2^L = 0) into a per-
-    (source, value) weighted cell or just ticks its source's row
-    count — two row kinds, ONE streaming aggregation, state bounded by
-    ≈K survivors per source plus |sources| count rows. The drained
-    state runs the identical batch quantile assembly (cumulative
-    sample weight → ⌈q·n⌉ rank cut → max-value fallback; exact branch
-    from the corpus for the audit columns), so the streamed release
-    equals the batch sketch row-for-row and shares its oracle
-    verbatim. The nested-sample property (level L+1 ⊆ level L) is what
-    makes this THE 100 TB shape: shards sketched at different corpus
-    epochs merge by re-filter + union, never by resampling."""
-    from capstone_etl_spark.operators.sketches import KLL_QS, _kll_stats
+    deploy-literal convention) ride in as a static broadcast, and each
+    arriving document that survives (h mod 2^L = 0) counts into its
+    per-(source, value) cell through the batch sketch's own
+    `_kll_sample` — state bounded by ≈K survivors per source. The
+    drained cells go through the batch `_kll_release` (cumulative
+    sample weight → ⌈q·n⌉ rank cut → max-value fallback → exact audit
+    from the corpus), so the streamed release equals the batch sketch
+    row-for-row and shares its oracle verbatim. The nested-sample
+    property (level L+1 ⊆ level L) is what makes this THE 100 TB shape:
+    shards sketched at different corpus epochs merge by re-filter +
+    union, never by resampling."""
+    from capstone_etl_spark.operators.sketches import (
+        _kll_release,
+        _kll_sample,
+        _kll_stats,
+        _kll_vals,
+    )
 
-    docs = load_table(spark, sf_dir, "documents")
-    h = md5_hash60(F.concat(F.lit("kll:"), F.col("doc_id").cast("string")))
-    vals_b = docs.select("source", F.col("n_chars").alias("v"), h.alias("h"))
-    stats = _stream_static(_kll_stats(vals_b))
-
-    def transform(stream, staged):
-        svals = stream.select("source", F.col("n_chars").alias("v"), h.alias("h"))
-        surv = (
-            svals.join(stats, "source")
-            .filter(F.col("h") % F.col("w") == 0)
-            .select(F.lit("s").alias("kind"), "source", "v")
-        )
-        ticks = svals.select(
-            F.lit("n").alias("kind"), "source", F.lit(None).cast("long").alias("v")
-        )
-        return (
-            surv.unionByName(ticks)
-            .groupBy("kind", "source", "v")
-            .agg(F.count("*").alias("c"))
-        )
-
-    got = cached(drain_staged(spark, sf_dir, "documents", transform, "complete"))
-
-    # batch assembly over the drained state (the n ticks reproduce
-    # the batch per-source counts, so L/w/r recompute identically)
-    samp = got.filter(F.col("kind") == "s").select("source", "v", "c")
-    wv = Window.partitionBy("source").orderBy("v").rowsBetween(
-        Window.unboundedPreceding, 0
+    vals = _kll_vals(load_table(spark, sf_dir, "documents"))
+    stats = _stream_static(_kll_stats(vals))
+    drained = drain_staged(
+        spark,
+        sf_dir,
+        "documents",
+        lambda s, staged: _kll_sample(_kll_vals(s), stats),
+        "complete",
     )
-    samp_cum = samp.join(F.broadcast(stats), "source").select(
-        "source", "v", (F.sum(F.col("c")).over(wv) * F.col("w")).alias("cumw")
-    )
-    szs = samp.groupBy("source").agg(
-        F.sum("c").cast("long").alias("sample_size"), F.max("v").alias("vmax")
-    )
-    # qcfg and samp_cum both descend from the drained sink — truncate
-    # one side's lineage so the join carries no conflicting
-    # references (the sink-self-join lesson, checkpoint_truncate)
-    qcfg = checkpoint_truncate(
-        got.filter(F.col("kind") == "n")
-        .groupBy("source")
-        .agg(F.sum("c").cast("long").alias("n"))
-        .join(F.broadcast(stats.select("source", "L")), "source")
-        .select(
-            F.col("source").alias("qsrc"), "n", "L",
-            F.explode(F.array(*[F.lit(q) for q in KLL_QS])).alias("q"),
-        )
-        .select(
-            "qsrc", "n", "L", "q",
-            F.ceil(F.col("q") * F.col("n").cast("double")).cast("long").alias("r"),
-        )
-    )
-    est = (
-        qcfg.join(
-            samp_cum,
-            (F.col("qsrc") == F.col("source")) & (F.col("cumw") >= F.col("r")),
-            "left",
-        )
-        .groupBy(F.col("qsrc").alias("source"), "q", "n", "L", "r")
-        .agg(F.min("v").alias("est_v"))
-    )
-    wvx = Window.partitionBy("source").orderBy("v").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    val_cum = (
-        vals_b.groupBy("source", "v")
-        .agg(F.count("*").alias("cnt"))
-        .select("source", "v", F.sum("cnt").over(wvx).alias("cum"))
-    )
-    exact = (
-        qcfg.select("qsrc", "q", "r")
-        .join(
-            val_cum,
-            (F.col("qsrc") == F.col("source")) & (F.col("cum") >= F.col("r")),
-        )
-        .groupBy(F.col("qsrc").alias("source"), "q")
-        .agg(F.min("v").cast("double").alias("exact_quantile"))
-    )
-    return (
-        est.join(szs, "source")
-        .join(exact, ["source", "q"])
-        .select(
-            "source",
-            "q",
-            F.col("n").cast("long").alias("n"),
-            F.col("L").cast("long").alias("level"),
-            "sample_size",
-            F.col("r").alias("target_rank"),
-            F.coalesce(F.col("est_v"), F.col("vmax")).cast("double").alias("est_quantile"),
-            "exact_quantile",
-            F.round(
-                F.abs(
-                    F.coalesce(F.col("est_v"), F.col("vmax")).cast("double")
-                    - F.col("exact_quantile")
-                ),
-                6,
-            ).alias("abs_error"),
-        )
-    )
+    # the release reads the drained sink three times: cut lazily
+    return _kll_release(vals, stats, checkpoint_truncate(drained, eager=False))
 
 
 def stream_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1587,9 +1441,9 @@ def stream_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
     emits (arrival, base-member) vote candidates keyed by the EXACT
     integer squared-L2 distance in APPEND mode — no state at all, no
     float anywhere in the rank path (the family's r11 discipline).
-    The drained candidate table goes through the IDENTICAL top-K /
-    vote-count verdict tail as the batch operator, so the oracle is
-    LABEL_NOISE_INCREMENTAL_SQL verbatim.
+    The drained candidate table goes through the batch operator's own
+    vote and verdict steps (valuation._noise_tally / _noise_release),
+    so the oracle is LABEL_NOISE_INCREMENTAL_SQL verbatim.
 
     Scale: per-arrival work is the hier route (≈N^(1/4) branch folds +
     BRANCH_PROBES·N^(1/4) seed folds — vs the flat router's √N) plus
@@ -1597,11 +1451,7 @@ def stream_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-stream, so re-delivery cannot corrupt state (there is none) and
     the sink is verdict-relevant rows only."""
     from capstone_etl_spark.operators.dedup import _is_delta
-    from capstone_etl_spark.operators.valuation import (
-        NOISE_K,
-        NOISE_MIN_VOTES,
-        _noise_verdict_cols,
-    )
+    from capstone_etl_spark.operators.valuation import _noise_release, _noise_tally
 
     emb = load_table(spark, sf_dir, "embeddings")
     quant = quantize_fp()
@@ -1643,99 +1493,60 @@ def stream_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "embeddings", transform, "append", state_partitions=None
     )
 
-    # batch verdict tail over the drained candidate table
-    wv = Window.partitionBy("vec_a").orderBy(F.asc("d2p"), F.asc("vec_b"))
-    votes = (
-        drained.withColumn("rnk", F.row_number().over(wv))
-        .filter(F.col("rnk") <= NOISE_K)
-        .groupBy("vec_a")
-        .agg(
-            F.count("*").alias("n_votes"),
-            F.sum("match").alias("n_agree"),
-        )
-        .withColumnRenamed("vec_a", "vec_id")
-    )
     # delta rows with their routed cells, recomputed batch-side for
     # the left join (cheap: |delta| rows against the hier index)
     delta_rows = nearest_cell(
         _hier_cand_seed(emb_q.filter(_is_delta(F.col("vec_id"))), index_q=base_q)
     ).join(emb.select("vec_id", "label"), "vec_id")
-    out = delta_rows.join(votes, "vec_id", "left").select(
-        "vec_id", "label", "cell", *_noise_verdict_cols()
-    )
-    return out.withColumn(
-        "suspect",
-        (F.col("n_votes") >= NOISE_MIN_VOTES)
-        & (F.col("n_agree") * 2 < F.col("n_votes")),
-    )
+    return _noise_release(delta_rows, _noise_tally(drained))
 
 
 def stream_embedding_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ENCODER-DRIFT screening at INGEST — valuation.
     embedding_shift_audit's delta side as a stream: the base corpus's
     per-dimension stats (count, decimal sum, decimal sum-of-squares)
-    are a STATIC 64-row relation; arriving delta vectors posexplode
-    and aggregate per-dim decimal sums in complete mode — the state
-    store is exactly DIM rows, the smallest bounded state in the
-    streaming layer. The drained delta stats join the static base
-    stats through the batch operator's identical derived tail (means,
-    shift, base sd, standardized shift, all ROUND(·,6)), so the
-    oracle is EMBEDDING_SHIFT_AUDIT_SQL verbatim. Decimal sums are
+    are a STATIC 64-row relation; arriving delta vectors explode per
+    dimension (valuation.dim_values) and aggregate per-dim decimal sums
+    in complete mode — the state store is exactly DIM rows, the
+    smallest bounded state in the streaming layer. The drained delta
+    stats join the static base stats and go through the batch
+    operator's own tail (valuation.shift_release), so the oracle is
+    EMBEDDING_SHIFT_AUDIT_SQL verbatim. Decimal sums are
     order-free, so micro-batch arrival order cannot change a digit."""
     from capstone_etl_spark.operators.dedup import _is_delta
+    from capstone_etl_spark.operators.valuation import _dec, dim_values, shift_release
 
     emb = load_table(spark, sf_dir, "embeddings")
-    dec = lambda c: c.cast("decimal(20,12)")  # noqa: E731
     base = _stream_static(
-        emb.filter(~_is_delta(F.col("vec_id")))
-        .select(F.posexplode("embedding").alias("d", "xf"))
-        .select("d", F.col("xf").cast("double").alias("x"))
+        dim_values(emb.filter(~_is_delta(F.col("vec_id"))))
         .groupBy("d")
         .agg(
             F.count("*").cast("long").alias("n_base"),
-            F.sum(dec(F.col("x"))).alias("sum_b"),
-            F.sum(dec(F.col("x") * F.col("x"))).alias("ssq_b"),
+            F.sum(_dec(F.col("x"))).alias("sum_b"),
+            F.sum(_dec(F.col("x") * F.col("x"))).alias("ssq_b"),
         )
     )
 
     def transform(stream, staged):
         return (
-            stream.filter(_is_delta(F.col("vec_id")))
-            .select(F.posexplode("embedding").alias("d", "xf"))
-            .select("d", F.col("xf").cast("double").alias("x"))
+            dim_values(stream.filter(_is_delta(F.col("vec_id"))))
             .groupBy("d")
             .agg(
                 F.count("*").cast("long").alias("n_delta"),
-                F.sum(dec(F.col("x"))).alias("sum_d"),
+                F.sum(_dec(F.col("x"))).alias("sum_d"),
             )
         )
 
     drained = drain_staged(spark, sf_dir, "embeddings", transform, "complete")
-    joined = base.join(drained, "d", "left").select(
-        "d",
-        "n_base",
-        F.coalesce(F.col("n_delta"), F.lit(0).cast("long")).alias("n_delta"),
-        "sum_b",
-        "sum_d",
-        "ssq_b",
-    )
-    # the batch operator's derived tail, expression for expression
-    base_mean = F.round(F.col("sum_b").cast("double") / F.col("n_base"), 6)
-    delta_mean = F.round(F.col("sum_d").cast("double") / F.col("n_delta"), 6)
-    base_var = (
-        F.col("ssq_b").cast("double") / F.col("n_base") - base_mean * base_mean
-    )
-    base_sd = F.round(F.sqrt(F.greatest(base_var, F.lit(0.0))), 6)
-    shift = F.round(delta_mean - base_mean, 6)
-    return joined.select(
-        "d",
-        "n_base",
-        "n_delta",
-        base_mean.alias("base_mean"),
-        delta_mean.alias("delta_mean"),
-        shift.alias("shift"),
-        base_sd.alias("base_sd"),
-        F.when(base_sd > 0, F.round(shift / base_sd, 6)).alias("std_shift"),
+    return shift_release(
+        base.join(drained, "d", "left").select(
+            "d",
+            "n_base",
+            F.coalesce(F.col("n_delta"), F.lit(0).cast("long")).alias("n_delta"),
+            "sum_b",
+            "sum_d",
+            "ssq_b",
+        )
     )
 
 
@@ -1744,17 +1555,20 @@ def stream_coreset_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     coreset_coverage_audit as a stream: the KCENTER_K selected centers
     (with norms) are a STATIC relation riding in as a 1-row
     collect_list broadcast; every arriving vector picks its nearest
-    center with per-row column math (one dot-product fold per center,
+    center with per-row column math (one quantized cosine per center,
     array_min over (d, center_id) structs — stream_ivf_assign's trick
-    with the cosine distance), and the per-center population / decimal
-    distance-sum / max-distance aggregate in complete mode: the state
-    store is exactly KCENTER_K rows. The drained table takes the batch
-    share/mean projection (total = sum of drained pops — the stream
-    saw the whole corpus), so the oracle is CORESET_COVERAGE_AUDIT_SQL
-    verbatim."""
-    from capstone_etl_spark.operators.valuation import _kcenter_select
+    with the cosine distance), and the batch per-center aggregate
+    (valuation.coverage_cells) runs in complete mode: the state store
+    is exactly KCENTER_K rows. The drained cells go through the batch
+    valuation.coverage_release (total = sum of drained pops — the
+    stream saw the whole corpus), so the oracle is
+    CORESET_COVERAGE_AUDIT_SQL verbatim."""
+    from capstone_etl_spark.operators.valuation import (
+        _kcenter_select,
+        coverage_cells,
+        coverage_release,
+    )
 
-    emb_full = load_table(spark, sf_dir, "embeddings")
     _, acc = _kcenter_select(spark, sf_dir)
     # centers ride as fixed-point lists + exact squared norms —
     # the quantized-cosine rank-key discipline (valuation.py module
@@ -1776,21 +1590,7 @@ def stream_coreset_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         d_structs = F.transform(
             F.col("centers"),
             lambda s: F.struct(
-                (
-                    F.lit(1.0)
-                    - F.when(
-                        (F.col("na2") > 0) & (s["sn2"] > 0),
-                        F.aggregate(
-                            F.zip_with(F.col("vq"), s["sq"], lambda x, y: x * y),
-                            F.lit(0).cast("long"),
-                            lambda a, x: a + x,
-                        ).cast("double")
-                        / (
-                            F.sqrt(F.col("na2").cast("double"))
-                            * F.sqrt(s["sn2"].cast("double"))
-                        ),
-                    ).otherwise(F.lit(None))
-                ).alias("d"),
+                (F.lit(1.0) - quantized_cosine("vq", s["sq"], "na2", s["sn2"])).alias("d"),
                 s["center_id"].alias("center_id"),
             ),
         )
@@ -1801,24 +1601,13 @@ def stream_coreset_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.array_min(d_structs).alias("m"))
             .select(F.col("m.center_id").alias("center_id"), F.col("m.d").alias("d"))
         )
-        return assigned.groupBy("center_id").agg(
-            F.count("*").cast("long").alias("pop"),
-            F.sum(F.col("d").cast("decimal(20,12)")).alias("sum_d"),
-            F.max("d").alias("max_d"),
-        )
+        return coverage_cells(assigned)
 
-    drained = drain_staged(spark, sf_dir, "embeddings", transform, "complete")
-    total = drained.agg(F.sum("pop").alias("total"))
-    return (
-        drained.join(F.broadcast(total), F.lit(True))
-        .select(
-            "center_id",
-            "pop",
-            (F.col("pop") / F.col("total")).alias("share"),
-            (F.col("sum_d").cast("double") / F.col("pop")).alias("mean_d"),
-            "max_d",
-        )
+    # the release reads the drained sink twice: cut lazily
+    drained = checkpoint_truncate(
+        drain_staged(spark, sf_dir, "embeddings", transform, "complete"), eager=False
     )
+    return coverage_release(drained, drained.agg(F.sum("pop").alias("total")))
 
 
 class Twin(NamedTuple):

@@ -307,8 +307,7 @@ def _noise_votes(withv: DataFrame, voters: DataFrame | None = None) -> DataFrame
         F.col("vec_id").alias("vec_b"), "cell",
         F.col("vq").alias("qb"), F.col("label").alias("lb"),
     )
-    wv = Window.partitionBy("vec_a").orderBy(F.asc("d2p"), F.asc("vec_b"))
-    return (
+    return _noise_tally(
         a.join(b, "cell")
         .filter(F.col("vec_a") != F.col("vec_b"))
         .select(
@@ -316,13 +315,37 @@ def _noise_votes(withv: DataFrame, voters: DataFrame | None = None) -> DataFrame
             _d2_fold("qa", F.col("qb")).alias("d2p"),
             (F.col("la") == F.col("lb")).cast("int").alias("match"),
         )
-        .withColumn("rnk", F.row_number().over(wv))
+    )
+
+
+def _noise_tally(cands: DataFrame) -> DataFrame:
+    """(vec_a, n_votes, n_agree): each vector's NOISE_K nearest
+    candidates (d2p asc, vec_b asc) vote with their `match` flag — the
+    tally of the batch audits, the curation manifest's gate 2 and the
+    drained stream_label_noise candidates."""
+    wv = Window.partitionBy("vec_a").orderBy(F.asc("d2p"), F.asc("vec_b"))
+    return (
+        cands.withColumn("rnk", F.row_number().over(wv))
         .filter(F.col("rnk") <= NOISE_K)
         .groupBy("vec_a")
         .agg(
             F.count("*").alias("n_votes"),
             F.sum("match").alias("n_agree"),
         )
+    )
+
+
+def _noise_release(rows: DataFrame, votes: DataFrame) -> DataFrame:
+    """The label_noise verdict over (vec_id, label, cell) rows and their
+    `_noise_tally` votes: unvoted rows keep zero counts, and `suspect`
+    fires when at least NOISE_MIN_VOTES voters disagree by majority."""
+    out = rows.join(votes.withColumnRenamed("vec_a", "vec_id"), "vec_id", "left").select(
+        "vec_id", "label", "cell", *_noise_verdict_cols()
+    )
+    return out.withColumn(
+        "suspect",
+        (F.col("n_votes") >= NOISE_MIN_VOTES)
+        & (F.col("n_agree") * 2 < F.col("n_votes")),
     )
 
 
@@ -362,17 +385,7 @@ def label_noise_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Singleton-cell vectors emit n_votes = 0, NULL ratio, suspect =
     false — the consumer can route them to a wider probe."""
     withv = _noise_assigned(spark, sf_dir)
-    votes = _noise_votes(withv)
-    out = (
-        withv.select("vec_id", "label", "cell")
-        .join(votes.withColumnRenamed("vec_a", "vec_id"), "vec_id", "left")
-        .select("vec_id", "label", "cell", *_noise_verdict_cols())
-    )
-    return out.withColumn(
-        "suspect",
-        (F.col("n_votes") >= NOISE_MIN_VOTES)
-        & (F.col("n_agree") * 2 < F.col("n_votes")),
-    )
+    return _noise_release(withv.select("vec_id", "label", "cell"), _noise_votes(withv))
 
 
 # The shared within-cell vote chain over the hier `assign` relation —
@@ -492,16 +505,8 @@ def label_noise_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     withv = assign.join(emb.select("vec_id", "label"), "vec_id").transform(cached)
     delta_v = withv.filter(_is_delta(F.col("vec_id")))
     base_v = withv.filter(~_is_delta(F.col("vec_id")))
-    votes = _noise_votes(delta_v, base_v).withColumnRenamed("vec_a", "vec_id")
-    out = (
-        delta_v.select("vec_id", "label", "cell")
-        .join(votes, "vec_id", "left")
-        .select("vec_id", "label", "cell", *_noise_verdict_cols())
-    )
-    return out.withColumn(
-        "suspect",
-        (F.col("n_votes") >= NOISE_MIN_VOTES)
-        & (F.col("n_agree") * 2 < F.col("n_votes")),
+    return _noise_release(
+        delta_v.select("vec_id", "label", "cell"), _noise_votes(delta_v, base_v)
     )
 
 
@@ -700,22 +705,35 @@ def coreset_coverage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min(F.struct("d", "center_id")).alias("m"))
         .select("vec_id", F.col("m.center_id").alias("center_id"), F.col("m.d").alias("d"))
     )
-    total = emb.agg(F.count("*").alias("total"))
-    return (
-        assigned.groupBy("center_id")
-        .agg(
-            F.count("*").cast("long").alias("pop"),
-            F.sum(F.col("d").cast("decimal(20,12)")).alias("sum_d"),
-            F.max("d").alias("max_d"),
-        )
-        .join(F.broadcast(total), F.lit(True))
-        .select(
-            "center_id",
-            "pop",
-            (F.col("pop") / F.col("total")).alias("share"),
-            (F.col("sum_d").cast("double") / F.col("pop")).alias("mean_d"),
-            "max_d",
-        )
+    return coverage_release(coverage_cells(assigned), emb.agg(F.count("*").alias("total")))
+
+
+def _dec(c):
+    """A summed term snapped to DECIMAL(20,12): exact, order-free sums."""
+    return c.cast("decimal(20,12)")
+
+
+def coverage_cells(assigned: DataFrame) -> DataFrame:
+    """(center_id, pop, sum_d, max_d) over (center_id, d) assignments:
+    the per-center aggregate of the batch audit and the complete-mode
+    state of stream_coreset_coverage. sum_d adds DECIMAL(20,12)-snapped
+    distances, so it is exact and order-free."""
+    return assigned.groupBy("center_id").agg(
+        F.count("*").cast("long").alias("pop"),
+        F.sum(_dec(F.col("d"))).alias("sum_d"),
+        F.max("d").alias("max_d"),
+    )
+
+
+def coverage_release(cells: DataFrame, total: DataFrame) -> DataFrame:
+    """The coverage table from `coverage_cells` and a 1-row `total`:
+    corpus share and mean distance per center, one division each."""
+    return cells.join(F.broadcast(total), F.lit(True)).select(
+        "center_id",
+        "pop",
+        (F.col("pop") / F.col("total")).alias("share"),
+        (F.col("sum_d").cast("double") / F.col("pop")).alias("mean_d"),
+        "max_d",
     )
 
 
@@ -809,14 +827,7 @@ def embedding_curation_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumnRenamed("vec_a", "vec_id")
     )
     # gate 2: K-NN label vote over the SHARED pair relation
-    wv = Window.partitionBy("vec_a").orderBy(F.asc("d2p"), F.asc("vec_b"))
-    votes = (
-        pairs.withColumn("rnk", F.row_number().over(wv))
-        .filter(F.col("rnk") <= NOISE_K)
-        .groupBy("vec_a")
-        .agg(F.count("*").alias("n_votes"), F.sum("match").alias("n_agree"))
-        .withColumnRenamed("vec_a", "vec_id")
-    )
+    votes = _noise_tally(pairs).withColumnRenamed("vec_a", "vec_id")
     # gate 3: KNN-Shapley value (train split only)
     shap = knn_shapley_values(spark, sf_dir).select("vec_id", "shap_value")
     out = (
@@ -931,29 +942,37 @@ def embedding_shift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from capstone_etl_spark.operators.dedup import _is_delta
 
     emb = load_table(spark, sf_dir, "embeddings")
-    xs = emb.select(
-        _is_delta(F.col("vec_id")).alias("is_delta"),
-        F.posexplode("embedding").alias("d", "xf"),
-    ).select(
-        "is_delta",
-        "d",
-        F.col("xf").cast("double").alias("x"),
-    )
-    dec = lambda c: c.cast("decimal(20,12)")  # noqa: E731
+    xs = dim_values(emb, is_delta=_is_delta(F.col("vec_id")))
     agg = xs.groupBy("d").agg(
         F.sum(F.when(~F.col("is_delta"), 1).otherwise(0)).cast("long").alias("n_base"),
         F.sum(F.when(F.col("is_delta"), 1).otherwise(0)).cast("long").alias("n_delta"),
-        F.sum(F.when(~F.col("is_delta"), dec(F.col("x"))).otherwise(F.lit(None))).alias("sum_b"),
-        F.sum(F.when(F.col("is_delta"), dec(F.col("x"))).otherwise(F.lit(None))).alias("sum_d"),
+        F.sum(F.when(~F.col("is_delta"), _dec(F.col("x"))).otherwise(F.lit(None))).alias("sum_b"),
+        F.sum(F.when(F.col("is_delta"), _dec(F.col("x"))).otherwise(F.lit(None))).alias("sum_d"),
         F.sum(
-            F.when(~F.col("is_delta"), dec(F.col("x") * F.col("x"))).otherwise(F.lit(None))
+            F.when(~F.col("is_delta"), _dec(F.col("x") * F.col("x"))).otherwise(F.lit(None))
         ).alias("ssq_b"),
     )
-    # every derived column rounds to 6 decimals (token_entropy's
-    # per-dim-mean recipe): the exact decimal sums convert to double
-    # differently at the last ulp across engines (DuckDB scales the
-    # int128 by a binary-inexact 1e-12; Spark's BigDecimal conversion
-    # is correctly rounded), so raw quotients can differ by ~2e-15
+    return shift_release(agg)
+
+
+def dim_values(rows: DataFrame, **keep) -> DataFrame:
+    """(*keep, d, x): one row per embedding dimension, x as double.
+    `keep` names the per-vector columns carried along (name → Column)."""
+    return rows.select(
+        *[c.alias(n) for n, c in keep.items()], F.posexplode("embedding").alias("d", "xf")
+    ).select(*keep, "d", F.col("xf").cast("double").alias("x"))
+
+
+def shift_release(stats: DataFrame) -> DataFrame:
+    """The shift table from per-dim (d, n_base, n_delta, sum_b, sum_d,
+    ssq_b) stats — the batch audit's aggregate or the stream twin's
+    drained delta sums joined to the static base sums.
+
+    Every derived column rounds to 6 decimals (token_entropy's
+    per-dim-mean recipe): the exact decimal sums convert to double
+    differently at the last ulp across engines (DuckDB scales the
+    int128 by a binary-inexact 1e-12; Spark's BigDecimal conversion
+    is correctly rounded), so raw quotients can differ by ~2e-15."""
     base_mean = F.round(F.col("sum_b").cast("double") / F.col("n_base"), 6)
     delta_mean = F.round(F.col("sum_d").cast("double") / F.col("n_delta"), 6)
     base_var = (
@@ -961,7 +980,7 @@ def embedding_shift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base_sd = F.round(F.sqrt(F.greatest(base_var, F.lit(0.0))), 6)
     shift = F.round(delta_mean - base_mean, 6)
-    return agg.select(
+    return stats.select(
         "d",
         "n_base",
         "n_delta",

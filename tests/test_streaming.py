@@ -303,21 +303,30 @@ def _jobs(spark, tag: str, run) -> int:
     return len(jsc.statusTracker().getJobIdsForTag(tag))
 
 
-@pytest.mark.parametrize("name,budget", [("ab_test_analysis", 4), ("stream_ab_test", 7)])
-def test_ab_job_budget(spark, name, budget):
-    """The A/B pair's Spark jobs per forced call, after one warm call:
-    the per-user state is one aggregation and the readout one global
-    aggregation. Before that form, ab_test_analysis ran 14 jobs (cached
-    exposure relation, conversion join, cached rollup, pivot, stats
-    broadcast) and stream_ab_test 13 (update-mode drain, per-user
-    regroup, the same rollup tail)."""
+@pytest.mark.parametrize(
+    "name,budget",
+    [
+        ("ab_test_analysis", 4),
+        ("stream_ab_test", 7),
+        ("kll_quantile_sketch", 20),
+        ("stream_kll_sketch", 26),
+    ],
+)
+def test_twin_job_budget(spark, name, budget):
+    """Spark jobs per forced call of a batch query and its stream twin,
+    after one warm call. The A/B pair's per-user state is one
+    aggregation and its readout one global aggregation (before that
+    form ab_test_analysis ran 14 jobs and stream_ab_test 13). The KLL
+    twin drains the batch sketch's survivor step and releases through
+    the batch `_kll_release` (28 jobs before, with per-source count
+    ticks, a cached snapshot and an eager rank-cut checkpoint)."""
     import bench
     from capstone_etl_spark.session import release_caches
 
     query = entrymod.queries()[name]
     for i in range(2):  # the first call warms this query's code paths
         try:
-            n = _jobs(spark, f"ab-budget-{name}-{i}", lambda: bench.force(query(spark, SF_DIR)))
+            n = _jobs(spark, f"twin-budget-{name}-{i}", lambda: bench.force(query(spark, SF_DIR)))
         finally:
             release_caches()
     assert n <= budget, n
